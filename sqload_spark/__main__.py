@@ -61,7 +61,13 @@ def main(argv: list[str] | None = None) -> int:
     gen.add_argument("--partitions", type=int, default=None)
     gen.add_argument("--output", default=None, help="directory for file output")
     gen.add_argument("--format", choices=("csv", "parquet"), default="csv")
-    gen.add_argument("--range-key", default=None, help="repartitionByRange key for parquet output")
+    gen.add_argument(
+        "--range-key",
+        default=None,
+        help="parquet output: one file per partition covering a disjoint, sorted range of this "
+        "column (range-shuffled unless the table is already range-partitioned on it, as the "
+        "key column c0 of an expr-backend table is)",
+    )
     args = parser.parse_args(argv)
 
     try:

@@ -19,6 +19,8 @@ hash value directly.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -102,19 +104,57 @@ _PERMUTE_STEPS = (
     (0x00F000F000F000F0, 4),
 )
 
+_MASK64 = (1 << 64) - 1
 
-def _bit_permute_step(x: Column, mask: int, shift: int) -> Column:
-    t = F.shiftrightunsigned(x, shift).bitwiseXOR(x).bitwiseAND(F.lit(mask))
-    return x.bitwiseXOR(t).bitwiseXOR(F.shiftleft(t, shift))
+
+def rkey_py(counter: int) -> int:
+    """Pure-Python model of the rkey bijection, step by step as the
+    reference computes it (the definition the other forms derive from)."""
+    x = ((counter << 63) | (counter >> 1)) & _MASK64
+
+    def step(x: int, m: int, shift: int) -> int:
+        t = ((x >> shift) ^ x) & m
+        return (x ^ t ^ ((t << shift) & _MASK64)) & _MASK64
+
+    for m, s in _PERMUTE_STEPS:
+        x = step(x, m, s)
+    return x
+
+
+def _rkey_shifts() -> tuple[tuple[int, int], ...]:
+    """``(mask, shift)`` pairs with ``rkey_py(x) == OR of (x & mask) << shift``
+    (a negative shift moves right, unsigned).
+
+    rotr1 and the permute steps only move bits, so the bijection sends input
+    bit i to one fixed output bit; grouping the 64 input bits by how far
+    they move gives one masked shift per distance. Evaluated this way the
+    counter is read once per distance, where the step form nests its input
+    three times per step (27 copies in an unfolded expression tree)."""
+    by_shift: dict[int, int] = {}
+    for i in range(64):
+        out = rkey_py(1 << i)
+        assert out & (out - 1) == 0, "rkey is not a bit permutation"
+        d = out.bit_length() - 1 - i
+        by_shift[d] = by_shift.get(d, 0) | (1 << i)
+    return tuple((mask, d) for d, mask in sorted(by_shift.items()))
+
+
+#: The rkey bijection as masked shifts; shared by rkey_long and the Arrow
+#: backend's vectorized rkey.
+RKEY_SHIFTS = _rkey_shifts()
+
+
+def _signed64(v: int) -> int:
+    return v - (1 << 64) if v >> 63 else v
 
 
 def rkey_long(counter: Column) -> Column:
     """segregate4(rotr1(counter)) as a signed long (same 64 bits as the ref's uint64)."""
-    rotated = F.shiftleft(counter, 63).bitwiseOR(F.shiftrightunsigned(counter, 1))
-    x = rotated
-    for mask, shift in _PERMUTE_STEPS:
-        x = _bit_permute_step(x, mask, shift)
-    return x
+    parts = []
+    for mask, shift in RKEY_SHIFTS:
+        bits = counter.bitwiseAND(F.lit(_signed64(mask)))
+        parts.append(F.shiftleft(bits, shift) if shift >= 0 else F.shiftrightunsigned(bits, -shift))
+    return reduce(Column.bitwiseOR, parts)
 
 
 def as_uint64_decimal(signed: Column) -> Column:
@@ -125,17 +165,3 @@ def as_uint64_decimal(signed: Column) -> Column:
     return F.when(signed >= 0, dec).otherwise(
         (dec + F.lit("18446744073709551616").cast("decimal(21,0)")).cast("decimal(20,0)")
     )
-
-
-def rkey_py(counter: int) -> int:
-    """Pure-Python model of the rkey bijection (test oracle)."""
-    mask64 = (1 << 64) - 1
-    x = ((counter << 63) | (counter >> 1)) & mask64
-
-    def step(x: int, m: int, shift: int) -> int:
-        t = ((x >> shift) ^ x) & m
-        return (x ^ t ^ ((t << shift) & mask64)) & mask64
-
-    for m, s in _PERMUTE_STEPS:
-        x = step(x, m, s)
-    return x

@@ -485,7 +485,11 @@ def pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the rank vector to the edge list + a groupBy on dst — the
     standard Pregel-free DataFrame PageRank, O(E) shuffle per iteration;
     the only driver-side value is the bounded node-count scalar feeding
-    the teleport literal. Restricted to nodes with ≥1 mutual edge so every
+    the teleport literal. That scalar is counted eagerly while the plan is
+    built (``n_nodes``, a ``distinct().count()`` over the persisted edge
+    table), so merely building this query runs a Spark job and
+    materializes the edge cache — plan-only tooling should expect it.
+    Restricted to nodes with ≥1 mutual edge so every
     node has outdegree (no dangling-mass term). The oracle replays the
     identical unrolled iterations as chained CTEs, so the iterative
     computation itself is hash-checked."""

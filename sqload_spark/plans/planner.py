@@ -123,17 +123,15 @@ def column_expr(
             uniform_long(id_col, 1, 28, seed, i, 2),
         )
     if t == "datetime":
-        # MySQL DATETIME is zone-less → TimestampNTZ.
-        return F.to_timestamp_ntz(
-            F.format_string(
-                "%04d-%02d-%02d %02d:%02d:%02d",
-                uniform_long(id_col, 1900, 2021, seed, i, 0),
-                uniform_long(id_col, 1, 12, seed, i, 1),
-                uniform_long(id_col, 1, 28, seed, i, 2),
-                uniform_long(id_col, 0, 23, seed, i, 3),
-                uniform_long(id_col, 0, 59, seed, i, 4),
-                uniform_long(id_col, 0, 59, seed, i, 5),
-            )
+        # MySQL DATETIME is zone-less → TimestampNTZ, built from the six
+        # draws directly (day ≤ 28, so every draw is a valid wall time).
+        return F.make_timestamp_ntz(
+            uniform_long(id_col, 1900, 2021, seed, i, 0),
+            uniform_long(id_col, 1, 12, seed, i, 1),
+            uniform_long(id_col, 1, 28, seed, i, 2),
+            uniform_long(id_col, 0, 23, seed, i, 3),
+            uniform_long(id_col, 0, 59, seed, i, 4),
+            uniform_long(id_col, 0, 59, seed, i, 5),
         )
     if t == "timestamp":
         # Uniform epoch seconds in [1, now] (generate_csv.cpp:124-132).

@@ -16,8 +16,11 @@ import shutil
 import sys
 import tempfile
 import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+CODEGEN_CACHE_ENTRIES = "2048"
 
 
 def scratch_dir(prefix: str) -> str:
@@ -87,36 +90,24 @@ def get_spark(app_name: str = "sqload_spark", shuffle_partitions: int | None = N
         # dedup_embedding_cosine_banded at 5.8-6.7 s alone vs 10.1 s
         # in-suite, all of it codegen-cache thrash. Cache entries are
         # weak-referenced compiled classes (a few KB each), so 2048 is
-        # noise against the 48g driver heap. Env-overridable for A/B runs;
-        # semantics-free (it is a compilation CACHE SIZE), so the oracle
-        # gate is unaffected and only bench wall can move. int() up front:
-        # a typo'd override must fail here naming the env var, not deep in
-        # JVM session startup with an opaque error (ADVICE r10).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            str(int(os.environ.get("SQLOAD_CODEGEN_CACHE_ENTRIES", "2048"))),
-        )
+        # noise against the 48g heap; semantics-free (it is a
+        # compilation CACHE SIZE), so only bench wall can move.
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     # Static conf: if any SparkSession already existed in this JVM,
-    # getOrCreate silently ignored the value above, and a codegen-cache A/B
-    # would measure the wrong setting without noticing (ADVICE r10). Warn
-    # loudly; don't raise — shared-session callers (driver-owned sessions
-    # configured via configure()) are legitimate.
-    requested = str(int(os.environ.get("SQLOAD_CODEGEN_CACHE_ENTRIES", "2048")))
+    # getOrCreate silently ignored the value above. Warn; don't raise —
+    # shared-session callers (sessions created elsewhere and configured via
+    # configure()) are legitimate.
     effective = spark.conf.get("spark.sql.codegen.cache.maxEntries", None)
-    if effective is not None and effective != requested:
+    if effective is not None and effective != CODEGEN_CACHE_ENTRIES:
         print(
-            f"WARNING: spark.sql.codegen.cache.maxEntries is {effective}, not the "
-            f"requested {requested} (static conf; a pre-existing SparkSession owns "
-            "it). Codegen-cache A/B results from this session are invalid.",
+            f"WARNING: spark.sql.codegen.cache.maxEntries is {effective}, not "
+            f"{CODEGEN_CACHE_ENTRIES} (static conf; a pre-existing SparkSession owns it).",
             file=sys.stderr,
         )
     return spark
-
-
-from contextlib import contextmanager
 
 
 @contextmanager

@@ -8,7 +8,7 @@ a helper function you call, it is a SOURCE the engine plans like any other
 into input partitions that executors generate independently, values
 streamed out as Arrow record batches (never row-at-a-time Python objects).
 Column semantics are exactly the arrow backend's
-(sources/generate_arrow.py::_column — same SplitMix64 draw streams, same
+(sources/generate_arrow.py::record_batch — same SplitMix64 draw streams, same
 key/rkey bijection), so the source is bit-identical to
 ``generate_table(..., impl="arrow")`` for every type whose draw does not
 depend on wall clock, and the determinism law (same rows/spec/seed ⇒ same
@@ -77,38 +77,23 @@ class SqloadReader(DataSourceReader):
         ]
 
     def read(self, partition: _Range):
-        # Runs on executors: import lazily so the pickled reader is tiny.
-        import numpy as np
-        import pyarrow as pa
-
-        from sqload_spark.sources.generate_arrow import U64, _column
-
-        specs = parse_spec(self.spec)
-        ids = np.arange(partition.start, partition.end, dtype=U64)
-        arrays, fields = [], []
-        for i, spec in enumerate(specs):
-            col = _column(ids, spec, self.seed, i, self.now_epoch)
-            arrays.append(_to_arrow(col, spec, pa))
-            fields.append(pa.field(f"c{i}", arrays[-1].type))
-        yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+        return _read_range(partition, self.spec, self.seed, self.now_epoch)
 
 
-def _to_arrow(col, spec, pa):
-    """numpy/_column output → pyarrow array matching the declared schema."""
-    from decimal import Decimal
+_BATCH_ROWS = 65536  # keeps string offsets far below the int32 limit
 
-    t = spec.type
-    if t == "rkey":
-        return pa.array([Decimal(int(v)) for v in col], type=pa.decimal128(20, 0))
-    if t in ("decimal", "number"):
-        return pa.array(list(col), type=pa.decimal128(spec.precision, spec.scale))
-    if t == "date":
-        return pa.array(list(col), type=pa.date32())
-    if t == "datetime":
-        return pa.array(col).cast(pa.timestamp("us"))
-    if t == "timestamp":
-        return pa.array(col).cast(pa.timestamp("us")).cast(pa.timestamp("us", tz="UTC"))
-    return pa.array(col)
+
+def _read_range(partition: _Range, spec: str, seed: int, now_epoch: int):
+    """Arrow record batches of the rows in ``partition``, built by the arrow
+    backend (runs on executors: imported lazily so the pickled reader is tiny)."""
+    import numpy as np
+
+    from sqload_spark.sources.generate_arrow import U64, record_batch
+
+    specs = parse_spec(spec)
+    for lo in range(partition.start, partition.end, _BATCH_ROWS):
+        ids = np.arange(lo, min(lo + _BATCH_ROWS, partition.end), dtype=U64)
+        yield record_batch(ids, specs, seed, now_epoch)
 
 
 def register(spark) -> None:
@@ -151,19 +136,7 @@ class SqloadStreamReader(DataSourceStreamReader):
         return [_Range(a, min(a + per, hi)) for a in range(lo, hi, per)]
 
     def read(self, partition: _Range):
-        import numpy as np
-        import pyarrow as pa
-
-        from sqload_spark.sources.generate_arrow import U64, _column
-
-        specs = parse_spec(self.spec)
-        ids = np.arange(partition.start, partition.end, dtype=U64)
-        arrays, fields = [], []
-        for i, spec in enumerate(specs):
-            col = _column(ids, spec, self.seed, i, self.now_epoch)
-            arrays.append(_to_arrow(col, spec, pa))
-            fields.append(pa.field(f"c{i}", arrays[-1].type))
-        yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+        return _read_range(partition, self.spec, self.seed, self.now_epoch)
 
     def commit(self, end: dict) -> None:
         pass

@@ -6,6 +6,14 @@ independently, every value is a pure function of (id, seed), and the write
 fans out one file per partition. Throughput therefore scales linearly with
 cores/executors — the property the single-threaded reference fundamentally
 lacks (/root/reference/README.md:45: one core at 99%).
+
+Two backends build the columns. ``expr`` is one Catalyst projection over
+the id (plans/planner.py), JVM-only. ``arrow`` is ``mapInArrow`` over the id
+batches (sources/generate_arrow.py): numpy draws, and each column handed
+back as an Arrow array built from numpy buffers, with no per-row Python
+objects. An ``expr`` table whose ``c0`` is the key keeps ``spark.range``'s
+physical partitioning as ``rangepartitioning(c0 ASC, n)``, so a sink
+range-keyed on ``c0`` writes it without a shuffle (sources/sinks.py).
 """
 
 from __future__ import annotations
@@ -55,11 +63,12 @@ def generate_table(
     `num_partitions` (draws are hash-of-id, not partition-seeded rand()).
 
     impl="expr": pure Catalyst column expressions — shuffle-free, JVM-only,
-    no Python in the pipeline. impl="arrow": numpy-vectorized mapInPandas
-    backend (sources/generate_arrow.py) — ~4× faster per core on
-    string-heavy specs, same distribution laws, same key/rkey values
-    (different random streams for the other types). impl="auto" (default):
-    arrow when the spec draws ≥ 16 random string chars per row, else expr.
+    no Python in the pipeline. impl="arrow": numpy-vectorized mapInArrow
+    backend (sources/generate_arrow.py) that returns Arrow batches built
+    from numpy buffers — ~4× faster per core on string-heavy specs, same
+    distribution laws, same key/rkey values (different random streams for
+    the other types). impl="auto" (default): arrow when the spec draws ≥ 16
+    random string chars per row, else expr.
     """
     specs = parse_spec(spec) if isinstance(spec, str) else spec
     if blob_binary:
@@ -75,7 +84,7 @@ def generate_table(
         schema = ", ".join(
             f"c{i} {_arrow_schema_type(s)}" for i, s in enumerate(specs)
         )
-        return base.mapInPandas(arrow_generator(specs, seed), schema=schema)
+        return base.mapInArrow(arrow_generator(specs, seed), schema=schema)
     return base.select(*plan_columns(specs, seed=seed, blob_binary=blob_binary))
 
 

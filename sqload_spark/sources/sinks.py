@@ -10,7 +10,12 @@ equivalents:
 * ``write_partitioned_parquet`` — the "bulk load into a partitioned
   database" ETL shape the generator exists to feed: range-repartition on
   the load key (balanced, sorted part files; co-located with downstream
-  bucketed joins) + optional hive-style directory partitioning.
+  bucketed joins) + optional hive-style directory partitioning. The
+  range exchange is skipped when the input's physical partitioning is
+  already ``rangepartitioning(key ASC NULLS FIRST, n)`` — as an
+  expr-backend generated table is on its ``key`` column ``c0``, since
+  ``spark.range`` hands out contiguous id slices — which saves the
+  sampling job and the shuffle.
 * ``write_jdbc`` — the real-database path (no DB server in this container;
   kept behind an interface and exercised only for plan construction).
 """
@@ -64,6 +69,29 @@ def write_reference_csv(df: DataFrame, path: str, num_files: int | None = None) 
     )
 
 
+def _range_partitioned(df: DataFrame, key: str, n: int) -> bool:
+    """Whether ``df``'s executed plan already outputs ``n`` range partitions
+    ordered by the output column ``key`` ascending, nulls first — what
+    ``repartitionByRange(n, key)`` would produce, up to the split points.
+    Read from the physical partitioning object, not from plan text."""
+    plan = df._jdf.queryExecution().executedPlan()
+    part = plan.outputPartitioning()
+    if part.getClass().getSimpleName() != "RangePartitioning" or part.numPartitions() != n:
+        return False
+    ordering = part.ordering()
+    if ordering.size() != 1:
+        return False
+    order = ordering.apply(0)
+    attr = order.child()
+    return (
+        attr.getClass().getSimpleName() == "AttributeReference"
+        and attr.name() == key
+        and plan.outputSet().contains(attr)
+        and order.direction().sql() == "ASC"
+        and order.nullOrdering().sql() == "NULLS FIRST"
+    )
+
+
 def write_partitioned_parquet(
     df: DataFrame,
     path: str,
@@ -81,11 +109,19 @@ def write_partitioned_parquet(
     in the data files: hive layout collapses NULL and '' into
     __HIVE_DEFAULT_PARTITION__, so partitioning on the raw key silently
     merges those two groups on read-back. Non-string keys are unaffected
-    (only NULL maps to the default directory, which round-trips)."""
+    (only NULL maps to the default directory, which round-trips).
+
+    ``repartitionByRange`` is left out when ``df`` is already physically
+    range-partitioned on exactly ``[range_key ASC NULLS FIRST]`` into the
+    same number of partitions (:func:`_range_partitioned`). The
+    ``sortWithinPartitions`` stays: the planner drops it as redundant
+    when the input is already sorted on the key."""
     out = df
     if range_key is not None:
         n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        out = df.repartitionByRange(n, range_key).sortWithinPartitions(range_key)
+        if not _range_partitioned(df, range_key, n):
+            out = out.repartitionByRange(n, range_key)
+        out = out.sortWithinPartitions(range_key)
     part_dirs: list[str] = []
     for c in partition_by or []:
         if isinstance(out.schema[c].dataType, StringType):

@@ -94,3 +94,16 @@ def assert_matches_oracle(spark_df, duck, oracle: str, name: str = "query") -> N
     assert sp_rows == du_rows, (
         f"{name}: value mismatch; first diffs: {mismatches[:3]}"
     )
+
+
+def row_digest(df) -> tuple[int, int]:
+    """Order-insensitive ``(row count, sum of xxhash64 over every column)``
+    of a Spark DataFrame: pins exact generated values in a few digits."""
+    from pyspark.sql import functions as F
+
+    r = (
+        df.select(F.xxhash64(*df.columns).cast("decimal(38,0)").alias("h"))
+        .agg(F.count("*"), F.sum("h"))
+        .first()
+    )
+    return int(r[0]), int(r[1])

@@ -162,6 +162,50 @@ def test_gen_unknown_type_empty_column(spark):
     assert df.filter(F.col("c1") != "").count() == 0
 
 
+# --- rkey bijection forms ---------------------------------------------------
+
+
+def test_rkey_forms_agree_bit_for_bit(spark):
+    """The expression rkey_long, the numpy _rkey and the step-wise model
+    rkey_py are one bijection: edge counters plus 1,000 seeded random ones."""
+    import random
+
+    import numpy as np
+
+    from sqload_spark.functions.randoms import rkey_long
+    from sqload_spark.sources.generate_arrow import _rkey
+
+    rng = random.Random(20)
+    counters = [0, 1, 2**63 - 1, 2**63, 2**64 - 1] + [rng.getrandbits(64) for _ in range(1000)]
+    signed = [c - 2**64 if c >= 2**63 else c for c in counters]
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(signed)], "i int, c long")
+    got = [r.k for r in df.select("i", rkey_long(F.col("c")).alias("k")).orderBy("i").collect()]
+    expected = [rkey_py(c) for c in counters]
+    assert [k % 2**64 for k in got] == expected
+    assert _rkey(np.array(counters, dtype=np.uint64)).tolist() == expected
+
+
+def test_rkey_plan_stays_small(spark, capsys):
+    """The printed key,rkey plan stays linear in the bijection's size: the
+    step-by-step form nested its input three times per permute step and
+    printed 36 KB."""
+    gen(spark, "key,rkey", rows=10, parts=1).explain()
+    assert len(capsys.readouterr().out) < 4096
+
+
+# --- pinned values ----------------------------------------------------------
+
+
+def test_expr_values_pinned(spark):
+    """Exact expr-backend output for every non-string, non-clock type."""
+    from tests.conftest import row_digest
+
+    spec = "key,rkey,tinyint,smallint,int,bigint,double,decimal(12,2),date,datetime"
+    for parts in (1, 4):
+        df = generate_table(spark, 3000, spec, seed=11, num_partitions=parts, impl="expr")
+        assert row_digest(df) == (3000, 443864712897504319614)
+
+
 # --- determinism law --------------------------------------------------------
 
 
@@ -235,15 +279,71 @@ def test_csv_round_trip(spark, tmp_path):
     assert raw.filter(F.col("value").contains('"')).count() == 0
 
 
-def test_partitioned_parquet_write(spark, tmp_path):
+def _write_with_plans(spark, write) -> list[str]:
+    """Run ``write()`` and return the physical plans of the SQL executions
+    it started, read from the session's SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def recent(n: int = 8):
+        bus.waitUntilEmpty()
+        total = store.executionsCount()
+        tail = store.executionsList(max(0, total - n), n)
+        return [tail.apply(i) for i in range(tail.size())]
+
+    before = max((e.executionId() for e in recent(1)), default=-1)
+    write()
+    return [e.physicalPlanDescription() for e in recent() if e.executionId() > before]
+
+
+def _file_key_ranges(path: str, key: str) -> list[tuple[int, int]]:
+    """(min, max) of ``key`` in each parquet part file, asserting each file
+    is sorted on it."""
+    import glob
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    ranges = []
+    for f in sorted(glob.glob(f"{path}/*.parquet")):
+        keys = pq.read_table(f, columns=[key]).column(key).to_numpy()
+        assert np.all(keys[:-1] <= keys[1:]), f"{f} is not sorted on {key}"
+        ranges.append((int(keys[0]), int(keys[-1])))
+    return ranges
+
+
+def _range_load(spark, tmp_path, range_key: str) -> list[str]:
+    """Range-load a generated table on ``range_key`` and check the layout:
+    one file per partition, each sorted on the key, with disjoint key
+    ranges. Returns the physical plans of the write."""
     from sqload_spark.sources.sinks import write_partitioned_parquet
 
     df = gen(spark, "key,int,year", rows=300, parts=4)
     out = str(tmp_path / "pq_out")
-    write_partitioned_parquet(df, out, range_key="c0")
+    plans = _write_with_plans(
+        spark, lambda: write_partitioned_parquet(df, out, range_key=range_key, num_partitions=4)
+    )
+    assert len(plans) == 1 and "InsertIntoHadoopFsRelationCommand" in plans[0], plans
     back = spark.read.parquet(out)
     assert back.count() == 300
     assert back.select(F.countDistinct("c0")).first()[0] == 300
+    ranges = sorted(_file_key_ranges(out, range_key))
+    assert len(ranges) == 4
+    assert all(hi < lo for (_, hi), (lo, _) in zip(ranges, ranges[1:])), ranges
+    return plans
+
+
+def test_partitioned_parquet_write(spark, tmp_path):
+    """A generated table is already range-partitioned and sorted on its key
+    c0, so the range sink writes it with no exchange and no sort."""
+    (plan,) = _range_load(spark, tmp_path, "c0")
+    assert "Exchange" not in plan and "Sort" not in plan, plan
+
+
+def test_partitioned_parquet_write_shuffles_unordered_key(spark, tmp_path):
+    """A key the input is not partitioned on still gets the range exchange."""
+    (plan,) = _range_load(spark, tmp_path, "c1")
+    assert "Arguments: rangepartitioning(c1#" in plan, plan
 
 
 def test_blob_binary_mode(spark, tmp_path):

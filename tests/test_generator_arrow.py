@@ -52,3 +52,20 @@ def test_arrow_temporal(spark):
     row = df.agg(F.min(F.year("c0")), F.max(F.year("c0")), F.max(F.dayofmonth("c1"))).first()
     assert 1900 <= row[0] <= row[1] <= 2021 and row[2] <= 28
     assert df.filter(~F.col("c3").rlike(r"^([01]\d|2[0-3]):[0-5]\d:[0-5]\d$")).count() == 0
+
+
+ALL_BUT_TIMESTAMP = (
+    "key,rkey,bit,tinyint,smallint,mediumint,int,bigint,float,double,char(5),nchar(3),"
+    "varchar(10),varchar2(7),nvarchar2(4),text,blob,date,datetime,time,year,decimal(12,2),"
+    "number,decimal(26,8),foo"
+)
+
+
+def test_arrow_values_pinned(spark):
+    """Exact arrow-backend output for every type except timestamp (whose
+    upper bound is the wall clock), at two partition counts."""
+    from tests.conftest import row_digest
+
+    for parts in (1, 4):
+        df = gen(spark, ALL_BUT_TIMESTAMP, rows=3000, seed=11, parts=parts)
+        assert row_digest(df) == (3000, -70510702460225136416)

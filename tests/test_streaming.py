@@ -68,9 +68,12 @@ def test_watermark_drops_late_data(spark, tmp_path):
         .start()
     )
     try:
-        # let batch 1 commit, then deliver batch 2
+        # let batch 1 commit, then deliver batch 2. Wait on recentProgress,
+        # not lastProgress: the watermark advance triggers a no-data batch
+        # at once, and its progress (0 input rows) can replace batch 1's
+        # between two polls.
         deadline = time.time() + 60
-        while q.lastProgress is None or q.lastProgress["numInputRows"] == 0:
+        while not any(p["numInputRows"] > 0 for p in q.recentProgress):
             if time.time() > deadline:
                 raise TimeoutError("stream never processed batch 1")
             time.sleep(0.5)
@@ -127,3 +130,25 @@ def test_processing_time_trigger_incremental(spark):
     assert sum(r.n for r in rows) > 0
     # latency bookkeeping present per batch
     assert all("durationMs" in p and "triggerExecution" in p["durationMs"] for p in batches)
+
+
+def test_upsert_batch_replay_is_idempotent(spark, tmp_path):
+    """foreachBatch may run a micro-batch again after a failure: running
+    one batch id twice must leave the folded version counts unchanged."""
+    from sqload_spark.streaming.queries import fold_upsert_deltas, upsert_delta
+
+    batch = spark.createDataFrame(
+        [(1, 10, "view", 100), (2, 10, "click", 200), (3, 11, "view", 150)],
+        "event_id long, user_id long, event_type string, ts_us long",
+    )
+    delta_dir = str(tmp_path / "deltas")
+
+    def total_versions() -> int:
+        return fold_upsert_deltas(spark, delta_dir).agg(F.sum("n_versions")).first()[0]
+
+    upsert_delta(batch, 0, delta_dir)
+    once = total_versions()
+    upsert_delta(batch, 0, delta_dir)
+    assert total_versions() == once == 3
+    upsert_delta(batch.limit(1), 1, delta_dir)
+    assert total_versions() == 4
