@@ -742,112 +742,35 @@ def bands_for(bits: int, threshold: float = 0.90, target_miss: float = 1e-2) -> 
     return math.ceil(math.log(target_miss) / math.log1p(-p_band))
 
 
-def _pruned_tier_for(n_vectors: int, backend: str = "gemm") -> tuple[int, int]:
-    """(band width bits, band count) scaled to corpus size AND signature
-    backend — the measured scaling rules from BASELINE.md's banded-cosine
-    curves, in code instead of a comment. Used by the SCALE path
+def _pruned_tier_for(n_vectors: int) -> tuple[int, int]:
+    """(band width bits, band count) scaled to corpus size — the measured
+    scaling rule from BASELINE.md's banded-cosine curves, in code instead
+    of a comment. Used by the SCALE path
     (embedding_cosine_banded_pruned_scaled / tools/scale_run.py); the
-    registered oracle-checked query pins the 8-bit tier (see its docstring).
+    registered oracle-checked query pins the 8-bit tier (see its
+    docstring).
 
-    TWO ladders, because the tier trade is a ratio of plane-work to
-    collision-floor cost and the GEMM backend changed the numerator ~69×:
-
-    - ``gemm`` (the scale twin's default backend): (8, 20) up to 20 K
-      vectors (the recall-1.0 zone, absolute walls in seconds), then
-      (24, 188) EVERYWHERE — with BLAS plane dots the sig pass is single-
-      digit seconds at every measured scale, so the 16×-per-+4-bits
-      collision-floor cut wins every octave. Measured head-to-head this
-      round (single sessions, equal recall at every cell): 21 K vectors
-      2.8 s vs 6.1 s for (12,13) [recall 0.999 vs 0.991]; 67 K 7.7 s vs
-      13.1 s for (16,53); 134 K 8.8 s vs 10.9 s for (20,100) and 41.3 s
-      for (16,53); 269 K 21.4 s vs 50.1 s; 538 K 95.9 s vs 175.3 s;
-      1.075 M 250.6 s vs 859.0 s; 2.15 M 812.8 s (sig pass 21.2 s =
-      2.6%; rows bit-identical to the expr run) where (20,100)'s
-      candidate floor exceeds single-node scratch (below).
-    - ``expr`` (the registered queries' path and the pre-round-11
-      measurement series): the historical width ladder below, where each
-      +4 bits costs ~2.4× INTERPRETED map-side plane work, so width
-      shifts up one notch per ~3× corpus growth.
-
-    The expr-era narrative (kept because it documents the physics and
-    every measured point the ladder came from):
-
-    Random 8-bit band values collide at ~2⁻⁸, so BACKGROUND candidates grow
-    as bands·n²/2⁹ regardless of how well the bands separate true pairs:
-    measured 14 s at 21 K vectors but 238 s at 63 K (≈150 M background
-    candidates). Widening bands cuts the collision floor 2⁴× per +4 bits at
-    a recall cost concentrated on threshold-ADJACENT pairs (P(band) =
-    (1-θ/π)^bits), which is the standard LSH trade: near-verbatim dups
-    (cos ≈ 0.998, the dedup target) keep recall ≈ 1 at every width here —
-    miss probability (1-0.98^16)^10 ≈ 3e-6 even at 16 bits — while a
-    cos-0.90 pair's recall decays, exactly as production MinHash/SimHash
-    configs accept.
-
-    Every tier is MEASURED (BASELINE.md round-6/7/9 scale tables). At 63 K
-    vectors: 8-bit = recall 1.0 at 238 s; 12-bit = recall 0.9907 at 11.1 s
-    (the lost pairs are the cos-0.90-0.93 tail of the planted set,
-    deterministic). At 105 K vectors: 12-bit/13-band = recall 0.990 at
-    80 s; 16-bit at the SAME 160-plane budget (10 bands) measured recall
-    0.929 — width past 12 at a fixed plane budget drops the planted tail
-    wholesale, so past ~10⁵ vectors the recall-preserving dial is band
-    COUNT: 16-bit × bands_for(16, 0.90, 1e-2) = 53 bands (848 planes, ~5×
-    the map-side signature work, collision floor 4× under 12-bit) holds
-    the cos-0.90 miss target by construction — measured at 105 K vectors
-    in round 7 (BASELINE.md). Round 9 measured the next octave (315 K
-    vectors): 16×53's 2⁻¹⁶ collision floor is ~40 M background candidates
-    there (full wall 406 s, signature pass 2.7 s = 0.7% — the floor is the
-    whole cost), while 20-bit × bands_for(20)=100 (2 000 planes, floor 16×
-    lower) measured 182 s at the same 0.9999 recall, so the >2×10⁵ tier is
-    (20, 100). The pattern: each +4 bits of width costs ~2.4× map-side
-    plane work (linear, measured single-digit seconds) and buys a 16×
-    collision-floor cut (quadratic term) — the width that balances them
-    shifts up one notch per ~3× corpus growth, while the band count from
-    bands_for holds the cos-0.90 miss target at every width — but the
-    notch rule FAILED its 630 K extrapolation test (band-join input binds
-    before the floor there), so no branch ships unmeasured. Round 10
-    measured the first ≥10⁶ point (1.075 M vectors, the k=512 group-screen
-    wall): (20, 100) still wins — 1 501 s vs 1 557 s for 24×188 at equal
-    0.9997 recall — its third measured octave, with the 24-bit gap
-    narrowing 15% → 3.7% across the last octave. Round 11 MEASURED the
-    staged ~2×10⁶ crossover (k=1024 corpus via the 0.79 group screen +
-    the exact candidate-pair screen reduction, 2,150,400 vectors,
-    tools/scale_run.py --tier-compare 1024) and the crossover is not a
-    wall ratio but a feasibility cliff: (20, 100)'s collision floor there
-    is ~2.2×10⁸ candidates, and the exact re-rank's first join
-    materializes candidates × the 64-double vectors ≈ 110+ GB of shuffle
-    — past this host's scratch disk both times it ran (SPILL_OUT_OF_MEMORY
-    / "No space left on device" at ~43 GB and ~76 GB free), while
-    (24, 188) COMPLETED in the same session: full 3 323.7 s, rows
-    102 382 of 102 400 planted (recall 0.9998, equal to its 1.075 M
-    recall), peak scratch ~71 GB (band-join shuffle, released at stage
-    end). On a multi-executor cluster both tiers would complete, but the
-    16× candidate cut per +4 bits vs ~2.4× more plane work is
-    scale-free, so the single-node cliff IS the crossover signal — hence
-    the measured branch below at 1.5×10⁶ (the geometric midpoint of the
-    1.075 M point where 20-bit still won by 3.7% and the 2.15 M point
-    where it cannot finish). Past that, the operative dials are the
-    band-partition knob (_pruned_candidates) and the signature map side:
-    at (24, 188) × 2.15 M the interpreted aggregate/zip_with plane dots
-    (9.7×10⁹ of them) are ~78% of the full wall — fixed by the shipped
-    mapInPandas GEMM signature backend (_pruned_signatures_gemm, the
-    scale twin's default): measured 18.0 s vs 1 241.7 s for the expr leg
-    at 525 vectors × (24, 188) with all 98 700 (vec_id, band, bv) rows
-    identical, and parity law-tested at both the pinned 8-bit tier and
-    the widest shipped tier. The GEMM re-measurement of the whole ladder
-    (the head-to-head table in the gemm bullet above) then collapsed the
-    width ladder for the shipped backend: with the plane work ~free, the
-    only remaining reason to stay narrow is the ≤20 K recall-1.0 zone."""
+    Random b-bit band values collide at ~2⁻ᵇ, so BACKGROUND candidates grow
+    as bands·n²/2^(bits+1) however well the bands separate true pairs;
+    each +4 bits cuts that collision floor 16× at a recall cost
+    concentrated on threshold-ADJACENT pairs (P(band) = (1-θ/π)^bits),
+    while bands_for holds the cos-0.90 miss probability at 1e-2 at every
+    width. With the plane dots in BLAS (_pruned_signatures) the wider
+    tier's extra plane work is single-digit seconds at every measured
+    scale, so the ladder is (8, 20) up to 20 K vectors (the recall-1.0
+    zone, absolute walls in seconds), then (24, 188) everywhere. Measured
+    head-to-head (single sessions, equal-or-better recall at every cell):
+    21 K vectors 2.8 s vs 6.1 s for (12,13) [recall 0.999 vs 0.991]; 67 K
+    7.7 s vs 13.1 s for (16,53); 134 K 8.8 s vs 10.9 s for (20,100) and
+    41.3 s for (16,53); 269 K 21.4 s vs 50.1 s; 538 K 95.9 s vs 175.3 s;
+    1.075 M 250.6 s vs 859.0 s; 2.15 M 812.8 s (sig pass 21.2 s = 2.6%),
+    where (20,100)'s ~2.2×10⁸-candidate floor made the re-rank's first
+    join exceed single-node scratch both times it ran, while (24, 188)
+    completed at recall 0.9998."""
     if n_vectors <= 20_000:
         return PRUNED_BITS_PER_BAND, PRUNED_N_PLANES // PRUNED_BITS_PER_BAND
-    if backend == "gemm":
-        return 24, bands_for(24, threshold=0.90, target_miss=1e-2)
-    if n_vectors <= 100_000:
-        return 12, PRUNED_N_PLANES // 12
-    if n_vectors <= 200_000:
-        return 16, bands_for(16, threshold=0.90, target_miss=1e-2)
-    if n_vectors <= 1_500_000:
-        return 20, bands_for(20, threshold=0.90, target_miss=1e-2)
     return 24, bands_for(24, threshold=0.90, target_miss=1e-2)
+
 
 _PRUNED_CORPUS_SQL = f"""
     WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {_EMB} AS embeddings),
@@ -884,88 +807,38 @@ def _pruned_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pruned_signatures(
-    corpus: DataFrame, bits: int, bands: int, backend: str = "expr"
-) -> DataFrame:
-    """Map-side hyperplane signature pass of the pruned banded-cosine miner:
-    one row per (vec_id, band) with the packed ``bits``-bit band value.
-    Split out of _pruned_candidates so tools/scale_run.py can time the
-    signature pass separately from the band join (VERDICT r8 #2 asks for
-    the 848-plane signature-pass cost share at ≥3×10⁵ vectors). Plane rows
-    are drawn from one seeded stream in band order, so the 8-bit/20-band
-    planes are bit-identical to every prior round's.
-
-    Two backends compute the same (vec_id, band, bv) rows:
-
-    - ``expr`` — broadcast-join the corpus against an n_planes-row plane
-      table, one interpreted aggregate/zip_with dot per (vector, plane)
-      row, groupBy-pack the bits. This is the original path and the one
-      the REGISTERED oracle-checked queries pin (their physical plans stay
-      bit-identical to every prior round's plan audit).
-    - ``gemm`` — one mapInPandas over the corpus: per Arrow batch, a single
-      (batch × 64) @ (64 × n_planes) numpy GEMM produces every plane dot,
-      signs are packed per band with a second tiny (bands × bits) @ weights
-      product, and the (vec_id, band, bv) rows are emitted directly —
-      no row explosion (expr materializes n·n_planes join rows), no
-      groupBy exchange (expr shuffles n·bands packed rows), and the dots
-      run in BLAS instead of the interpreted higher-order evaluator. At
-      (24, 188) × 2.15 M vectors the expr dots are 9.7×10⁹ interpreted
-      folds ≈ 78% of the full wall (round-11 measurement) — this is the
-      staged fix for exactly that map side, shipped on the SCALE twin only
-      (embedding_cosine_banded_pruned_scaled).
-
-    Parity: both backends sum the same 64 double products per dot, but the
-    fold is left-to-right while BLAS uses blocked/SIMD accumulation, so a
-    dot within ~1 ulp of 0.0 could in principle sign-flip between them.
-    test_llm_pipeline asserts the full (vec_id, band, bv) row sets are
-    IDENTICAL on the test corpora at both the pinned 8-bit tier and the
-    widest shipped tier (24×188); random-plane dots concentrate at O(1),
-    so a flip needs |dot| ≲ 1e-15 — measure-zero in practice, and a flip
-    would only move one band of one vector (LSH recall is indifferent to
-    which side of a hyperplane a point ON the hyperplane lands)."""
-    if backend == "gemm":
-        return _pruned_signatures_gemm(corpus, bits, bands)
-    from sqload_spark.functions.vectors import dot
-
-    rng = __import__("numpy").random.RandomState(41)
-    spark = corpus.sparkSession
-    n_planes = bits * bands
-    planes = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(rng.randn(n_planes, 64))],
-        "plane int, p array<double>",
-    )
-    return (
-        corpus.join(F.broadcast(planes))
-        .select(
-            "vec_id",
-            (F.col("plane") / bits).cast("int").alias("band"),
-            (
-                F.when(dot(F.col("v"), F.col("p")) > 0, 1).otherwise(0)
-                * F.expr(f"shiftleft(1, plane % {bits})")
-            ).alias("bit"),
-        )
-        .groupBy("vec_id", "band")
-        .agg(F.sum("bit").alias("bv"))
-    )
-
-
-def _pruned_signatures_gemm(
     corpus: DataFrame, bits: int, bands: int, planes_t=None
 ) -> DataFrame:
-    """GEMM backend of _pruned_signatures (see its docstring for the
-    parity contract). By default the plane matrix is the SAME seeded
-    stream in the same band order (RandomState(41), n_planes × 64); a
-    caller with its own pinned plane stream passes it TRANSPOSED
-    ((64 × n_planes) — embedding_cosine_banded's RandomState(23) planes
-    come in this way, so the registered query and the pruned twin share
-    one GEMM body, one output-chunking policy and one parity test shape
-    instead of two divergent copies, ADVICE r11). The matrix is broadcast
-    once per invocation (~2.3 MB at 24×188) and deliberately never
-    destroyed: the returned plan is lazy and persisted copies can be
-    re-materialized after cache eviction, so the broadcast must outlive
-    this function — the per-invocation residue is KB-scale and bounded by
-    invocation count (ADVICE r11, documented trade). Output batches are
-    chunked so a 10 k-row Arrow input at 188 bands never emits one
-    1.9 M-row pandas frame."""
+    """Map-side hyperplane signature pass of the banded-cosine miners: one
+    row per (vec_id, band) with the packed ``bits``-bit band value. Split
+    out of _pruned_candidates so tools/scale_run.py can time the signature
+    pass separately from the band join.
+
+    One mapInPandas over the corpus: per Arrow batch, a single
+    (batch × 64) @ (64 × n_planes) numpy GEMM produces every plane dot,
+    signs are packed per band with a second tiny (bands × bits) @ weights
+    product, and the (vec_id, band, bv) rows are emitted directly — no
+    row explosion and no groupBy exchange before the band join. The
+    interpreted form it replaced (broadcast plane join, one
+    aggregate/zip_with dot per (vector, plane) row, groupBy pack) measured
+    1 241.7 s vs 18.0 s here at 525 vectors × (24, 188), with all 98 700
+    rows identical; test_llm_pipeline pins that form's row digests at the
+    8-bit and 24-bit tiers. BLAS accumulates in blocked order, so a dot
+    within ~1e-15 of 0.0 could in principle sign-flip against a
+    left-to-right sum; that would move one band of one vector, which LSH
+    recall is indifferent to.
+
+    By default the plane matrix is one seeded stream in band order
+    (RandomState(41), n_planes × 64), so the 8-bit/20-band planes are
+    bit-identical to every prior round's. A caller with its own pinned
+    plane stream passes it TRANSPOSED ((64 × n_planes) —
+    embedding_cosine_banded's RandomState(23) planes come in this way).
+    The matrix is broadcast once per invocation (~2.3 MB at 24×188) and
+    deliberately never destroyed: the returned plan is lazy and persisted
+    copies can be re-materialized after cache eviction, so the broadcast
+    must outlive this function — the per-invocation residue is KB-scale
+    and bounded by invocation count. Output batches are chunked so a
+    10 k-row Arrow input at 188 bands never emits one 1.9 M-row frame."""
     import numpy as np
 
     n_planes = bits * bands
@@ -1002,43 +875,52 @@ def _pruned_signatures_gemm(
     return corpus.mapInPandas(gen, f"vec_id {vid_type}, band int, bv bigint")
 
 
-def _band_partitions_for(n_vectors: int, backend: str = "gemm") -> int | None:
+def _band_partitions_for(n_vectors: int) -> int | None:
     """Measured default for the band-join shuffle dial (_pruned_candidates):
-    256 partitions once the corpus is past 10⁶ vectors under the gemm
-    backend, else None (session conf + AQE). Ships ONLY what the sweep
-    harness measured (tools/scale_run.py --band-sweep, min-of-2 cells,
-    rows bit-identical at every cell): 630 K noise-bounded ~0, 1.075 M
-    **−17%** (176.6 → 146.4 s), 2.15 M **−3.6%** (1 201.8 → 1 159.0 s) —
-    monotone never-worse across the measured ladder, with the win peaking
-    where the band-join shuffle binds before single-node spill flattens
-    the geometry (BASELINE.md round-11 sweep records). The expr backend
-    gets no default: its ≥10⁶ walls are plane-dot-bound (the dial's
-    target shuffle is not the bottleneck there) and no expr sweep was run
-    in that regime — unmeasured branches don't ship. On a real cluster
-    the right value is the executor count; SQLOAD_BAND_SHUFFLE_PARTITIONS
-    overrides this default either way ("0" forces the dial off)."""
-    if backend == "gemm" and n_vectors > 1_000_000:
+    256 partitions once the corpus is past 10⁶ vectors, else None (session
+    conf + AQE). Ships ONLY what the sweep harness measured
+    (tools/scale_run.py --band-sweep, min-of-2 cells, rows bit-identical
+    at every cell): 630 K noise-bounded ~0, 1.075 M **−17%** (176.6 →
+    146.4 s), 2.15 M **−3.6%** (1 201.8 → 1 159.0 s) — monotone
+    never-worse across the measured ladder, with the win peaking where the
+    band-join shuffle binds before single-node spill flattens the geometry
+    (BASELINE.md round-11 sweep records). On a real cluster the right
+    value is the executor count."""
+    if n_vectors > 1_000_000:
         return 256
     return None
+
+
+def _band_candidates(band_rows: DataFrame) -> DataFrame:
+    """Band-equality self-join of (vec_id, band, bv) signature rows: every
+    (vec_a < vec_b) pair that shares at least one band value, once."""
+    a, b = band_rows.alias("a"), band_rows.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bv") == F.col("b.bv"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
+        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
+        .distinct()
+    )
 
 
 def _pruned_candidates(
     corpus: DataFrame,
     tier: tuple[int, int] | None = None,
     band_partitions: int | None = None,
-    sig_backend: str = "expr",
 ) -> DataFrame:
     """Hyperplane-banded candidate mining at the high-threshold tuning:
-    wide band values (8-16 bits, vs 2-bit in the low-threshold query)
+    wide band values (8-24 bits, vs 2-bit in the low-threshold query)
     collide for random pairs with prob 2⁻ᵇⁱᵗˢ per band — this is where the
     pruning power comes from. ``tier`` is (bits, bands): pass it explicitly
     to pin a configuration (the registered oracle-checked query pins the
     8-bit tier), or None to scale it with the corpus (_pruned_tier_for;
     the one count() action is a cheap scan next to the bands·n²/2^bits it
-    controls). Plane rows are drawn from one seeded stream in band order,
-    so the 8-bit/20-band planes are bit-identical to every prior round's.
-    Same plan shape as dedup_embedding_cosine_banded: map-side signatures
-    against broadcast planes, band-equality self-join, distinct.
+    controls). Same plan shape as dedup_embedding_cosine_banded: map-side GEMM
+    signatures (_pruned_signatures), band-equality self-join, distinct.
 
     ``band_partitions`` is the cluster-scale dial the 630 K-vector analysis
     identified (BASELINE.md round-9 scale section): past ~10⁶ vectors the
@@ -1054,33 +936,15 @@ def _pruned_candidates(
     shuffle-partition conf back up to the conf (7→32 observed; 64 sticks).
     That matches the remedy's direction (finer, never coarser), but a
     sweep must raise the conf too if it wants points below the default.
+    At test scale the planner broadcasts the (small-estimated) signature
+    side instead, and the dial's exchange is then no join exchange.
     None (the default, and the registered query's only mode) leaves the
-    exchange to the session shuffle-partition conf + AQE coalescing.
-
-    ``sig_backend`` picks the signature map side (_pruned_signatures):
-    "expr" (default — the registered queries' pinned path, plan-audit
-    stable) or "gemm" (the scale twin's path; identical rows by parity
-    test, ~no row explosion and no groupBy exchange before the band
-    join)."""
-    bits, bands = (
-        tier
-        if tier is not None
-        else _pruned_tier_for(corpus.count(), backend=sig_backend)
-    )
-    band_rows = _pruned_signatures(corpus, bits, bands, backend=sig_backend)
+    exchange to the session shuffle-partition conf + AQE coalescing."""
+    bits, bands = tier if tier is not None else _pruned_tier_for(corpus.count())
+    band_rows = _pruned_signatures(corpus, bits, bands)
     if band_partitions:
         band_rows = band_rows.repartition(band_partitions, "band", "bv")
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    return _band_candidates(band_rows)
 
 
 @query("dedup_embedding_cosine_banded_pruned", oracle=_PRUNED_COSINE_ORACLE)
@@ -1146,63 +1010,33 @@ def _pruned_rerank(corpus: DataFrame, candidates: DataFrame) -> DataFrame:
 def embedding_cosine_banded_pruned_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCALE-path twin of dedup_embedding_cosine_banded_pruned: identical
     plan shape and threshold, but the (band width, band count) tier adapts
-    to the corpus AND the signature backend via _pruned_tier_for — under
-    the default gemm backend that is 8-bit/20 up to 20 K vectors (recall
-    1.0) and 24-bit × bands_for(24)=188 beyond (BLAS plane dots make the
-    sig pass single-digit seconds at every measured scale, so the widest
-    collision-floor cut wins every octave — measured head-to-head from
-    21 K to 1.075 M vectors, see _pruned_tier_for); under the expr
-    backend the historical interpreted-cost width ladder applies
-    (12-bit/13 to 100 K, 16×53 to 200 K, 20×100 to 1.5 M, 24×188 past).
-    At every width the band count holds the cos-0.90 miss probability
-    <= 1e-2 by the LSH formula (bands_for). Deliberately NOT registered: its recall above 20 K
-    vectors is a measured 0.99-trade, so checking it against the exact
-    all-pairs oracle would institutionalize a known mismatch (ADVICE r6) —
+    to the corpus via _pruned_tier_for — 8-bit/20 up to 20 K vectors
+    (recall 1.0, the registered query's tier) and 24-bit ×
+    bands_for(24)=188 beyond. At every width the band count holds the
+    cos-0.90 miss probability <= 1e-2 by the LSH formula (bands_for).
+    Deliberately NOT registered: its recall above 20 K vectors is a
+    measured 0.99-trade, so checking it against the exact all-pairs oracle
+    would institutionalize a known mismatch (ADVICE r6) —
     tools/scale_run.py measures it instead, with planted-pair counts as
     ground truth (rows = k×100 exactly when recall is 1.0).
 
-    The band-join shuffle dial (see _pruned_candidates) defaults to the
-    MEASURED adaptive value here — _band_partitions_for: 256 past 10⁶
-    vectors under the gemm backend (−17% at 1.075 M, −3.6% at 2.15 M,
-    rows invariant in every sweep cell), off below — and is exposed via
-    SQLOAD_BAND_SHUFFLE_PARTITIONS for callers that only see the (spark,
-    sf_dir) signature — e.g. dirty_scale_run's lookup table ("0" forces
-    the dial off; unset defers to the measured default). The sweep
-    harness (tools/scale_run.py --band-sweep) calls _pruned_candidates
-    directly with an explicit dial, so its cells are never contaminated
-    by this default. The corpus count feeding both the tier and the dial
-    is taken ONCE here; row counts are partitioning-invariant
-    (law-tested), so the dial cannot move the tier probe."""
-    import os
-
+    The band-join shuffle dial (see _pruned_candidates) takes the MEASURED
+    adaptive value _band_partitions_for: 256 past 10⁶ vectors (−17% at
+    1.075 M, −3.6% at 2.15 M, rows invariant in every sweep cell), off
+    below. The sweep harness (tools/scale_run.py --band-sweep) calls
+    _pruned_candidates directly with an explicit dial, so its cells are
+    never contaminated by this default. The corpus count feeding both the
+    tier and the dial is taken ONCE here; row counts are
+    partitioning-invariant (law-tested), so the dial cannot move the tier
+    probe."""
     corpus = _pruned_corpus(spark, sf_dir)
-    backend = _scaled_sig_backend()
     n = corpus.count()
-    env = os.environ.get("SQLOAD_BAND_SHUFFLE_PARTITIONS")
     return _pruned_rerank(
         corpus,
         _pruned_candidates(
-            corpus,
-            tier=_pruned_tier_for(n, backend=backend),
-            band_partitions=int(env) if env else _band_partitions_for(n, backend),
-            sig_backend=backend,
+            corpus, tier=_pruned_tier_for(n), band_partitions=_band_partitions_for(n)
         ),
     )
-
-
-def _scaled_sig_backend() -> str:
-    """Signature backend for the SCALE twin (and the tools/ harnesses that
-    measure it): "gemm" by default — the round-11 fix for the interpreted
-    plane-dot map side (≈78% of the 24-bit wall at 2.15 M vectors) —
-    overridable to "expr" via SQLOAD_SIG_BACKEND for A/B runs. The
-    REGISTERED pruned query does not read this: it pins "expr" so its
-    physical plan stays bit-identical to the committed plan audit."""
-    import os
-
-    backend = os.environ.get("SQLOAD_SIG_BACKEND", "gemm")
-    if backend not in ("expr", "gemm"):
-        raise ValueError(f"SQLOAD_SIG_BACKEND must be expr|gemm, got {backend!r}")
-    return backend
 
 
 @query("dedup_embedding_cosine_banded", oracle=_EMB_COSINE_ORACLE)
@@ -1269,12 +1103,11 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plane join + 64-term plane dot per (vector, plane) row + groupBy —
     # measured 3.53 s warm at sf0.1 vs 0.31 s for one numpy
     # (batch × 64) @ (64 × 32) matmul per Arrow batch with the band values
-    # assembled by a second tiny matmul (the same backend the _pruned scale
-    # twin shipped in round 11; band rows verified BIT-IDENTICAL against
-    # the expr pass on this corpus, 64 000 rows). Map-side only: planes are
-    # a broadcast ndarray, no shuffle enters, and batches are bounded by
-    # arrow.maxRecordsPerBatch — the shape scales exactly like the expr
-    # pass it replaces. Sign-flip robustness is inherent in banding (a
+    # assembled by a second tiny matmul (band rows verified BIT-IDENTICAL
+    # against the expr pass on this corpus, 64 000 rows). Map-side only:
+    # planes are a broadcast ndarray, no shuffle enters, and batches are
+    # bounded by arrow.maxRecordsPerBatch — the shape scales exactly like
+    # the expr pass it replaced. Sign-flip robustness is inherent in banding (a
     # borderline plane dot perturbs one band; a true pair collides in ~8
     # of 32 bands at this threshold), and the recall math is unchanged.
     # load_embeddings' validity contract guarantees every v is a finite
@@ -1292,12 +1125,9 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exist, far under the 20-100×-keys-per-partition rule, so a hash
     # spread would leave partitions empty and concentrate hot buckets.
     # defaultParallelism is the session's scale dial, not a constant.
-    # The GEMM body is the shared _pruned_signatures_gemm (r12, ADVICE
-    # r11): same signs/packing arithmetic as the inline copy it replaces
-    # (verified band rows bit-identical, 64 000 rows), plus the output
-    # chunking the copy had dropped — this path now sits under the same
-    # parity-test shape as the pruned twin.
-    band_rows = _pruned_signatures_gemm(
+    # The GEMM body is the pruned miners' _pruned_signatures, fed this
+    # query's own pinned planes.
+    band_rows = _pruned_signatures(
         emb,
         EMB_BITS_PER_BAND,
         n_bands,
@@ -1311,17 +1141,7 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of three scalars — trivially cacheable at any corpus size.
     band_rows = persist_bounded("dedup_embedding_cosine_banded.band_rows", band_rows)
     band_rows.count()  # bounded driver action: materializes the cache
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
+    candidates = _band_candidates(band_rows)
     va_x = emb_x.selectExpr(
         "vec_id AS vec_a",
         "n AS n_a",

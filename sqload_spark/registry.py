@@ -76,11 +76,17 @@ _loaded = False
 # block head). After this round no name's newest external row is older
 # than r9.
 #
-# ROUND-13+ RECIPE (the same standing rule every round):
+# ROUND-13+ RECIPE (the standing rule every round):
 #   1. any name the newest CORRECTNESS_rNN unexpectedly missed or errored;
-#   2. fill to 50 with the stalest hash-green names per
+#   2. every name whose implementation changed since its last external
+#      check (this round: the banded-cosine pair, whose signatures moved to
+#      the one GEMM body; stream_microbatch_progress and
+#      stream_upsert_compaction, whose batch sinks now overwrite per batch
+#      id; then the names the round-12 sources touched);
+#   3. fill to 50 with the stalest hash-green names per
 #      tools/coverage_report.py --list — the listing is authoritative,
 #      recompute it, don't trust this comment.
+# In short: changed since its last external check first, then stalest.
 # Rows-only-by-design entries (dedup_simhash, LSH/IVF recall paths,
 # mm_decode_features, the generator tables) stay out of the window —
 # law-tested in pytest instead.
@@ -89,25 +95,28 @@ _loaded = False
 # judge-sample protocol) for standing evidence.
 
 _PRIORITY = [
-    # -- the 45 r8-stale hash-green refreshes (oldest external rows) ---------
-    "etl_jdbc_bulk_load", "etl_partitioned_bulk_load", "etl_zorder_cluster",
-    "mm_payload_stats", "pipe_training_mix", "q1_pricing_summary",
-    "q3_shipping_priority", "q_approx_count_distinct", "q_approx_percentile",
-    "q_chunk_documents", "q_conditional_agg", "q_correlated_scalar",
-    "q_exists_correlated", "q_from_json_map", "q_grouping_sets",
-    "q_in_subquery", "q_mix_rebalance", "q_pack_sequences",
-    "q_range_join_bands", "q_salted_agg", "q_salted_join", "q_sample_hash",
-    "q_sample_stratified", "q_scalar_subquery", "q_split_leakage_safe",
-    "q_winsorize", "sim_label_centroids", "sim_topk_bruteforce",
-    "sim_topk_hyperplane_lsh", "sketch_count_min", "sketch_hll_merge",
-    "src_csv_roundtrip", "src_json_roundtrip", "stream_tumbling_counts",
-    "text_quality_pandas_udf", "text_token_stats",
-    "text_top_terms_applyinpandas", "ts_asof_join", "ts_daily_rate",
-    "ts_first_last_per_user", "ts_moving_avg", "ts_multires_rollup",
-    "ts_sessionize", "ts_sliding_window", "ts_tumbling_window",
-    # -- 5 oldest r9 rows to fill the 50-name window -------------------------
-    "dedup_edit_distance", "dedup_exact_groups", "dedup_minhash_checked",
-    "dedup_minhash_eval", "dedup_ngram_jaccard",
+    # -- changed since their last external check -----------------------------
+    "dedup_embedding_cosine_banded_pruned", "dedup_embedding_cosine_banded",
+    "stream_microbatch_progress", "stream_upsert_compaction",
+    # -- touched by the round-12 sources, last checked before them -----------
+    "sim_pagerank_knn", "sim_mmr_rerank", "sim_crossencoder_rerank",
+    "sim_knn_graph", "sim_knn_triangles", "dedup_keep_list",
+    "dedup_keep_list_weighted", "dedup_cluster_sizes",
+    "dedup_pairs_materialized", "dedup_semantic_representative",
+    # -- fill to 50 with the stalest (r09) hash-green names ------------------
+    "dedup_prefix_filter", "q5_region_revenue", "q_anti_join",
+    "q_count_distinct", "q_cube_returnflag_status", "q_date_funcs",
+    "q_except_custkeys", "q_filter_project", "q_having",
+    "q_intersect_custkeys", "q_json_extract", "q_math_funcs",
+    "q_percentiles", "q_pivot_status", "q_rollup_region_nation",
+    "q_semi_join", "q_stats_moments", "q_string_agg", "q_string_funcs",
+    "q_topk_orders", "q_union_priority_counts", "q_vector_norms",
+    "q_window_distribution", "q_window_first_nth", "q_window_lag_lead",
+    "q_window_rank_dense", "q_window_running_revenue",
+    "q_window_topk_per_customer", "src_orc_roundtrip", "stream_dedup_events",
+    "stream_session_window", "stream_stateful_profile",
+    "text_bpe_regex_tokens", "text_contamination_ngram",
+    "text_langid_markers", "text_md5_fingerprint",
 ]
 
 

@@ -34,10 +34,9 @@ from sqload_spark.session import configure, scratch_dir
 # SOURCE BYTES (32 MB per state partition, floor 4, cap 4× parallelism) keeps
 # micro-batch overhead proportional to data at any scale: a 2 MB bench replay
 # gets 4 partitions; a 100 TB/day feed saturates the 4×-cores cap, which is the
-# same order a static tuning would pick for a busy production stream.
-# Override with SQLOAD_STREAM_SHUFFLE_PARTITIONS (A/B dial; semantics-free —
-# state partitioning never changes aggregation/join/dedup results, only where
-# keys live).
+# same order a static tuning would pick for a busy production stream. State
+# partitioning never changes aggregation/join/dedup results, only where keys
+# live.
 _STREAM_STATE_BYTES_PER_PARTITION = 32 * 1024 * 1024
 _STREAM_STATE_MIN_PARTITIONS = 4
 
@@ -55,9 +54,6 @@ def source_bytes(path_or_glob: str) -> int:
 
 
 def stream_shuffle_partitions(spark: SparkSession, src_bytes: int) -> int:
-    env = os.environ.get("SQLOAD_STREAM_SHUFFLE_PARTITIONS", "").strip()
-    if env:
-        return max(1, int(env))
     cpus = spark.sparkContext.defaultParallelism
     by_bytes = math.ceil(max(src_bytes, 1) / _STREAM_STATE_BYTES_PER_PARTITION)
     return max(_STREAM_STATE_MIN_PARTITIONS, min(cpus * 4, by_bytes))

@@ -159,109 +159,79 @@ def test_pruned_banded_cosine_shrink_and_recall(spark, duck):
     )
 
 
-def test_pruned_signature_gemm_parity(spark):
-    """The band-value parity gate for the GEMM signature backend (round-11:
-    the scale twin's map side moved from interpreted aggregate/zip_with
-    plane dots to one mapInPandas GEMM per Arrow batch). Both backends
-    must produce IDENTICAL (vec_id, band, bv) row sets — the expr fold is
-    left-to-right while BLAS blocks the summation, so this asserts no
-    near-zero dot sign-flipped on the actual corpora. Pinned 8-bit tier on
-    the full sf0.01 corpus (525 vectors); the widest shipped tier (24×188)
-    on a deterministic 105-vector subset, because the expr leg's 4 512
-    interpreted folds per vector are exactly the cost the GEMM backend
-    removes — full-width full-corpus parity was measured once in-session
-    (all 98 700 rows identical; expr 1 241.7 s vs gemm 18.0 s, the ratio
-    recorded in BASELINE.md) and this gate stays cheap. Repartition(32) so
-    the expr folds use every core; partitioning is semantics-free for a
-    row-SET comparison."""
+# row_digest of the (vec_id, band, bv) rows of the interpreted signature
+# form (broadcast plane join, one aggregate/zip_with dot per (vector, plane)
+# row, groupBy pack) that _pruned_signatures replaced, computed before that
+# form was deleted. The GEMM body reproduced both digests at the time.
+_EXPR_SIGNATURE_DIGESTS = {
+    (8, 20): (10_500, 371819033127341140958),
+    (24, 188): (23_500, -705450800027014832191),
+}
+
+
+def test_pruned_signatures_reproduce_expr_digests(spark):
+    """The band-value gate for the one signature body: BLAS blocks the
+    summation where the deleted interpreted fold summed left to right, so
+    this asserts no near-zero dot sign-flipped on the actual corpora
+    against that form's pinned rows. Pinned 8-bit tier on the full sf0.01
+    corpus (525 vectors); the widest shipped tier (24×188) on the
+    deterministic 125-vector vec_id % 5 == 0 subset."""
     from pyspark.sql import functions as F
 
     from sqload_spark.operators.dedup import _pruned_corpus, _pruned_signatures
+    from tests.conftest import row_digest
 
     full = _pruned_corpus(spark, SF_DIR)
     for corpus, tier in [
         (full, (8, 20)),
         (full.filter(F.col("vec_id") % 5 == 0), (24, 188)),
     ]:
-        corpus = corpus.repartition(32)
-        expr_rows = set(
-            map(tuple, _pruned_signatures(corpus, *tier, backend="expr").collect())
-        )
-        gemm_rows = set(
-            map(tuple, _pruned_signatures(corpus, *tier, backend="gemm").collect())
-        )
-        assert expr_rows, f"empty signature set at {tier}"
-        assert expr_rows == gemm_rows, f"band-value parity broken at {tier}"
+        got = row_digest(_pruned_signatures(corpus.repartition(32), *tier))
+        assert got == _EXPR_SIGNATURE_DIGESTS[tier], f"band values moved at {tier}"
 
 
-def test_pruned_scaled_twin_backend_invariant(spark, monkeypatch):
-    """The scale twin's OUTPUT is backend-invariant: identical ordered rows
-    under SQLOAD_SIG_BACKEND=expr and =gemm (parity above implies identical
-    candidates, hence identical re-ranked pairs). Also: a bogus backend
-    value fails fast in Python, naming the env var's contract."""
+def test_pruned_scaled_twin_matches_registered(spark):
+    """Below 20 K vectors the scale twin picks the registered query's
+    pinned (8, 20) tier and no band-partition dial, so at sf0.01 the two
+    must return identical ordered rows."""
     from sqload_spark.operators.dedup import (
-        _scaled_sig_backend,
+        _band_partitions_for,
+        _pruned_tier_for,
+        embedding_cosine_banded_pruned,
         embedding_cosine_banded_pruned_scaled,
     )
 
-    monkeypatch.setenv("SQLOAD_SIG_BACKEND", "expr")
-    expr_out = embedding_cosine_banded_pruned_scaled(spark, SF_DIR).collect()
-    monkeypatch.setenv("SQLOAD_SIG_BACKEND", "gemm")
-    gemm_out = embedding_cosine_banded_pruned_scaled(spark, SF_DIR).collect()
-    assert expr_out and expr_out == gemm_out
-
-    monkeypatch.setenv("SQLOAD_SIG_BACKEND", "blas3")
-    with pytest.raises(ValueError, match="expr|gemm"):
-        _scaled_sig_backend()
+    assert _pruned_tier_for(525) == (8, 20)
+    assert _band_partitions_for(525) is None
+    registered = embedding_cosine_banded_pruned(spark, SF_DIR).collect()
+    scaled = embedding_cosine_banded_pruned_scaled(spark, SF_DIR).collect()
+    assert registered and scaled == registered
 
 
 def test_pruned_tier_scales_with_corpus():
     """The banded-cosine collision floor is bands·n²/2^bits (BASELINE.md
     round-6 curve: 8-bit bands fine at 21 K vectors, 238 s at 63 K), so the
     (width, band count) tier must change with the corpus, and near-verbatim
-    dups (cos ≈ 0.998) must keep recall ≈ 1 at every tier. Round 11's GEMM
-    signature backend re-priced the plane work ~69×, so the ladder is now
-    backend-aware: one ladder per measured cost model."""
+    dups (cos ≈ 0.998) must keep recall ≈ 1 at every tier."""
     from sqload_spark.operators.dedup import PRUNED_N_PLANES, _pruned_tier_for
 
-    # gemm ladder (the scale twin's default backend, and the function's
-    # default): plane dots are BLAS, so the widest bands_for-sound tier
-    # wins every measured octave — 21 K (2.8 s vs 6.1 s for 12×13), 67 K
-    # (7.7 vs 13.1 for 16×53), 134 K (8.8 vs 10.9 for 20×100), 269 K
-    # (21.4 vs 50.1), 538 K (95.9 vs 175.3), 1.075 M (250.6 vs 859.0),
-    # all at equal-or-better recall. Below 20 K the pinned 8-bit tier
-    # keeps its measured recall-1.0 contract (absolute walls are seconds).
+    # Plane dots are BLAS, so the widest bands_for-sound tier wins every
+    # measured octave — 21 K (2.8 s vs 6.1 s for 12×13), 67 K (7.7 vs 13.1
+    # for 16×53), 134 K (8.8 vs 10.9 for 20×100), 269 K (21.4 vs 50.1),
+    # 538 K (95.9 vs 175.3), 1.075 M (250.6 vs 859.0), all at
+    # equal-or-better recall. Below 20 K the pinned 8-bit tier keeps its
+    # measured recall-1.0 contract (absolute walls are seconds).
     assert _pruned_tier_for(210) == (8, 20)            # sf0.01 driver corpus
     assert _pruned_tier_for(20_000) == (8, 20)         # recall-1.0 zone
     for n in (21_000, 63_000, 150_000, 500_000, 1_075_200, 2_150_400):
         assert _pruned_tier_for(n) == (24, 188)
-        assert _pruned_tier_for(n, backend="gemm") == (24, 188)
 
-    # expr ladder (the registered queries' backend; the pre-round-11
-    # measurement series): width shifts one notch per ~3× corpus growth
-    # because each +4 bits costs ~2.4× INTERPRETED map-side plane work.
-    assert _pruned_tier_for(210, backend="expr") == (8, 20)
-    assert _pruned_tier_for(20_000, backend="expr") == (8, 20)
-    assert _pruned_tier_for(63_000, backend="expr") == (12, 13)   # 238 s knee
-    assert _pruned_tier_for(150_000, backend="expr") == (16, 53)  # r7: 105 K recall 0.9998
-    # round-9: at 315 K vectors 16×53's collision floor is ~40 M background
-    # candidates (406 s); 20×100 measured 182 s at the same 0.9999 recall
-    assert _pruned_tier_for(500_000, backend="expr") == (20, 100)
-    # round-11: at 2.15 M vectors the 20-bit floor (~2.2e8 candidates) made
-    # the re-rank's first join exceed single-node scratch both times it ran,
-    # while 24×188 completed at recall 0.9998 in the same session — the
-    # measured feasibility crossover; boundary = the geometric midpoint of
-    # the 1.075 M point (20-bit still won by 3.7%) and the 2.15 M point
-    assert _pruned_tier_for(1_075_200, backend="expr") == (20, 100)
-    assert _pruned_tier_for(2_150_400, backend="expr") == (24, 188)
-
-    for backend in ("expr", "gemm"):
-        for n in (210, 63_000, 150_000, 500_000, 2_150_400):
-            bits, bands = _pruned_tier_for(n, backend=backend)
-            assert bits * bands >= PRUNED_N_PLANES // 2  # never degenerate
-            # planted-dup recall law: P(miss every band) stays negligible
-            p_band = 0.98 ** bits  # P(bit agrees) ≈ 1 - θ/π ≈ 0.98 at cos 0.998
-            assert (1 - p_band) ** bands < 1e-5
+    for n in (210, 63_000, 150_000, 500_000, 2_150_400):
+        bits, bands = _pruned_tier_for(n)
+        assert bits * bands >= PRUNED_N_PLANES // 2  # never degenerate
+        # planted-dup recall law: P(miss every band) stays negligible
+        p_band = 0.98 ** bits  # P(bit agrees) ≈ 1 - θ/π ≈ 0.98 at cos 0.998
+        assert (1 - p_band) ** bands < 1e-5
 
 
 def test_bands_for_matches_lsh_formula():
@@ -455,54 +425,63 @@ def test_band_shuffle_dial_partitions_and_row_invariance(spark):
     (band, bv) stacks on top. Below the conf, EnsureRequirements floors the
     number back to the conf (measured 7→32) — the dial only widens, which
     matches the remedy's direction. Either way the dial is semantics-free:
-    candidate pairs are identical with it on, off, or at another N."""
+    candidate pairs are identical with it on, off, or at another N.
+
+    The dial's regime is the sort-merge band join of a large corpus. At
+    sf0.01 the planner sizes the mapInPandas signature side from its small
+    scan and broadcasts it, so the plan assertions run with broadcast
+    joins off."""
     from sqload_spark.operators.dedup import _pruned_candidates, _pruned_corpus
 
     corpus = _pruned_corpus(spark, SF_DIR)
     tier = (8, 20)
     n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_dial = n_conf * 2
-    dialed = _pruned_candidates(corpus, tier=tier, band_partitions=n_dial)
-    plan = dialed._sc._jvm.PythonSQLUtils.explainString(
-        dialed._jdf.queryExecution(), "extended"
-    )
-    band_exchanges = [
-        ln for ln in plan.splitlines() if "Exchange hashpartitioning(band" in ln
-    ]
-    assert band_exchanges, plan[-2000:]
-    for ln in band_exchanges:
-        assert f", {n_dial})" in ln and "REPARTITION_BY_NUM" in ln, ln
-    # floor behavior: a below-conf dial is bumped to the conf, never kept
-    floored = _pruned_candidates(corpus, tier=tier, band_partitions=max(2, n_conf // 4))
-    fplan = floored._sc._jvm.PythonSQLUtils.explainString(
-        floored._jdf.queryExecution(), "extended"
-    )
-    for ln in fplan.splitlines():
-        if "Exchange hashpartitioning(band" in ln:
-            assert f", {n_conf})" in ln, ln
-    base = {tuple(r) for r in _pruned_candidates(corpus, tier=tier).collect()}
-    assert {tuple(r) for r in dialed.collect()} == base
-    assert {tuple(r) for r in floored.collect()} == base
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        dialed = _pruned_candidates(corpus, tier=tier, band_partitions=n_dial)
+        plan = dialed._sc._jvm.PythonSQLUtils.explainString(
+            dialed._jdf.queryExecution(), "extended"
+        )
+        assert "SortMergeJoin" in plan, plan[-2000:]
+        band_exchanges = [
+            ln for ln in plan.splitlines() if "Exchange hashpartitioning(band" in ln
+        ]
+        assert band_exchanges, plan[-2000:]
+        for ln in band_exchanges:
+            assert f", {n_dial})" in ln and "REPARTITION_BY_NUM" in ln, ln
+        # floor behavior: a below-conf dial is bumped to the conf, never kept
+        floored = _pruned_candidates(
+            corpus, tier=tier, band_partitions=max(2, n_conf // 4)
+        )
+        fplan = floored._sc._jvm.PythonSQLUtils.explainString(
+            floored._jdf.queryExecution(), "extended"
+        )
+        for ln in fplan.splitlines():
+            if "Exchange hashpartitioning(band" in ln:
+                assert f", {n_conf})" in ln, ln
+        base = {tuple(r) for r in _pruned_candidates(corpus, tier=tier).collect()}
+        assert {tuple(r) for r in dialed.collect()} == base
+        assert {tuple(r) for r in floored.collect()} == base
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
 def test_band_partitions_default_ladder():
     """Sparkless law for the scale twin's measured dial default
-    (_band_partitions_for): 256 ONLY past 10⁶ vectors under the gemm
-    backend — the two regimes the sweep harness measured wins in
-    (1.075 M −17%, 2.15 M −3.6%, rows invariant) — and None everywhere
-    else: the ≤10⁶ gemm band (630 K measured noise-bounded) and the
-    whole expr ladder (its ≥10⁶ walls are plane-dot-bound; no sweep ran
-    there, and unmeasured branches must not ship)."""
+    (_band_partitions_for): 256 ONLY past 10⁶ vectors — the two regimes
+    the sweep harness measured wins in (1.075 M −17%, 2.15 M −3.6%, rows
+    invariant) — and None at or below 10⁶ (630 K measured
+    noise-bounded)."""
     from sqload_spark.operators.dedup import _band_partitions_for
 
-    assert _band_partitions_for(2_150_400, "gemm") == 256
-    assert _band_partitions_for(1_075_200, "gemm") == 256
-    assert _band_partitions_for(1_000_001, "gemm") == 256
-    assert _band_partitions_for(1_000_000, "gemm") is None
-    assert _band_partitions_for(630_000, "gemm") is None
-    assert _band_partitions_for(2_100, "gemm") is None
-    for n in (2_100, 630_000, 1_075_200, 2_150_400):
-        assert _band_partitions_for(n, "expr") is None
+    assert _band_partitions_for(2_150_400) == 256
+    assert _band_partitions_for(1_075_200) == 256
+    assert _band_partitions_for(1_000_001) == 256
+    assert _band_partitions_for(1_000_000) is None
+    assert _band_partitions_for(630_000) is None
+    assert _band_partitions_for(2_100) is None
 
 
 def test_prefix_filter_agg_prefix_equals_window_prefix(spark):

@@ -152,3 +152,25 @@ def test_upsert_batch_replay_is_idempotent(spark, tmp_path):
     assert total_versions() == once == 3
     upsert_delta(batch.limit(1), 1, delta_dir)
     assert total_versions() == 4
+
+
+def test_microbatch_replay_is_idempotent(spark, tmp_path):
+    """Running one micro-batch id twice must leave the accumulated per-type
+    counts of stream_microbatch_progress unchanged."""
+    from sqload_spark.streaming.queries import microbatch_counts
+
+    batch = spark.createDataFrame(
+        [(1, "view", 0), (2, "click", 0), (3, "view", 0)],
+        "event_id long, event_type string, bucket long",
+    )
+    acc_dir = str(tmp_path / "acc")
+
+    def total() -> int:
+        return spark.read.parquet(f"{acc_dir}/*").agg(F.sum("n")).first()[0]
+
+    microbatch_counts(batch, 0, acc_dir)
+    once = total()
+    microbatch_counts(batch, 0, acc_dir)
+    assert total() == once == 3
+    microbatch_counts(batch.limit(1), 1, acc_dir)
+    assert total() == 4

@@ -462,20 +462,17 @@ def timed(name: str, fn, spark: SparkSession, sf_dir: str) -> tuple[float, int]:
     return time.monotonic() - t0, n
 
 
-def _timed_sig(corpus, bits: int, bands: int, backend: str) -> float:
-    """Signature-pass wall under a NON-prunable action. The historical
-    count()-based timer let Catalyst drop the bv aggregate — and with it
-    every plane dot — from the expr backend's plan (the round-11 2.15 M
-    run documented the distortion: a 65.9 s 'sig pass' on a tier whose
-    dots are ~78% of a 3 324 s full wall). sum(bv) forces the packed band
-    values, hence all bits·bands dots, on BOTH backends, so expr-vs-gemm
-    cells are comparable. sig_sec values in emb-tier JSONs recorded before
-    round 11 carry the old pruned semantics — compare shapes, not values,
-    across that boundary."""
+def _timed_sig(corpus, bits: int, bands: int) -> float:
+    """Signature-pass wall under a NON-prunable action: sum(bv) forces the
+    packed band values, hence all bits·bands dots. (A count()-based timer
+    once let Catalyst prune the plane dots from an interpreted signature
+    plan.) sig_sec values in emb-tier JSONs recorded before round 11 carry
+    that pruned semantics — compare shapes, not values, across that
+    boundary."""
     from sqload_spark.operators.dedup import _pruned_signatures
 
     t0 = time.monotonic()
-    _pruned_signatures(corpus, bits, bands, backend=backend).agg(
+    _pruned_signatures(corpus, bits, bands).agg(
         F.sum("bv"), F.count("*")
     ).collect()
     return time.monotonic() - t0
@@ -491,11 +488,9 @@ def emb_tier_main(scales: list[int]) -> None:
     from sqload_spark.operators.dedup import (
         _pruned_corpus,
         _pruned_tier_for,
-        _scaled_sig_backend,
         embedding_cosine_banded_pruned_scaled,
     )
 
-    backend = _scaled_sig_backend()
     dirs = {k: build_embeddings_corpus(spark, k) for k in scales}
     embedding_cosine_banded_pruned_scaled(spark, dirs[scales[0]]).count()  # warm codegen
     best: dict[int, dict] = {}
@@ -503,8 +498,8 @@ def emb_tier_main(scales: list[int]) -> None:
         for k in scales:
             corpus = _pruned_corpus(spark, dirs[k])
             n = corpus.count()
-            bits, bands = _pruned_tier_for(n, backend=backend)
-            sig = _timed_sig(corpus, bits, bands, backend)
+            bits, bands = _pruned_tier_for(n)
+            sig = _timed_sig(corpus, bits, bands)
             t0 = time.monotonic()
             rows = embedding_cosine_banded_pruned_scaled(spark, dirs[k]).count()
             full = time.monotonic() - t0
@@ -512,7 +507,6 @@ def emb_tier_main(scales: list[int]) -> None:
                 k,
                 {
                     "scale": k, "vectors": n, "bits": bits, "bands": bands,
-                    "sig_backend": backend,
                     "sig_sec": sig, "full_sec": full,
                     "rows": rows, "expected": k * 100,
                 },
@@ -548,18 +542,15 @@ def band_sweep_main(scale: int, dials: list[int]) -> None:
         _pruned_corpus,
         _pruned_rerank,
         _pruned_tier_for,
-        _scaled_sig_backend,
     )
 
-    backend = _scaled_sig_backend()
     corpus = _pruned_corpus(spark, build_embeddings_corpus(spark, scale))
     n = corpus.count()
-    bits, bands = _pruned_tier_for(n, backend=backend)
+    bits, bands = _pruned_tier_for(n)
 
     def wall(dial: int) -> tuple[float, int]:
         cand = _pruned_candidates(
-            corpus, tier=(bits, bands), band_partitions=dial or None,
-            sig_backend=backend,
+            corpus, tier=(bits, bands), band_partitions=dial or None
         )
         t0 = time.monotonic()
         rows = _pruned_rerank(corpus, cand).count()
@@ -567,9 +558,7 @@ def band_sweep_main(scale: int, dials: list[int]) -> None:
 
     # warm the codegen/shuffle path on the small 2× emb corpus, untimed
     small = _pruned_corpus(spark, build_embeddings_corpus(spark, 2))
-    _pruned_rerank(
-        small, _pruned_candidates(small, tier=(bits, bands), sig_backend=backend)
-    ).count()
+    _pruned_rerank(small, _pruned_candidates(small, tier=(bits, bands))).count()
 
     cells = {d: {"dial": d, "sec": float("inf"), "rows": None} for d in dials}
     failures: list[str] = []
@@ -636,34 +625,30 @@ def tier_compare_main(scale: int, tiers: list[tuple[int, int]], passes: int) -> 
         _pruned_candidates,
         _pruned_corpus,
         _pruned_rerank,
-        _scaled_sig_backend,
     )
 
-    backend = _scaled_sig_backend()
     corpus = _pruned_corpus(spark, build_embeddings_corpus(spark, scale))
     n = corpus.count()
     # warm codegen/shuffle on the small 2x corpus, untimed (cold-JVM first
     # runs measure 2.6x their warmed time — same rationale as main)
     small = _pruned_corpus(spark, build_embeddings_corpus(spark, 2))
     for bits, bands in tiers:
-        _pruned_rerank(
-            small, _pruned_candidates(small, tier=(bits, bands), sig_backend=backend)
-        ).count()
+        _pruned_rerank(small, _pruned_candidates(small, tier=(bits, bands))).count()
 
     cells: dict[tuple[int, int], dict] = {}
     for _pass in range(passes):
         for bits, bands in tiers:
-            sig = round(_timed_sig(corpus, bits, bands, backend), 1)
+            sig = round(_timed_sig(corpus, bits, bands), 1)
             t0 = time.monotonic()
             rows = _pruned_rerank(
                 corpus,
-                _pruned_candidates(corpus, tier=(bits, bands), sig_backend=backend),
+                _pruned_candidates(corpus, tier=(bits, bands)),
             ).count()
             full = round(time.monotonic() - t0, 1)
             c = cells.setdefault(
                 (bits, bands),
                 {
-                    "bits": bits, "bands": bands, "sig_backend": backend,
+                    "bits": bits, "bands": bands,
                     "sig_sec": sig, "full_sec": full, "rows": rows,
                     "expected": scale * 100,
                 },
