@@ -92,12 +92,17 @@ def _decode_stub(payload: bytes, fmt: str) -> dict:
     }
 
 
+_NULL_FEATURES = {"width": None, "height": None, "mean_byte": None, "n_frames": None}
+
+
 def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """One pandas frame per Arrow batch; per-payload work is numpy-
     vectorized inside the stub (a real decoder would be the hot loop)."""
     for pdf in batches:
+        # NULL payload (encode(NULL) upstream): an all-NULL feature row for
+        # the doc, as _sample_frames does, instead of crashing the batch.
         feats = [
-            _decode_stub(payload, fmt)
+            _NULL_FEATURES if payload is None else _decode_stub(payload, fmt)
             for payload, fmt in zip(pdf["payload"], pdf["format"])
         ]
         yield pd.DataFrame(

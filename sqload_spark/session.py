@@ -172,7 +172,7 @@ def configure(spark: SparkSession) -> SparkSession:
     # Deliberately NOT set here: spark.sql.adaptive.enabled. It is on by
     # default since Spark 3.2 (the driver's plain session already has it),
     # it is a performance knob with no bearing on results, and forcing it
-    # silently overrode tools/invariance_run.py's aqe=false geometry — the
+    # silently overrode the `tools/drive_entry.py --aqe false` geometry — the
     # r6 self-review caught that the "AQE off" evidence row had never
     # actually run with AQE off. Semantic configs only in this function.
     return spark

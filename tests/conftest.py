@@ -1,7 +1,9 @@
 """Shared fixtures: one SparkSession per test session, a DuckDB connection
 with the test tables registered as views, and the differential comparator
 that mimics the driver's correctness gate (row count + schema + order-
-insensitive value hash)."""
+insensitive value hash). The oracle tools (``tools/drive_entry.py``,
+``tools/adversarial_run.py``, ``tools/dtype_audit.py``) import the view
+setup and the comparison rule from here, so every gate compares alike."""
 
 from __future__ import annotations
 
@@ -30,13 +32,18 @@ def spark():
     yield spark
 
 
-@pytest.fixture(scope="session")
-def duck():
+def duck_views(sf_dir: str):
+    """A DuckDB connection with every test table registered as a view over
+    ``{sf_dir}/{name}.parquet``."""
     con = duckdb.connect()
     for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_DIR}/{name}.parquet')"
-        )
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')")
+    return con
+
+
+@pytest.fixture(scope="session")
+def duck():
+    con = duck_views(SF_DIR)
     yield con
     con.close()
 
@@ -80,20 +87,23 @@ def canon_rows(df) -> list[tuple[str, ...]]:
     return sorted(rows)
 
 
+def oracle_mismatch(sp, du) -> str | None:
+    """The one comparison rule of every oracle gate, over two pandas frames:
+    row count, then lowercased column names, then canonical values. None
+    when they match, else the first difference (up to three rows)."""
+    if len(sp) != len(du):
+        return f"row count {len(sp)} != oracle {len(du)}"
+    if sorted(c.lower() for c in sp.columns) != sorted(c.lower() for c in du.columns):
+        return f"columns {sorted(sp.columns)} != oracle {sorted(du.columns)}"
+    diffs = [(a, b) for a, b in zip(canon_rows(sp), canon_rows(du)) if a != b]
+    if diffs:
+        return f"values differ; first diffs (spark, oracle): {diffs[:3]}"
+    return None
+
+
 def assert_matches_oracle(spark_df, duck, oracle: str, name: str = "query") -> None:
-    sp = spark_df.toPandas()
-    du = duck.execute(oracle).fetchdf()
-    assert len(sp) == len(du), f"{name}: row count {len(sp)} != oracle {len(du)}"
-    assert sorted(c.lower() for c in sp.columns) == sorted(c.lower() for c in du.columns), (
-        f"{name}: columns {sorted(sp.columns)} != oracle {sorted(du.columns)}"
-    )
-    sp_rows, du_rows = canon_rows(sp), canon_rows(du)
-    mismatches = [
-        (a, b) for a, b in zip(sp_rows, du_rows) if a != b
-    ]
-    assert sp_rows == du_rows, (
-        f"{name}: value mismatch; first diffs: {mismatches[:3]}"
-    )
+    why = oracle_mismatch(spark_df.toPandas(), duck.execute(oracle).fetchdf())
+    assert why is None, f"{name}: {why}"
 
 
 def row_digest(df) -> tuple[int, int]:

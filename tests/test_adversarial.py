@@ -140,6 +140,22 @@ def test_quality_udfs_null_text_row():
     assert out.iloc[2]["n_tokens"] == 1  # "".split(" ") == [""] in all engines
 
 
+def test_decode_features_null_payload_row():
+    """mapInPandas decode: a NULL payload (NULL text upstream) yields its
+    doc_id with an all-NULL feature row instead of killing the stage; an
+    empty payload still decodes."""
+    from sqload_spark.operators.multimodal import _extract_features
+
+    pdf = pd.DataFrame(
+        {"doc_id": [1, 2, 3], "payload": [b"abc", None, b""], "format": ["jpeg", "png", "webp"]}
+    )
+    out = pd.concat(list(_extract_features(iter([pdf]))), ignore_index=True)
+    assert list(out.doc_id) == [1, 2, 3]
+    assert out.iloc[1][["width", "height", "mean_byte", "n_frames"]].isna().all()
+    assert out.iloc[0].mean_byte == 98.0 and 64 <= out.iloc[0].width < 576
+    assert out.iloc[2].mean_byte == 0.0 and out.iloc[2].n_frames >= 1
+
+
 # ---------------------------------------------------------------------------
 # Part-3 guards: dirty TPC-H fact rows (NULL sort/group keys, hive partition
 # collapse, dialect-split JDBC NULLs, off-domain math). Each law below was a

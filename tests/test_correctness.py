@@ -5,10 +5,15 @@ gate the driver applies. Queries without an oracle get a rows-run check."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
+import pandas as pd
 import pytest
 
 from sqload_spark import registry
-from tests.conftest import SF_DIR, SF_SMOKE_DIR, assert_matches_oracle
+from tests.conftest import SF_DIR, SF_SMOKE_DIR, assert_matches_oracle, oracle_mismatch
 
 registry.load_all()
 
@@ -68,3 +73,28 @@ def test_events_loader_normalizes_both_ts_layouts(spark, tmp_path):
             (r.event_id, r.ts_ns, r.ts) for r in df.select("event_id", "ts_ns", "ts").collect()
         )
     assert rows["micros"] == rows["nanos"]
+
+
+def test_oracle_mismatch_rule():
+    """The one comparison rule: row count, then column names, then canonical
+    values; a renamed column with equal values is a mismatch."""
+    du = pd.DataFrame({"a": [1, 2], "sum_rev": [0.5, 1.25]})
+    assert oracle_mismatch(du.copy(), du) is None
+    assert "columns" in oracle_mismatch(du.rename(columns={"sum_rev": "revenue"}), du)
+    assert "row count" in oracle_mismatch(du.iloc[:1], du)
+    off = du.assign(sum_rev=[0.5, 1.25 + 1e-9])
+    why = oracle_mismatch(off, du)
+    assert "values differ" in why and "f:1.250000001" in why and "f:1.25'" in why
+
+
+@pytest.mark.parametrize(
+    "args, code, needle",
+    [(["--help"], 0, "--shuffle-partitions"), (["no_such_query"], 2, "unknown queries")],
+    ids=["help", "unknown_query"],
+)
+def test_drive_entry_cli(args, code, needle):
+    """drive_entry.py validates names before any session starts."""
+    tool = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "drive_entry.py")
+    proc = subprocess.run([sys.executable, tool, *args], capture_output=True, text=True, timeout=60)
+    assert proc.returncode == code
+    assert needle in proc.stdout + proc.stderr

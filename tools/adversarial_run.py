@@ -14,11 +14,11 @@ its oracle on the first dirty shard of production data.
 
 This tool builds a deterministic dirty corpus in a scratch dir (the
 sf0.001 tables, with `documents` extended by adversarial rows and
-`embeddings` extended by degenerate vectors), then re-runs the IDENTICAL
-drive_entry comparator over it: every oracled query, Spark vs DuckDB on
-the same files, strict hash compare. Queries that never touch
-documents/embeddings re-verify unchanged — the run doubles as one more
-full-comparator geometry.
+`embeddings` extended by degenerate vectors), then runs drive_entry's
+`compare` over it: every registered query, Spark vs DuckDB on the same
+files under the one comparison rule, and every rows-only query must at
+least run without raising. Queries that never touch the dirty tables
+re-verify unchanged — the run doubles as one more full-comparator geometry.
 
 Usage:
     python tools/adversarial_run.py [--docs-only] [--keep] [--only name...]
@@ -37,12 +37,12 @@ fair game.
 import os
 import shutil
 import sys
-import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
+from sqload_spark import registry  # noqa: E402
 from sqload_spark.session import scratch_dir  # noqa: E402
 from sqload_spark.sources.tables import TABLE_NAMES  # noqa: E402
 
@@ -274,14 +274,29 @@ _TPCH_ADV = {
 }
 
 
-def _append_rows(src: str, dst: str, ddl: str, rows: list) -> None:
+# Every table with hazard rows: the clean TPC-H feeds plus the corpus
+# tables. `documents` derives its n_chars column from text on the way in.
+_ADV_TABLES = {
+    "documents": ("doc_id BIGINT, text VARCHAR, lang VARCHAR, source VARCHAR", ADVERSARIAL_DOCS),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type VARCHAR,"
+        " value DOUBLE, props VARCHAR",
+        ADVERSARIAL_EVENTS,
+    ),
+    "embeddings": ("vec_id BIGINT, embedding FLOAT[], label INTEGER", _adversarial_embeddings()),
+    **_TPCH_ADV,
+}
+_DERIVED = {"documents": "doc_id, text, lang, source, length(text) AS n_chars"}
+
+
+def _append_rows(src: str, dst: str, ddl: str, rows: list, select: str = "*") -> None:
     """Write src ∪ hazard-rows to dst, preserving the parquet schema."""
     con = duckdb.connect()
     con.execute(f"CREATE TABLE adv ({ddl})")
     ph = ", ".join("?" for _ in rows[0])
     con.executemany(f"INSERT INTO adv VALUES ({ph})", rows)
     con.execute(
-        f"COPY (SELECT * FROM read_parquet('{src}') UNION ALL SELECT * FROM adv)"
+        f"COPY (SELECT * FROM read_parquet('{src}') UNION ALL SELECT {select} FROM adv)"
         f" TO '{dst}' (FORMAT PARQUET)"
     )
     con.close()
@@ -290,8 +305,8 @@ def _append_rows(src: str, dst: str, ddl: str, rows: list) -> None:
 def build_corpus(docs_only: bool, keep: bool = False) -> str:
     # --keep must bypass scratch_dir: its atexit rmtree would delete the
     # corpus at process exit, exactly when a follow-up run (e.g.
-    # tools/invariance_run.py <corpus> for dirty-data × geometry evidence)
-    # wants to read it.
+    # `tools/drive_entry.py --sf-dir <corpus>` with geometry flags, for
+    # dirty-data × geometry evidence) wants to read it.
     if keep:
         import tempfile
 
@@ -299,59 +314,12 @@ def build_corpus(docs_only: bool, keep: bool = False) -> str:
     else:
         out = scratch_dir("sqload_adversarial_")
     for t in TABLE_NAMES:
-        src = f"{BASE}/{t}.parquet"
-        if t in _TPCH_ADV and not docs_only:
-            ddl, rows = _TPCH_ADV[t]
-            _append_rows(src, f"{out}/{t}.parquet", ddl, rows)
-        elif t == "documents":
-            con = duckdb.connect()
-            con.execute(
-                "CREATE TABLE adv (doc_id BIGINT, text VARCHAR, lang VARCHAR, source VARCHAR)"
-            )
-            con.executemany("INSERT INTO adv VALUES (?, ?, ?, ?)", ADVERSARIAL_DOCS)
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * FROM read_parquet('{src}')
-                  UNION ALL
-                  SELECT doc_id, text, lang, source, length(text) AS n_chars FROM adv
-                ) TO '{out}/{t}.parquet' (FORMAT PARQUET)
-                """
-            )
-            con.close()
-        elif t == "events" and not docs_only:
-            con = duckdb.connect()
-            con.execute(
-                "CREATE TABLE adv (event_id BIGINT, ts TIMESTAMP, user_id BIGINT,"
-                " event_type VARCHAR, value DOUBLE, props VARCHAR)"
-            )
-            con.executemany("INSERT INTO adv VALUES (?, ?, ?, ?, ?, ?)", ADVERSARIAL_EVENTS)
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * FROM read_parquet('{src}')
-                  UNION ALL
-                  SELECT * FROM adv
-                ) TO '{out}/{t}.parquet' (FORMAT PARQUET)
-                """
-            )
-            con.close()
-        elif t == "embeddings" and not docs_only:
-            con = duckdb.connect()
-            con.execute("CREATE TABLE adv (vec_id BIGINT, embedding FLOAT[], label INTEGER)")
-            con.executemany("INSERT INTO adv VALUES (?, ?, ?)", _adversarial_embeddings())
-            con.execute(
-                f"""
-                COPY (
-                  SELECT * FROM read_parquet('{src}')
-                  UNION ALL
-                  SELECT * FROM adv
-                ) TO '{out}/{t}.parquet' (FORMAT PARQUET)
-                """
-            )
-            con.close()
+        src, dst = f"{BASE}/{t}.parquet", f"{out}/{t}.parquet"
+        if t in _ADV_TABLES and (t == "documents" or not docs_only):
+            ddl, rows = _ADV_TABLES[t]
+            _append_rows(src, dst, ddl, rows, _DERIVED.get(t, "*"))
         else:
-            shutil.copyfile(src, f"{out}/{t}.parquet")
+            shutil.copyfile(src, dst)
     return out
 
 
@@ -370,47 +338,12 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from drive_entry import compare
+
     spark = SparkSession.builder.master("local[8]").appName("adversarial-run").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    import __spark_entry__ as e
-
-    qs, os_ = e.queries(), e.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{corpus}/{t}.parquet')")
-
-    sys.path.insert(0, "/root/repo/tests")
-    from conftest import canon_rows
-
-    ok = bad = err = 0
-    for name, fn in sorted(qs.items()):
-        if name not in os_ or (only and name not in only):
-            continue
-        t0 = time.time()
-        try:
-            sp = fn(spark, corpus).toPandas()
-        except Exception as ex:  # noqa: BLE001
-            print(f"ERROR     {name:35s} {type(ex).__name__}: {str(ex)[:120]}")
-            err += 1
-            continue
-        try:
-            du = con.execute(os_[name]).fetchdf()
-        except Exception as ex:  # noqa: BLE001
-            print(f"ORA-ERROR {name:35s} {type(ex).__name__}: {str(ex)[:120]}")
-            err += 1
-            continue
-        match = len(sp) == len(du) and canon_rows(sp) == canon_rows(du)
-        tag = "MATCH" if match else "MISMATCH"
-        print(f"{tag:9s} {name:35s} rows={len(sp):6d} oracle={len(du):6d} {time.time() - t0:5.1f}s")
-        if not match and len(sp) == len(du):
-            a, b = canon_rows(sp), canon_rows(du)
-            for x, y in [(x, y) for x, y in zip(a, b) if x != y][:3]:
-                print("  spark :", x)
-                print("  oracle:", y)
-        ok += match
-        bad += not match
-    print(f"RESULT: {ok} match, {bad} mismatch, {err} error")
+    names = [n for n in sorted(registry.all_queries()) if not only or n in only]
+    _, bad, err = compare(spark, corpus, names)
     if "--keep" in sys.argv:
         print(f"corpus kept at {corpus}")
     return 1 if (bad or err) else 0

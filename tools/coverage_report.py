@@ -8,10 +8,10 @@ staleness report the round judges track. Usage:
     python tools/coverage_report.py --sample N [seed]
         # judge-sample protocol (VERDICT r5 #7, widened r10): run N
         # random oracled queries through the drive_entry comparator
-        # (check_queries.py subprocess) and print MATCH / MISMATCH —
-        # standing independent evidence between driver rounds. Draws from
-        # the never-driver-checked bucket while one exists (none since
-        # r9), else from the whole oracled surface.
+        # (a drive_entry.py subprocess under the plain driver session) and
+        # print MATCH / MISMATCH — standing independent evidence between
+        # driver rounds. Draws from the never-driver-checked bucket while
+        # one exists (none since r9), else from the whole oracled surface.
 """
 
 from __future__ import annotations
@@ -103,8 +103,7 @@ def main() -> None:
         print(f"\n--sample: {len(picked)} of {len(pool)} {label} "
               f"queries (seed={seed}):\n  " + "\n  ".join(picked))
         rc = subprocess.call(
-            [sys.executable, os.path.join(os.path.dirname(__file__),
-                                          "check_queries.py"), *picked]
+            [sys.executable, os.path.join(os.path.dirname(__file__), "drive_entry.py"), *picked]
         )
         sys.exit(rc)
 

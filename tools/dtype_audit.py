@@ -63,18 +63,12 @@ def spark_kind(t: str) -> str:
 
 
 def audit(sf_dir: str = SF_DIR) -> list[str]:
-    import duckdb
-
     from sqload_spark import registry
     from sqload_spark.session import get_spark
-    from sqload_spark.sources.tables import TABLE_NAMES
+    from tests.conftest import duck_views
 
     spark = get_spark("dtype_audit")
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
-        )
+    con = duck_views(sf_dir)
 
     queries = registry.all_queries()
     oracles = registry.all_oracles()

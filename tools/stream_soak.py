@@ -7,9 +7,9 @@ stream-execution thread — after the affected query had delivered its sink
 rows, with the run still finishing 193/0, and not reproducible by an
 isolated serial re-run of the streaming queries. This tool is the
 protocolized reproduction attempt: the SAME session construction as the
-run that logged the artifact — tools/invariance_run.py's BARE
-SparkSession.builder (default driver memory, no engine configs) at
-local[1]/shuffle=1, deliberately NOT session.get_spark's tuned builder —
+run that logged the artifact — the BARE SparkSession.builder that
+`drive_entry.py --master 'local[1]' --shuffle-partitions 1` builds (default
+driver memory), deliberately NOT session.get_spark's tuned builder —
 the SAME dirty corpus (adversarial_run's builder), and a long-session
 serial replay of all 12 streaming queries × N iterations — accumulating
 far more stream-execution thread churn than the original session's
@@ -32,11 +32,12 @@ line prints a verdict JSON for BASELINE.md's watch-item close-out.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
