@@ -1,4 +1,4 @@
-"""Deterministic, distributed randomness as pure Catalyst column expressions.
+"""Deterministic, distributed randomness as Spark SQL expression text.
 
 The reference draws every value from ONE global sequential mt19937
 (/root/reference/generate_csv.cpp:28-29) — non-deterministic (random_device
@@ -12,6 +12,14 @@ bottleneck, so we re-architect: every draw is a pure function of
   changes values when partitioning changes);
 * codegen-friendly — everything stays inside whole-stage codegen; no UDFs.
 
+The draw helpers take and return SQL text, which the planner hands to one
+``F.expr`` per column. Built from ``pyspark.sql.Column`` calls instead, the
+wide bulk-load spec cost about 1,500 py4j round trips per plan (PySpark 4
+captures the call site of every Column call); the text parses to the same
+optimized plan. Integer salts are bare SQL literals, which Spark types as
+``F.lit`` does (int when it fits, else bigint); the type matters, because
+``xxhash64`` hashes an int and a bigint of equal value differently.
+
 Uniformity notes: ``pmod(hash, n)`` has modulo bias ≤ n/2^64 — immaterial
 for every range here (the widest is 2^32). Full-width int64 draws use the
 hash value directly.
@@ -19,35 +27,33 @@ hash value directly.
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 # 0-9 A-Z a-z — the reference's varchar charset (generate_csv.cpp:66-67).
 ALNUM62 = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 
 _MAX_LONG = (1 << 63) - 1
 
 
-def hash64(id_col: Column, *salts) -> Column:
-    """Full-width deterministic 64-bit hash of (id, salts...)."""
-    return F.xxhash64(id_col, *[F.lit(s) for s in salts])
+def _literal(v: int | str) -> str:
+    """SQL literal for an int or a plain (quote-free) string salt."""
+    return f"'{v}'" if isinstance(v, str) else str(v)
 
 
-def uniform_long(id_col: Column, lo: int, hi: int, *salts) -> Column:
+def hash64(x: str, *salts) -> str:
+    """Full-width deterministic 64-bit hash of (x, salts...)."""
+    return f"xxhash64({', '.join([x, *map(_literal, salts)])})"
+
+
+def uniform_long(x: str, lo: int, hi: int, *salts) -> str:
     """Uniform integer in [lo, hi] (inclusive), as LongType."""
     n = hi - lo + 1
     if n <= 0:
         raise ValueError(f"empty range [{lo}, {hi}]")
-    return F.pmod(hash64(id_col, *salts), F.lit(n)) + F.lit(lo)
+    return f"(pmod({hash64(x, *salts)}, {n}) + {lo})"
 
 
-def uniform_unit(id_col: Column, *salts) -> Column:
+def uniform_unit(x: str, *salts) -> str:
     """Uniform double in [0, 1)."""
-    return (hash64(id_col, *salts).bitwiseAND(F.lit(_MAX_LONG))).cast("double") / F.lit(
-        float(1 << 63)
-    )
+    return f"(CAST(({hash64(x, *salts)} & {_MAX_LONG}) AS DOUBLE) / {float(1 << 63)!r}D)"
 
 
 def _salt40(*salts) -> int:
@@ -61,31 +67,25 @@ def _salt40(*salts) -> int:
 _ID_SPACING = 65536  # > max string length; rows < 2^47 stay overflow-free
 
 
-def random_string(id_col: Column, length, charset: str, *salts) -> Column:
+def random_string(x: str, length: int | str, charset: str, *salts) -> str:
     """Random fixed- or variable-length string from `charset`.
 
-    `length` may be an int or a Column. Per-character hashing is
-    ``xxhash64(id*65536 + salt40 + pos)`` — a SINGLE long input, which
-    measures ~1.5× faster than hashing (id, salts…, pos) as four values
-    (the per-char hash dominates generation cost for varchar(50)). ANSI
-    mode forbids wrapping multiplies, so the mix is bounded: id spacing
-    65536 (> any string length) plus a 40-bit md5-derived column salt —
-    no overflow below 2^47 rows, and two columns only share a shifted
-    character stream if their salts land within max-length of each other
-    (P ≈ 2⁻³²)."""
-    chars = F.array(*[F.lit(c) for c in charset])
-    length_col = F.lit(length) if isinstance(length, int) else length
-    base = id_col * F.lit(_ID_SPACING) + F.lit(_salt40("str", charset[:8], *salts))
-    return F.array_join(
-        F.transform(
-            F.sequence(F.lit(1), length_col),
-            lambda pos: F.element_at(
-                chars,
-                (F.pmod(F.xxhash64(base + pos), F.lit(len(charset))) + F.lit(1)).cast("int"),
-            ),
-        ),
-        "",
-    )
+    `length` may be an int or SQL text; a fixed length of 0 is the empty
+    string (``sequence(1, 0)`` would count down to two positions).
+    Per-character hashing is ``xxhash64(id*65536 + salt40 + pos)`` — a
+    SINGLE long input, which measures ~1.5× faster than hashing (id,
+    salts…, pos) as four values (the per-char hash dominates generation
+    cost for varchar(50)). ANSI mode forbids wrapping multiplies, so the mix
+    is bounded: id spacing 65536 (> any string length) plus a 40-bit
+    md5-derived column salt — no overflow below 2^47 rows, and two columns
+    only share a shifted character stream if their salts land within
+    max-length of each other (P ≈ 2⁻³²)."""
+    if length == 0:
+        return "''"
+    chars = f"array({', '.join(map(_literal, charset))})"
+    base = f"({x}) * {_ID_SPACING} + {_salt40('str', charset[:8], *salts)}"
+    pick = f"CAST(pmod(xxhash64({base} + pos), {len(charset)}) + 1 AS INT)"
+    return f"array_join(transform(sequence(1, {length}), pos -> element_at({chars}, {pick})), '')"
 
 
 # --- the rkey bijection (unique "random-looking" uint64) -------------------
@@ -148,20 +148,19 @@ def _signed64(v: int) -> int:
     return v - (1 << 64) if v >> 63 else v
 
 
-def rkey_long(counter: Column) -> Column:
+def rkey_long(counter: str) -> str:
     """segregate4(rotr1(counter)) as a signed long (same 64 bits as the ref's uint64)."""
     parts = []
     for mask, shift in RKEY_SHIFTS:
-        bits = counter.bitwiseAND(F.lit(_signed64(mask)))
-        parts.append(F.shiftleft(bits, shift) if shift >= 0 else F.shiftrightunsigned(bits, -shift))
-    return reduce(Column.bitwiseOR, parts)
+        bits = f"({counter} & {_signed64(mask)})"
+        parts.append(f"shiftleft({bits}, {shift})" if shift >= 0 else f"shiftrightunsigned({bits}, {-shift})")
+    return f"({' | '.join(parts)})"
 
 
-def as_uint64_decimal(signed: Column) -> Column:
+def as_uint64_decimal(signed: str) -> str:
     """Reinterpret a signed long's bits as unsigned, printable as the
     reference prints uint64 (values ≥ 2^63 appear; Spark has no unsigned
     type, so DecimalType(20,0) carries the value)."""
-    dec = signed.cast("decimal(20,0)")
-    return F.when(signed >= 0, dec).otherwise(
-        (dec + F.lit("18446744073709551616").cast("decimal(21,0)")).cast("decimal(20,0)")
-    )
+    dec = f"CAST({signed} AS DECIMAL(20,0))"
+    wrap = "CAST('18446744073709551616' AS DECIMAL(21,0))"
+    return f"CASE WHEN {signed} >= 0 THEN {dec} ELSE CAST({dec} + {wrap} AS DECIMAL(20,0)) END"

@@ -166,8 +166,8 @@ def test_gen_unknown_type_empty_column(spark):
 
 
 def test_rkey_forms_agree_bit_for_bit(spark):
-    """The expression rkey_long, the numpy _rkey and the step-wise model
-    rkey_py are one bijection: edge counters plus 1,000 seeded random ones."""
+    """The SQL rkey_long, the numpy _rkey and the step-wise model rkey_py
+    are one bijection: edge counters plus 1,000 seeded random ones."""
     import random
 
     import numpy as np
@@ -179,7 +179,7 @@ def test_rkey_forms_agree_bit_for_bit(spark):
     counters = [0, 1, 2**63 - 1, 2**63, 2**64 - 1] + [rng.getrandbits(64) for _ in range(1000)]
     signed = [c - 2**64 if c >= 2**63 else c for c in counters]
     df = spark.createDataFrame([(i, s) for i, s in enumerate(signed)], "i int, c long")
-    got = [r.k for r in df.select("i", rkey_long(F.col("c")).alias("k")).orderBy("i").collect()]
+    got = [r.k for r in df.select("i", F.expr(f"{rkey_long('c')} AS k")).orderBy("i").collect()]
     expected = [rkey_py(c) for c in counters]
     assert [k % 2**64 for k in got] == expected
     assert _rkey(np.array(counters, dtype=np.uint64)).tolist() == expected
@@ -204,6 +204,71 @@ def test_expr_values_pinned(spark):
     for parts in (1, 4):
         df = generate_table(spark, 3000, spec, seed=11, num_partitions=parts, impl="expr")
         assert row_digest(df) == (3000, 443864712897504319614)
+
+
+FIXED_NOW = 1_760_000_000
+_STRINGS = "char(5),nchar(3),varchar(10),varchar2(10),nvarchar2(3),text,blob"
+
+
+def fix_clock(monkeypatch, now: int) -> None:
+    """Freeze the clock the planner reads for the timestamp upper bound."""
+    from types import SimpleNamespace
+
+    from sqload_spark.plans import planner
+
+    monkeypatch.setattr(planner, "time", SimpleNamespace(time=lambda: now))
+
+
+@pytest.mark.parametrize(
+    "spec,blob_binary,pin",
+    [
+        ("bit", False, -4770279405517028933884),
+        ("mediumint", False, 277400540913027037122),
+        ("float", False, -705246684458617661479),
+        ("year", False, -1584964096465204534217),
+        ("time", False, -512093161129487098923),
+        ("number(20,4)", False, 378487484168003035848),
+        ("timestamp", False, -43359411353806696159),
+        (_STRINGS, False, 111297670972981925943),
+        (_STRINGS, True, 73540739544365879117),
+    ],
+    ids=["bit", "mediumint", "float", "year", "time", "number", "timestamp", "strings", "strings-binary"],
+)
+def test_expr_values_pinned_other_types(spark, monkeypatch, spec, blob_binary, pin):
+    """Exact expr-backend output for the types test_expr_values_pinned
+    skips: strings (blob as string and as binary) and, at a fixed clock,
+    timestamp."""
+    from tests.conftest import row_digest
+
+    fix_clock(monkeypatch, FIXED_NOW)
+    for parts in (1, 4):
+        df = generate_table(
+            spark, 3000, spec, seed=11, num_partitions=parts, impl="expr", blob_binary=blob_binary
+        )
+        assert row_digest(df) == (3000, pin)
+
+
+def test_generated_source_ignores_clock(spark, monkeypatch):
+    """The timestamp bound is a reference object of the generated class, not
+    a literal in its source, so a table planned in a later second reuses the
+    compiled class from the codegen cache."""
+
+    def source(now: int) -> list[str]:
+        fix_clock(monkeypatch, now)
+        df = gen(spark, "key,bigint,timestamp", rows=100, parts=2)
+        seq = df._jdf.queryExecution().debug().codegenToSeq()
+        return [seq.apply(k)._2() for k in range(seq.size())]
+
+    first = source(FIXED_NOW)
+    assert first and first == source(FIXED_NOW + 17)
+
+
+@pytest.mark.parametrize("impl", ["expr", "arrow"])
+def test_zero_length_strings_are_empty(spark, impl):
+    """char(0)/varchar(0) mean exactly zero characters on both backends."""
+    df = generate_table(spark, 50, "varchar(0),char(0),int", seed=1, num_partitions=2, impl=impl)
+    assert df.filter((F.col("c0") != "") | (F.col("c1") != "")).count() == 0
+    assert df.count() == 50
 
 
 # --- determinism law --------------------------------------------------------
