@@ -50,7 +50,7 @@ def shingles(text: Column, n: int = 3) -> Column:
     subexpression elimination), which is O(tokens²) PER DOCUMENT: one
     12 000-token hazard doc cost ~13 s alone, 22 pathological docs took a
     38.8 s flat tax on every shingle consumer (measured; same family as
-    the 64×-re-inline note on minhash_agg_exprs below). The sliced shape
+    the 64×-re-inline note on dedup._minhash_bands_sql). The sliced shape
     is linear: ~0.3 s on the same docs."""
     toks = tokens(text)
     m = F.size(toks) - F.lit(n - 1)  # valid only under the when-guard below
@@ -68,26 +68,12 @@ def shingle_hashes(text: Column, n: int = 3) -> Column:
     return F.transform(shingles(text, n), lambda s: F.xxhash64(s))
 
 
-def minhash_agg_exprs(hash_col: str, num_perm: int, seed: int = 0) -> list[Column]:
-    """MinHash signature as AGGREGATE expressions over exploded element-hash
-    rows: ``min(xxhash64(h, seed, i))`` per permutation.
-
-    Deliberately aggregation-based, not ``array_min(transform(...))`` per
-    column: array expressions would re-inline the whole shingle-construction
-    subtree once per permutation (64× recomputation — measured 205 s vs 5 s
-    on 5000 docs). Exploding once and letting partial aggregation combine
-    map-side keeps the cost at |shingles| × num_perm hashes."""
-    return [
-        F.min(F.xxhash64(F.col(hash_col), F.lit(seed), F.lit(i))).alias(f"mh{i}")
-        for i in range(num_perm)
-    ]
-
-
 def simhash_bitsum_exprs(hash_col: str, n_bits: int = 64) -> list[Column]:
     """SimHash bit-vote sums as AGGREGATE expressions over exploded
     element-hash rows: Σ(±1) per bit position. Aggregation-based for the
-    same reason as minhash_agg_exprs — per-bit array folds would re-inline
-    the element-construction subtree 64×."""
+    same reason as the MinHash signature (dedup._minhash_bands_sql) —
+    per-bit array folds would re-inline the element-construction subtree
+    64×."""
     return [
         F.sum(
             F.when(F.shiftrightunsigned(F.col(hash_col), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)

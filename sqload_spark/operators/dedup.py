@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
 from sqload_spark.functions.text_funcs import (
     hamming64,
-    minhash_agg_exprs,
     shingle_hashes,
     shingles,
     simhash_bitsum_exprs,
@@ -161,75 +160,83 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _lsh_verified_pairs(docs: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jaccard_raw) for every MinHash-LSH candidate pair,
-    with the TRUE (exact) Jaccard computed on candidates only.
+def _minhash_bands_sql(hashes: str) -> str:
+    """SQL text of the (doc_id, band, bh) LSH band relation over
+    ``hashes``, a relation of exploded (doc_id, h) shingle-hash rows: a
+    64-permutation MinHash signature ``min(xxhash64(h, 0, i))``, cut into
+    32 bands of 2 rows, each band hashed to one ``bh``.
+
+    Deliberately aggregation-based, not ``array_min(transform(...))`` per
+    permutation: array expressions would re-inline the whole shingle-
+    construction subtree once per permutation (64× recomputation —
+    measured 205 s vs 5 s on 5000 docs). Exploding once and letting
+    partial aggregation combine map-side keeps the cost at |shingles| ×
+    NUM_PERM hashes.
+
+    SQL text, not Column calls: the 64 aggregates and 32 band structs cost
+    thousands of py4j round trips to build as Columns, more than the
+    miner's execution at test scale. The text is the same relation the
+    Column form builds (tests/test_llm_pipeline.py checks ``sameResult``)."""
+    rows = NUM_PERM // LSH_BANDS
+    mh = ", ".join(f"min(xxhash64(h, 0, {i})) AS mh{i}" for i in range(NUM_PERM))
+    bands = ", ".join(
+        f"struct({b} AS band, xxhash64({', '.join(f'mh{b * rows + r}' for r in range(rows))}) AS bh)"
+        for b in range(LSH_BANDS)
+    )
+    return (
+        f"SELECT doc_id, b.band, b.bh FROM ("
+        f"SELECT doc_id, explode(array({bands})) AS b FROM ("
+        f"SELECT doc_id, {mh} FROM {hashes} GROUP BY doc_id))"
+    )
+
+
+def _lsh_verified_pairs(
+    docs: DataFrame, key_a: str = "doc_a", key_b: str = "doc_b", on: str = "a.doc_id < b.doc_id"
+) -> DataFrame:
+    """(key_a, key_b, jaccard_raw) for every MinHash-LSH candidate pair
+    whose TRUE (exact) Jaccard, computed on candidates only, reaches
+    JACCARD_THRESHOLD. Candidates are band-bucket matches of a document
+    ``a`` (named ``key_a``) and ``b`` (``key_b``) that also meet ``on``;
+    the default mines each unordered pair once, as (doc_a < doc_b).
 
     This is the 100 TB near-dup pair miner: signatures are one map-side
     pass, banding shuffles only (doc_id, band_hash), and exact verification
     touches just same-bucket documents — never the all-pairs shingle join.
-    Shared by dedup_minhash_lsh (thresholded pairs) and dedup_keep_list
-    (connected-components edge source)."""
-    sh_rows = docs.select("doc_id", F.explode(shingle_hashes(F.col("text"), 3)).alias("h"))
-    sigs = sh_rows.groupBy("doc_id").agg(*minhash_agg_exprs("h", NUM_PERM))
-    rows_per_band = NUM_PERM // LSH_BANDS
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh{band * rows_per_band + r}") for r in range(rows_per_band)]
-                        ).alias("bh"),
-                    )
-                    for band in range(LSH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band", "b.bh")
-    a, b = bands.alias("a"), bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+    Shared by dedup_minhash_lsh, component_labels, the pair-list consumers
+    and dedup_incremental_shard. One SQL statement over the exploded
+    shingle hashes and the per-doc shingle sets: the band self-join, then
+    the candidates joined to the two sets and intersected row-wise.
+
+    Verification is O(|candidates|) work — never the all-pairs shingle
+    join (the quadratic blowup LSH exists to avoid; doing it here once
+    cost 450 s at sf0.1). Semi-joining docs to candidate ids before
+    building the sets was net 2× slower: every extra consumer of the
+    candidates re-executes the signature pipeline (no reuse without
+    persist). persist() experiment (round 2, sf0.1 × 3 runs):
+    bands.persist() 6.0-8.9 s vs recompute 6.2-7.0 s — a wash locally
+    (materialize cost ≈ recompute savings on 32 cores), so we keep the
+    simpler recompute. On a real cluster where the corpus scan is
+    I/O-bound, persist the band relation (or write signatures once) before
+    the self-join."""
+    sh = shingle_hashes(F.col("text"), 3)  # one Column build for both relations
+    inter = "size(array_intersect(sa.sh, sb.sh))"
+    return docs.sparkSession.sql(
+        f"""
+        WITH bands AS ({_minhash_bands_sql("{hashes}")}),
+        candidates AS (
+          SELECT DISTINCT a.doc_id AS {key_a}, b.doc_id AS {key_b}
+          FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND {on}
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # Verify candidates ONLY: join each pair to the two per-doc shingle-hash
-    # sets and intersect the arrays row-wise. O(|candidates|) work — never
-    # the all-pairs shingle join (which is the quadratic blowup LSH exists
-    # to avoid; doing it here once cost 450 s at sf0.1). Note: we tried
-    # semi-joining docs to candidate ids before building the arrays, but
-    # every extra consumer of `candidates` re-executes the signature
-    # pipeline (no reuse without persist) — net 2× slower. Building the
-    # arrays corpus-wide keeps `candidates` single-use.
-    # persist() experiment (round 2, sf0.1 × 3 runs): bands.persist()
-    # 6.0-8.9 s vs recompute 6.2-7.0 s — a wash locally (materialize cost ≈
-    # recompute savings on 32 cores), so we keep the simpler recompute. On a
-    # real cluster where the corpus scan is I/O-bound, persist the `bands`
-    # DataFrame (or write signatures once) before the self-join.
-    sets_a = docs.select(
-        F.col("doc_id").alias("doc_a"), shingle_hashes(F.col("text"), 3).alias("sh_a")
-    )
-    sets_b = docs.select(
-        F.col("doc_id").alias("doc_b"), shingle_hashes(F.col("text"), 3).alias("sh_b")
-    )
-    return (
-        candidates.join(sets_a, "doc_a")
-        .join(sets_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / (F.size("sh_a") + F.size("sh_b") - F.size(F.array_intersect("sh_a", "sh_b")))
-            ).alias("jaccard_raw"),
-        )
+        SELECT * FROM (
+          SELECT c.{key_a}, c.{key_b},
+                 CAST({inter} AS DOUBLE) / (size(sa.sh) + size(sb.sh) - {inter}) AS jaccard_raw
+          FROM candidates c
+          JOIN {{sets}} sa ON sa.doc_id = c.{key_a}
+          JOIN {{sets}} sb ON sb.doc_id = c.{key_b}
+        ) WHERE jaccard_raw >= {JACCARD_THRESHOLD}
+        """,
+        hashes=docs.select("doc_id", F.explode(sh).alias("h")),
+        sets=docs.select("doc_id", sh.alias("sh")),
     )
 
 
@@ -245,7 +252,6 @@ def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
         _lsh_verified_pairs(docs)
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", round_half_up(F.col("jaccard_raw"), 4).alias("jaccard"))
         .orderBy("doc_a", "doc_b")
     )
@@ -314,12 +320,7 @@ def component_labels(docs: DataFrame) -> DataFrame:
     """(doc_id, keep_doc_id) for every doc in a ≥0.5-Jaccard near-dup pair:
     connected components by min-label propagation over LSH-mined edges.
     Shared by dedup_keep_list and the leakage-safe split (sampling.py)."""
-    pairs = (
-        _lsh_verified_pairs(docs)
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b")
-    )
-    return _labels_from_pairs(pairs)
+    return _labels_from_pairs(_lsh_verified_pairs(docs).select("doc_a", "doc_b"))
 
 
 def _labels_from_pairs(pairs: DataFrame) -> DataFrame:
@@ -541,13 +542,7 @@ def pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sf_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     path = scratch_subdir(f"dedup_pairs_{sf_tag}")
-    (
-        _lsh_verified_pairs(docs)
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _lsh_verified_pairs(docs).select("doc_a", "doc_b").write.mode("overwrite").parquet(path)
     mined = spark.read.parquet(path)
     labels = _labels_from_pairs(mined)
     census = (
@@ -1218,68 +1213,22 @@ def incremental_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus². Output: each flagged new doc with its smallest qualifying
     partner and that partner's exact Jaccard."""
     docs = load_table(spark, sf_dir, "documents")
-    sh_rows = docs.select("doc_id", F.explode(shingle_hashes(F.col("text"), 3)).alias("h"))
-    sigs = sh_rows.groupBy("doc_id").agg(*minhash_agg_exprs("h", NUM_PERM))
-    rows_per_band = NUM_PERM // LSH_BANDS
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh{band * rows_per_band + r}") for r in range(rows_per_band)]
-                        ).alias("bh"),
-                    )
-                    for band in range(LSH_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band", "b.bh")
-    new_bands = bands.filter(F.col("doc_id") % INCR_NEW_MOD == 0)
-    a, b = bands.alias("a"), new_bands.alias("b")
-    accepted_before = (F.col("a.doc_id") % INCR_NEW_MOD != 0) | (
-        F.col("a.doc_id") < F.col("b.doc_id")
+    # b is a new doc; a is accepted (not new) or an earlier arrival
+    verified = _lsh_verified_pairs(
+        docs,
+        "pid",
+        "nid",
+        f"b.doc_id % {INCR_NEW_MOD} = 0 AND a.doc_id != b.doc_id"
+        f" AND (a.doc_id % {INCR_NEW_MOD} != 0 OR a.doc_id < b.doc_id)",
     )
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") != F.col("b.doc_id"))
-            & accepted_before,
-        )
-        .select(F.col("b.doc_id").alias("nid"), F.col("a.doc_id").alias("pid"))
-        .distinct()
-    )
-    sets_n = docs.select(
-        F.col("doc_id").alias("nid"), shingle_hashes(F.col("text"), 3).alias("sh_n")
-    )
-    sets_p = docs.select(
-        F.col("doc_id").alias("pid"), shingle_hashes(F.col("text"), 3).alias("sh_p")
-    )
-    inter = F.size(F.array_intersect("sh_n", "sh_p"))
-    verified = (
-        candidates.join(sets_n, "nid")
-        .join(sets_p, "pid")
-        .select(
-            "nid",
-            "pid",
-            (
-                inter.cast("double") / (F.size("sh_n") + F.size("sh_p") - inter)
-            ).alias("j_raw"),
-        )
-        .filter(F.col("j_raw") >= JACCARD_THRESHOLD)
-    )
-    best = F.min(F.struct(F.col("pid"), F.col("j_raw"))).alias("best")
+    best = F.min(F.struct(F.col("pid"), F.col("jaccard_raw"))).alias("best")
     return (
         verified.groupBy("nid")
         .agg(best)
         .select(
             F.col("nid").alias("doc_id"),
             F.col("best.pid").alias("dup_of"),
-            round_half_up(F.col("best.j_raw"), 4).alias("jaccard"),
+            round_half_up(F.col("best.jaccard_raw"), 4).alias("jaccard"),
         )
         .orderBy("doc_id")
     )
@@ -1489,11 +1438,7 @@ def edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_plans.py asserts no corpus scan ever sits under a
     BroadcastExchange."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        _lsh_verified_pairs(docs)
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b")
-    )
+    pairs = _lsh_verified_pairs(docs).select("doc_a", "doc_b")
     pref = docs.select("doc_id", F.substring("text", 1, 120).alias("pref"))
     a = pref.select(F.col("doc_id").alias("doc_a"), F.col("pref").alias("pref_a"))
     b = pref.select(F.col("doc_id").alias("doc_b"), F.col("pref").alias("pref_b"))
@@ -1830,11 +1775,7 @@ def cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     miner; the matrix is two source-lookup joins (pair side broadcast,
     doc→source map streamed) plus a |sources|²-bounded aggregation."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        _lsh_verified_pairs(docs)
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b")
-    )
+    pairs = _lsh_verified_pairs(docs).select("doc_a", "doc_b")
     src = docs.select("doc_id", "source")
     xa = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a"))
     xb = src.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("src_b"))

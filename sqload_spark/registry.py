@@ -79,7 +79,9 @@ _loaded = False
 # ROUND-13+ RECIPE (the standing rule every round):
 #   1. any name the newest CORRECTNESS_rNN unexpectedly missed or errored;
 #   2. every name whose implementation changed since its last external
-#      check (this round: the banded-cosine pair, whose signatures moved to
+#      check (this round: the two Python-UDF quality queries, now sorted
+#      before the UDF; every consumer of the MinHash-LSH pair miner, now
+#      one SQL statement; the banded-cosine pair, whose signatures moved to
 #      the one GEMM body; stream_microbatch_progress and
 #      stream_upsert_compaction, whose batch sinks now overwrite per batch
 #      id; then the names the round-12 sources touched);
@@ -96,6 +98,10 @@ _loaded = False
 
 _PRIORITY = [
     # -- changed since their last external check -----------------------------
+    "text_quality_arrow_udf", "text_quality_pandas_udf", "dedup_minhash_lsh",
+    "dedup_incremental_shard", "dedup_edit_distance",
+    "dedup_cross_source_matrix", "q_split_leakage_safe", "pipe_training_mix",
+    "pipe_output_manifest",
     "dedup_embedding_cosine_banded_pruned", "dedup_embedding_cosine_banded",
     "stream_microbatch_progress", "stream_upsert_compaction",
     # -- touched by the round-12 sources, last checked before them -----------
@@ -113,10 +119,6 @@ _PRIORITY = [
     "q_topk_orders", "q_union_priority_counts", "q_vector_norms",
     "q_window_distribution", "q_window_first_nth", "q_window_lag_lead",
     "q_window_rank_dense", "q_window_running_revenue",
-    "q_window_topk_per_customer", "src_orc_roundtrip", "stream_dedup_events",
-    "stream_session_window", "stream_stateful_profile",
-    "text_bpe_regex_tokens", "text_contamination_ngram",
-    "text_langid_markers", "text_md5_fingerprint",
 ]
 
 

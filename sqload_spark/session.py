@@ -93,6 +93,12 @@ def get_spark(app_name: str = "sqload_spark", shuffle_partitions: int | None = N
         # noise against the 48g heap; semantics-free (it is a
         # compilation CACHE SIZE), so only bench wall can move.
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
+        # Static conf, default true: PySpark then wraps every DataFrame and
+        # Column call in a Python stack walk plus two py4j round trips to
+        # record the call site for error messages. dedup_minhash_lsh's
+        # build made 7,240-7,623 py4j calls with it and 3,142 without.
+        # Semantics-free (only error context is lost), so only wall moves.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

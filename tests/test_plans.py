@@ -231,7 +231,7 @@ def test_triangles_edge_list_is_cached_not_hint_broadcast(spark):
         hinted = plan_of(spark, registry.QUERIES["sim_knn_triangles"](spark, SF_DIR))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    for sub in _broadcast_subtrees(hinted):
+    for sub in _subtrees(hinted, "BroadcastExchange"):
         assert "InMemoryTableScan" not in sub, (
             "edge list is hint-broadcast (forced at any scale):\n" + sub
         )
@@ -245,8 +245,8 @@ def test_scd2_single_user_shuffle_chain(spark):
     assert plan.count("Window") >= 2
 
 
-def _broadcast_subtrees(plan: str) -> list[str]:
-    """Subtree text (tree section only) under each BroadcastExchange node."""
+def _subtrees(plan: str, node: str) -> list[str]:
+    """Subtree text (tree section only) under each ``node`` line."""
     tree = plan.split("\n\n")[0].splitlines()
 
     def depth(line: str) -> int:
@@ -254,7 +254,7 @@ def _broadcast_subtrees(plan: str) -> list[str]:
 
     subs = []
     for i, line in enumerate(tree):
-        if "BroadcastExchange" in line:
+        if node in line:
             d = depth(line)
             sub = []
             for nxt in tree[i + 1 :]:
@@ -287,12 +287,27 @@ def test_pair_lookup_joins_never_broadcast_corpus(spark, qname):
         plan = plan_of(spark, registry.QUERIES[qname](spark, SF_DIR))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    subs = _broadcast_subtrees(plan)
+    subs = _subtrees(plan, "BroadcastExchange")
     assert subs, "pair side should broadcast"
     for sub in subs:
         assert ("Join" in sub) or ("HashAggregate" in sub), (
             "bare corpus scan under BroadcastExchange:\n" + sub
         )
+
+
+@pytest.mark.parametrize("qname", ["text_quality_arrow_udf", "text_quality_pandas_udf"])
+def test_python_udf_runs_above_the_sort_exchange(spark, qname):
+    """The sampling job of a range exchange runs the exchange's whole child
+    plan, so a Python UDF below ``Exchange rangepartitioning`` runs twice
+    per row (python.rows 2,000 for 1,000 documents in a traced perfbench
+    run). The UDF must apply after the doc_id sort, which still orders the
+    output."""
+    df = registry.QUERIES[qname](spark, SF_DIR)
+    subs = _subtrees(df._jdf.queryExecution().executedPlan().toString(), "Exchange rangepartitioning")
+    assert subs, "doc_id order should come from a range exchange"
+    assert not any("EvalPython" in sub for sub in subs), "Python UDF below the range exchange"
+    ids = [r.doc_id for r in df.collect()]
+    assert ids == sorted(ids)
 
 
 def test_q2_correlated_min_rewrite_uses_semi_joins(spark):
@@ -374,7 +389,7 @@ def test_tpch_hints_broadcast_only_constant_size_sides(spark, qname):
     headers = list(re.finditer(r"^\((\d+)\) \S.*$", plan, re.M))
     for h, nxt in zip(headers, headers[1:] + [None]):
         details[h.group(1)] = plan[h.start() : nxt.start() if nxt else len(plan)]
-    for sub in _broadcast_subtrees(plan):
+    for sub in _subtrees(plan, "BroadcastExchange"):
         scans = [details[i] for i in re.findall(r"Scan parquet\s+\((\d+)\)", sub)]
         aggs = [details[i] for i in re.findall(r"HashAggregate \((\d+)\)", sub)]
         constant_scans = scans and all(

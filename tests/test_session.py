@@ -117,3 +117,17 @@ def test_codegen_cache_sized_for_the_suite(spark):
     it must be present on the session get_spark built; semantics-free
     (compilation cache size), so the oracle gate cannot move."""
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 2048
+
+
+def test_call_site_capture_off(spark, monkeypatch):
+    """get_spark turns PySpark's DataFrame call-site capture off: with it
+    on, every DataFrame and Column call walks the Python stack and makes
+    two extra py4j round trips. Static conf, so it must be present on the
+    session get_spark built. ``is_debugging_enabled`` caches its first
+    answer for the whole process, so the cache is reset to read the
+    session's value."""
+    import pyspark.errors.utils as err_utils
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    monkeypatch.setattr(err_utils, "_enable_debugging_cache", None)
+    assert err_utils.is_debugging_enabled() is False
