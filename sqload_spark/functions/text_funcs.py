@@ -1,6 +1,7 @@
 """Text primitives over the `documents` table: tokenization, shingling,
-hashing-based signatures (MinHash, SimHash, rolling-hash fingerprints) —
-all Catalyst array/hash expressions, no Python in the row path.
+shingle hashes and rolling-hash fingerprints — all Catalyst array/hash
+expressions, no Python in the row path. The MinHash and SimHash
+signatures built from them live in operators/dedup.py as SQL text.
 
 These are the building blocks for the dedup / text-analysis operators; at
 100 TB every one of them is a narrow projection that runs map-side before
@@ -66,34 +67,6 @@ def shingles(text: Column, n: int = 3) -> Column:
 def shingle_hashes(text: Column, n: int = 3) -> Column:
     """Distinct shingles as 64-bit hashes (compact dedup signature input)."""
     return F.transform(shingles(text, n), lambda s: F.xxhash64(s))
-
-
-def simhash_bitsum_exprs(hash_col: str, n_bits: int = 64) -> list[Column]:
-    """SimHash bit-vote sums as AGGREGATE expressions over exploded
-    element-hash rows: Σ(±1) per bit position. Aggregation-based for the
-    same reason as the MinHash signature (dedup._minhash_bands_sql) —
-    per-bit array folds would re-inline the element-construction subtree
-    64×."""
-    return [
-        F.sum(
-            F.when(F.shiftrightunsigned(F.col(hash_col), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"bs{j}")
-        for j in range(n_bits)
-    ]
-
-
-def simhash_from_bitsums(prefix: str = "bs", n_bits: int = 64) -> Column:
-    """Assemble the signed-long SimHash from the per-bit vote sums."""
-    out = F.lit(0).cast("long")
-    for j in range(n_bits):
-        # bit 63 is the sign bit of the signed long carrier
-        bit_value = (1 << j) if j < 63 else -(1 << 63)
-        out = out.bitwiseOR(
-            F.when(F.col(f"{prefix}{j}") > 0, F.lit(bit_value).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return out
 
 
 def hamming64(a: Column, b: Column) -> Column:

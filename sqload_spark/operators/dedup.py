@@ -16,18 +16,11 @@ engine-stable half-up rounding.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
-from sqload_spark.functions.text_funcs import (
-    hamming64,
-    shingle_hashes,
-    shingles,
-    simhash_bitsum_exprs,
-    simhash_from_bitsums,
-    tokens,
-)
+from sqload_spark.functions.text_funcs import hamming64, shingle_hashes, shingles, tokens
 from sqload_spark.registry import query
 from sqload_spark.session import persist_bounded
 from sqload_spark.sources.tables import load_embeddings, load_table
@@ -40,6 +33,64 @@ JACCARD_THRESHOLD = 0.5
 NUM_PERM = 64
 LSH_BANDS = 32  # r=2 rows/band → P(candidate | j=0.5) ≈ 0.9999
 COSINE_DUP_THRESHOLD = 0.35
+
+# Vector norm of an array column ``v`` as SQL text (the fold form).
+_NORM_SQL = f"sqrt({dot_fold_sql('v', 'v')})"
+
+
+# ---------------------------------------------------------------------------
+# DuckDB text of the near-dup steps the oracles share, each written once and
+# composed by the oracles below (and sampling.py's). Oracle text only: no
+# Spark query code builds or reads these, so every oracle stays an
+# independent check of the query it pins.
+# ---------------------------------------------------------------------------
+
+# Each document's distinct 3-gram shingles, as strings.
+_DUCK_SH = """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    sh AS (
+      SELECT doc_id,
+             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
+                                   for i in range(1, len(t) - 1)])) AS sh
+      FROM toks
+    )"""
+_DUCK_CNT = "cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)"
+# Shingles shared by each (a < b) document pair.
+_DUCK_INTER = """inter AS (
+      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
+      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    )"""
+_DUCK_SHINGLES = f"{_DUCK_SH},\n    {_DUCK_CNT}"
+# ... through `pairs`: every (a < b) pair at exact Jaccard >= JACCARD_THRESHOLD.
+_DUCK_PAIRS = f"""{_DUCK_SHINGLES},
+    {_DUCK_INTER},
+    pairs AS (
+      SELECT da, db FROM inter
+      JOIN cnt ca ON da = ca.doc_id
+      JOIN cnt cb ON db = cb.doc_id
+      WHERE i::DOUBLE / (ca.n + cb.n - i) >= {JACCARD_THRESHOLD}
+    )"""
+# ... through `reach`: the connected components of the pair graph, as every
+# (a, b) with b reachable from a (needs WITH RECURSIVE).
+_DUCK_REACH = f"""{_DUCK_PAIRS},
+    edges AS (
+      SELECT da AS a, db AS b FROM pairs
+      UNION SELECT db, da FROM pairs
+    ),
+    reach AS (
+      SELECT a, b FROM edges
+      UNION
+      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+    )"""
+# ... through `clusters`: each component's keep_doc_id (its minimum) and size.
+_DUCK_CLUSTERS = f"""{_DUCK_REACH},
+    labels AS (
+      SELECT a AS doc_id, least(a, min(b)) AS keep_doc_id
+      FROM reach GROUP BY a
+    ),
+    clusters AS (
+      SELECT keep_doc_id, count(*) AS cluster_size FROM labels GROUP BY keep_doc_id
+    )"""
 
 
 # ---------------------------------------------------------------------------
@@ -82,19 +133,8 @@ def exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _JACCARD_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
+    WITH {_DUCK_SHINGLES},
+    {_DUCK_INTER}
     SELECT da AS doc_a, db AS doc_b,
            {sql_round_half_up("i::DOUBLE / (ca.n + cb.n - i)", 4)} AS jaccard
     FROM inter
@@ -105,23 +145,31 @@ _JACCARD_ORACLE = f"""
 """
 
 
+def _shingle_rows(docs: DataFrame, sh: Column | None = None) -> DataFrame:
+    """(doc_id, h): one row per distinct 3-gram shingle of each document.
+    ``h`` is the shingle's xxhash64, or, when ``sh`` is given, an element of
+    that per-doc array (the md5 sketches explode the shingle strings)."""
+    if sh is None:
+        sh = shingle_hashes(F.col("text"), 3)
+    return docs.select("doc_id", F.explode(sh).alias("h"))
+
+
 def _shingle_pairs(docs: DataFrame) -> DataFrame:
-    """(doc_a, doc_b, jaccard_raw) via the all-pairs shingle-intersection
-    join — exact but quadratic in colliding docs; the LSH query below is
-    the scale path."""
-    sh = docs.select(
-        "doc_id", F.explode(shingle_hashes(F.col("text"), 3)).alias("sh")
-    )
+    """(doc_a, doc_b, jaccard_raw) of every pair at or above
+    JACCARD_THRESHOLD, via the all-pairs shingle-intersection join — exact
+    but quadratic in colliding docs; the LSH query below is the scale
+    path."""
+    sh = _shingle_rows(docs)
     cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     # Semantics-preserving pruning: a shingle occurring in exactly one doc
     # cannot contribute an intersection pair; dropping df=1 rows before the
     # self-join removes the (dominant, near-unique) bulk of the shingle
     # table. Per-doc totals `cnt` still count ALL shingles.
-    w_df = W.partitionBy("sh")
+    w_df = W.partitionBy("h")
     shared = sh.withColumn("_df", F.count("*").over(w_df)).filter(F.col("_df") > 1).drop("_df")
     a, b = shared.alias("a"), shared.alias("b")
     inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("i"))
     )
@@ -135,7 +183,15 @@ def _shingle_pairs(docs: DataFrame) -> DataFrame:
             "doc_b",
             (F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))).alias("jaccard_raw"),
         )
+        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
     )
+
+
+def _jaccard_rows(pairs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard): verified pairs in _JACCARD_ORACLE's shape."""
+    return pairs.select(
+        "doc_a", "doc_b", round_half_up(F.col("jaccard_raw"), 4).alias("jaccard")
+    ).orderBy("doc_a", "doc_b")
 
 
 @query("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE)
@@ -144,13 +200,7 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Quadratic-in-collisions by nature — this is the baseline/verifier; the
     scale path is dedup_minhash_lsh below."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        _shingle_pairs(docs)
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", round_half_up(F.col("jaccard_raw"), 4).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_rows(_shingle_pairs(load_table(spark, sf_dir, "documents")))
 
 
 # ---------------------------------------------------------------------------
@@ -190,6 +240,22 @@ def _minhash_bands_sql(hashes: str) -> str:
     )
 
 
+def _verified_sql(candidates: str, key_a: str, key_b: str) -> str:
+    """SQL text of the exact-Jaccard verification of ``candidates``
+    (key_a, key_b): each pair at or above JACCARD_THRESHOLD with its
+    jaccard_raw, from the two docs' ``{sets}`` (doc_id, sh) arrays."""
+    inter = "size(array_intersect(sa.sh, sb.sh))"
+    return f"""
+        SELECT * FROM (
+          SELECT c.{key_a}, c.{key_b},
+                 CAST({inter} AS DOUBLE) / (size(sa.sh) + size(sb.sh) - {inter}) AS jaccard_raw
+          FROM {candidates} c
+          JOIN {{sets}} sa ON sa.doc_id = c.{key_a}
+          JOIN {{sets}} sb ON sb.doc_id = c.{key_b}
+        ) WHERE jaccard_raw >= {JACCARD_THRESHOLD}
+        """
+
+
 def _lsh_verified_pairs(
     docs: DataFrame, key_a: str = "doc_a", key_b: str = "doc_b", on: str = "a.doc_id < b.doc_id"
 ) -> DataFrame:
@@ -205,7 +271,8 @@ def _lsh_verified_pairs(
     Shared by dedup_minhash_lsh, component_labels, the pair-list consumers
     and dedup_incremental_shard. One SQL statement over the exploded
     shingle hashes and the per-doc shingle sets: the band self-join, then
-    the candidates joined to the two sets and intersected row-wise.
+    the candidates joined to the two sets and intersected row-wise
+    (_verified_sql, which dedup_prefix_filter shares).
 
     Verification is O(|candidates|) work — never the all-pairs shingle
     join (the quadratic blowup LSH exists to avoid; doing it here once
@@ -219,7 +286,6 @@ def _lsh_verified_pairs(
     I/O-bound, persist the band relation (or write signatures once) before
     the self-join."""
     sh = shingle_hashes(F.col("text"), 3)  # one Column build for both relations
-    inter = "size(array_intersect(sa.sh, sb.sh))"
     return docs.sparkSession.sql(
         f"""
         WITH bands AS ({_minhash_bands_sql("{hashes}")}),
@@ -227,17 +293,26 @@ def _lsh_verified_pairs(
           SELECT DISTINCT a.doc_id AS {key_a}, b.doc_id AS {key_b}
           FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND {on}
         )
-        SELECT * FROM (
-          SELECT c.{key_a}, c.{key_b},
-                 CAST({inter} AS DOUBLE) / (size(sa.sh) + size(sb.sh) - {inter}) AS jaccard_raw
-          FROM candidates c
-          JOIN {{sets}} sa ON sa.doc_id = c.{key_a}
-          JOIN {{sets}} sb ON sb.doc_id = c.{key_b}
-        ) WHERE jaccard_raw >= {JACCARD_THRESHOLD}
-        """,
-        hashes=docs.select("doc_id", F.explode(sh).alias("h")),
+        {_verified_sql("candidates", key_a, key_b)}""",
+        hashes=_shingle_rows(docs, sh),
         sets=docs.select("doc_id", sh.alias("sh")),
     )
+
+
+def _pair_lookup(pairs: DataFrame, table: DataFrame, key_a: str, key_b: str) -> DataFrame:
+    """``pairs`` (key_a, key_b, …) with both documents' columns of the
+    per-document ``table`` (doc_id, c, …), as c_a and c_b. Broadcast
+    direction (VERDICT r4 fix): join #1 broadcasts the mined pair list,
+    join #2 the pair-sized intermediate, and the corpus-sized table streams
+    on the probe side of both — broadcasting a per-document table is a
+    driver/executor OOM at 100 TB (test_plans.py checks every consumer)."""
+    cols = [c for c in table.columns if c != "doc_id"]
+
+    def side(key: str, s: str) -> DataFrame:
+        return table.selectExpr(f"doc_id AS {key}", *[f"{c} AS {c}_{s}" for c in cols])
+
+    with_a = side(key_a, "a").join(F.broadcast(pairs), key_a)
+    return side(key_b, "b").join(F.broadcast(with_a), key_b)
 
 
 @query("dedup_minhash_lsh", oracle=_JACCARD_ORACLE)
@@ -249,12 +324,7 @@ def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-(1-0.5²)³² ≈ 0.9999, so the output provably-almost-surely equals the
     exact query — which is why it can share the same oracle. Deterministic:
     all hashing is seeded xxhash64."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        _lsh_verified_pairs(docs)
-        .select("doc_a", "doc_b", round_half_up(F.col("jaccard_raw"), 4).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_rows(_lsh_verified_pairs(load_table(spark, sf_dir, "documents")))
 
 
 # ---------------------------------------------------------------------------
@@ -265,34 +335,7 @@ def minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_keep_list",
     oracle=f"""
-    WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT da, db FROM inter
-      JOIN cnt ca ON da = ca.doc_id
-      JOIN cnt cb ON db = cb.doc_id
-      WHERE i::DOUBLE / (ca.n + cb.n - i) >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT da AS a, db AS b FROM pairs
-      UNION SELECT db, da FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM edges
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    )
+    WITH RECURSIVE {_DUCK_REACH}
     SELECT a AS doc_id, least(a, min(b)) AS keep_doc_id
     FROM reach GROUP BY a
     ORDER BY doc_id
@@ -436,6 +479,16 @@ def _labels_iterate(edges: DataFrame) -> DataFrame:
     edges.unpersist()
     return out
 
+def _census(labels: DataFrame) -> DataFrame:
+    """(cluster_size, n_clusters, n_docs, n_removable) over the
+    (doc_id, keep_doc_id) component labels."""
+    clusters = labels.groupBy("keep_doc_id").agg(F.count("*").alias("cluster_size"))
+    return clusters.groupBy("cluster_size").agg(
+        F.count("*").alias("n_clusters"),
+        F.sum("cluster_size").cast("bigint").alias("n_docs"),
+        F.sum(F.col("cluster_size") - 1).cast("bigint").alias("n_removable"),
+    )
+
 
 # ---------------------------------------------------------------------------
 # Write-once pair-mine artifact (VERDICT r4 "Next round" #5): ≥6 registered
@@ -447,41 +500,7 @@ def _labels_iterate(edges: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PAIRS_MATERIALIZED_ORACLE = f"""
-    WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT da, db FROM inter
-      JOIN cnt ca ON da = ca.doc_id
-      JOIN cnt cb ON db = cb.doc_id
-      WHERE i::DOUBLE / (ca.n + cb.n - i) >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT da AS a, db AS b FROM pairs
-      UNION SELECT db, da FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM edges
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    labels AS (
-      SELECT a AS doc_id, least(a, min(b)) AS keep_doc_id
-      FROM reach GROUP BY a
-    ),
-    clusters AS (
-      SELECT keep_doc_id, count(*) AS cluster_size FROM labels GROUP BY keep_doc_id
-    ),
+    WITH RECURSIVE {_DUCK_CLUSTERS},
     census AS (
       SELECT cluster_size, count(*) AS n_clusters, sum(cluster_size) AS n_docs
       FROM clusters GROUP BY cluster_size
@@ -545,25 +564,18 @@ def pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     _lsh_verified_pairs(docs).select("doc_a", "doc_b").write.mode("overwrite").parquet(path)
     mined = spark.read.parquet(path)
     labels = _labels_from_pairs(mined)
-    census = (
-        labels.groupBy("keep_doc_id")
-        .agg(F.count("*").alias("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(F.count("*").alias("n_clusters"), F.sum("cluster_size").alias("n_docs"))
+
+    def summary(consumer: str, df: DataFrame, checksum: Column) -> DataFrame:
+        return df.agg(
+            F.count("*").cast("bigint").alias("n_rows"), checksum.cast("bigint").alias("checksum")
+        ).select(F.lit(consumer).alias("consumer"), "n_rows", "checksum")
+
+    return (
+        summary("cluster_census", _census(labels), F.sum(F.col("cluster_size") * F.col("n_docs")))
+        .union(summary("keep_list", labels, F.sum("keep_doc_id")))
+        .union(summary("pair_graph", mined, F.sum(F.col("doc_a") + F.col("doc_b"))))
+        .orderBy("consumer")
     )
-    c_census = census.agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum(F.col("cluster_size") * F.col("n_docs")).cast("bigint").alias("checksum"),
-    ).select(F.lit("cluster_census").alias("consumer"), "n_rows", "checksum")
-    c_keep = labels.agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum("keep_doc_id").cast("bigint").alias("checksum"),
-    ).select(F.lit("keep_list").alias("consumer"), "n_rows", "checksum")
-    c_pairs = mined.agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.sum(F.col("doc_a") + F.col("doc_b")).cast("bigint").alias("checksum"),
-    ).select(F.lit("pair_graph").alias("consumer"), "n_rows", "checksum")
-    return c_census.union(c_keep).union(c_pairs).orderBy("consumer")
 
 
 # ---------------------------------------------------------------------------
@@ -572,17 +584,69 @@ def pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIMHASH_MAX_HAMMING = 3  # 4 bands × 16 bits: hamming ≤ 3 ⇒ some band is clean
+SIMHASH_BANDS = 4
+
+
+def _band_pairs(band_rows: DataFrame, key: str, key_a: str, key_b: str, *cols: Column) -> DataFrame:
+    """Band-equality self-join of (key, band, bv) signature rows: every pair
+    (a.key < b.key) sharing a band value, once, as (key_a, key_b, *cols),
+    where ``cols`` read the sides as ``a.<col>`` / ``b.<col>``."""
+    a, b = band_rows.alias("a"), band_rows.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bv") == F.col("b.bv"))
+            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
+        )
+        .select(F.col(f"a.{key}").alias(key_a), F.col(f"b.{key}").alias(key_b), *cols)
+        .distinct()
+    )
+
+
+def _simhash_sql(h: str, bits: int) -> str:
+    """SQL text of the (doc_id, sim) ``bits``-bit SimHash over ``{rows}``,
+    exploded (doc_id, h) shingle rows: ``h`` (SQL over those rows) hashes
+    a shingle to 64 bits, or to a non-negative ``bits``-bit value, and bit
+    j of ``sim`` is set where most of the doc's hashes have it set (bit 63
+    is the sign bit of the long carrier). Aggregation-based and SQL text
+    for the reasons _minhash_bands_sql gives."""
+    votes = ", ".join(
+        f"sum(CASE WHEN shiftrightunsigned(h, {j}) & 1 = 1 THEN 1 ELSE -1 END) AS v{j}"
+        for j in range(bits)
+    )
+    sim = " | ".join(
+        f"CASE WHEN v{j} > 0 THEN {(1 << j) if j < 63 else -(1 << 63)}L ELSE 0L END"
+        for j in range(bits)
+    )
+    return (
+        f"SELECT doc_id, {sim} AS sim FROM ("
+        f"SELECT doc_id, {votes} FROM (SELECT doc_id, {h} AS h FROM {{rows}}) GROUP BY doc_id)"
+    )
+
+
+def _simhash_pairs(sims: DataFrame, band_bits: int) -> DataFrame:
+    """(doc_a, doc_b, hamming) of every (doc_id, sim) pair at most
+    SIMHASH_MAX_HAMMING bits apart: candidates share one of SIMHASH_BANDS
+    ``band_bits``-bit bands (pigeonhole: 3 flipped bits leave some band
+    equal), and hamming is checked on candidates only."""
+    mask = (1 << band_bits) - 1
+    structs = ", ".join(
+        f"struct({k} AS band, shiftrightunsigned(sim, {band_bits * k}) & {mask} AS bh)"
+        for k in range(SIMHASH_BANDS)
+    )
+    bands = sims.selectExpr("doc_id", "sim", f"explode(array({structs})) AS b").selectExpr(
+        "doc_id", "sim", "b.band", "b.bh AS bv"
+    )
+    hamming = hamming64(F.col("a.sim"), F.col("b.sim")).alias("hamming")
+    return _band_pairs(bands, "doc_id", "doc_a", "doc_b", hamming).filter(
+        F.col("hamming") <= SIMHASH_MAX_HAMMING
+    )
 
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, sim): 64-bit SimHash over 3-gram shingle hashes — explode
-    once, aggregate 64 bit-vote sums map-side, assemble the signature."""
-    sh_rows = docs.select("doc_id", F.explode(shingle_hashes(F.col("text"), 3)).alias("h"))
-    return (
-        sh_rows.groupBy("doc_id")
-        .agg(*simhash_bitsum_exprs("h"))
-        .select("doc_id", simhash_from_bitsums().alias("sim"))
-    )
+    """(doc_id, sim): 64-bit SimHash over 3-gram shingle hashes."""
+    return docs.sparkSession.sql(_simhash_sql("h", 64), rows=_shingle_rows(docs))
 
 
 @query("dedup_simhash")
@@ -592,39 +656,7 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     by pigeonhole that finds EVERY pair with Hamming ≤ 3, which is the
     reported threshold. Deterministic."""
     docs = load_table(spark, sf_dir, "documents")
-    sims = simhash_signatures(docs)
-    bands = sims.select(
-        "doc_id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"),
-                        F.shiftrightunsigned(F.col("sim"), 16 * k).bitwiseAND(F.lit(0xFFFF)).alias("bh"),
-                    )
-                    for k in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "sim", "b.band", "b.bh")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming64(F.col("a.sim"), F.col("b.sim")).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
-        .orderBy("doc_a", "doc_b")
-    )
+    return _simhash_pairs(simhash_signatures(docs), 64 // SIMHASH_BANDS).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -653,45 +685,50 @@ EMB_BITS_PER_BAND = 2
 EMB_BANDS = EMB_N_PLANES // EMB_BITS_PER_BAND
 
 
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v): the valid embeddings (load_embeddings) as double arrays."""
+    from sqload_spark.functions.vectors import to_double_array
+
+    return load_embeddings(spark, sf_dir).select(
+        "vec_id", to_double_array(F.col("embedding")).alias("v")
+    )
+
+
+def _unpacked(emb: DataFrame, side: str) -> DataFrame:
+    """(vec_<side>, n_<side>, <side>0 … <side>63): each vector's norm and
+    components. SQL-string construction (r11, see vectors.dot_expanded_sql):
+    identical trees, one server-side parse instead of ~600 py4j calls."""
+    return emb.selectExpr(
+        f"vec_id AS vec_{side}",
+        f"{_NORM_SQL} AS n_{side}",
+        *[f"element_at(v, {i + 1}) AS {side}{i}" for i in range(64)],
+    )
+
+
+def _cosine_dups(pairs: DataFrame) -> DataFrame:
+    """(vec_a, vec_b, cos_sim) of the joined _unpacked "a"/"b" ``pairs`` at
+    cosine >= COSINE_DUP_THRESHOLD (64-term dot: see embedding_cosine_dups)."""
+    dot = F.expr(" + ".join(f"a{i} * b{i}" for i in range(64)))
+    return (
+        pairs.withColumn("cos_raw", dot / (F.col("n_a") * F.col("n_b")))
+        .filter(F.col("cos_raw") >= COSINE_DUP_THRESHOLD)
+        .select("vec_a", "vec_b", round_half_up(F.col("cos_raw"), 4).alias("cos_sim"))
+        .orderBy("vec_a", "vec_b")
+    )
+
+
 @query("dedup_embedding_cosine", oracle=_EMB_COSINE_ORACLE)
 def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs cosine near-dup mining — the small-corpus baseline /
     verifier. The scale path is dedup_embedding_cosine_banded below."""
-    from sqload_spark.functions.vectors import dot, norm, to_double_array
-
     # Norms computed ONCE per vector map-side (n sqrt-folds, not 2n²) and
     # the per-pair dot written as a 64-term scalar-column expression so
     # the n²/2 hot path stays in WholeStageCodegen (an aggregate/zip_with
     # fold is interpreted per row — measured 3-4× slower on this pair
     # count). Same left-to-right association as the fold ⇒ bit-identical
     # values, oracle hash unchanged.
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
-    dim = 64
-    # SQL-string construction (r11, see vectors.dot_expanded_sql):
-    # identical trees, one server-side parse instead of ~600 py4j calls.
-    _norm_sql = (
-        "sqrt(aggregate(zip_with(v, v, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x))"
-    )
-    a = emb.selectExpr(
-        "vec_id AS vec_a",
-        f"{_norm_sql} AS n_a",
-        *[f"element_at(v, {i + 1}) AS a{i}" for i in range(dim)],
-    )
-    b = emb.selectExpr(
-        "vec_id AS vec_b",
-        f"{_norm_sql} AS n_b",
-        *[f"element_at(v, {i + 1}) AS b{i}" for i in range(dim)],
-    )
-    dot_expr = F.expr(" + ".join(f"a{i} * b{i}" for i in range(dim)))
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos_raw", dot_expr / (F.col("n_a") * F.col("n_b")))
-        .filter(F.col("cos_raw") >= COSINE_DUP_THRESHOLD)
-        .select("vec_a", "vec_b", round_half_up(F.col("cos_raw"), 4).alias("cos_sim"))
-        .orderBy("vec_a", "vec_b")
-    )
+    emb = _vectors(spark, sf_dir)
+    return _cosine_dups(_unpacked(emb, "a").join(_unpacked(emb, "b"), F.col("vec_a") < F.col("vec_b")))
 
 
 # --- pruning end of the banding dial (realistic dedup threshold) -----------
@@ -789,11 +826,7 @@ _PRUNED_COSINE_ORACLE = f"""
 
 def _pruned_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings ∪ deterministic planted near-dups (see comment above)."""
-    from sqload_spark.functions.vectors import to_double_array
-
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     planted = emb.filter(F.col("vec_id") % 20 == 0).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
         F.concat(F.slice(F.col("v"), 1, 60), F.array(*[F.lit(0.0)] * 4)).alias("v"),
@@ -886,22 +919,6 @@ def _band_partitions_for(n_vectors: int) -> int | None:
     return None
 
 
-def _band_candidates(band_rows: DataFrame) -> DataFrame:
-    """Band-equality self-join of (vec_id, band, bv) signature rows: every
-    (vec_a < vec_b) pair that shares at least one band value, once."""
-    a, b = band_rows.alias("a"), band_rows.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("b.vec_id").alias("vec_b"))
-        .distinct()
-    )
-
-
 def _pruned_candidates(
     corpus: DataFrame,
     tier: tuple[int, int] | None = None,
@@ -939,7 +956,7 @@ def _pruned_candidates(
     band_rows = _pruned_signatures(corpus, bits, bands)
     if band_partitions:
         band_rows = band_rows.repartition(band_partitions, "band", "bv")
-    return _band_candidates(band_rows)
+    return _band_pairs(band_rows, "vec_id", "vec_a", "vec_b")
 
 
 @query("dedup_embedding_cosine_banded_pruned", oracle=_PRUNED_COSINE_ORACLE)
@@ -980,11 +997,8 @@ def _pruned_rerank(corpus: DataFrame, candidates: DataFrame) -> DataFrame:
     note lives in functions/vectors.py. The scalar-column expanded form
     (embedding_cosine_dups, the banded re-rank) is a different, still-
     optimal regime."""
-    _norm_sql = (
-        "sqrt(aggregate(zip_with(v, v, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x))"
-    )
-    va = corpus.selectExpr("vec_id AS vec_a", "v AS v_a", f"{_norm_sql} AS n_a")
-    vb = corpus.selectExpr("vec_id AS vec_b", "v AS v_b", f"{_norm_sql} AS n_b")
+    va = corpus.selectExpr("vec_id AS vec_a", "v AS v_a", f"{_NORM_SQL} AS n_a")
+    vb = corpus.selectExpr("vec_id AS vec_b", "v AS v_b", f"{_NORM_SQL} AS n_b")
     # No broadcast hints on the re-rank joins: the vector table is
     # corpus-sized, so forcing it broadcast would OOM at scale. Stats/AQE
     # pick broadcast at test SF (the table is tiny there) and a shuffle
@@ -1048,16 +1062,12 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator runs more bits per band and prunes aggressively. The knob is
     EMB_BITS_PER_BAND — the plan shape (band shuffle + candidate-only
     verification) is what survives 100 TB, not any fixed constant."""
-    from sqload_spark.functions.vectors import to_double_array
-
     import numpy as np
 
     # Same seeded plane stream every round has used (RandomState(23), plane
     # order) — the values define the candidate set, so they are pinned.
     plane_mat = np.random.RandomState(23).randn(EMB_N_PLANES, 64)
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     # Codegen discipline (measured at sf0.1, n=2000, ~2M candidates):
     # every dot product on the HOT (per-candidate) path is a 64-term
     # scalar-column expression, never an aggregate/zip_with fold —
@@ -1084,15 +1094,6 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trees are term-for-term identical (same left-to-right association,
     # same unpacked-scalar plan shape), so values and the plan audit are
     # unchanged.
-    dim = 64
-    _norm_sql = (
-        "sqrt(aggregate(zip_with(v, v, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x))"
-    )
-    emb_x = emb.selectExpr(
-        "vec_id",
-        f"{_norm_sql} AS n",
-        *[f"element_at(v, {i + 1}) AS x{i}" for i in range(dim)],
-    )
 
     # Signature pass in BLAS (r11, guide §4.2): the expr form — broadcast
     # plane join + 64-term plane dot per (vector, plane) row + groupBy —
@@ -1107,7 +1108,6 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of 32 bands at this threshold), and the recall math is unchanged.
     # load_embeddings' validity contract guarantees every v is a finite
     # 64-wide double array, so np.stack is total.
-    n_bands = EMB_N_PLANES // EMB_BITS_PER_BAND
 
     # Re-spread the signature cache before persisting (r11 follow-up,
     # guide §2.5): mapInPandas output inherits the SCAN's partitioning —
@@ -1123,10 +1123,7 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The GEMM body is the pruned miners' _pruned_signatures, fed this
     # query's own pinned planes.
     band_rows = _pruned_signatures(
-        emb,
-        EMB_BITS_PER_BAND,
-        n_bands,
-        planes_t=np.ascontiguousarray(plane_mat.T),
+        emb, EMB_BITS_PER_BAND, EMB_BANDS, planes_t=np.ascontiguousarray(plane_mat.T)
     ).repartition(spark.sparkContext.defaultParallelism)
     # Persist the signature table before the self-join: unlike the MinHash
     # bands (where persist-vs-recompute measured a wash), the 64-term plane
@@ -1136,28 +1133,12 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of three scalars — trivially cacheable at any corpus size.
     band_rows = persist_bounded("dedup_embedding_cosine_banded.band_rows", band_rows)
     band_rows.count()  # bounded driver action: materializes the cache
-    candidates = _band_candidates(band_rows)
-    va_x = emb_x.selectExpr(
-        "vec_id AS vec_a",
-        "n AS n_a",
-        *[f"x{i} AS a{i}" for i in range(dim)],
-    )
-    vb_x = emb_x.selectExpr(
-        "vec_id AS vec_b",
-        "n AS n_b",
-        *[f"x{i} AS b{i}" for i in range(dim)],
-    )
-    dot_expr = F.expr(" + ".join(f"a{i} * b{i}" for i in range(dim)))
+    candidates = _band_pairs(band_rows, "vec_id", "vec_a", "vec_b")
     # No broadcast hints: the unpacked vector table is corpus-sized, so a
     # forced broadcast would OOM at scale. Stats/AQE still broadcast it at
     # test SF (tiny) and fall back to a vec_id shuffle join once it isn't.
-    return (
-        candidates.join(va_x, "vec_a")
-        .join(vb_x, "vec_b")
-        .withColumn("cos_raw", dot_expr / (F.col("n_a") * F.col("n_b")))
-        .filter(F.col("cos_raw") >= COSINE_DUP_THRESHOLD)
-        .select("vec_a", "vec_b", round_half_up(F.col("cos_raw"), 4).alias("cos_sim"))
-        .orderBy("vec_a", "vec_b")
+    return _cosine_dups(
+        candidates.join(_unpacked(emb, "a"), "vec_a").join(_unpacked(emb, "b"), "vec_b")
     )
 
 
@@ -1173,14 +1154,7 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
 INCR_NEW_MOD = 5
 
 _INCR_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+    WITH {_DUCK_SHINGLES},
     inter AS (
       SELECT b.doc_id AS nid, a.doc_id AS pid, count(*) AS i
       FROM sh a JOIN sh b ON a.sh = b.sh
@@ -1323,41 +1297,7 @@ def exact_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CLUSTER_SIZES_ORACLE = f"""
-    WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT da, db FROM inter
-      JOIN cnt ca ON da = ca.doc_id
-      JOIN cnt cb ON db = cb.doc_id
-      WHERE i::DOUBLE / (ca.n + cb.n - i) >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT da AS a, db AS b FROM pairs
-      UNION SELECT db, da FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM edges
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
-    labels AS (
-      SELECT a AS doc_id, least(a, min(b)) AS keep_doc_id
-      FROM reach GROUP BY a
-    ),
-    clusters AS (
-      SELECT keep_doc_id, count(*) AS cluster_size FROM labels GROUP BY keep_doc_id
-    )
+    WITH RECURSIVE {_DUCK_CLUSTERS}
     SELECT cluster_size,
            count(*) AS n_clusters,
            CAST(sum(cluster_size) AS BIGINT) AS n_docs,
@@ -1377,39 +1317,11 @@ def cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     components (component_labels); the two extra aggregations are on the
     label table, whose cardinality is docs-in-dup-pairs, not the corpus.
     Oracle extends the recursive-CTE components with the same census."""
-    labels = component_labels(load_table(spark, sf_dir, "documents"))
-    clusters = labels.groupBy("keep_doc_id").agg(F.count("*").alias("cluster_size"))
-    return (
-        clusters.groupBy("cluster_size")
-        .agg(
-            F.count("*").alias("n_clusters"),
-            F.sum("cluster_size").cast("bigint").alias("n_docs"),
-            F.sum(F.col("cluster_size") - 1).cast("bigint").alias("n_removable"),
-        )
-        .orderBy("cluster_size")
-    )
+    return _census(component_labels(load_table(spark, sf_dir, "documents"))).orderBy("cluster_size")
 
 
 _EDIT_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT da, db FROM inter
-      JOIN cnt ca ON da = ca.doc_id
-      JOIN cnt cb ON db = cb.doc_id
-      WHERE i::DOUBLE / (ca.n + cb.n - i) >= {JACCARD_THRESHOLD}
-    )
+    WITH {_DUCK_PAIRS}
     SELECT p.da AS doc_a, p.db AS doc_b,
            levenshtein(substr(a.text, 1, 120), substr(b.text, 1, 120)) AS lev_120
     FROM pairs p
@@ -1429,27 +1341,15 @@ def edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair list, never n² — and the integer distances are engine-exact, so
     the whole path hash-checks against the recursive candidate oracle.
 
-    Broadcast direction (VERDICT r4 fix): the SMALL side here is the
-    mined pair list, not the corpus — broadcasting the 120-char prefix
-    table of every document (the r4 code) is a driver/executor OOM at
-    100 TB. So the pair list is the broadcast build side of join #1, and
-    join #2 broadcasts the pair-sized intermediate (pairs + pref_a); the
-    corpus prefix scans stream on the probe side of both joins.
-    test_plans.py asserts no corpus scan ever sits under a
-    BroadcastExchange."""
+    Broadcast direction (_pair_lookup): the broadcast side is the mined
+    pair list, never the 120-char prefix table of every document (the r4
+    code, a driver/executor OOM at 100 TB)."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = _lsh_verified_pairs(docs).select("doc_a", "doc_b")
     pref = docs.select("doc_id", F.substring("text", 1, 120).alias("pref"))
-    a = pref.select(F.col("doc_id").alias("doc_a"), F.col("pref").alias("pref_a"))
-    b = pref.select(F.col("doc_id").alias("doc_b"), F.col("pref").alias("pref_b"))
-    with_a = a.join(F.broadcast(pairs), "doc_a")
     return (
-        b.join(F.broadcast(with_a), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.levenshtein("pref_a", "pref_b").alias("lev_120"),
-        )
+        _pair_lookup(pairs, pref, "doc_a", "doc_b")
+        .select("doc_a", "doc_b", F.levenshtein("pref_a", "pref_b").alias("lev_120"))
         .orderBy("doc_a", "doc_b")
     )
 
@@ -1475,10 +1375,7 @@ def prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the prefix base) — without it each consumer re-parses and re-hashes
     # the corpus (measured 9.6 → 6.7 s warm at sf0.1); bounded so repeated
     # invocations don't accumulate cached epochs
-    sh = persist_bounded(
-        "dedup_prefix_filter.sh",
-        docs.select("doc_id", F.explode(shingle_hashes(F.col("text"), 3)).alias("h")),
-    )
+    sh = persist_bounded("dedup_prefix_filter.sh", _shingle_rows(docs))
     df_counts = sh.groupBy("h").agg(F.count("*").alias("df"))
     # Prefix selection as ONE per-doc aggregation (r11, guide §2.4): the
     # former shape — a row_number window ordered by (df, h) plus a separate
@@ -1512,24 +1409,12 @@ def prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    sets_a = docs.select(
-        F.col("doc_id").alias("doc_a"), shingle_hashes(F.col("text"), 3).alias("sh_a")
+    verified = spark.sql(
+        _verified_sql("{candidates}", "doc_a", "doc_b"),
+        candidates=candidates,
+        sets=docs.select("doc_id", shingle_hashes(F.col("text"), 3).alias("sh")),
     )
-    sets_b = docs.select(
-        F.col("doc_id").alias("doc_b"), shingle_hashes(F.col("text"), 3).alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        candidates.join(sets_a, "doc_a")
-        .join(sets_b, "doc_b")
-        .withColumn(
-            "jaccard_raw",
-            inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter),
-        )
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", round_half_up(F.col("jaccard_raw"), 4).alias("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_rows(verified)
 
 
 # --- SimHash with a DuckDB twin --------------------------------------------
@@ -1539,8 +1424,6 @@ def prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash-checked: banding completeness (4 bands × 8 bits ⇒ hamming ≤ 3 has a
 # clean band) must reproduce the brute-force all-pairs answer exactly.
 SIMHASH32_BITS = 32
-SIMHASH32_BANDS = 4
-SIMHASH32_MAX_HAMMING = 3
 
 _SH32_VOTES_SQL = ", ".join(
     f"sum(CASE WHEN (h32 >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}"
@@ -1551,14 +1434,8 @@ _SH32_ASSEMBLE_SQL = " + ".join(
 )
 
 _SIMHASH32_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS s
-      FROM toks
-    ), bits AS (
-      SELECT doc_id, ('0x' || substr(md5(s), 1, 8))::BIGINT AS h32 FROM sh
+    WITH {_DUCK_SH}, bits AS (
+      SELECT doc_id, ('0x' || substr(md5(sh), 1, 8))::BIGINT AS h32 FROM sh
     ), votes AS (
       SELECT doc_id, {_SH32_VOTES_SQL} FROM bits GROUP BY doc_id
     ), sigs AS (
@@ -1567,7 +1444,7 @@ _SIMHASH32_ORACLE = f"""
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            bit_count(xor(a.sim, b.sim)) AS hamming
     FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sim, b.sim)) <= {SIMHASH32_MAX_HAMMING}
+    WHERE bit_count(xor(a.sim, b.sim)) <= {SIMHASH_MAX_HAMMING}
     ORDER BY doc_a, doc_b
 """
 
@@ -1584,54 +1461,13 @@ def simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode+32-sum aggregation per doc, band self-join on 8-bit buckets,
     hamming check on candidates only."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select("doc_id", F.explode(shingles(F.col("text"), 3)).alias("s"))
-    h32 = F.conv(F.substring(F.md5(F.col("s")), 1, 8), 16, 10).cast("long")
-    votes = sh.select("doc_id", h32.alias("h32")).groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h32"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v{b}")
-            for b in range(SIMHASH32_BITS)
-        ]
+    # h32, the first 32 md5 bits, is non-negative, so the shared 64-bit
+    # builders (unsigned shifts, bits OR-ed) give the oracle's values.
+    sims = spark.sql(
+        _simhash_sql("CAST(conv(substring(md5(h), 1, 8), 16, 10) AS BIGINT)", SIMHASH32_BITS),
+        rows=_shingle_rows(docs, shingles(F.col("text"), 3)),
     )
-    sim = None
-    for b in range(SIMHASH32_BITS):
-        term = F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    sigs = votes.select("doc_id", sim.alias("sim"))
-    bands = sigs.select(
-        "doc_id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band"),
-                        F.shiftright(F.col("sim"), 8 * k).bitwiseAND(F.lit(255)).alias("bv"),
-                    )
-                    for k in range(SIMHASH32_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "sim", "b.band", "b.bv")
-    a, b = bands.alias("a"), bands.alias("b")
-    hamming = F.bit_count(F.col("a.sim").bitwiseXOR(F.col("b.sim")))
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= SIMHASH32_MAX_HAMMING)
-        .distinct()
-        .orderBy("doc_a", "doc_b")
-    )
+    return _simhash_pairs(sims, SIMHASH32_BITS // SIMHASH_BANDS).orderBy("doc_a", "doc_b")
 
 
 # --- MinHash with a DuckDB twin --------------------------------------------
@@ -1642,30 +1478,22 @@ def simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 MINHASH_CHECKED_PERMS = 16
 
 _MHC_MIN_SQL = ", ".join(
-    f"min(('0x' || substr(md5(CAST({p} AS VARCHAR) || '|' || s), 1, 8))::BIGINT) AS m{p}"
+    f"min(('0x' || substr(md5(CAST({p} AS VARCHAR) || '|' || sh), 1, 8))::BIGINT) AS m{p}"
     for p in range(MINHASH_CHECKED_PERMS)
 )
 _MHC_AGREE_SQL = " + ".join(
     f"(CASE WHEN a.m{p} = b.m{p} THEN 1 ELSE 0 END)" for p in range(MINHASH_CHECKED_PERMS)
 )
-
-_MINHASH_CHECKED_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS s
-      FROM toks
-    ),
+# toks → sh → the md5 signatures → cnt → inter, for the two md5 oracles
+_DUCK_MD5_SIGS = f"""{_DUCK_SH},
     sigs AS (
       SELECT doc_id, {_MHC_MIN_SQL} FROM sh GROUP BY doc_id
     ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    {_DUCK_CNT},
+    {_DUCK_INTER}"""
+
+_MINHASH_CHECKED_ORACLE = f"""
+    WITH {_DUCK_MD5_SIGS},
     pairs AS (
       SELECT da, db, i::DOUBLE / (ca.n + cb.n - i) AS j
       FROM inter
@@ -1683,6 +1511,35 @@ _MINHASH_CHECKED_ORACLE = f"""
 """
 
 
+def _md5_minhash_sql(rows: str) -> str:
+    """SQL text of the (doc_id, m0 … m15) md5 MinHash signatures over
+    ``rows``, exploded (doc_id, h) shingle-string rows: m<p> is the doc's
+    smallest first-32-bits of md5('<p>|' || shingle), bit-identical in
+    DuckDB. Aggregation-based and SQL text for the reasons
+    _minhash_bands_sql gives (tests/test_llm_pipeline.py checks
+    ``sameResult`` against the Column form)."""
+    mh = ", ".join(
+        f"min(CAST(conv(substring(md5(concat('{p}|', h)), 1, 8), 16, 10) AS BIGINT)) AS m{p}"
+        for p in range(MINHASH_CHECKED_PERMS)
+    )
+    return f"SELECT doc_id, {mh} FROM {rows} GROUP BY doc_id"
+
+
+def _md5_minhash_sigs(docs: DataFrame) -> DataFrame:
+    """(doc_id, m0 … m15): _md5_minhash_sql over the docs' shingles."""
+    rows = _shingle_rows(docs, shingles(F.col("text"), 3))
+    return docs.sparkSession.sql(_md5_minhash_sql("{rows}"), rows=rows)
+
+
+def _with_agreement(sigs: DataFrame, pairs: DataFrame, key_a: str, key_b: str) -> DataFrame:
+    """``pairs`` (key_a, key_b, …) with ``agree``, the number of
+    permutations on which the two documents' ``sigs`` minima agree."""
+    agree = " + ".join(
+        f"CASE WHEN m{p}_a = m{p}_b THEN 1 ELSE 0 END" for p in range(MINHASH_CHECKED_PERMS)
+    )
+    return _pair_lookup(pairs, sigs, key_a, key_b).withColumn("agree", F.expr(agree))
+
+
 @query("dedup_minhash_checked", oracle=_MINHASH_CHECKED_ORACLE)
 def minhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures from md5 permutations: for every true near-dup
@@ -1693,67 +1550,21 @@ def minhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     shows). Same aggregation shape as the production 64-perm xxhash64
     path (explode once, min per permutation, map-side partials)."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select("doc_id", F.explode(shingles(F.col("text"), 3)).alias("s"))
-    mh = [
-        F.min(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{p}|"), F.col("s"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-        ).alias(f"m{p}")
-        for p in range(MINHASH_CHECKED_PERMS)
-    ]
-    sigs = sh.groupBy("doc_id").agg(*mh)
-    pairs = _shingle_pairs(docs).filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
-    a = sigs.select(
-        F.col("doc_id").alias("doc_a"), *[F.col(f"m{p}").alias(f"a{p}") for p in range(MINHASH_CHECKED_PERMS)]
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("doc_b"), *[F.col(f"m{p}").alias(f"b{p}") for p in range(MINHASH_CHECKED_PERMS)]
-    )
-    agree = None
-    for p in range(MINHASH_CHECKED_PERMS):
-        term = F.when(F.col(f"a{p}") == F.col(f"b{p}"), 1).otherwise(0)
-        agree = term if agree is None else agree + term
-    # Broadcast direction: the pair list is the small side — hinting the
-    # per-doc signature table (corpus-sized) would OOM at scale; join #2
-    # broadcasts the pair-bounded intermediate (pairs + a-signature).
-    with_a = a.join(F.broadcast(pairs), "doc_a")
+    pairs = _shingle_pairs(docs)
     return (
-        b.join(F.broadcast(with_a), "doc_b")
+        _with_agreement(_md5_minhash_sigs(docs), pairs, "doc_a", "doc_b")
         .select(
             "doc_a",
             "doc_b",
             round_half_up(F.col("jaccard_raw"), 4).alias("jaccard"),
-            round_half_up(agree / F.lit(float(MINHASH_CHECKED_PERMS)), 4).alias("mh_estimate"),
+            round_half_up(F.col("agree") / F.lit(float(MINHASH_CHECKED_PERMS)), 4).alias("mh_estimate"),
         )
         .orderBy("doc_a", "doc_b")
     )
 
 
 _XSOURCE_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT da, db FROM inter
-      JOIN cnt ca ON da = ca.doc_id
-      JOIN cnt cb ON db = cb.doc_id
-      WHERE i::DOUBLE / (ca.n + cb.n - i) >= {JACCARD_THRESHOLD}
-    )
+    WITH {_DUCK_PAIRS}
     SELECT least(x.source, y.source) AS source_a,
            greatest(x.source, y.source) AS source_b,
            count(*) AS n_pairs,
@@ -1776,14 +1587,11 @@ def cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc→source map streamed) plus a |sources|²-bounded aggregation."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = _lsh_verified_pairs(docs).select("doc_a", "doc_b")
-    src = docs.select("doc_id", "source")
-    xa = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a"))
-    xb = src.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("src_b"))
     # Broadcast the mined pair list, not the doc→source map: the map is one
     # row per document (corpus-sized), the pairs are candidate-bounded.
-    with_a = xa.join(F.broadcast(pairs), "doc_a")
+    src = docs.select("doc_id", F.col("source").alias("src"))
     return (
-        xb.join(F.broadcast(with_a), "doc_b")
+        _pair_lookup(pairs, src, "doc_a", "doc_b")
         .groupBy(
             F.least("src_a", "src_b").alias("source_a"),
             F.greatest("src_a", "src_b").alias("source_b"),
@@ -1799,34 +1607,7 @@ def cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _WEIGHTED_KEEP_ORACLE = f"""
-    WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT da, db FROM inter
-      JOIN cnt ca ON da = ca.doc_id
-      JOIN cnt cb ON db = cb.doc_id
-      WHERE i::DOUBLE / (ca.n + cb.n - i) >= {JACCARD_THRESHOLD}
-    ),
-    edges AS (
-      SELECT da AS a, db AS b FROM pairs
-      UNION SELECT db, da FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM edges
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
+    WITH RECURSIVE {_DUCK_REACH},
     labels AS (
       SELECT a AS doc_id, least(a, min(b)) AS cluster_id
       FROM reach GROUP BY a
@@ -1891,22 +1672,7 @@ _MHE_BAND_MATCH_SQL = " OR ".join(
 )
 
 _MINHASH_EVAL_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS s
-      FROM toks
-    ),
-    sigs AS (
-      SELECT doc_id, {_MHC_MIN_SQL} FROM sh GROUP BY doc_id
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    WITH {_DUCK_MD5_SIGS},
     truth AS (
       SELECT da, db FROM inter
       JOIN cnt ca ON da = ca.doc_id
@@ -1954,28 +1720,7 @@ def minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     live, and on a corpus with borderline pairs the same query prices the
     sketch's precision/recall trade directly."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = docs.select("doc_id", F.explode(shingles(F.col("text"), 3)).alias("s"))
-    mh = [
-        F.min(
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit(f"{p}|"), F.col("s"))), 1, 8), 16, 10
-            ).cast("long")
-        ).alias(f"m{p}")
-        for p in range(MINHASH_CHECKED_PERMS)
-    ]
-    sigs = persist_bounded("dedup_minhash_eval.sigs", sh.groupBy("doc_id").agg(*mh))
-    a = sigs.select(
-        F.col("doc_id").alias("da"),
-        *[F.col(f"m{p}").alias(f"am{p}") for p in range(MINHASH_CHECKED_PERMS)],
-    )
-    b = sigs.select(
-        F.col("doc_id").alias("db"),
-        *[F.col(f"m{p}").alias(f"bm{p}") for p in range(MINHASH_CHECKED_PERMS)],
-    )
-    agree = None
-    for p in range(MINHASH_CHECKED_PERMS):
-        term = F.when(F.col(f"am{p}") == F.col(f"bm{p}"), 1).otherwise(0)
-        agree = term if agree is None else agree + term
+    sigs = persist_bounded("dedup_minhash_eval.sigs", _md5_minhash_sigs(docs))
     # Predicted side via the BANDED SHUFFLE, not a signature self-join:
     # "some band matches" is an equi-join on the exploded (band, 4-perm
     # struct) rows — identical semantics to the oracle's OR-of-bands
@@ -1985,45 +1730,21 @@ def minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair side broadcast per the corpus-broadcast policy. Only the TRUTH
     # side below stays deliberately quadratic — being exact ground truth
     # is its entire job, and it is labeled as such.
-    band_rows = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(band).alias("band"),
-                        F.struct(
-                            *[
-                                F.col(f"m{band * 4 + k}").alias(f"p{k}")
-                                for k in range(4)
-                            ]
-                        ).alias("sig4"),
-                    )
-                    for band in range(MHE_BANDS)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "b.band", "b.sig4")
-    x, y = band_rows.alias("x"), band_rows.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.sig4") == F.col("y.sig4"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db"))
-        .distinct()
+    structs = ", ".join(
+        f"struct({b} AS band, struct({', '.join(f'm{b * 4 + k} AS p{k}' for k in range(4))}) AS sig4)"
+        for b in range(MHE_BANDS)
     )
-    cand_a = a.join(F.broadcast(cand), "da")
+    band_rows = sigs.selectExpr("doc_id", f"explode(array({structs})) AS b").selectExpr(
+        "doc_id", "b.band", "b.sig4 AS bv"
+    )
+    cand = _band_pairs(band_rows, "doc_id", "da", "db")
     predicted = (
-        b.join(F.broadcast(cand_a), "db")
-        .filter(agree >= MHE_MIN_AGREE)
+        _with_agreement(sigs, cand, "da", "db")
+        .filter(F.col("agree") >= MHE_MIN_AGREE)
         .select("da", "db")
     )
     truth = (
         _shingle_pairs(docs)
-        .filter(F.col("jaccard_raw") >= JACCARD_THRESHOLD)
         .select(F.col("doc_a").alias("da"), F.col("doc_b").alias("db"))
     )
     t = truth.withColumn("in_truth", F.lit(True))

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from sqload_spark.operators.dedup import component_labels
+from sqload_spark.operators.dedup import _DUCK_REACH, component_labels
 from sqload_spark.registry import ORACLES, query
 from sqload_spark.sources.tables import load_table
 
@@ -196,34 +196,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_split_leakage_safe",
     oracle=f"""
-    WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT da, db FROM inter
-      JOIN cnt ca ON da = ca.doc_id
-      JOIN cnt cb ON db = cb.doc_id
-      WHERE i::DOUBLE / (ca.n + cb.n - i) >= 0.5
-    ),
-    edges AS (
-      SELECT da AS a, db AS b FROM pairs
-      UNION SELECT db, da FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM edges
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
+    WITH RECURSIVE {_DUCK_REACH},
     comp AS (
       SELECT a AS doc_id, least(a, min(b)) AS keep_doc_id
       FROM reach GROUP BY a
@@ -316,34 +289,7 @@ MIX_SAMPLE_RATE = 0.5
 @query(
     "pipe_training_mix",
     oracle=f"""
-    WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
-      FROM toks
-    ),
-    cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS i
-      FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT da, db FROM inter
-      JOIN cnt ca ON da = ca.doc_id
-      JOIN cnt cb ON db = cb.doc_id
-      WHERE i::DOUBLE / (ca.n + cb.n - i) >= 0.5
-    ),
-    edges AS (
-      SELECT da AS a, db AS b FROM pairs
-      UNION SELECT db, da FROM pairs
-    ),
-    reach AS (
-      SELECT a, b FROM edges
-      UNION
-      SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-    ),
+    WITH RECURSIVE {_DUCK_REACH},
     comp AS (
       SELECT a AS doc_id, least(a, min(b)) AS keep_doc_id
       FROM reach GROUP BY a

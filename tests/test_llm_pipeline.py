@@ -561,3 +561,86 @@ def test_minhash_lsh_build_py4j_budget(spark):
     with count_py4j_calls(spark) as calls:
         registry.QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
     assert calls[0] <= 1500, calls[0]
+
+
+def test_simhash_rows_pinned(spark):
+    """dedup_simhash has no oracle: pin its rows and the rows of the 64-bit
+    signatures it mines from (row_digest at sf0.01). The signature builder
+    is shared with dedup_simhash_checked, whose 32-bit twin the oracle
+    checks; these pins cover the 64-bit width."""
+    from sqload_spark.operators.dedup import simhash_signatures
+    from sqload_spark.sources.tables import load_table
+    from tests.conftest import row_digest
+
+    docs = load_table(spark, SF_DIR, "documents")
+    assert row_digest(simhash_signatures(docs)) == (500, 29394746280045221835)
+    assert row_digest(registry.QUERIES["dedup_simhash"](spark, SF_DIR)) == (12, -8371493501006034419)
+
+
+# Spark jobs each registered dedup_* query may start while its plan is built
+# (eager actions), at sf0.01: the bound and where the jobs come from.
+# Every query scans one table through load_table, whose parquet schema
+# inference is one job. The connected-components consumers add
+# _labels_from_pairs' edge count (6 jobs: the LSH mine's AQE stages) and the
+# CC loop's lazy-checkpoint convergence counts (8).
+_LOAD = "load_table schema inference"
+_CC = f"{_LOAD} (1) + _labels_from_pairs' edge count (6) + CC convergence counts (8)"
+_BUILD_JOBS = {
+    "dedup_cluster_sizes": (15, _CC),
+    "dedup_keep_list": (15, _CC),
+    "dedup_keep_list_weighted": (15, _CC),
+    "dedup_pairs_materialized": (
+        17,
+        f"{_LOAD} (1) + pairs_materialized's parquet write (4) + the artifact's "
+        "schema read (1) + edge count of the read-back pairs + CC convergence counts (11)",
+    ),
+    "dedup_embedding_cosine_banded": (
+        5, f"{_LOAD} (1) + embedding_cosine_banded's band_rows.count() (4)"
+    ),
+}
+
+
+def test_dedup_build_jobs_bounded(spark):
+    """Building a dedup_* query starts no more Spark jobs than _BUILD_JOBS
+    lists (1, the schema inference, where it names none): a refactor that
+    adds an eager action to plan build fails here. Counted per query under
+    its own job group, as tools/profile_queries.py counts build_jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    over = {}
+    for name in sorted(n for n in registry.QUERIES if n.startswith("dedup_")):
+        group = f"build_jobs:{name}"
+        sc.setJobGroup(group, group)
+        try:
+            registry.QUERIES[name](spark, SF_DIR)
+        finally:
+            sc.setJobGroup("", "")
+        n_jobs = len(tracker.getJobIdsForGroup(group))
+        bound = _BUILD_JOBS.get(name, (1, _LOAD))[0]
+        if n_jobs > bound:
+            over[name] = (n_jobs, bound)
+    assert not over, f"build-time jobs over their bound (jobs, bound): {over}"
+
+
+def test_md5_minhash_sql_is_the_column_relation(spark):
+    """The SQL-text md5 MinHash signatures (_md5_minhash_sql) are the
+    relation the Column API builds from the same shingle-string rows — 16
+    min(conv(substring(md5('p|' || shingle), 1, 8), 16, 10)) aggregates:
+    equal optimized plans up to expression ids."""
+    from pyspark.sql import functions as F
+
+    from sqload_spark.functions.text_funcs import shingles
+    from sqload_spark.operators.dedup import MINHASH_CHECKED_PERMS, _md5_minhash_sql
+    from sqload_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF_DIR, "documents")
+    rows = docs.select("doc_id", F.explode(shingles(F.col("text"), 3)).alias("h"))
+    first32 = lambda p: F.conv(  # noqa: E731
+        F.substring(F.md5(F.concat(F.lit(f"{p}|"), F.col("h"))), 1, 8), 16, 10
+    ).cast("long")
+    columns = rows.groupBy("doc_id").agg(
+        *[F.min(first32(p)).alias(f"m{p}") for p in range(MINHASH_CHECKED_PERMS)]
+    )
+    text = spark.sql(_md5_minhash_sql("{rows}"), rows=rows)
+    plan = lambda df: df._jdf.queryExecution().optimizedPlan()  # noqa: E731
+    assert plan(text).sameResult(plan(columns))
