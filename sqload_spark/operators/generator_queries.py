@@ -78,8 +78,12 @@ def gen_stream_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once replay is just re-generating the same id range). Run to
     maxRows under a periodic trigger; any prefix is bit-identical to the
     batch table (law-tested in tests/test_datasource.py), so this is the
-    load-generator front end of a streaming ingest benchmark."""
-    import time as _time
+    load-generator front end of a streaming ingest benchmark.
+
+    The trigger stays periodic: the Python source has no read-limit hook,
+    so availableNow would stop after one rowsPerBatch batch. The wait is
+    ``processAllAvailable`` (the engine returns once every offset the
+    source reports is committed), not a poll of the sink."""
     import uuid as _uuid
 
     from sqload_spark.sources.datasource import register
@@ -104,12 +108,10 @@ def gen_stream_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     try:
-        deadline = _time.monotonic() + 120
-        while _time.monotonic() < deadline and spark.table(name).count() < total:
-            _time.sleep(0.2)
-        if spark.table(name).count() < total:
-            raise RuntimeError("generator stream incomplete")
+        q.processAllAvailable()
     finally:
         q.stop()
         q.awaitTermination()
+    if spark.table(name).count() < total:
+        raise RuntimeError("generator stream incomplete")
     return spark.table(name).orderBy("c0")

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
@@ -21,12 +21,40 @@ from sqload_spark.operators.timeseries import FIVE_MIN_US, SESSION_GAP_US, TEN_M
 from sqload_spark.registry import query
 from sqload_spark.streaming.windows import (
     events_source_bytes,
+    run_available_now,
     run_to_memory,
     source_bytes,
     stream_events,
-    stream_state_scope,
 )
 from sqload_spark.session import scratch_dir
+
+
+def _md5_bucket(salt: str, n: int) -> Column:
+    """``event_id``'s deterministic hash bucket in [0, n): the first 32
+    bits of md5('{salt}|' || event_id), mod n — the Spark side of
+    ``_md5_bucket_sql``."""
+    salted = F.concat(F.lit(f"{salt}|"), F.col("event_id").cast("string"))
+    return F.pmod(F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("bigint"), F.lit(n))
+
+
+def _md5_bucket_sql(salt: str, n: int) -> str:
+    """DuckDB text of ``_md5_bucket`` (for the oracles)."""
+    return f"(('0x' || substr(md5('{salt}|' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % {n})"
+
+
+def _replay_buckets(ev: DataFrame, prefix: str, fn) -> None:
+    """Replay ``ev`` as one micro-batch per ``bucket`` value: ONE
+    partitionBy(bucket) write gives one file per bucket, streamed back with
+    maxFilesPerTrigger=1 into ``foreachBatch(fn)`` and run to completion.
+
+    NOT stream_state_scope'd (r11 A/B): these streams are STATELESS — no
+    state stores — and their cost is the inner foreachBatch batch jobs,
+    which want the session's full parallelism, not the state-sized value
+    (scoping the upsert stream measured 6.3 s → 14.1 s WORSE)."""
+    in_dir = scratch_dir(prefix=prefix)
+    ev.coalesce(1).write.partitionBy("bucket").mode("append").parquet(in_dir)
+    stream = ev.sparkSession.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
+    run_available_now(stream.parquet(in_dir).writeStream.foreachBatch(fn))
 
 
 @query(
@@ -141,24 +169,20 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- real periodic-trigger micro-batch evidence ----------------------------
-# Every other streaming entry replays with trigger(availableNow) — correct
-# for oracle equivalence, but it never exercises the periodic trigger path a
-# production stream runs on. This query does: the events table is split
-# into MB_N_BUCKETS deterministic hash-bucket files, streamed back with
-# maxFilesPerTrigger=1 under a processingTime trigger, and each micro-batch
+# --- micro-batch evidence ----------------------------------------------------
+# The events table is split into MB_N_BUCKETS deterministic hash-bucket
+# files, streamed back with maxFilesPerTrigger=1, and each micro-batch
 # writes its per-type counts (with its batch_id) to its own batch directory
 # via foreachBatch — all distributed writes, nothing collected. Because one
 # batch == one file == one md5 bucket, `n_batches` per event type equals
 # count(DISTINCT bucket) — a pure batch-SQL expression — so the incremental
 # execution itself is hash-checked: n_batches > 1 in the output PROVES the
-# result was assembled across multiple real micro-batches.
+# result was assembled across multiple micro-batches. (The periodic-trigger
+# path is exercised by gen_stream_table and
+# tests/test_streaming.py::test_processing_time_trigger_incremental.)
 MB_N_BUCKETS = 4
 
-_MB_BUCKET_SQL = (
-    "(('0x' || substr(md5('mb|' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT"
-    f" % {MB_N_BUCKETS})"
-)
+_MB_BUCKET_SQL = _md5_bucket_sql("mb", MB_N_BUCKETS)
 
 
 def microbatch_counts(batch_df: DataFrame, batch_id: int, acc_dir: str) -> None:
@@ -186,56 +210,13 @@ def microbatch_counts(batch_df: DataFrame, batch_id: int, acc_dir: str) -> None:
     """,
 )
 def stream_microbatch_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import time as _time
-
     from sqload_spark.sources.tables import load_table
 
-    bucket = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mb|"), F.col("event_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(MB_N_BUCKETS),
-    )
     ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "event_type", bucket.alias("bucket")
+        "event_id", "event_type", _md5_bucket("mb", MB_N_BUCKETS).alias("bucket")
     )
-    in_dir = scratch_dir(prefix="sqload_mb_in_")
     acc_dir = scratch_dir(prefix="sqload_mb_") + "/acc"
-    for b in range(MB_N_BUCKETS):
-        ev.filter(F.col("bucket") == b).coalesce(1).write.mode("append").parquet(in_dir)
-
-    stream = (
-        spark.readStream.schema("event_id long, event_type string, bucket long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    # NOT stream_state_scope'd (r11 A/B): this stream is STATELESS — no
-    # state stores — and its cost is the inner foreachBatch batch jobs,
-    # which want the session's full parallelism, not the state-sized value
-    # (scoping the sibling upsert stream measured 6.3 s → 14.1 s WORSE).
-    expected = ev.count()
-    q = (
-        stream.writeStream.foreachBatch(partial(microbatch_counts, acc_dir=acc_dir))
-        .option("checkpointLocation", scratch_dir(prefix="sqload_mb_ckpt_"))
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        deadline = _time.monotonic() + 120
-        got = None
-        while _time.monotonic() < deadline and got != expected:
-            _time.sleep(0.2)
-            try:
-                got = spark.read.parquet(f"{acc_dir}/*").agg(F.sum("n")).first()[0]
-            except Exception:  # accumulator dir not written yet
-                got = None
-    finally:
-        q.stop()
-        q.awaitTermination()
-    if got != expected:
-        raise RuntimeError(f"micro-batch stream incomplete: {got} of {expected} rows")
+    _replay_buckets(ev, "sqload_mb_in_", partial(microbatch_counts, acc_dir=acc_dir))
     return (
         spark.read.parquet(f"{acc_dir}/*")
         .groupBy("event_type")
@@ -356,41 +337,15 @@ def stream_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from sqload_spark.sources.tables import load_table
 
-    n_buckets = 4
-    bucket = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("up|"), F.col("event_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(n_buckets),
-    )
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "event_type",
         F.expr("ts_ns div 1000").alias("ts_us"),
-        bucket.alias("bucket"),
+        _md5_bucket("up", 4).alias("bucket"),
     )
-    in_dir = scratch_dir(prefix="sqload_up_in_")
     delta_dir = scratch_dir(prefix="sqload_up_delta_")
-    ev.coalesce(1).write.partitionBy("bucket").mode("append").parquet(in_dir)
-
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, event_type string, ts_us long, bucket long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
-    # NOT stream_state_scope'd (r11 A/B): stateless stream; the cost is the
-    # foreachBatch merge jobs, which want full batch parallelism — scoping
-    # measured 6.3 s → 14.1 s WORSE.
-    q = (
-        stream.writeStream.foreachBatch(partial(upsert_delta, delta_dir=delta_dir))
-        .option("checkpointLocation", scratch_dir(prefix="sqload_up_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _replay_buckets(ev, "sqload_up_in_", partial(upsert_delta, delta_dir=delta_dir))
     return fold_upsert_deltas(spark, delta_dir).select(
         "user_id",
         F.col("latest.event_type").alias("last_type"),
@@ -403,10 +358,7 @@ def stream_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 LATE_MOD = 10  # bucket 0 = the late re-delivery, bucket 1 = the on-time filler
 LATE_WM_US = 3600 * 1_000_000  # 1 h watermark delay
 
-_LATE_BUCKET_SQL = (
-    "(('0x' || substr(md5('late|' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT"
-    f" % {LATE_MOD})"
-)
+_LATE_BUCKET_SQL = _md5_bucket_sql("late", LATE_MOD)
 
 
 @query(
@@ -445,30 +397,19 @@ def stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch N+2 (one-batch update lag), the late filter drops rows whose
     WINDOW END ≤ applied watermark, and Spark's trailing no-data batch
     flushes the final closed windows. Three files + maxFilesPerTrigger=1
-    under a periodic trigger force the batch sequence (availableNow lumps
-    all files into one batch and nothing is ever late); file order is
-    fixed by modification time."""
+    force the batch sequence (availableNow honors the read limit: one file
+    per batch, then the trailing no-data batch); file order is fixed by
+    modification time."""
+    import os as _os
     import time as _time
-    import uuid as _uuid
 
     from sqload_spark.sources.tables import load_table
 
-    bucket = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("late|"), F.col("event_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(LATE_MOD),
-    )
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.timestamp_micros(F.expr("ts_ns div 1000")).alias("ts"),
-        bucket.alias("bk"),
+        _md5_bucket("late", LATE_MOD).alias("bk"),
     )
-    import os as _os
 
     in_dir = scratch_dir(prefix="sqload_late_in_")
     # Deterministic file-source order WITHOUT wall-clock sleeps (r11: the
@@ -499,38 +440,9 @@ def stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "10 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
     )
-    name = f"late_{_uuid.uuid4().hex[:10]}"
-    total_rows = ev.count()
-    with stream_state_scope(spark, source_bytes(in_dir)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", scratch_dir(prefix="sqload_late_ckpt_"))
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
-        try:
-            deadline = _time.monotonic() + 120
-            seen = 0
-            while _time.monotonic() < deadline and seen < total_rows:
-                _time.sleep(0.1)
-                seen = sum(p["numInputRows"] for p in q.recentProgress)
-            if seen < total_rows:
-                raise RuntimeError(f"late-data stream incomplete: {seen}/{total_rows}")
-            # wait for the watermark-advancing no-data batch to flush the
-            # sink: stable sink count across 5 polls = 5 trigger periods
-            stable, last = 0, -1
-            while _time.monotonic() < deadline and stable < 5:
-                _time.sleep(0.1)
-                n = spark.table(name).count()
-                stable, last = (stable + 1, n) if n == last else (0, n)
-        finally:
-            q.stop()
-            q.awaitTermination()
+    out = run_to_memory(agg, output_mode="append", src_bytes=source_bytes(in_dir))
     return (
-        spark.table(name)
-        .select(F.unix_timestamp(F.col("w.start")).alias("ws_sec"), "n_events")
+        out.select(F.unix_timestamp(F.col("w.start")).alias("ws_sec"), "n_events")
         .orderBy("ws_sec")
     )
 

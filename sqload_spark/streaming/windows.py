@@ -20,6 +20,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from sqload_spark.session import configure, scratch_dir
 
@@ -119,34 +120,33 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_to_memory(
-    sdf: DataFrame, output_mode: str = "complete", src_bytes: int | None = None
-) -> DataFrame:
-    """Execute a streaming DataFrame to completion (availableNow) into a
-    memory sink and return the sink contents as a batch DataFrame.
+def run_available_now(writer: DataStreamWriter) -> None:
+    """Run a stream whose source ends on its own to completion: a fresh
+    checkpoint, ``trigger(availableNow=True)``, start, ``awaitTermination``.
+
+    The engine ends the query only after it has committed every file
+    present at start (one batch per file under ``maxFilesPerTrigger=1``,
+    plus the trailing no-data batch that flushes watermark-closed windows),
+    and ``awaitTermination`` raises if the query failed — so no timer or
+    sink count is needed to detect the end."""
+    (
+        writer.option("checkpointLocation", scratch_dir(prefix="sqload_ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def run_to_memory(sdf: DataFrame, output_mode: str = "complete", *, src_bytes: int) -> DataFrame:
+    """Execute a streaming DataFrame to completion (``run_available_now``)
+    into a memory sink and return the sink contents as a batch DataFrame.
 
     ``src_bytes`` (the file-source's total bytes, see ``source_bytes``)
-    switches state partitioning to the scale-adaptive streaming value for
-    the run; None keeps the session setting (legacy behavior)."""
+    sizes the run's state partitions (``stream_state_scope``)."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
-
-    def _run() -> None:
-        query = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", scratch_dir(prefix="sqload_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-
     spark = sdf.sparkSession
-    if src_bytes is None:
-        _run()
-    else:
-        with stream_state_scope(spark, src_bytes):
-            _run()
+    with stream_state_scope(spark, src_bytes):
+        run_available_now(sdf.writeStream.format("memory").queryName(name).outputMode(output_mode))
     return spark.table(name)
 
 

@@ -63,7 +63,6 @@ def test_stream_source_prefix_equals_batch(spark):
     """The streaming reader must emit the batch table's exact prefix,
     across multiple real micro-batches."""
     import tempfile
-    import time
     import uuid
 
     register(spark)
@@ -85,9 +84,7 @@ def test_stream_source_prefix_equals_batch(spark):
         .start()
     )
     try:
-        deadline = time.time() + 60
-        while time.time() < deadline and spark.table(name).count() < 2500:
-            time.sleep(0.2)
+        q.processAllAvailable()
     finally:
         q.stop()
         q.awaitTermination()
@@ -97,3 +94,15 @@ def test_stream_source_prefix_equals_batch(spark):
     assert n_batches >= 3, f"expected multiple micro-batches, got {n_batches}"
     ref = generate_table(spark, 2500, MIXED_SPEC, seed=11, impl="arrow")
     assert set(map(tuple, out.collect())) == set(map(tuple, ref.collect()))
+
+
+def test_gen_stream_table_rows_pinned(spark):
+    """gen_stream_table has no oracle: pin its rows (row_digest over every
+    column at sf0.01), so a change to how the stream is run or awaited
+    cannot move or drop a row unseen."""
+    from sqload_spark import registry
+    from tests.conftest import SF_DIR, row_digest
+
+    registry.load_all()
+    out = registry.QUERIES["gen_stream_table"](spark, SF_DIR)
+    assert row_digest(out) == (10_000, -59828050971248831701)

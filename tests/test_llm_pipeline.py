@@ -307,9 +307,10 @@ def test_repetition_filter_flags_planted_doc(spark):
 
 
 def test_microbatch_progress_is_incremental(spark):
-    """The periodic-trigger stream must have assembled its result across
-    multiple real micro-batches: at least one event type spans >1 batch,
-    and no type exceeds the bucket count."""
+    """The bucket-file replay must have assembled its result across
+    multiple micro-batches (one per bucket file under maxFilesPerTrigger=1):
+    at least one event type spans >1 batch, and no type exceeds the bucket
+    count."""
     from sqload_spark.streaming.queries import MB_N_BUCKETS, stream_microbatch_progress
 
     out = stream_microbatch_progress(spark, SF_DIR).collect()
@@ -555,12 +556,17 @@ def test_minhash_lsh_build_py4j_budget(spark):
     """Building dedup_minhash_lsh's plan stays a few hundred py4j round
     trips: the signature and band relation is SQL text and call-site
     capture is off. Column-built signatures with capture on took about
-    7,500; capture off alone, 3,142."""
+    7,500; capture off alone, 3,142. Built three times: the count skips
+    py4j's GC commands, so once warm it is the same from build to build."""
     from tools.profile_queries import count_py4j_calls
 
-    with count_py4j_calls(spark) as calls:
-        registry.QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
-    assert calls[0] <= 1500, calls[0]
+    counts = []
+    for _ in range(3):
+        with count_py4j_calls(spark) as calls:
+            registry.QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
+        counts.append(calls[0])
+    assert max(counts) <= 1500, counts
+    assert counts[1] == counts[2], counts
 
 
 def test_simhash_rows_pinned(spark):
