@@ -30,92 +30,47 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two double arrays."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def dot_expanded(a: Column, b: Column, dim: int = EMB_DIM) -> Column:
-    """Σ aᵢ·bᵢ as a flat ``dim``-term scalar expression for HOT
-    (per-candidate/per-pair) paths. Bit-identical to ``dot``'s fold — the
-    expanded sum keeps the same left-to-right association — but runs
-    inside whole-stage codegen instead of the interpreted higher-order
-    evaluator (measured ~30% per-pair at 100 K pairs and 4× at 2 M pairs,
-    BASELINE.md/dedup banded notes). Requires fixed-width vectors (the
-    corpus contract: 64-dim) — ``element_at`` past the end would raise
-    under ANSI, so only use on validated embedding columns."""
-    e = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, dim + 1):
-        e = e + F.element_at(a, i) * F.element_at(b, i)
-    return e
-
-
-def dot_expanded_sql(a: str, b: str, dim: int = EMB_DIM) -> str:
-    """``dot_expanded`` as ONE SQL string over column/field names — for
-    ``F.expr`` / ``selectExpr`` at hot CONSTRUCTION sites (r11, guide §1/§4:
-    the per-term Python loop costs ~190 py4j round trips per dot — building
-    a 32-plane LSH signature that way measured 5-11 s of driver-side build
-    per invocation, all of it inside the benched wall. One string parsed
-    server-side builds the identical tree: `+` is left-associative in both,
-    so the Add chain and therefore every IEEE result is bit-identical).
-
-    FORM CHOICE (re-measured r12): the expanded element_at sum only wins
-    where the terms are already flat SCALAR columns (the banded re-rank's
-    unpacked x{i}*b{i} over ~2M pairs — there it codegens compactly and
-    beat the fold 4×). Over ARRAY columns, the 64 element_at calls
-    generate a method past the whole-stage-codegen size limit: the stage
-    falls back and the giant expression evaluates slowly EVERY run
-    (profiled at sf0.1: a NO_CODEGEN session runs the same 80 K-pair plan
-    2.6× faster, and the cost never amortizes across runs). For
-    array-column pair paths use ``dot_fold_sql`` below — measured 1.3-2.5×
-    faster per query across the seven sim entries, both A/B orders."""
-    return " + ".join(
-        f"element_at({a}, {i}) * element_at({b}, {i})" for i in range(1, dim + 1)
-    )
-
-
 def dot_fold_sql(a: str, b: str) -> str:
-    """``dot`` (the zip_with/aggregate fold) as ONE SQL string — the hot
-    form for ARRAY-column pair paths (see the form-choice note on
-    ``dot_expanded_sql``). Same left-to-right association as ``dot`` and as
-    the expanded sum apart from the leading ``0.0 +`` — IEEE-identical on
-    every term sequence except an all-signed-zero dot (measure-zero; both
-    forms carry multi-round oracle-green history). Width-agnostic: the
-    fold never indexes past the end, so it needs no fixed-dim contract."""
+    """``dot`` (the zip_with/aggregate fold) as ONE SQL string over
+    column/field names, for ``F.expr`` / ``selectExpr`` at construction
+    sites: one server-side parse instead of a py4j round trip per
+    Column call (r11: a 32-plane LSH signature built term by term
+    measured 5-11 s of driver-side build per invocation). Same
+    left-to-right association as ``dot``, so every IEEE result is
+    bit-identical. Width-agnostic: the fold never indexes past the end,
+    so it needs no fixed-dim contract.
+
+    FORM CHOICE (re-measured r12): use this fold on ARRAY columns. The
+    alternative, a flat ``element_at(a, i) * element_at(b, i)`` sum, wins
+    only where the terms are already flat SCALAR columns (dedup's
+    ``_cosine_dups`` over unpacked ``a{i} * b{i}``, ~2M pairs: it
+    codegens compactly and beat the fold 4×). Over array columns its 64
+    element_at calls generate a method past the whole-stage-codegen size
+    limit: the stage falls back and the giant expression evaluates slowly
+    EVERY run (profiled at sf0.1: a NO_CODEGEN session ran the same 80
+    K-pair plan 2.6× faster, and the cost never amortizes across runs);
+    the fold measured 1.3-2.5× faster per query across the seven sim
+    entries, both A/B orders, rows identical. The two forms differ only
+    by the fold's leading ``0.0 +``, IEEE-identical on every term
+    sequence except an all-signed-zero dot."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "0.0D, (acc, x) -> acc + x)"
     )
 
 
-def cosine_fold_sql(a: str, b: str) -> str:
-    """``cosine`` via ``dot_fold_sql`` (see the form-choice note)."""
-    return (
-        f"({dot_fold_sql(a, b)}) / "
-        f"(sqrt({dot_fold_sql(a, a)}) * sqrt({dot_fold_sql(b, b)}))"
-    )
+# Norm of the double-array column ``v`` (sources.tables.load_vectors'
+# vector), computed once per vector: Spark has no cross-row CSE, so an
+# in-pair norm recomputes both self-dots on every pair row.
+NORM_SQL = f"sqrt({dot_fold_sql('v', 'v')})"
 
 
-def cosine_expanded_sql(a: str, b: str, dim: int = EMB_DIM) -> str:
-    """``cosine_expanded`` as one SQL string (see ``dot_expanded_sql``)."""
-    return (
-        f"({dot_expanded_sql(a, b, dim)}) / "
-        f"(sqrt({dot_expanded_sql(a, a, dim)}) * sqrt({dot_expanded_sql(b, b, dim)}))"
-    )
-
-
-def cosine_expanded(a: Column, b: Column, dim: int = EMB_DIM) -> Column:
-    """``cosine`` with every dot product in expanded codegen form —
-    bit-identical values (verified pairwise over the sf0.1 corpus).
-
-    Per-PAIR use recomputes both self-norms per row (Spark has no
-    cross-row CSE) — on n² paths precompute a norm column per vector
-    map-side and divide by ``n_a * n_b`` instead (the _pruned_rerank /
-    embedding_cosine_dups pattern); this helper is for bounded pair sets
-    where the 3× arithmetic doesn't matter."""
-    return dot_expanded(a, b, dim) / (
-        F.sqrt(dot_expanded(a, a, dim)) * F.sqrt(dot_expanded(b, b, dim))
-    )
+def cosine_sql(a: str, b: str, na: str, nb: str) -> str:
+    """Cosine of array columns ``a`` and ``b`` given their norm columns
+    ``na`` and ``nb`` (each ``NORM_SQL`` of its vector), as SQL text.
+    ``sqrt(a·a) * sqrt(b·b)`` is the product an in-pair cosine divides
+    by, so the value is the same IEEE double."""
+    return f"({dot_fold_sql(a, b)}) / ({na} * {nb})"
 
 
 # ---------------------------------------------------------------------------
@@ -181,3 +136,7 @@ EMB_VALID_SQL = (
     " AND list_aggregate(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x)), 'max')"
     f" <= {EMB_MAX_ABS!r})"
 )
+
+# The contract-filtered embeddings scan, for oracles: the DuckDB twin of
+# sources.tables.load_embeddings.
+EMB_SQL = f"(SELECT * FROM embeddings WHERE {EMB_VALID_SQL})"

@@ -46,12 +46,9 @@ from sqload_spark.functions.rounding import (
     sql_exact_decimal_sum,
     sql_round_half_up,
 )
-from sqload_spark.functions.vectors import EMB_VALID_SQL, to_double_array
-
-# Contract-filtered embeddings scan for oracles (vectors.EMB_VALID_SQL).
-_EMB = f"(SELECT * FROM embeddings WHERE {EMB_VALID_SQL})"
+from sqload_spark.functions.vectors import EMB_SQL
 from sqload_spark.registry import query
-from sqload_spark.sources.tables import load_embeddings, load_table
+from sqload_spark.sources.tables import load_embeddings, load_vectors
 
 DIM = 64
 
@@ -120,17 +117,11 @@ def _assign(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v"), "label"
-    )
-
-
 # Shared oracle CTEs: label-seeded centroids, then one assignment pass.
 # embedding[dim] is 1-based in DuckDB; cells rounded 6dp to match Spark.
 _ASSIGN_CTES = f"""
     vecs AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v, label FROM {_EMB} AS embeddings
+      SELECT vec_id, embedding::DOUBLE[] AS v, label FROM {EMB_SQL} AS embeddings
     ), cent_cell AS (
       SELECT label AS cluster, dim,
              {sql_round_half_up("avg(v[dim])", 6)} AS cval
@@ -165,7 +156,7 @@ _ASSIGN_CTES = f"""
 )
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-means assignment: every vector → nearest label-seeded centroid."""
-    vecs = _vecs(spark, sf_dir)
+    vecs = load_vectors(spark, sf_dir, "label")
     cents = _centroids_from(
         vecs.select(F.col("label").alias("cluster"), "v"), "cluster"
     )
@@ -207,7 +198,7 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One Lloyd iteration: assign, recompute centroids, reassign; report
     per-cluster size and within-cluster cost (Σ d2, exact-decimal sum)."""
-    vecs = _vecs(spark, sf_dir)
+    vecs = load_vectors(spark, sf_dir, "label")
     cents0 = _centroids_from(
         vecs.select(F.col("label").alias("cluster"), "v"), "cluster"
     )
@@ -240,7 +231,7 @@ def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semantic_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup, pick step: the member nearest its centroid is the
     cluster's representative; everything else is a candidate to drop."""
-    vecs = _vecs(spark, sf_dir)
+    vecs = load_vectors(spark, sf_dir, "label")
     cents = _centroids_from(
         vecs.select(F.col("label").alias("cluster"), "v"), "cluster"
     )
@@ -294,7 +285,7 @@ GRAM_FP = 1_000_000_000_000  # 1e12 fixed-point
                "CAST(sum(CAST(floor(CAST(embedding[i.i] AS DOUBLE) * "
                "CAST(embedding[j.j] AS DOUBLE) * "
                f"{GRAM_FP} + 0.5) AS BIGINT)) AS DOUBLE) / {GRAM_FP}", 6)} AS gram
-    FROM {_EMB} AS embeddings,
+    FROM {EMB_SQL} AS embeddings,
          generate_series(1, {DIM}) i(i),
          generate_series(1, {DIM}) j(j)
     WHERE j.j >= i.i

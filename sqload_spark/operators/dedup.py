@@ -23,19 +23,13 @@ from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
 from sqload_spark.functions.text_funcs import hamming64, shingle_hashes, shingles, tokens
 from sqload_spark.registry import query
 from sqload_spark.session import persist_bounded
-from sqload_spark.sources.tables import load_embeddings, load_table
-from sqload_spark.functions.vectors import EMB_VALID_SQL, dot_fold_sql
-
-# Contract-filtered embeddings scan for oracles (vectors.EMB_VALID_SQL).
-_EMB = f"(SELECT * FROM embeddings WHERE {EMB_VALID_SQL})"
+from sqload_spark.sources.tables import load_table, load_vectors
+from sqload_spark.functions.vectors import EMB_SQL, NORM_SQL, cosine_sql
 
 JACCARD_THRESHOLD = 0.5
 NUM_PERM = 64
 LSH_BANDS = 32  # r=2 rows/band → P(candidate | j=0.5) ≈ 0.9999
 COSINE_DUP_THRESHOLD = 0.35
-
-# Vector norm of an array column ``v`` as SQL text (the fold form).
-_NORM_SQL = f"sqrt({dot_fold_sql('v', 'v')})"
 
 
 # ---------------------------------------------------------------------------
@@ -669,7 +663,7 @@ _EMB_COSINE_ORACLE = f"""
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            {sql_round_half_up(
                "list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[])", 4)} AS cos_sim
-    FROM {_EMB} a, {_EMB} b
+    FROM {EMB_SQL} a, {EMB_SQL} b
     WHERE a.vec_id < b.vec_id
       AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= {COSINE_DUP_THRESHOLD}
     ORDER BY vec_a, vec_b
@@ -685,22 +679,13 @@ EMB_BITS_PER_BAND = 2
 EMB_BANDS = EMB_N_PLANES // EMB_BITS_PER_BAND
 
 
-def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v): the valid embeddings (load_embeddings) as double arrays."""
-    from sqload_spark.functions.vectors import to_double_array
-
-    return load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
-
-
 def _unpacked(emb: DataFrame, side: str) -> DataFrame:
     """(vec_<side>, n_<side>, <side>0 … <side>63): each vector's norm and
-    components. SQL-string construction (r11, see vectors.dot_expanded_sql):
+    components. SQL-string construction (r11, see vectors.dot_fold_sql):
     identical trees, one server-side parse instead of ~600 py4j calls."""
     return emb.selectExpr(
         f"vec_id AS vec_{side}",
-        f"{_NORM_SQL} AS n_{side}",
+        f"{NORM_SQL} AS n_{side}",
         *[f"element_at(v, {i + 1}) AS {side}{i}" for i in range(64)],
     )
 
@@ -727,7 +712,7 @@ def embedding_cosine_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fold is interpreted per row — measured 3-4× slower on this pair
     # count). Same left-to-right association as the fold ⇒ bit-identical
     # values, oracle hash unchanged.
-    emb = _vectors(spark, sf_dir)
+    emb = load_vectors(spark, sf_dir)
     return _cosine_dups(_unpacked(emb, "a").join(_unpacked(emb, "b"), F.col("vec_a") < F.col("vec_b")))
 
 
@@ -805,7 +790,7 @@ def _pruned_tier_for(n_vectors: int) -> tuple[int, int]:
 
 
 _PRUNED_CORPUS_SQL = f"""
-    WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {_EMB} AS embeddings),
+    WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SQL} AS embeddings),
     planted AS (
       SELECT vec_id + 1000000 AS vec_id,
              list_concat(v[1:60], [0.0, 0.0, 0.0, 0.0]) AS v
@@ -826,7 +811,7 @@ _PRUNED_COSINE_ORACLE = f"""
 
 def _pruned_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings ∪ deterministic planted near-dups (see comment above)."""
-    emb = _vectors(spark, sf_dir)
+    emb = load_vectors(spark, sf_dir)
     planted = emb.filter(F.col("vec_id") % 20 == 0).select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"),
         F.concat(F.slice(F.col("v"), 1, 60), F.array(*[F.lit(0.0)] * 4)).alias("v"),
@@ -997,8 +982,8 @@ def _pruned_rerank(corpus: DataFrame, candidates: DataFrame) -> DataFrame:
     note lives in functions/vectors.py. The scalar-column expanded form
     (embedding_cosine_dups, the banded re-rank) is a different, still-
     optimal regime."""
-    va = corpus.selectExpr("vec_id AS vec_a", "v AS v_a", f"{_NORM_SQL} AS n_a")
-    vb = corpus.selectExpr("vec_id AS vec_b", "v AS v_b", f"{_NORM_SQL} AS n_b")
+    va = corpus.selectExpr("vec_id AS vec_a", "v AS v_a", f"{NORM_SQL} AS n_a")
+    vb = corpus.selectExpr("vec_id AS vec_b", "v AS v_b", f"{NORM_SQL} AS n_b")
     # No broadcast hints on the re-rank joins: the vector table is
     # corpus-sized, so forcing it broadcast would OOM at scale. Stats/AQE
     # pick broadcast at test SF (the table is tiny there) and a shuffle
@@ -1008,7 +993,7 @@ def _pruned_rerank(corpus: DataFrame, candidates: DataFrame) -> DataFrame:
         .join(vb, "vec_b")
         .withColumn(
             "cos_raw",
-            F.expr(f"({dot_fold_sql('v_a', 'v_b')}) / (n_a * n_b)"),
+            F.expr(cosine_sql("v_a", "v_b", "n_a", "n_b")),
         )
         .filter(F.col("cos_raw") >= PRUNED_COSINE_THRESHOLD)
         .select("vec_a", "vec_b", round_half_up(F.col("cos_raw"), 4).alias("cos_sim"))
@@ -1067,7 +1052,7 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same seeded plane stream every round has used (RandomState(23), plane
     # order) — the values define the candidate set, so they are pinned.
     plane_mat = np.random.RandomState(23).randn(EMB_N_PLANES, 64)
-    emb = _vectors(spark, sf_dir)
+    emb = load_vectors(spark, sf_dir)
     # Codegen discipline (measured at sf0.1, n=2000, ~2M candidates):
     # every dot product on the HOT (per-candidate) path is a 64-term
     # scalar-column expression, never an aggregate/zip_with fold —
@@ -1087,7 +1072,7 @@ def embedding_cosine_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2³² ids) — at a production dedup threshold the multiplicity and the
     # candidate count both collapse (see the _pruned twin below).
     # All large expression trees below are built as SQL STRINGS parsed
-    # server-side in one shot (r11, see vectors.dot_expanded_sql): the
+    # server-side in one shot (r11, see vectors.dot_fold_sql): the
     # former per-term Column loops issued ~900 py4j round trips per
     # invocation (64-col unpack + two 64-term dots + re-pack), profiled at
     # a dominant share of this query's warm construction wall. The parsed

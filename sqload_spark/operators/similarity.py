@@ -7,7 +7,7 @@ Three tiers, mirroring how ANN is actually deployed:
   this is the right plan whenever the query batch is small (no index to
   build or maintain). DuckDB-oracle-checked.
 * ``sim_topk_hyperplane_lsh`` — random-hyperplane (SimHash-for-cosine) LSH:
-  16 seeded hyperplanes → 16-bit signature → 4 bands × 4 bits → candidates
+  32 seeded hyperplanes → 32-bit signature → 16 bands × 2 bits → candidates
   share ≥1 band → exact cosine re-rank of candidates only. Sub-linear
   candidate sets at scale; recall measured against brute force in tests.
 * ``sim_topk_ivf`` — IVF-style coarse quantizer: 8 seeded centroids, every
@@ -25,26 +25,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
-# The FOLD dot/cosine on every array-column pair path (re-measured r12):
-# the expanded element_at sum generates a method past the whole-stage-
-# codegen size limit over array columns, so the stage falls back and the
-# giant expression evaluates slowly every run — the fold measured 1.3-2.5×
-# faster per query across all seven sim entries, both A/B orders, rows
-# identical (form-choice note in functions/vectors.py; the expanded form
-# still wins on flat SCALAR columns, e.g. the banded re-rank).
-from sqload_spark.functions.vectors import (
-    EMB_VALID_SQL,
-    cosine_fold_sql,
-    dot,
-    dot_fold_sql,
-    to_double_array,
-)
-
-# Contract-filtered embeddings scan for oracles (vectors.EMB_VALID_SQL).
-_EMB = f"(SELECT * FROM embeddings WHERE {EMB_VALID_SQL})"
+# Every pair path here dots ARRAY columns with the fold form; the measured
+# form-choice note is on vectors.dot_fold_sql.
+from sqload_spark.functions.vectors import EMB_SQL, NORM_SQL, cosine_sql, dot_fold_sql
 from sqload_spark.registry import query
 from sqload_spark.session import persist_bounded
-from sqload_spark.sources.tables import load_embeddings, load_table
+from sqload_spark.sources.tables import load_embeddings, load_vectors
 
 TOP_K = 5
 DIM = 64
@@ -64,39 +50,87 @@ N_PROBE = 3
 QUERY_PRED_SQL = "vec_id % 50 = 0"
 
 
-def _queries_df(emb: DataFrame) -> DataFrame:
-    return emb.filter(F.col("vec_id") % 50 == 0)
+# ---------------------------------------------------------------------------
+# The steps every cosine query composes, one body per engine. Spark: the
+# broadcast query set against the corpus (_cosine_pairs) and the per-query
+# top-n (_top_n). DuckDB: the same pair relation as one CTE (_DUCK_PAIRS).
+# ---------------------------------------------------------------------------
 
 
-def _plane_literals(seed: int, n: int) -> list[Column]:
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(n, DIM)
-    return [F.array(*[F.lit(float(x)) for x in row]) for row in planes]
+def _cosine_pairs(
+    corpus: DataFrame,
+    queries: str | None = QUERY_PRED_SQL,
+    q_extra: tuple[str, ...] = (),
+    on: str | None = None,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(q_id, n_id, *keep, cos_raw): the ``corpus`` rows (vec_id, v, ...)
+    that the SQL predicate ``queries`` picks (None: every row), broadcast
+    against the whole corpus, self-pairs excluded. The query set is tiny,
+    so the scan is one map-side pass over the corpus. Norms are taken once
+    per VECTOR, never per pair (see vectors.NORM_SQL). ``q_extra`` adds SQL
+    select items to the query side and ``on`` a SQL condition to the join
+    (the LSH band match, the IVF probe cluster); ``keep`` names corpus
+    columns to carry along."""
+    corpus = corpus.withColumn("nrm", F.expr(NORM_SQL))
+    q = corpus.filter(queries) if queries else corpus
+    q = q.selectExpr("vec_id AS q_id", "v AS qv", "nrm AS qn", *q_extra)
+    cond = F.col("vec_id") != F.col("q_id")
+    if on:
+        cond = cond & F.expr(on)
+    return corpus.join(F.broadcast(q), cond).select(
+        "q_id",
+        F.col("vec_id").alias("n_id"),
+        *keep,
+        F.expr(cosine_sql("qv", "v", "qn", "nrm")).alias("cos_raw"),
+    )
 
 
-def _topk(pairs: DataFrame) -> DataFrame:
-    """(q_id, n_id, cos_raw) → top-k per query with deterministic ties."""
-    w = W.partitionBy("q_id").orderBy(F.col("cos_raw").desc(), F.col("n_id"))
+def _top_n(pairs: DataFrame, n: int, score: str = "cos_raw") -> DataFrame:
+    """The ``n`` best rows per q_id of ``pairs`` by ``score`` desc, then
+    n_id (deterministic ties), numbered 1..n in ``rnk``."""
+    w = W.partitionBy("q_id").orderBy(F.col(score).desc(), F.col("n_id"))
+    return pairs.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= n)
+
+
+def _ranked(pairs: DataFrame, n: int, score: str, value: Column) -> DataFrame:
+    """(q_id, n_id, value, rnk): the ranked result of a top-n query."""
     return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "q_id",
-            "n_id",
-            round_half_up(F.col("cos_raw"), 4).alias("cos_sim"),
-            F.col("rnk").cast("bigint").alias("rnk"),
-        )
+        _top_n(pairs, n, score)
+        .select("q_id", "n_id", value, F.col("rnk").cast("bigint").alias("rnk"))
         .orderBy("q_id", "rnk")
     )
 
 
-_TOPK_ORACLE = f"""
-    WITH pairs AS (
+def _topk(pairs: DataFrame) -> DataFrame:
+    """(q_id, n_id, cos_raw) → the TOP_K result, cosine rounded to 4dp."""
+    return _ranked(pairs, TOP_K, "cos_raw", round_half_up(F.col("cos_raw"), 4).alias("cos_sim"))
+
+
+def _seeded(seed: int, n: int) -> np.ndarray:
+    """``n`` seeded Gaussian DIM-vectors (LSH planes, IVF centroids)."""
+    return np.random.RandomState(seed).randn(n, DIM)
+
+
+def _plane_dot_sql(row) -> str:
+    """``v`` · the seeded vector ``row`` as dot_fold_sql text over an array
+    literal: repr(float) round-trips through the SQL double literal
+    bit-exactly, and one server-side parse replaces the ~65 py4j calls of a
+    Column-built literal array."""
+    arr = ", ".join(f"{float(x)!r}D" for x in row)
+    return dot_fold_sql("v", f"array({arr})")
+
+
+# The query set against the corpus, every (query, vector) cosine.
+_DUCK_PAIRS = f"""pairs AS (
       SELECT q.vec_id AS q_id, c.vec_id AS n_id,
              list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) AS cos_raw
-      FROM {_EMB} q JOIN {_EMB} c ON q.vec_id <> c.vec_id
+      FROM {EMB_SQL} q JOIN {EMB_SQL} c ON q.vec_id <> c.vec_id
       WHERE q.{QUERY_PRED_SQL}
-    ), ranked AS (
+    )"""
+
+_TOPK_ORACLE = f"""
+    WITH {_DUCK_PAIRS}, ranked AS (
       SELECT q_id, n_id, cos_raw,
              row_number() OVER (PARTITION BY q_id ORDER BY cos_raw DESC, n_id) AS rnk
       FROM pairs
@@ -109,24 +143,8 @@ _TOPK_ORACLE = f"""
 
 @query("sim_topk_bruteforce", oracle=_TOPK_ORACLE)
 def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # norms once per VECTOR map-side (n sqrt sums), never per PAIR (Spark
-    # has no cross-row CSE, so an in-pair cosine recomputes both self-dots
-    # on every one of the n×q rows — 3× the hot-path arithmetic; round-7
-    # review). sqrt(dot_fold_sql(v,v)) keeps the same association as the
-    # in-pair form, so values stay bit-identical and the oracle unchanged.
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
-    emb = emb.withColumn("nrm", F.expr(f"sqrt({dot_fold_sql('v', 'v')})"))
-    q = _queries_df(emb).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    pairs = emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        F.expr(f"({dot_fold_sql('qv', 'v')}) / (qn * nrm)").alias("cos_raw"),
-    )
-    return _topk(pairs)
+    """Exact cosine top-k: every query against the whole corpus."""
+    return _topk(_cosine_pairs(load_vectors(spark, sf_dir)))
 
 
 @query(
@@ -134,7 +152,7 @@ def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT label, dim,
            {sql_round_half_up("avg(embedding[dim])", 6)} AS centroid_val
-    FROM {_EMB} AS embeddings, range(1, 9) t(dim)
+    FROM {EMB_SQL} AS embeddings, range(1, 9) t(dim)
     GROUP BY label, dim
     ORDER BY label, dim
     """,
@@ -157,63 +175,29 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hyperplane_topk(
     spark: SparkSession, sf_dir: str, n_planes: int, n_bands: int
 ) -> DataFrame:
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
     # Signature expressions built as SQL STRINGS, one server-side parse
-    # (r11, see dot_expanded_sql): the former per-term Column loop issued
-    # ~2 000 F.lit py4j calls for the plane literals plus one fold per
-    # plane, measuring 5-11 s of driver-side construction per invocation
-    # — all inside the benched wall. The plane dot keeps the IDENTICAL
-    # zip_with/aggregate fold tree (repr(float) round-trips through the
-    # SQL double literal bit-exactly), and the integer band packing is
-    # exact arithmetic, so signatures — and therefore candidates and the
-    # re-ranked output — are unchanged (verified old-vs-new exceptAll,
-    # all SFs).
-    rng = np.random.RandomState(7)
-    plane_vals = rng.randn(n_planes, DIM)
-    bits_per_band = n_planes // n_bands
-    LSH_BANDS = n_bands
-
-    def plane_dot_sql(row) -> str:
-        arr = ", ".join(f"{float(x)!r}D" for x in row)
-        return (
-            f"aggregate(zip_with(v, array({arr}), (x, y) -> x * y), "
-            "0.0D, (acc, x) -> acc + x)"
-        )
-
+    # (r11, see vectors.dot_fold_sql): the former per-term Column loop
+    # issued ~2 000 F.lit py4j calls for the plane literals plus one fold
+    # per plane, measuring 5-11 s of driver-side construction per
+    # invocation — all inside the benched wall. The integer band packing
+    # is exact arithmetic, so signatures, candidates and the re-ranked
+    # output are unchanged (verified old-vs-new exceptAll, all SFs).
+    bits = n_planes // n_bands
     bit_sql = [
-        f"(CASE WHEN ({plane_dot_sql(row)}) > 0 THEN 1 ELSE 0 END)"
-        for row in plane_vals
+        f"(CASE WHEN ({_plane_dot_sql(row)}) > 0 THEN 1 ELSE 0 END)"
+        for row in _seeded(7, n_planes)
     ]
     band_sql = []
-    for band in range(LSH_BANDS):
+    for band in range(n_bands):
         value = "0"
-        for k in range(bits_per_band):
-            value = f"({value} * 2 + {bit_sql[band * bits_per_band + k]})"
+        for k in range(bits):
+            value = f"({value} * 2 + {bit_sql[band * bits + k]})"
         band_sql.append(f"{value} AS band{band}")
-
-    # per-vector norm map-side, not per-pair (see topk_bruteforce)
-    sig = emb.selectExpr(
-        "vec_id",
-        "v",
-        f"sqrt({dot_fold_sql('v', 'v')}) AS nrm",
-        *band_sql,
-    )
-    q = _queries_df(sig).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        *[F.col(f"band{b}").alias(f"qband{b}") for b in range(LSH_BANDS)],
-    )
-    band_match = None
-    for b in range(LSH_BANDS):
-        m = F.col(f"band{b}") == F.col(f"qband{b}")
-        band_match = m if band_match is None else (band_match | m)
-    pairs = sig.join(F.broadcast(q), (F.col("vec_id") != F.col("q_id")) & band_match).select(
-        "q_id",
-        F.col("vec_id").alias("n_id"),
-        F.expr(f"({dot_fold_sql('qv', 'v')}) / (qn * nrm)").alias("cos_raw"),
+    sig = load_vectors(spark, sf_dir).selectExpr("vec_id", "v", *band_sql)
+    pairs = _cosine_pairs(
+        sig,
+        q_extra=tuple(f"band{b} AS qband{b}" for b in range(n_bands)),
+        on=" OR ".join(f"band{b} = qband{b}" for b in range(n_bands)),
     )
     return _topk(pairs)
 
@@ -259,43 +243,21 @@ def topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     test is the honest contract for IVF here; the hash-checkable ANN path
     on this data is the banded hyperplane LSH above, whose candidate
     probability is data-independent."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
-    centroids = _plane_literals(seed=11, n=N_CENTROIDS)
-    dots = F.array(*[dot(F.col("v"), c) for c in centroids])
+    dots = ", ".join(_plane_dot_sql(c) for c in _seeded(11, N_CENTROIDS))
     # argmax via (value, index) structs — deterministic, expression-only
-    ranked_struct = F.array_sort(
-        F.transform(
-            dots, lambda d, i: F.struct((-d).alias("negd"), i.alias("idx"))
-        )
-    )
-    assigned = emb.select(
+    ranked = f"array_sort(transform(array({dots}), (d, i) -> named_struct('negd', -d, 'idx', i)))"
+    assigned = load_vectors(spark, sf_dir).selectExpr(
+        "vec_id", "v", f"{ranked} AS ranked"
+    ).selectExpr(
         "vec_id",
         "v",
-        F.expr(f"sqrt({dot_fold_sql('v', 'v')}) AS nrm"),
-        F.element_at(ranked_struct, 1)["idx"].alias("cluster"),
-        F.slice(ranked_struct, 1, N_PROBE).alias("probe_structs"),
+        "element_at(ranked, 1).idx AS cluster",
+        f"slice(ranked, 1, {N_PROBE}) AS probe",
     )
-    data_side = assigned.select("vec_id", "v", "nrm", "cluster")
-    q = (
-        _queries_df(assigned)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-            F.explode(F.transform(F.col("probe_structs"), lambda s: s["idx"])).alias("cluster"),
-        )
-    )
-    # per-vector norm map-side, not per-pair (see topk_bruteforce)
-    pairs = (
-        data_side.join(F.broadcast(q), ["cluster"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            F.expr(f"({dot_fold_sql('qv', 'v')}) / (qn * nrm)").alias("cos_raw"),
-        )
+    pairs = _cosine_pairs(
+        assigned,
+        q_extra=("explode(transform(probe, s -> s.idx)) AS q_cluster",),
+        on="cluster = q_cluster",
     )
     return _topk(pairs)
 
@@ -306,11 +268,20 @@ KNN_K = 3
 KNN_PRED_SQL = "vec_id % 10 = 0"
 
 
-@query(
-    "sim_knn_graph",
-    oracle=f"""
-    WITH sub AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM {_EMB} AS embeddings WHERE {KNN_PRED_SQL}
+def _mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, cos_raw): every mutual-kNN edge of the KNN_PRED_SQL
+    subcorpus, once in each direction (shape: see knn_graph)."""
+    sub = load_vectors(spark, sf_dir).filter(KNN_PRED_SQL)
+    knn = _top_n(_cosine_pairs(sub, queries=None), KNN_K).select(
+        F.col("q_id").alias("src"), F.col("n_id").alias("dst"), "cos_raw"
+    )
+    rev = knn.select(F.col("src").alias("dst"), F.col("dst").alias("src"))
+    return knn.join(rev, ["src", "dst"])
+
+
+# _mutual_knn's DuckDB twin, as CTEs ending in edges(src, dst, cos_raw).
+_DUCK_KNN_EDGES = f"""sub AS (
+      SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SQL} AS embeddings WHERE {KNN_PRED_SQL}
     ), pairs AS (
       SELECT a.vec_id AS src, b.vec_id AS dst,
              list_cosine_similarity(a.v, b.v) AS cos_raw
@@ -321,11 +292,20 @@ KNN_PRED_SQL = "vec_id % 10 = 0"
                row_number() OVER (PARTITION BY src ORDER BY cos_raw DESC, dst) AS rnk
         FROM pairs)
       WHERE rnk <= {KNN_K}
-    )
-    SELECT a.src AS vec_a, a.dst AS vec_b,
-           {sql_round_half_up("a.cos_raw", 4)} AS cos_sim
-    FROM knn a JOIN knn b ON a.src = b.dst AND a.dst = b.src
-    WHERE a.src < a.dst
+    ), edges AS (
+      SELECT a.src, a.dst, a.cos_raw
+      FROM knn a JOIN knn b ON a.src = b.dst AND a.dst = b.src
+    )"""
+
+
+@query(
+    "sim_knn_graph",
+    oracle=f"""
+    WITH {_DUCK_KNN_EDGES}
+    SELECT src AS vec_a, dst AS vec_b,
+           {sql_round_half_up("cos_raw", 4)} AS cos_sim
+    FROM edges
+    WHERE src < dst
     ORDER BY vec_a, vec_b
     """,
 )
@@ -339,27 +319,8 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair stage would swap in the banded-LSH candidate miner
     (dedup.py); the subcorpus keeps this registration brute-force so the
     oracle is exact."""
-    emb = load_embeddings(spark, sf_dir).filter(F.col("vec_id") % 10 == 0)
-    # per-vector norm map-side, not per-pair (see topk_bruteforce)
-    sub = emb.select("vec_id", to_double_array(F.col("embedding")).alias("v"))
-    sub = sub.withColumn("nrm", F.expr(f"sqrt({dot_fold_sql('v', 'v')})"))
-    right = sub.select(
-        F.col("vec_id").alias("dst"), F.col("v").alias("dv"), F.col("nrm").alias("dn")
-    )
-    pairs = (
-        sub.select(F.col("vec_id").alias("src"), "v", "nrm")
-        .join(F.broadcast(right), F.col("src") != F.col("dst"))
-        .select(
-            "src",
-            "dst",
-            F.expr(f"({dot_fold_sql('v', 'dv')}) / (nrm * dn)").alias("cos_raw"),
-        )
-    )
-    w = W.partitionBy("src").orderBy(F.col("cos_raw").desc(), F.col("dst"))
-    knn = pairs.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= KNN_K)
-    rev = knn.select(F.col("src").alias("dst"), F.col("dst").alias("src"))
     return (
-        knn.join(rev, ["src", "dst"])
+        _mutual_knn(spark, sf_dir)
         .filter(F.col("src") < F.col("dst"))
         .select(
             F.col("src").alias("vec_a"),
@@ -428,21 +389,7 @@ PR_DAMP = 0.85
 PR_ITERS = 3
 
 _PR_EDGE_CTES = f"""
-    WITH sub AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM {_EMB} AS embeddings WHERE {KNN_PRED_SQL}
-    ), allpairs AS (
-      SELECT a.vec_id AS src, b.vec_id AS dst,
-             list_cosine_similarity(a.v, b.v) AS cos_raw
-      FROM sub a JOIN sub b ON a.vec_id <> b.vec_id
-    ), knn AS (
-      SELECT src, dst FROM (
-        SELECT src, dst,
-               row_number() OVER (PARTITION BY src ORDER BY cos_raw DESC, dst) AS rnk
-        FROM allpairs)
-      WHERE rnk <= {KNN_K}
-    ), edges AS (
-      SELECT a.src, a.dst FROM knn a JOIN knn b ON a.src = b.dst AND a.dst = b.src
-    ), deg AS (
+    WITH {_DUCK_KNN_EDGES}, deg AS (
       SELECT src, count(*) AS outdeg FROM edges GROUP BY src
     ), nodes AS (
       SELECT src AS vec_id FROM deg
@@ -481,7 +428,7 @@ def pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     'prototypical' corpus members (dense semantic neighborhoods) vs
     outliers, used to pick representatives and spot junk clusters.
 
-    {PR_ITERS} unrolled power iterations at damping {PR_DAMP}: each is one
+    PR_ITERS unrolled power iterations at damping PR_DAMP: each is one
     join of the rank vector to the edge list + a groupBy on dst — the
     standard Pregel-free DataFrame PageRank, O(E) shuffle per iteration;
     the only driver-side value is the bounded node-count scalar feeding
@@ -493,29 +440,6 @@ def pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     node has outdegree (no dangling-mass term). The oracle replays the
     identical unrolled iterations as chained CTEs, so the iterative
     computation itself is hash-checked."""
-    emb = load_embeddings(spark, sf_dir).filter(F.col("vec_id") % 10 == 0)
-    # per-vector norm map-side, not per-pair (see topk_bruteforce)
-    sub = emb.select("vec_id", to_double_array(F.col("embedding")).alias("v"))
-    sub = sub.withColumn("nrm", F.expr(f"sqrt({dot_fold_sql('v', 'v')})"))
-    right = sub.select(
-        F.col("vec_id").alias("dst"), F.col("v").alias("dv"), F.col("nrm").alias("dn")
-    )
-    pairs = (
-        sub.select(F.col("vec_id").alias("src"), "v", "nrm")
-        .join(F.broadcast(right), F.col("src") != F.col("dst"))
-        .select(
-            "src",
-            "dst",
-            F.expr(f"({dot_fold_sql('v', 'dv')}) / (nrm * dn)").alias("cos_raw"),
-        )
-    )
-    w = W.partitionBy("src").orderBy(F.col("cos_raw").desc(), F.col("dst"))
-    knn = (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= KNN_K)
-        .select("src", "dst")
-    )
-    rev = knn.select(F.col("src").alias("dst"), F.col("dst").alias("src"))
     # Per-iteration plan diet (r12, guide §2.4/§1.2): the loop used to run
     # THREE joins per iteration — edges⋈pr, edges⋈deg (re-attaching outdeg
     # every round), and a nodes⨯n_nodes cross join to rebuild the teleport
@@ -532,9 +456,9 @@ def pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical): 5.63 → 2.49 s / 6.39 → 2.54 s min.
     edges = persist_bounded(
         "sim_pagerank_knn.edges",
-        knn.join(rev, ["src", "dst"]).withColumn(
-            "outdeg", F.count("*").over(W.partitionBy("src"))
-        ),
+        _mutual_knn(spark, sf_dir)
+        .select("src", "dst")
+        .withColumn("outdeg", F.count("*").over(W.partitionBy("src"))),
     )
     n_nodes = edges.select("src").distinct().count()
     deg = edges.select("src", "outdeg").distinct()
@@ -565,7 +489,7 @@ def pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH cells AS (
       SELECT vec_id, dim, CAST(embedding[dim] AS DOUBLE) AS x
-      FROM {_EMB} AS embeddings, range(1, {DIM + 1}) t(dim)
+      FROM {EMB_SQL} AS embeddings, range(1, {DIM + 1}) t(dim)
     ), stats AS (
       SELECT dim, min(x) AS lo, max(x) AS hi FROM cells GROUP BY dim
     ), coded AS (
@@ -592,9 +516,7 @@ def vector_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut at 64-dim float32). max() is order-independent, and every quantity
     derives from exact min/max through identical IEEE arithmetic, so the
     whole path hash-checks — including the quantization error itself."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
+    emb = load_vectors(spark, sf_dir)
     cells = emb.select(
         "vec_id", (F.posexplode(F.col("v"))).alias("pos", "x")
     ).select((F.col("pos") + 1).alias("dim"), "x")
@@ -653,20 +575,32 @@ MMR_CANDIDATES = 20
 MMR_K = 5
 _R6 = 1_000_000.0  # 6dp rounding scale shared by both engines
 
-_MMR_ORACLE = f"""
-    WITH RECURSIVE
-    pairs AS (
-      SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             floor(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) * {_R6} + 0.5) / {_R6} AS rel
-      FROM {_EMB} q JOIN {_EMB} c ON q.vec_id <> c.vec_id
-      WHERE q.{QUERY_PRED_SQL}
-    ),
-    cand AS (
+
+def _candidates(spark: SparkSession, sf_dir: str, n: int, *keep: str) -> DataFrame:
+    """(q_id, n_id, rel, *keep): each query's ``n`` nearest vectors, the
+    cosine rounded to 6dp as ``rel`` — the candidate list the MMR and
+    cross-encoder re-ranks start from (``keep`` as in _cosine_pairs)."""
+    pairs = _cosine_pairs(load_vectors(spark, sf_dir), keep=keep)
+    pairs = pairs.withColumn("rel", round_half_up(F.col("cos_raw"), 6))
+    return _top_n(pairs, n, "rel").select("q_id", "n_id", "rel", *keep)
+
+
+def _duck_cand(n: int) -> str:
+    """The cand CTE over _DUCK_PAIRS: each query's ``n`` nearest vectors,
+    the cosine rounded to 6dp as ``rel`` (_candidates' DuckDB twin)."""
+    return f"""cand AS (
       SELECT q_id, n_id, rel FROM (
         SELECT q_id, n_id, rel,
                row_number() OVER (PARTITION BY q_id ORDER BY rel DESC, n_id) AS rn
-        FROM pairs) WHERE rn <= {MMR_CANDIDATES}
-    ),
+        FROM (SELECT q_id, n_id, {sql_round_half_up("cos_raw", 6)} AS rel FROM pairs))
+      WHERE rn <= {n}
+    )"""
+
+
+_MMR_ORACLE = f"""
+    WITH RECURSIVE
+    {_DUCK_PAIRS},
+    {_duck_cand(MMR_CANDIDATES)},
     sims AS (
       SELECT a.q_id, a.n_id AS i, b.n_id AS j,
              floor(list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]) * {_R6} + 0.5) / {_R6} AS sim
@@ -709,20 +643,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE oracle that hash-checks the greedy loop itself."""
     import pandas as pd
 
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
-    q = _queries_df(emb).select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
-    rel6 = round_half_up(F.expr(cosine_fold_sql("qv", "v")), 6)
-    pairs = emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
-        "q_id", F.col("vec_id").alias("n_id"), F.col("v"), rel6.alias("rel")
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("rel").desc(), F.col("n_id"))
-    cand = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= MMR_CANDIDATES)
-        .select("q_id", "n_id", "rel", "v")
-    )
+    cand = _candidates(spark, sf_dir, MMR_CANDIDATES, "v", "nrm")
     a = cand.alias("a")
     b = cand.alias("b")
     sims = (
@@ -734,7 +655,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.q_id").alias("q_id"),
             F.col("a.n_id").alias("i"),
             F.col("b.n_id").alias("j"),
-            round_half_up(F.expr(cosine_fold_sql("a.v", "b.v")), 6).alias("sim"),
+            round_half_up(F.expr(cosine_sql("a.v", "b.v", "a.nrm", "b.nrm")), 6).alias("sim"),
         )
     )
 
@@ -765,7 +686,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.append((qid, step, c, float(np.floor(score * _R6 + 0.5) / _R6)))
         return pd.DataFrame(out, columns=["q_id", "rnk", "n_id", "mmr_score"])
 
-    grouped = cand.drop("v").groupby("q_id").cogroup(sims.groupby("q_id"))
+    grouped = cand.drop("v", "nrm").groupby("q_id").cogroup(sims.groupby("q_id"))
     res = grouped.applyInPandas(
         _greedy, schema="q_id long, rnk long, n_id long, mmr_score double"
     )
@@ -783,36 +704,17 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a 100 TB corpus once the edge list comes from the LSH miner instead of
 # the exact sub-corpus graph.
 
-_KNN_EDGES_SQL = f"""
-      sub AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v FROM {_EMB} AS embeddings WHERE {KNN_PRED_SQL}
-      ), pairs AS (
-        SELECT a.vec_id AS src, b.vec_id AS dst,
-               list_cosine_similarity(a.v, b.v) AS cos_raw
-        FROM sub a JOIN sub b ON a.vec_id <> b.vec_id
-      ), knn AS (
-        SELECT src, dst FROM (
-          SELECT src, dst,
-                 row_number() OVER (PARTITION BY src ORDER BY cos_raw DESC, dst) AS rnk
-          FROM pairs)
-        WHERE rnk <= {KNN_K}
-      ), edges AS (
-        SELECT a.src AS va, a.dst AS vb
-        FROM knn a JOIN knn b ON a.src = b.dst AND a.dst = b.src
-        WHERE a.src < a.dst
-      )
-"""
-
 
 @query(
     "sim_knn_triangles",
     oracle=f"""
-    WITH {_KNN_EDGES_SQL},
+    WITH {_DUCK_KNN_EDGES},
+    oriented AS (SELECT src AS va, dst AS vb FROM edges WHERE src < dst),
     tri AS (
       SELECT e1.va AS a, e1.vb AS b, e2.vb AS c
-      FROM edges e1
-      JOIN edges e2 ON e2.va = e1.vb
-      JOIN edges e3 ON e3.va = e1.va AND e3.vb = e2.vb
+      FROM oriented e1
+      JOIN oriented e2 ON e2.va = e1.vb
+      JOIN oriented e3 ON e3.va = e1.va AND e3.vb = e2.vb
     ),
     members AS (
       SELECT a AS vec_id FROM tri
@@ -825,8 +727,9 @@ _KNN_EDGES_SQL = f"""
 )
 def knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the mutual-kNN edge set (see block
-    comment). Reuses knn_graph's edge construction; the triangle closure
-    is two joins on the oriented edge list, never on the corpus."""
+    comment). Reuses knn_graph's mutual-kNN edges (_mutual_knn); the
+    triangle closure is two joins on the oriented edge list, never on the
+    corpus."""
     # persist: the edge list feeds three join branches — without it the
     # whole kNN mining subplan re-executes per branch (measured 94
     # exchanges in the naive plan). The wedge/closure joins are plain
@@ -836,9 +739,9 @@ def knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at test SF and fall back to a shuffle join on the wedge key at scale.
     edges = persist_bounded(
         "sim_knn_triangles.edges",
-        knn_graph(spark, sf_dir).select(
-            F.col("vec_a").alias("va"), F.col("vec_b").alias("vb")
-        ),
+        _mutual_knn(spark, sf_dir)
+        .filter(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("va"), F.col("dst").alias("vb")),
     )
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
@@ -880,18 +783,8 @@ CE_TOP_K = 5
 CE_BLEND = 0.8  # weight of the bi-encoder prior in the final score
 
 _CE_ORACLE = f"""
-    WITH pairs AS (
-      SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-             floor(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) * 1000000.0 + 0.5) / 1000000.0 AS rel
-      FROM {_EMB} q JOIN {_EMB} c ON q.vec_id <> c.vec_id
-      WHERE q.{QUERY_PRED_SQL}
-    ),
-    cand AS (
-      SELECT q_id, n_id, rel FROM (
-        SELECT q_id, n_id, rel,
-               row_number() OVER (PARTITION BY q_id ORDER BY rel DESC, n_id) AS rn
-        FROM pairs) WHERE rn <= {CE_CANDIDATES}
-    ),
+    WITH {_DUCK_PAIRS},
+    {_duck_cand(CE_CANDIDATES)},
     scored AS (
       SELECT q_id, n_id,
              floor(({CE_BLEND} * rel + {1.0 - CE_BLEND} *
@@ -916,20 +809,7 @@ def crossencoder_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    emb = load_embeddings(spark, sf_dir).select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
-    q = _queries_df(emb).select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
-    rel6 = round_half_up(F.expr(cosine_fold_sql("qv", "v")), 6)
-    pairs = emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
-        "q_id", F.col("vec_id").alias("n_id"), rel6.alias("rel")
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("rel").desc(), F.col("n_id"))
-    cand = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= CE_CANDIDATES)
-        .select("q_id", "n_id", "rel")
-    )
+    cand = _candidates(spark, sf_dir, CE_CANDIDATES)
 
     def _infer(batches):
         # one Arrow batch of (q_id, n_id, rel) pairs == one model batch
@@ -953,10 +833,4 @@ def crossencoder_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     scored = cand.mapInPandas(_infer, schema="q_id long, n_id long, ce_score double")
-    w2 = W.partitionBy("q_id").orderBy(F.col("ce_score").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= CE_TOP_K)
-        .select("q_id", "n_id", "ce_score", F.col("rnk").cast("bigint").alias("rnk"))
-        .orderBy("q_id", "rnk")
-    )
+    return _ranked(scored, CE_TOP_K, "ce_score", F.col("ce_score"))

@@ -11,12 +11,9 @@ from pyspark.sql import functions as F
 
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
 from sqload_spark.functions.text_funcs import tokens
-from sqload_spark.functions.vectors import EMB_VALID_SQL, norm, to_double_array
-
-# Contract-filtered embeddings scan for oracles (vectors.EMB_VALID_SQL).
-_EMB = f"(SELECT * FROM embeddings WHERE {EMB_VALID_SQL})"
+from sqload_spark.functions.vectors import EMB_SQL, norm, to_double_array
 from sqload_spark.registry import query
-from sqload_spark.sources.tables import load_embeddings, load_table
+from sqload_spark.sources.tables import load_embeddings, load_table, load_vectors
 
 
 @query(
@@ -115,7 +112,7 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                "avg(sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))))", 4)} AS avg_norm,
            {sql_round_half_up(
                "max(list_sum(list_transform(embedding::DOUBLE[], x -> abs(x))))", 4)} AS max_l1
-    FROM {_EMB} AS embeddings
+    FROM {EMB_SQL} AS embeddings
     GROUP BY label
     ORDER BY label
     """,
@@ -123,9 +120,7 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector arithmetic over array<float>: L2/L1 norms per label — array
     fold expressions, no UDFs."""
-    emb = load_embeddings(spark, sf_dir).select(
-        "label", to_double_array(F.col("embedding")).alias("v")
-    )
+    emb = load_vectors(spark, sf_dir, "label")
     l1 = F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + F.abs(x))
     return (
         emb.select("label", norm(F.col("v")).alias("l2"), l1.alias("l1"))
@@ -149,7 +144,7 @@ def vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 1 ELSE 0 END AS has_extreme,
            {sql_round_half_up(
                "list_reduce(list_transform(embedding::DOUBLE[], x -> x * x), (a, b) -> a + b)", 6)} AS sq_norm
-    FROM {_EMB} AS embeddings
+    FROM {EMB_SQL} AS embeddings
     WHERE vec_id < 100
     ORDER BY vec_id
     """,

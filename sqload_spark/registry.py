@@ -55,39 +55,22 @@ _OPERATOR_MODULES = [
 _loaded = False
 
 # The external correctness driver checks queries in registry order and stops
-# after a fixed window of 50. ROUND-11 rotation (VERDICT r10 "Next round" #1,
-# executing the recipe staged here last round). CORRECTNESS_r10 came back
-# 50/50 hash-green with zero failures and zero rows-only exceptions, so step
-# 1 of the recipe ("any name r10 missed or errored") contributes nothing and
-# the window is exactly:
-#   1. the 45 r6-stale hash-green names (every name whose newest external
-#      row was CORRECTNESS_r06 — tools/coverage_report.py --list was
-#      authoritative at staging time);
-#   2. fill to 50 with the 5 oldest r8 rows in coverage_report --list order
-#      (the dedup_* r8 block head).
-# After this round no name's newest external row is older than r8 and the
-# whole 193-oracle surface has been externally re-checked within 4 rounds.
-#
-# ROUND-12 ROTATION EXECUTED (the standing always-the-50-stalest rule):
-# CORRECTNESS_r11 read 50/50 hash-green with zero misses/errors, so step 1
-# ("any name the last round missed or errored") contributed nothing and the
-# window is exactly tools/coverage_report.py --list's stalest 50 at staging
-# time: the 45 r8 hash-green names + the 5 oldest r9 rows (the dedup_* r9
-# block head). After this round no name's newest external row is older
-# than r9.
+# after a fixed window of 50.
 #
 # ROUND-13+ RECIPE (the standing rule every round):
 #   1. any name the newest CORRECTNESS_rNN unexpectedly missed or errored;
 #   2. every name whose implementation changed since its last external
-#      check (now: the three file-source streams that moved onto the one
-#      availableNow runner, windows.run_available_now —
-#      stream_late_data_policy and stream_microbatch_progress lost their
-#      poll loops, and both foreachBatch streams share one bucket-file
-#      replay; then every oracled dedup_* query built on the shared
-#      near-dup steps or oracle CTEs in dedup.py, and the leakage-safe
-#      split and training-mix pipelines that reuse them; then the two
-#      Python-UDF quality queries, now sorted before the UDF; then the
-#      names the round-12 sources touched);
+#      check (now: every oracled embedding query built on the shared
+#      cosine steps in similarity.py — the pair join, per-vector norm,
+#      top-n window, candidate lists and mutual-kNN edges, with the oracle
+#      CTEs recomposed to match — plus the dedup_embedding_cosine*,
+#      k-means and vector-norm names whose vector load or oracle scan
+#      moved to tables.load_vectors / vectors.EMB_SQL; then the three
+#      file-source streams that moved onto the one availableNow runner,
+#      windows.run_available_now; then every oracled dedup_* query built
+#      on the shared near-dup steps or oracle CTEs in dedup.py, and the
+#      leakage-safe split and training-mix pipelines that reuse them; then
+#      the two Python-UDF quality queries, now sorted before the UDF);
 #   3. fill to 50 with the stalest hash-green names per
 #      tools/coverage_report.py --list — the listing is authoritative,
 #      recompute it, don't trust this comment.
@@ -100,6 +83,15 @@ _loaded = False
 # judge-sample protocol) for standing evidence.
 
 _PRIORITY = [
+    # -- changed by the one cosine-pair kernel (similarity.py's shared steps,
+    # tables.load_vectors, vectors.EMB_SQL) ---------------------------------
+    "sim_topk_bruteforce", "sim_topk_hyperplane_lsh", "sim_topk_blas",
+    "sim_knn_graph", "sim_pagerank_knn", "sim_knn_triangles",
+    "sim_mmr_rerank", "sim_crossencoder_rerank", "sim_vector_quantize",
+    "sim_label_centroids", "dedup_embedding_cosine",
+    "dedup_embedding_cosine_banded", "dedup_embedding_cosine_banded_pruned",
+    "dedup_semantic_representative", "q_kmeans_assign", "q_kmeans_refine",
+    "q_vector_norms",
     # -- changed by the one availableNow runner (windows.run_available_now) --
     "stream_late_data_policy", "stream_microbatch_progress",
     "stream_upsert_compaction",
@@ -109,23 +101,16 @@ _PRIORITY = [
     "dedup_prefix_filter", "dedup_ngram_jaccard", "dedup_minhash_lsh",
     "dedup_incremental_shard", "dedup_edit_distance",
     "dedup_cross_source_matrix", "dedup_keep_list", "dedup_keep_list_weighted",
-    "dedup_cluster_sizes", "dedup_pairs_materialized",
-    "dedup_embedding_cosine", "dedup_embedding_cosine_banded",
-    "dedup_embedding_cosine_banded_pruned", "q_split_leakage_safe",
+    "dedup_cluster_sizes", "dedup_pairs_materialized", "q_split_leakage_safe",
     "pipe_training_mix", "pipe_output_manifest",
     # -- changed earlier, not yet checked externally -------------------------
     "text_quality_arrow_udf", "text_quality_pandas_udf",
-    # -- touched by the round-12 sources, last checked before them -----------
-    "sim_pagerank_knn", "sim_mmr_rerank", "sim_crossencoder_rerank",
-    "sim_knn_graph", "sim_knn_triangles", "dedup_semantic_representative",
     # -- fill to 50 with the stalest (r09) hash-green names ------------------
     "q5_region_revenue", "q_anti_join",
     "q_count_distinct", "q_cube_returnflag_status", "q_date_funcs",
     "q_except_custkeys", "q_filter_project", "q_having",
     "q_intersect_custkeys", "q_json_extract", "q_math_funcs",
-    "q_percentiles", "q_pivot_status", "q_rollup_region_nation",
-    "q_semi_join", "q_stats_moments", "q_string_agg", "q_string_funcs",
-    "q_topk_orders", "q_union_priority_counts",
+    "q_percentiles",
 ]
 
 

@@ -88,6 +88,17 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.filter(valid_embedding(F.col("embedding")))
 
 
+def load_vectors(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
+    """``(vec_id, v, *extra)``: the valid embeddings (load_embeddings) with
+    the vector as a double array ``v``, the form every cosine, norm and
+    centroid expression reads."""
+    from sqload_spark.functions.vectors import to_double_array
+
+    return load_embeddings(spark, sf_dir).select(
+        "vec_id", to_double_array(F.col("embedding")).alias("v"), *extra
+    )
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view (for the SQL-flavored operators)."""
     for name in TABLE_NAMES:

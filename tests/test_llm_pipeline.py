@@ -552,20 +552,25 @@ def test_minhash_bands_sql_is_the_column_relation(spark):
     assert plan(text).sameResult(plan(columns))
 
 
-def test_minhash_lsh_build_py4j_budget(spark):
-    """Building dedup_minhash_lsh's plan stays a few hundred py4j round
-    trips: the signature and band relation is SQL text and call-site
-    capture is off. Column-built signatures with capture on took about
-    7,500; capture off alone, 3,142. Built three times: the count skips
-    py4j's GC commands, so once warm it is the same from build to build."""
+@pytest.mark.parametrize(
+    "name,bound", [("dedup_minhash_lsh", 1500), ("sim_topk_ivf", 1000)]
+)
+def test_minhash_lsh_build_py4j_budget(spark, name, bound):
+    """Building the plan stays a few hundred py4j round trips: the
+    signatures, bands and IVF centroid dots are SQL text and call-site
+    capture is off. dedup_minhash_lsh's Column-built signatures with
+    capture on took about 7,500, capture off alone 3,142; sim_topk_ivf's
+    Column-built centroid literals took 3,043 at sf0.1. Built three times:
+    the count skips py4j's GC commands, so once warm it is the same from
+    build to build."""
     from tools.profile_queries import count_py4j_calls
 
     counts = []
     for _ in range(3):
         with count_py4j_calls(spark) as calls:
-            registry.QUERIES["dedup_minhash_lsh"](spark, SF_DIR)
+            registry.QUERIES[name](spark, SF_DIR)
         counts.append(calls[0])
-    assert max(counts) <= 1500, counts
+    assert max(counts) <= bound, counts
     assert counts[1] == counts[2], counts
 
 
@@ -583,8 +588,24 @@ def test_simhash_rows_pinned(spark):
     assert row_digest(registry.QUERIES["dedup_simhash"](spark, SF_DIR)) == (12, -8371493501006034419)
 
 
-# Spark jobs each registered dedup_* query may start while its plan is built
-# (eager actions), at sf0.01: the bound and where the jobs come from.
+@pytest.mark.parametrize(
+    "name,digest",
+    [
+        ("sim_topk_hyperplane_lsh_pruned", (50, -50335214559794309054)),
+        ("sim_topk_ivf", (50, 31798939642092817390)),
+    ],
+)
+def test_ann_rows_pinned(spark, name, digest):
+    """The rows-only ANN tiers have no oracle and only a recall floor:
+    pin their rows (row_digest at sf0.01), so a change to the shared pair,
+    norm, plane-dot or top-k steps that moves a candidate set fails here."""
+    from tests.conftest import row_digest
+
+    assert row_digest(registry.QUERIES[name](spark, SF_DIR)) == digest
+
+
+# Spark jobs each registered dedup_* and sim_* query may start while its plan
+# is built (eager actions), at sf0.01: the bound and where the jobs come from.
 # Every query scans one table through load_table, whose parquet schema
 # inference is one job. The connected-components consumers add
 # _labels_from_pairs' edge count (6 jobs: the LSH mine's AQE stages) and the
@@ -603,18 +624,23 @@ _BUILD_JOBS = {
     "dedup_embedding_cosine_banded": (
         5, f"{_LOAD} (1) + embedding_cosine_banded's band_rows.count() (4)"
     ),
+    "sim_pagerank_knn": (
+        7, f"{_LOAD} (1) + pagerank_knn's n_nodes count over the persisted edges (6)"
+    ),
+    "sim_topk_blas": (2, f"{_LOAD} (1) + topk_blas' query-set collect (1)"),
 }
 
 
 def test_dedup_build_jobs_bounded(spark):
-    """Building a dedup_* query starts no more Spark jobs than _BUILD_JOBS
-    lists (1, the schema inference, where it names none): a refactor that
-    adds an eager action to plan build fails here. Counted per query under
-    its own job group, as tools/profile_queries.py counts build_jobs."""
+    """Building a dedup_* or sim_* query starts no more Spark jobs than
+    _BUILD_JOBS lists (1, the schema inference, where it names none): a
+    refactor that adds an eager action to plan build fails here. Counted
+    per query under its own job group, as tools/profile_queries.py counts
+    build_jobs."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     over = {}
-    for name in sorted(n for n in registry.QUERIES if n.startswith("dedup_")):
+    for name in sorted(n for n in registry.QUERIES if n.startswith(("dedup_", "sim_"))):
         group = f"build_jobs:{name}"
         sc.setJobGroup(group, group)
         try:

@@ -132,10 +132,12 @@ def test_partition_pruning_reads_one_partition(spark):
     assert m and "__part_o_orderstatus" in m.group(1), "partition filter not applied at scan"
 
 
-def test_knn_graph_never_builds_n_squared(spark):
-    """sim_knn_graph's mutuality self-join must run on the k·n edge list:
-    the only n×n-shaped operator allowed is the broadcast scoring join."""
-    plan = plan_of(spark, registry.QUERIES["sim_knn_graph"](spark, SF_DIR))
+@pytest.mark.parametrize("name", ["sim_knn_graph", "sim_pagerank_knn"])
+def test_knn_graph_never_builds_n_squared(spark, name):
+    """The mutual-kNN edges' mutuality self-join must run on the k·n edge
+    list: the only n×n-shaped operator allowed is the broadcast scoring
+    join."""
+    plan = plan_of(spark, registry.QUERIES[name](spark, SF_DIR))
     assert "CartesianProduct" not in plan, "kNN graph fell back to a cartesian product"
 
 
