@@ -31,13 +31,14 @@ def tokens(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles, as an array of strings.
+def shingles_sql(text: str = "text", n: int = 3) -> str:
+    """Distinct word n-gram shingles of the SQL expression ``text``, as SQL
+    text for an array of strings.
 
     Documents with fewer than ``n`` tokens (including empty and NULL text
     — real corpora contain both) yield an EMPTY shingle set, matching the
     DuckDB oracles' list-comprehension semantics (`range(1, len(t)-1)` is
-    empty for short lists). The when-guard keeps the slice length
+    empty for short lists). The CASE guard keeps the slice length
     non-negative, which under ANSI mode (Spark 4's default) is the
     difference between a clean empty result and a crash killing the whole
     stage on the first dirty shard (found by tools/adversarial_run.py).
@@ -52,21 +53,31 @@ def shingles(text: Column, n: int = 3) -> Column:
     12 000-token hazard doc cost ~13 s alone, 22 pathological docs took a
     38.8 s flat tax on every shingle consumer (measured; same family as
     the 64×-re-inline note on dedup._minhash_bands_sql). The sliced shape
-    is linear: ~0.3 s on the same docs."""
-    toks = tokens(text)
-    m = F.size(toks) - F.lit(n - 1)  # valid only under the when-guard below
-    zipped = F.arrays_zip(*[F.slice(toks, k + 1, m).alias(f"t{k}") for k in range(n)])
-    grams = F.transform(
-        zipped, lambda s: F.concat_ws(" ", *[s[f"t{k}"] for k in range(n)])
-    )
-    return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
+    is linear: ~0.3 s on the same docs.
+
+    SQL text, not Column calls: one ``F.expr`` is one py4j round trip,
+    where the Column form took one or more per node. dedup_minhash_lsh's
+    warm build made 217 py4j calls with the Column form and an inferring
+    table load, 96 with this and an explicit schema (sf0.1, 4 vCPUs)."""
+    toks = f"split({text}, ' ')"
+    slices = ", ".join(f"slice({toks}, {k + 1}, size({toks}) - {n - 1})" for k in range(n))
+    # arrays_zip names the struct fields of unnamed children "0", "1", ...
+    gram = ", ".join(f"s.`{k}`" for k in range(n))
+    return (
+        f"CASE WHEN size({toks}) >= {n}"
+        f" THEN array_distinct(transform(arrays_zip({slices}), s -> concat_ws(' ', {gram})))"
+        " ELSE CAST(array() AS array<string>) END"
     )
 
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
+def shingles(text: str = "text", n: int = 3) -> Column:
+    """``shingles_sql`` as a Column."""
+    return F.expr(shingles_sql(text, n))
+
+
+def shingle_hashes(text: str = "text", n: int = 3) -> Column:
     """Distinct shingles as 64-bit hashes (compact dedup signature input)."""
-    return F.transform(shingles(text, n), lambda s: F.xxhash64(s))
+    return F.expr(f"transform({shingles_sql(text, n)}, g -> xxhash64(g))")
 
 
 def hamming64(a: Column, b: Column) -> Column:

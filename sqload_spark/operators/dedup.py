@@ -144,7 +144,7 @@ def _shingle_rows(docs: DataFrame, sh: Column | None = None) -> DataFrame:
     ``h`` is the shingle's xxhash64, or, when ``sh`` is given, an element of
     that per-doc array (the md5 sketches explode the shingle strings)."""
     if sh is None:
-        sh = shingle_hashes(F.col("text"), 3)
+        sh = shingle_hashes("text", 3)
     return docs.select("doc_id", F.explode(sh).alias("h"))
 
 
@@ -279,7 +279,7 @@ def _lsh_verified_pairs(
     simpler recompute. On a real cluster where the corpus scan is
     I/O-bound, persist the band relation (or write signatures once) before
     the self-join."""
-    sh = shingle_hashes(F.col("text"), 3)  # one Column build for both relations
+    sh = shingle_hashes("text", 3)  # one Column build for both relations
     return docs.sparkSession.sql(
         f"""
         WITH bands AS ({_minhash_bands_sql("{hashes}")}),
@@ -1397,7 +1397,7 @@ def prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified = spark.sql(
         _verified_sql("{candidates}", "doc_a", "doc_b"),
         candidates=candidates,
-        sets=docs.select("doc_id", shingle_hashes(F.col("text"), 3).alias("sh")),
+        sets=docs.select("doc_id", shingle_hashes("text", 3).alias("sh")),
     )
     return _jaccard_rows(verified)
 
@@ -1450,7 +1450,7 @@ def simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # builders (unsigned shifts, bits OR-ed) give the oracle's values.
     sims = spark.sql(
         _simhash_sql("CAST(conv(substring(md5(h), 1, 8), 16, 10) AS BIGINT)", SIMHASH32_BITS),
-        rows=_shingle_rows(docs, shingles(F.col("text"), 3)),
+        rows=_shingle_rows(docs, shingles("text", 3)),
     )
     return _simhash_pairs(sims, SIMHASH32_BITS // SIMHASH_BANDS).orderBy("doc_a", "doc_b")
 
@@ -1512,7 +1512,7 @@ def _md5_minhash_sql(rows: str) -> str:
 
 def _md5_minhash_sigs(docs: DataFrame) -> DataFrame:
     """(doc_id, m0 … m15): _md5_minhash_sql over the docs' shingles."""
-    rows = _shingle_rows(docs, shingles(F.col("text"), 3))
+    rows = _shingle_rows(docs, shingles("text", 3))
     return docs.sparkSession.sql(_md5_minhash_sql("{rows}"), rows=rows)
 
 

@@ -157,7 +157,7 @@ def array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; the fold order is left-to-right in both engines, so even the
     floating reduction hash-checks."""
     emb = load_embeddings(spark, sf_dir).filter(F.col("vec_id") < 100)
-    v = to_double_array(F.col("embedding"))
+    v = to_double_array("embedding")
     return (
         emb.select(
             "vec_id",

@@ -117,19 +117,31 @@ def get_spark(app_name: str = "sqload_spark", shuffle_partitions: int | None = N
 
 
 @contextmanager
-def shuffle_scope(spark: SparkSession, partitions: int):
-    """Pin spark.sql.shuffle.partitions for a bounded section, restoring
-    the previous value after (r11). For iterative driver-coordinated loops
-    over SMALL tables (connected-components label propagation) the
-    session-wide value — sized for corpus-scale shuffles — buys nothing
-    per iteration but per-task overhead × iterations × jobs; callers pass
-    a count derived from the data (scale-adaptive), never a constant."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(1, int(partitions))))
+def conf_scope(spark: SparkSession, conf: dict[str, str]):
+    """Pin runtime SQL confs for a bounded section, then restore each one's
+    previous value, or unset it again if it was unset, also when the
+    section raises."""
+    old = {key: spark.conf.get(key, None) for key in conf}
+    for key, value in conf.items():
+        spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def shuffle_scope(spark: SparkSession, partitions: int):
+    """Pin spark.sql.shuffle.partitions for a bounded section (r11). For
+    iterative driver-coordinated loops over SMALL tables (connected-
+    components label propagation) the session-wide value — sized for
+    corpus-scale shuffles — buys nothing per iteration but per-task
+    overhead × iterations × jobs; callers pass a count derived from the
+    data (scale-adaptive), never a constant."""
+    return conf_scope(spark, {"spark.sql.shuffle.partitions": str(max(1, int(partitions)))})
 
 
 _PERSISTED: dict[str, object] = {}

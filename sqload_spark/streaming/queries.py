@@ -54,7 +54,7 @@ def _replay_buckets(ev: DataFrame, prefix: str, fn) -> None:
     in_dir = scratch_dir(prefix=prefix)
     ev.coalesce(1).write.partitionBy("bucket").mode("append").parquet(in_dir)
     stream = ev.sparkSession.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
-    run_available_now(stream.parquet(in_dir).writeStream.foreachBatch(fn))
+    run_available_now(ev.sparkSession, stream.parquet(in_dir).writeStream.foreachBatch(fn))
 
 
 @query(

@@ -14,15 +14,17 @@ from __future__ import annotations
 import glob as _glob
 import math
 import os
+import threading
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming import DataStreamWriter, StreamingQueryListener
 
-from sqload_spark.session import configure, scratch_dir
+from sqload_spark.session import conf_scope, configure, scratch_dir, shuffle_scope
+from sqload_spark.sources.tables import events_schema
 
 # --- scale-adaptive streaming state partitioning (round 11, guide §2) -------
 # Every stateful streaming operator (windowed agg, dedup-within-watermark,
@@ -67,25 +69,8 @@ def stream_state_scope(spark: SparkSession, src_bytes: int):
     value is captured into the checkpoint at start; foreachBatch inner jobs
     read the live conf, so the scope must cover the whole run)."""
     n = stream_shuffle_partitions(spark, src_bytes)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    with shuffle_scope(spark, n):
         yield n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
 
 
 def events_source_bytes(sf_dir: str) -> int:
@@ -96,23 +81,21 @@ def events_source_bytes(sf_dir: str) -> int:
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a file-source stream with exact ts_us + a real timestamp.
 
-    Streaming sources never infer schemas, so probe the batch-read schema
-    once (driver-side metadata only) to match the file's ts layout:
-    nanos-as-long in older generated data, TIMESTAMP(MICROS) in newer
-    (see sources/tables.py for the normalization contract).
+    Streaming sources never infer schemas; the stored ts layout (nanos-as-
+    long in older generated data, TIMESTAMP(MICROS) in newer) comes from
+    the parquet footer, as in load_table (see sources/tables.py for the
+    normalization contract).
     """
     configure(spark)
-    batch_ts = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
+    schema = events_schema(sf_dir)
     # file streams need a directory basePath; glob to the single table file
-    path = f"{sf_dir}/events.parquet*"
-    if isinstance(batch_ts, T.LongType):
-        raw = spark.readStream.schema(_events_schema(T.LongType())).parquet(path)
+    raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parquet*")
+    if isinstance(schema["ts"].dataType, T.LongType):
         return (
             raw.withColumnRenamed("ts", "ts_ns")
             .withColumn("ts_us", F.expr("ts_ns div 1000"))
             .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
         )
-    raw = spark.readStream.schema(_events_schema(batch_ts)).parquet(path)
     return (
         raw.withColumn("ts", F.col("ts").cast("timestamp"))
         .withColumn("ts_us", F.unix_micros(F.col("ts")))
@@ -120,21 +103,45 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_available_now(writer: DataStreamWriter) -> None:
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def local_checkpoint_scope(spark: SparkSession):
+    """Pin the FileSystem-based checkpoint file manager for one stream run
+    on a local checkpoint, then restore the session's own setting.
+
+    Spark's default manager renames through Hadoop's FileContext. Without
+    Hadoop's native library, the local file system forks ``readlink`` 8
+    times for each such rename and ``chmod`` once for each file it
+    creates: 152 process launches per ``stream_sliding_counts`` run (112
+    ``readlink``, 40 ``chmod``; JFR ``jdk.ProcessStart``), 2.2-2.8 ms
+    each. The FileSystem-based manager renames with
+    ``java.io.File.renameTo``, an atomic POSIX rename that forks nothing,
+    so a run launches only the 40 ``chmod``. That rename is atomic because
+    every runner checkpoint is a local ``scratch_dir``."""
+    return conf_scope(spark, {CHECKPOINT_MANAGER_CONF: FS_CHECKPOINT_MANAGER})
+
+
+def run_available_now(spark: SparkSession, writer: DataStreamWriter) -> None:
     """Run a stream whose source ends on its own to completion: a fresh
-    checkpoint, ``trigger(availableNow=True)``, start, ``awaitTermination``.
+    local checkpoint, ``trigger(availableNow=True)``, start,
+    ``awaitTermination``, under ``local_checkpoint_scope``.
 
     The engine ends the query only after it has committed every file
     present at start (one batch per file under ``maxFilesPerTrigger=1``,
     plus the trailing no-data batch that flushes watermark-closed windows),
     and ``awaitTermination`` raises if the query failed — so no timer or
     sink count is needed to detect the end."""
-    (
-        writer.option("checkpointLocation", scratch_dir(prefix="sqload_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    with local_checkpoint_scope(spark):
+        (
+            writer.option("checkpointLocation", scratch_dir(prefix="sqload_ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
 
 def run_to_memory(sdf: DataFrame, output_mode: str = "complete", *, src_bytes: int) -> DataFrame:
@@ -146,8 +153,33 @@ def run_to_memory(sdf: DataFrame, output_mode: str = "complete", *, src_bytes: i
     name = f"sink_{uuid.uuid4().hex[:12]}"
     spark = sdf.sparkSession
     with stream_state_scope(spark, src_bytes):
-        run_available_now(sdf.writeStream.format("memory").queryName(name).outputMode(output_mode))
+        run_available_now(
+            spark, sdf.writeStream.format("memory").queryName(name).outputMode(output_mode)
+        )
     return spark.table(name)
+
+
+class _NonEmptyBatches(StreamingQueryListener):
+    """Sets ``done`` once the query named ``name`` has committed ``n``
+    micro-batches that read rows."""
+
+    def __init__(self, name: str, n: int) -> None:
+        self.name, self.left, self.done = name, n, threading.Event()
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        if event.progress.name == self.name and event.progress.numInputRows > 0:
+            self.left -= 1
+            if self.left <= 0:
+                self.done.set()
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
 
 
 def run_micro_batches(
@@ -162,30 +194,30 @@ def run_micro_batches(
     have committed, then stop. Returns (sink contents, progress list) so
     callers can assert incremental/latency behavior — the piece an
     availableNow one-shot replay can't exercise. Used with unbounded
-    sources (rate); see tests/test_streaming.py."""
+    sources (rate); see tests/test_streaming.py. A streaming query
+    listener wakes the caller when the batches are in; ``timeout_sec``
+    bounds the wait."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    query = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", scratch_dir(prefix="sqload_ckpt_"))
-        .trigger(processingTime=interval)
-        .start()
-    )
-    import time as _time
-
-    deadline = _time.time() + timeout_sec
-    try:
-        while _time.time() < deadline:
-            done = [p for p in query.recentProgress if p["numInputRows"] > 0]
-            if len(done) >= min_batches:
-                break
-            _time.sleep(0.25)
-        else:
-            raise TimeoutError(f"fewer than {min_batches} micro-batches committed")
-    finally:
-        progress = [dict(p) for p in query.recentProgress]
-        query.stop()
-        query.awaitTermination()
     spark = sdf.sparkSession
+    batches = _NonEmptyBatches(name, min_batches)
+    spark.streams.addListener(batches)
+    try:
+        with local_checkpoint_scope(spark):
+            query = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", scratch_dir(prefix="sqload_ckpt_"))
+                .trigger(processingTime=interval)
+                .start()
+            )
+            try:
+                if not batches.done.wait(timeout_sec):
+                    raise TimeoutError(f"fewer than {min_batches} micro-batches committed")
+            finally:
+                progress = [dict(p) for p in query.recentProgress]
+                query.stop()
+                query.awaitTermination()
+    finally:
+        spark.streams.removeListener(batches)
     return spark.table(name), progress

@@ -38,7 +38,7 @@ def test_shingles_empty_for_short_and_null_docs(spark):
     )
     out = {
         r.doc_id: r.sh
-        for r in df.select("doc_id", shingles(F.col("text"), 3).alias("sh")).collect()
+        for r in df.select("doc_id", shingles("text", 3).alias("sh")).collect()
     }
     assert out[1] == [] and out[2] == [] and out[4] == []
     assert out[5] == []  # NULL text → empty, not NULL/raise
@@ -89,7 +89,7 @@ def test_valid_embedding_contract(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
     kept = sorted(
-        r.vec_id for r in df.filter(valid_embedding(F.col("embedding"))).collect()
+        r.vec_id for r in df.filter(valid_embedding("embedding")).collect()
     )
     assert kept == [4, 5, 6]
 
@@ -341,3 +341,57 @@ def test_frame_sampler_null_and_empty_payload():
     assert pd.isna(nul.n_frames) and pd.isna(nul.sample_checksum)
     empty = out[out.doc_id == 3].iloc[0]
     assert empty.n_frames == 0 and empty.n_sampled == 0 and pd.isna(empty.sample_checksum)
+
+
+def test_sql_text_builders_are_the_column_forms(spark):
+    """The SQL-text builders compute what their former Column-API forms
+    did: valid_embedding and to_double_array are the same relation (equal
+    optimized plans up to expression ids), and shingles / shingle_hashes
+    give the same rows over the sf0.01 documents plus the short, empty and
+    NULL hazard docs (their arrays_zip fields are named "0".."n-1" rather
+    than "t0".."tn-1", so only rows are compared)."""
+    from sqload_spark.functions.text_funcs import shingle_hashes
+    from sqload_spark.functions.vectors import EMB_DIM, EMB_MAX_ABS, dot, to_double_array
+    from sqload_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR, row_digest
+
+    def column_shingles(text, n=3):
+        toks = tokens(text)
+        m = F.size(toks) - F.lit(n - 1)
+        zipped = F.arrays_zip(*[F.slice(toks, k + 1, m).alias(f"t{k}") for k in range(n)])
+        grams = F.transform(zipped, lambda s: F.concat_ws(" ", *[s[f"t{k}"] for k in range(n)]))
+        return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
+            F.array().cast("array<string>")
+        )
+
+    def column_doubles(v):
+        return F.transform(v, lambda x: x.cast("double"))
+
+    def column_valid(v):
+        dv = column_doubles(v)
+        return (
+            (F.size(dv) == EMB_DIM)
+            & (dot(dv, dv) > 0)
+            & F.forall(dv, lambda x: ~F.isnan(x))
+            & F.forall(dv, lambda x: F.abs(x) <= F.lit(EMB_MAX_ABS))
+        )
+
+    plan = lambda df: df._jdf.queryExecution().optimizedPlan()  # noqa: E731
+    emb = load_table(spark, SF_DIR, "embeddings")
+    assert plan(emb.filter(valid_embedding("embedding"))).sameResult(
+        plan(emb.filter(column_valid(F.col("embedding"))))
+    )
+    assert plan(emb.select(to_double_array("embedding"))).sameResult(
+        plan(emb.select(column_doubles(F.col("embedding"))))
+    )
+    hazards = _docs(spark, [(-1, "a"), (-2, "a b"), (-3, ""), (-4, None), (-5, " a  b c a b c ")])
+    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text").unionByName(hazards)
+    col = column_shingles(F.col("text"))
+    pairs = [
+        (shingles("text", 3), col),
+        (shingle_hashes("text", 3), F.transform(col, lambda s: F.xxhash64(s))),
+    ]
+    for text, column in pairs:
+        assert row_digest(docs.select("doc_id", text.alias("sh"))) == row_digest(
+            docs.select("doc_id", column.alias("sh"))
+        )

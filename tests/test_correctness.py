@@ -48,11 +48,13 @@ def test_events_loader_normalizes_both_ts_layouts(spark, tmp_path):
     TIMESTAMP(MICROS) in different rounds. Re-encode the current table in
     BOTH layouts and assert load_table normalizes them to identical
     (ts_ns, ts) values — the regression that silently broke every
-    timeseries query when the layout flipped."""
+    timeseries query when the layout flipped. Each layout's schema, read
+    from the footer (events_schema), is the one Spark infers: the raw long
+    for nanos, timestamp_ntz for micros."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from sqload_spark.sources.tables import load_table
+    from sqload_spark.sources.tables import events_schema, load_table
 
     src = pq.read_table(f"{SF_SMOKE_DIR}/events.parquet")
     i = src.schema.get_field_index("ts")
@@ -64,7 +66,11 @@ def test_events_loader_normalizes_both_ts_layouts(spark, tmp_path):
         pq.write_table(src.set_column(i, "ts", col), d / "events.parquet")
 
     rows = {}
-    for name in ("micros", "nanos"):
+    for name, ts_type in [("micros", "timestamp_ntz"), ("nanos", "long")]:
+        schema = events_schema(str(tmp_path / name))
+        assert schema["ts"].dataType.typeName() == ts_type
+        path = str(tmp_path / name / "events.parquet")
+        assert spark.read.schema(schema).parquet(path).schema == spark.read.parquet(path).schema
         df = load_table(spark, str(tmp_path / name), "events")
         assert {"ts_ns", "ts"} <= set(df.columns)
         assert df.schema["ts"].dataType.typeName() == "timestamp"
@@ -73,6 +79,20 @@ def test_events_loader_normalizes_both_ts_layouts(spark, tmp_path):
             (r.event_id, r.ts_ns, r.ts) for r in df.select("event_id", "ts_ns", "ts").collect()
         )
     assert rows["micros"] == rows["nanos"]
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_table_schemas_equal_inferred(spark, sf):
+    """Every table's explicit schema (tables.SCHEMAS, events' ts from the
+    footer) is the schema Spark infers from the file: names, order, types
+    (array<float>, timestamp_ntz) and nullability."""
+    from sqload_spark.sources.tables import SCHEMAS, TABLE_NAMES, events_schema
+
+    sf_dir = os.path.join(os.path.dirname(SF_SMOKE_DIR), sf)
+    for name in TABLE_NAMES:
+        path = f"{sf_dir}/{name}.parquet"
+        schema = events_schema(sf_dir) if name == "events" else SCHEMAS[name]
+        assert spark.read.schema(schema).parquet(path).schema == spark.read.parquet(path).schema, name
 
 
 def test_oracle_mismatch_rule():

@@ -499,7 +499,7 @@ def test_prefix_filter_agg_prefix_equals_window_prefix(spark):
     from sqload_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    sh = docs.select("doc_id", F.explode(shingle_hashes(F.col("text"), 3)).alias("h"))
+    sh = docs.select("doc_id", F.explode(shingle_hashes("text", 3)).alias("h"))
     df_counts = sh.groupBy("h").agg(F.count("*").alias("df"))
     n_per_doc = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     w = W.partitionBy("doc_id").orderBy("df", "h")
@@ -536,7 +536,7 @@ def test_minhash_bands_sql_is_the_column_relation(spark):
     from sqload_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    hashes = docs.select("doc_id", F.explode(shingle_hashes(F.col("text"), 3)).alias("h"))
+    hashes = docs.select("doc_id", F.explode(shingle_hashes("text", 3)).alias("h"))
     sigs = (
         hashes.groupBy("doc_id")
         .agg(*[F.min(F.xxhash64("h", F.lit(0), F.lit(i))).alias(f"mh{i}") for i in range(NUM_PERM)])
@@ -604,56 +604,6 @@ def test_ann_rows_pinned(spark, name, digest):
     assert row_digest(registry.QUERIES[name](spark, SF_DIR)) == digest
 
 
-# Spark jobs each registered dedup_* and sim_* query may start while its plan
-# is built (eager actions), at sf0.01: the bound and where the jobs come from.
-# Every query scans one table through load_table, whose parquet schema
-# inference is one job. The connected-components consumers add
-# _labels_from_pairs' edge count (6 jobs: the LSH mine's AQE stages) and the
-# CC loop's lazy-checkpoint convergence counts (8).
-_LOAD = "load_table schema inference"
-_CC = f"{_LOAD} (1) + _labels_from_pairs' edge count (6) + CC convergence counts (8)"
-_BUILD_JOBS = {
-    "dedup_cluster_sizes": (15, _CC),
-    "dedup_keep_list": (15, _CC),
-    "dedup_keep_list_weighted": (15, _CC),
-    "dedup_pairs_materialized": (
-        17,
-        f"{_LOAD} (1) + pairs_materialized's parquet write (4) + the artifact's "
-        "schema read (1) + edge count of the read-back pairs + CC convergence counts (11)",
-    ),
-    "dedup_embedding_cosine_banded": (
-        5, f"{_LOAD} (1) + embedding_cosine_banded's band_rows.count() (4)"
-    ),
-    "sim_pagerank_knn": (
-        7, f"{_LOAD} (1) + pagerank_knn's n_nodes count over the persisted edges (6)"
-    ),
-    "sim_topk_blas": (2, f"{_LOAD} (1) + topk_blas' query-set collect (1)"),
-}
-
-
-def test_dedup_build_jobs_bounded(spark):
-    """Building a dedup_* or sim_* query starts no more Spark jobs than
-    _BUILD_JOBS lists (1, the schema inference, where it names none): a
-    refactor that adds an eager action to plan build fails here. Counted
-    per query under its own job group, as tools/profile_queries.py counts
-    build_jobs."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    over = {}
-    for name in sorted(n for n in registry.QUERIES if n.startswith(("dedup_", "sim_"))):
-        group = f"build_jobs:{name}"
-        sc.setJobGroup(group, group)
-        try:
-            registry.QUERIES[name](spark, SF_DIR)
-        finally:
-            sc.setJobGroup("", "")
-        n_jobs = len(tracker.getJobIdsForGroup(group))
-        bound = _BUILD_JOBS.get(name, (1, _LOAD))[0]
-        if n_jobs > bound:
-            over[name] = (n_jobs, bound)
-    assert not over, f"build-time jobs over their bound (jobs, bound): {over}"
-
-
 def test_md5_minhash_sql_is_the_column_relation(spark):
     """The SQL-text md5 MinHash signatures (_md5_minhash_sql) are the
     relation the Column API builds from the same shingle-string rows — 16
@@ -666,7 +616,7 @@ def test_md5_minhash_sql_is_the_column_relation(spark):
     from sqload_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_DIR, "documents")
-    rows = docs.select("doc_id", F.explode(shingles(F.col("text"), 3)).alias("h"))
+    rows = docs.select("doc_id", F.explode(shingles("text", 3)).alias("h"))
     first32 = lambda p: F.conv(  # noqa: E731
         F.substring(F.md5(F.concat(F.lit(f"{p}|"), F.col("h"))), 1, 8), 16, 10
     ).cast("long")

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from sqload_spark import registry
@@ -174,3 +175,57 @@ def test_microbatch_replay_is_idempotent(spark, tmp_path):
     assert total() == once == 3
     microbatch_counts(batch.limit(1), 1, acc_dir)
     assert total() == 4
+
+
+@pytest.mark.parametrize(
+    "name,digest",
+    [
+        ("stream_sliding_counts", (7800, 435745777063463345306)),
+        ("stream_microbatch_progress", (5, -2394611344086380159)),
+    ],
+)
+def test_runner_rows_pinned(spark, name, digest):
+    """Two streams through the one runner (windows.run_available_now), a
+    memory-sink window aggregation and a foreachBatch replay: their rows
+    are pinned (row_digest at sf0.01), so a runner or checkpoint change
+    that moves a row fails here."""
+    from tests.conftest import row_digest
+
+    assert row_digest(registry.QUERIES[name](spark, SF_DIR)) == digest
+
+
+@pytest.mark.parametrize("prior", [None, "org.example.NoSuchManager"])
+def test_runner_restores_checkpoint_manager(spark, prior):
+    """run_available_now pins the FileSystem-based checkpoint manager only
+    for its own run: afterwards the conf is back at its prior value, or
+    unset, after a normal run and after a failing one. (A set prior value
+    names no real class: the run inside the scope must not read it.)"""
+    from sqload_spark.streaming.windows import (
+        CHECKPOINT_MANAGER_CONF,
+        FS_CHECKPOINT_MANAGER,
+        run_available_now,
+    )
+
+    def assert_restored():
+        assert spark.conf.get(CHECKPOINT_MANAGER_CONF, None) == prior
+
+    seen = []
+
+    def record(batch_df, batch_id):
+        seen.append(spark.conf.get(CHECKPOINT_MANAGER_CONF))
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("batch failed")
+
+    src = spark.readStream.format("rate-micro-batch").option("rowsPerBatch", 5).load()
+    if prior is not None:
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, prior)
+    try:
+        run_available_now(spark, src.writeStream.foreachBatch(record))
+        assert seen and set(seen) == {FS_CHECKPOINT_MANAGER}
+        assert_restored()
+        with pytest.raises(Exception, match="batch failed"):
+            run_available_now(spark, src.writeStream.foreachBatch(fail))
+        assert_restored()
+    finally:
+        spark.conf.unset(CHECKPOINT_MANAGER_CONF)
