@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from sqload_spark.functions.hashing import spark_md5_int_column
+
 # Marker words for the stopword-based language-ID heuristic. The scored
 # languages match the corpus labels {de, en, es, fr, zh}.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -119,6 +121,6 @@ def rolling_fingerprints(toks: Column, window: int = 4) -> Column:
     empty_span = F.array(F.lit(""))
     span_hashes = F.transform(
         F.when(F.size(base) == 0, empty_span).otherwise(spans),
-        lambda sp: F.conv(F.substring(F.md5(sp), 1, 12), 16, 10).cast("bigint"),
+        lambda sp: spark_md5_int_column(sp, 12),
     )
     return F.slice(F.array_sort(F.array_distinct(span_hashes)), 1, 8)

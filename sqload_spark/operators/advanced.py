@@ -5,9 +5,12 @@ and a hand-rolled Count-Min sketch as a groupBy composition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqload_spark.functions import hashing
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
 from sqload_spark.operators.timeseries import US_PER_SEC
 from sqload_spark.registry import query
@@ -92,10 +95,31 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def count_min_table(df: DataFrame, key: str) -> DataFrame:
+def _xxhash_cell(key: str) -> Column:
+    """The (d, key) Count-Min cell of sketch_count_min: xxhash64, mod width."""
+    return F.pmod(F.xxhash64(key, "d"), F.lit(CMS_WIDTH))
+
+
+def _md5_cell(key: str) -> Column:
+    """sketch_cms_checked's cell: the md5 bucket of 'd|key', which DuckDB
+    recomputes (``_duck_md5_cell``)."""
+    key = f"concat(CAST(d AS STRING), '|', CAST({key} AS STRING))"
+    return F.expr(hashing.spark_md5_bucket(key, CMS_WIDTH))
+
+
+def _duck_md5_cell(key: str) -> str:
+    return hashing.duck_md5_bucket(f"CAST(d AS VARCHAR) || '|' || CAST({key} AS VARCHAR)", CMS_WIDTH)
+
+
+def _depths() -> Column:
+    return F.explode(F.array(*[F.lit(j) for j in range(CMS_DEPTH)])).alias("d")
+
+
+def count_min_table(df: DataFrame, key: str, cell: Callable[[str], Column] = _xxhash_cell) -> DataFrame:
     """Build a Count-Min sketch as a (depth × width) counts table: one
     explode to depth rows per input, one groupBy. Mergeable (sum cells),
-    constant size, one pass — the sketch-as-composition pattern."""
+    constant size, one pass — the sketch-as-composition pattern. ``cell``
+    places a key column's value in row ``d``."""
     # Count per DISTINCT key first, then hash each key depth times and sum
     # (r11, guide §2.3): the (d, w) cell count is the sum of per-key counts
     # over keys hashing there, so the explode runs over |keys| rows instead
@@ -103,12 +127,31 @@ def count_min_table(df: DataFrame, key: str) -> DataFrame:
     # keys × depth with bit-identical cells (the per-key count aggregation
     # is map-side partial).
     key_counts = df.groupBy(F.col(key).alias("k")).agg(F.count("*").alias("kc"))
-    rows = key_counts.select(
-        F.explode(F.array(*[F.lit(j) for j in range(CMS_DEPTH)])).alias("d"),
-        "k",
-        "kc",
-    ).select("d", F.pmod(F.xxhash64("k", "d"), F.lit(CMS_WIDTH)).alias("w"), "kc")
+    rows = key_counts.select(_depths(), "k", "kc").select("d", cell("k").alias("w"), "kc")
     return rows.groupBy("d", "w").agg(F.sum("kc").alias("c"))
+
+
+def _cms_probes(li: DataFrame, cell: Callable[[str], Column]) -> DataFrame:
+    """(probe_key, cms_estimate, exact_count) for the supplier keys 1..10:
+    the min-over-depth estimate of lineitem's l_suppkey sketch under
+    ``cell``, next to the exact count (0 for an absent key)."""
+    cms = count_min_table(li, "l_suppkey", cell)
+    probes = li.sparkSession.range(1, 11).select(F.col("id").alias("probe_key"))
+    probe_cells = probes.select("probe_key", _depths()).select(
+        "probe_key", "d", cell("probe_key").alias("w")
+    )
+    estimates = (
+        probe_cells.join(cms, ["d", "w"], "left")
+        .fillna(0, subset=["c"])
+        .groupBy("probe_key")
+        .agg(F.min("c").alias("cms_estimate"))
+    )
+    exact = (
+        li.filter(F.col("l_suppkey").between(1, 10))
+        .groupBy(F.col("l_suppkey").alias("probe_key"))
+        .agg(F.count("*").alias("exact_count"))
+    )
+    return estimates.join(exact, "probe_key", "left").fillna(0, subset=["exact_count"])
 
 
 @query(
@@ -139,27 +182,9 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sketches.py. The md5-placed fully-hash-checked variant is
     sketch_cms_checked below."""
     li = load_table(spark, sf_dir, "lineitem")
-    cms = count_min_table(li, "l_suppkey")
     n_total = li.agg(F.count("*").alias("n_total"))
-    probes = spark.range(1, 11).select(F.col("id").alias("probe_key"))
-    probe_cells = probes.select(
-        "probe_key",
-        F.explode(F.array(*[F.lit(j) for j in range(CMS_DEPTH)])).alias("d"),
-    ).select("probe_key", "d", F.pmod(F.xxhash64(F.col("probe_key"), F.col("d")), F.lit(CMS_WIDTH)).alias("w"))
-    estimates = (
-        probe_cells.join(cms, ["d", "w"], "left")
-        .fillna(0, subset=["c"])
-        .groupBy("probe_key")
-        .agg(F.min("c").alias("cms_estimate"))
-    )
-    exact = (
-        li.filter(F.col("l_suppkey").between(1, 10))
-        .groupBy(F.col("l_suppkey").alias("probe_key"))
-        .agg(F.count("*").alias("exact_count"))
-    )
     return (
-        estimates.join(exact, "probe_key", "left")
-        .fillna(0, subset=["exact_count"])
+        _cms_probes(li, _xxhash_cell)
         .crossJoin(F.broadcast(n_total))
         .select(
             "probe_key",
@@ -176,11 +201,11 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sketch_hll_merge",
-    oracle="""
+    oracle=f"""
     SELECT l_returnflag,
            CAST(count(DISTINCT l_orderkey) AS BIGINT) AS exact_orders,
            CAST(count(DISTINCT
-             (('0x' || substr(md5('hll|' || CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT % 8)
+             {hashing.duck_md5_bucket(hashing.duck_salted("hll", "l_orderkey"), 8)}
            ) AS BIGINT) AS n_shards,
            TRUE AS merge_consistent,
            TRUE AS merged_within_bound,
@@ -210,14 +235,7 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic contract booleans — merged≈direct within 3%, each within
     5% of exact — that the oracle asserts hold by construction."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    shard = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("hll|"), F.col("l_orderkey").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(8),
-    )
+    shard = F.expr(hashing.spark_md5_bucket(hashing.spark_salted("hll", "l_orderkey"), 8))
     partials = (
         li.withColumn("shard", shard)
         .groupBy("l_returnflag", "shard")
@@ -329,21 +347,15 @@ def histogram_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash is md5-derived, which DuckDB can replicate — so the ENTIRE sketch
 # (table build, point queries, min-over-depth estimator, and its
 # overestimate vs the exact counts) is hash-checked, not just law-tested.
-_CMS_HASH_SQL = (
-    "(('0x' || substr(md5(CAST(d AS VARCHAR) || '|' || CAST({k} AS VARCHAR)), 1, 8))::BIGINT"
-    f" % {CMS_WIDTH})"
-)
-
-
 @query(
     "sketch_cms_checked",
     oracle=f"""
     WITH cells AS (
-      SELECT t.d, {_CMS_HASH_SQL.format(k="l.l_suppkey")} AS w, count(*) AS c
+      SELECT t.d, {_duck_md5_cell("l.l_suppkey")} AS w, count(*) AS c
       FROM lineitem l, range(0, {CMS_DEPTH}) t(d)
       GROUP BY 1, 2
     ), probes AS (
-      SELECT p.probe_key, t.d, {_CMS_HASH_SQL.format(k="p.probe_key")} AS w
+      SELECT p.probe_key, t.d, {_duck_md5_cell("p.probe_key")} AS w
       FROM range(1, 11) p(probe_key), range(0, {CMS_DEPTH}) t(d)
     ), est AS (
       SELECT p.probe_key, min(coalesce(c.c, 0)) AS cms_estimate
@@ -368,55 +380,4 @@ def sketch_cms_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale shape: one explode to depth rows, one bounded groupBy,
     probes join the broadcast-sized sketch."""
     li = load_table(spark, sf_dir, "lineitem")
-
-    def cell_w(key_col):
-        return F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.col("d").cast("string"), F.lit("|"), key_col.cast("string"))
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(CMS_WIDTH),
-        )
-
-    # Aggregate per DISTINCT key before hashing (r11, guide §2.3): the cell
-    # count for (d, w) is the sum of per-key counts over keys hashing there,
-    # so the md5 cell hash only needs to run once per (key, depth) — ~|keys|
-    # × depth hashes instead of |rows| × depth (600 K × 4 md5+conv+substr
-    # string ops at sf0.1 reduced to ~1 K × 4). The partial count aggregation
-    # is map-side; cells are bit-identical, so the oracle is unchanged.
-    key_counts = li.groupBy(F.col("l_suppkey").alias("k")).agg(F.count("*").alias("kc"))
-    rows = key_counts.select(
-        F.explode(F.array(*[F.lit(j) for j in range(CMS_DEPTH)])).alias("d"),
-        "k",
-        "kc",
-    ).select("d", cell_w(F.col("k")).alias("w"), "kc")
-    cms = rows.groupBy("d", "w").agg(F.sum("kc").alias("c"))
-    probes = spark.range(1, 11).select(F.col("id").alias("probe_key"))
-    probe_cells = probes.select(
-        "probe_key",
-        F.explode(F.array(*[F.lit(j) for j in range(CMS_DEPTH)])).alias("d"),
-    ).select("probe_key", "d", cell_w(F.col("probe_key")).alias("w"))
-    estimates = (
-        probe_cells.join(cms, ["d", "w"], "left")
-        .fillna(0, subset=["c"])
-        .groupBy("probe_key")
-        .agg(F.min("c").cast("bigint").alias("cms_estimate"))
-    )
-    exact = (
-        li.filter(F.col("l_suppkey").between(1, 10))
-        .groupBy(F.col("l_suppkey").alias("probe_key"))
-        .agg(F.count("*").alias("exact_count"))
-    )
-    return (
-        estimates.join(exact, "probe_key", "left")
-        .fillna(0, subset=["exact_count"])
-        .select("probe_key", "cms_estimate", F.col("exact_count").cast("bigint").alias("exact_count"))
-        .orderBy("probe_key")
-    )
+    return _cms_probes(li, _md5_cell).orderBy("probe_key")

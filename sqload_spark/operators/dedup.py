@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from sqload_spark.functions.hashing import duck_md5_int, spark_md5_int
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
 from sqload_spark.functions.text_funcs import hamming64, shingle_hashes, shingles, tokens
 from sqload_spark.registry import query
@@ -92,12 +93,21 @@ _DUCK_CLUSTERS = f"""{_DUCK_REACH},
 # ---------------------------------------------------------------------------
 
 
+# The exact-dedup key: md5 of the document's sorted distinct token set.
+DUCK_CANONICAL_FP = "md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' '))"
+
+
+def canonical_fp() -> Column:
+    """Spark twin of ``DUCK_CANONICAL_FP`` over the ``text`` column."""
+    return F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(F.col("text")))), " "))
+
+
 @query(
     "dedup_exact_groups",
-    oracle="""
+    oracle=f"""
     WITH canon AS (
       SELECT doc_id,
-             md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp
+             {DUCK_CANONICAL_FP} AS fp
       FROM documents
     )
     SELECT fp, count(*) AS n_docs, min(doc_id) AS keep_doc_id
@@ -112,9 +122,8 @@ def exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy → keep min doc_id. The canonical md5 is cross-engine stable.
     At scale this is one hash-shuffle on a 32-byte key."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(F.col("text")))), " "))
     return (
-        docs.select("doc_id", fp.alias("fp"))
+        docs.select("doc_id", canonical_fp().alias("fp"))
         .groupBy("fp")
         .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc_id"))
         .filter(F.col("n_docs") > 1)
@@ -551,12 +560,14 @@ def pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from sqload_spark.session import scratch_subdir
+    from sqload_spark.sources.sinks import read_back_parquet
 
     docs = load_table(spark, sf_dir, "documents")
     sf_tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     path = scratch_subdir(f"dedup_pairs_{sf_tag}")
-    _lsh_verified_pairs(docs).select("doc_a", "doc_b").write.mode("overwrite").parquet(path)
-    mined = spark.read.parquet(path)
+    pairs = _lsh_verified_pairs(docs).select("doc_a", "doc_b")
+    pairs.write.mode("overwrite").parquet(path)
+    mined = read_back_parquet(spark, path, pairs.schema)
     labels = _labels_from_pairs(mined)
 
     def summary(consumer: str, df: DataFrame, checksum: Column) -> DataFrame:
@@ -1420,7 +1431,7 @@ _SH32_ASSEMBLE_SQL = " + ".join(
 
 _SIMHASH32_ORACLE = f"""
     WITH {_DUCK_SH}, bits AS (
-      SELECT doc_id, ('0x' || substr(md5(sh), 1, 8))::BIGINT AS h32 FROM sh
+      SELECT doc_id, {duck_md5_int("sh")} AS h32 FROM sh
     ), votes AS (
       SELECT doc_id, {_SH32_VOTES_SQL} FROM bits GROUP BY doc_id
     ), sigs AS (
@@ -1449,7 +1460,7 @@ def simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # h32, the first 32 md5 bits, is non-negative, so the shared 64-bit
     # builders (unsigned shifts, bits OR-ed) give the oracle's values.
     sims = spark.sql(
-        _simhash_sql("CAST(conv(substring(md5(h), 1, 8), 16, 10) AS BIGINT)", SIMHASH32_BITS),
+        _simhash_sql(spark_md5_int("h"), SIMHASH32_BITS),
         rows=_shingle_rows(docs, shingles("text", 3)),
     )
     return _simhash_pairs(sims, SIMHASH32_BITS // SIMHASH_BANDS).orderBy("doc_a", "doc_b")
@@ -1463,7 +1474,7 @@ def simhash_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 MINHASH_CHECKED_PERMS = 16
 
 _MHC_MIN_SQL = ", ".join(
-    f"min(('0x' || substr(md5(CAST({p} AS VARCHAR) || '|' || sh), 1, 8))::BIGINT) AS m{p}"
+    "min({}) AS m{}".format(duck_md5_int(f"CAST({p} AS VARCHAR) || '|' || sh"), p)
     for p in range(MINHASH_CHECKED_PERMS)
 )
 _MHC_AGREE_SQL = " + ".join(
@@ -1504,7 +1515,7 @@ def _md5_minhash_sql(rows: str) -> str:
     _minhash_bands_sql gives (tests/test_llm_pipeline.py checks
     ``sameResult`` against the Column form)."""
     mh = ", ".join(
-        f"min(CAST(conv(substring(md5(concat('{p}|', h)), 1, 8), 16, 10) AS BIGINT)) AS m{p}"
+        "min({}) AS m{}".format(spark_md5_int(f"concat('{p}|', h)"), p)
         for p in range(MINHASH_CHECKED_PERMS)
     )
     return f"SELECT doc_id, {mh} FROM {rows} GROUP BY doc_id"

@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 
 from sqload_spark.functions.rounding import round_half_up
 from sqload_spark.registry import query
-from sqload_spark.session import scratch_subdir
-from sqload_spark.sources.sinks import write_partitioned_parquet
+from sqload_spark.session import conf_scope, scratch_subdir
+from sqload_spark.sources.sinks import read_back_parquet, write_partitioned_parquet
 from sqload_spark.sources.tables import load_table
 
 # Under the process-wide scratch root (session.scratch_subdir): unique per
@@ -129,7 +129,7 @@ def partitioned_bulk_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         range_key="l_orderkey",
         partition_by=["l_returnflag"],
     )
-    back = spark.read.parquet(path)
+    back = read_back_parquet(spark, path, li.schema, ["l_returnflag"])
     return (
         back.groupBy("l_returnflag")
         .agg(
@@ -228,7 +228,9 @@ def partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (NULL/'' directory collapse, see write_partitioned_parquet); the
     # pruning filter targets the twin DIRECTORY column — escape('F') = 'F'
     write_partitioned_parquet(od, path, partition_by=["o_orderstatus"])
-    back = spark.read.parquet(path).filter(F.col("__part_o_orderstatus") == "F")
+    back = read_back_parquet(spark, path, od.schema, ["o_orderstatus"]).filter(
+        F.col("__part_o_orderstatus") == "F"
+    )
     return (
         back.groupBy("o_orderpriority")
         .agg(F.count("*").alias("n_orders"), round_half_up(F.sum("o_totalprice"), 2).alias("total"))
@@ -367,7 +369,7 @@ def zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(path)
     )
-    back = spark.read.parquet(path)
+    back = read_back_parquet(spark, path, clustered.schema)
     return (
         back.filter(
             (F.col("user_id").between(10, 49))
@@ -464,16 +466,16 @@ def file_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
     production the same option applies per partition."""
     od = load_table(spark, sf_dir, "orders")
     path = os.path.join(_scratch(), "orders_sized")
+    keys = od.select("o_orderkey")
     (
-        od.select("o_orderkey")
-        .coalesce(1)
+        keys.coalesce(1)
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite")
         .option("maxRecordsPerFile", FILE_SIZE_ROWS)
         .parquet(path)
     )
     per_file = (
-        spark.read.parquet(path)
+        read_back_parquet(spark, path, keys.schema)
         .groupBy(F.input_file_name().alias("fname"))
         .agg(
             F.count("*").alias("n_rows"),
@@ -534,13 +536,9 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         od.filter(F.col("o_orderstatus") == "F")
         .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         write_partitioned_parquet(restated, path, partition_by=["o_orderstatus"])
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    back = spark.read.parquet(path)
+    back = read_back_parquet(spark, path, od.schema, ["o_orderstatus"])
     return (
         back.groupBy("o_orderstatus")
         .agg(

@@ -22,6 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqload_spark.functions.hashing import duck_md5_int, py_md5_int
 from sqload_spark.registry import query
 from sqload_spark.sources.tables import load_table
 
@@ -145,8 +146,7 @@ _FRAME_ORACLE = f"""
     WITH frames AS (
       SELECT doc_id,
              CAST(ceil(len(text)::DOUBLE / {FRAME_CHARS}) AS BIGINT) AS n_frames,
-             [('0x' || substr(md5(substring(text, (f - 1) * {FRAME_CHARS} + 1,
-                                            {FRAME_CHARS})), 1, 8))::BIGINT
+             [{duck_md5_int(f"substring(text, (f - 1) * {FRAME_CHARS} + 1, {FRAME_CHARS})")}
               for f in range(1, CAST(ceil(len(text)::DOUBLE / {FRAME_CHARS}) AS BIGINT) + 1)
               if (f - 1) % {SAMPLE_EVERY} = 0] AS cks
       FROM documents)
@@ -158,8 +158,6 @@ _FRAME_ORACLE = f"""
 
 
 def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import hashlib
-
     for pdf in batches:
         rows = []
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -175,9 +173,7 @@ def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 s[k * FRAME_CHARS : (k + 1) * FRAME_CHARS]
                 for k in range(0, n_frames, SAMPLE_EVERY)
             ]
-            ck = sum(
-                int(hashlib.md5(f.encode("utf-8")).hexdigest()[:8], 16) for f in sampled
-            )
+            ck = sum(py_md5_int(f) for f in sampled)
             # empty payload: zero frames sampled; the oracle's
             # list_sum([]) is NULL, so mirror NULL (not 0) for parity
             rows.append((doc_id, n_frames, len(sampled), ck if sampled else None))

@@ -21,9 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from sqload_spark.functions import hashing
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
-from sqload_spark.functions.text_funcs import tokens
-from sqload_spark.operators.sampling import CHUNK_STRIDE, CHUNK_TOKENS
+from sqload_spark.operators.dedup import DUCK_CANONICAL_FP, canonical_fp
+from sqload_spark.operators.sampling import chunk_rows, duck_chunks
 from sqload_spark.registry import query
 from sqload_spark.sources.tables import load_table
 
@@ -33,7 +34,7 @@ _R6 = 1_000_000.0
 _NORM_SQL = (
     "sqrt("
     + " + ".join(
-        f"power((('0x' || substr(md5(chunk_fp || '|{d}'), 1, 8))::BIGINT / 4294967296.0) - 0.5, 2)"
+        "power({} - 0.5, 2)".format(hashing.duck_md5_uniform(f"chunk_fp || '|{d}'"))
         for d in range(EMB_DIMS)
     )
     + ")"
@@ -45,10 +46,8 @@ _NORM_SQL = (
     oracle=f"""
     WITH canon AS (
       SELECT doc_id, lang, text,
-             md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')) AS fp,
-             min(doc_id) OVER (PARTITION BY
-               md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' '))
-             ) AS keep_id
+             {DUCK_CANONICAL_FP} AS fp,
+             min(doc_id) OVER (PARTITION BY {DUCK_CANONICAL_FP}) AS keep_id
       FROM documents
     ),
     survivors AS (
@@ -56,16 +55,12 @@ _NORM_SQL = (
       FROM canon WHERE doc_id = keep_id
     ),
     chunks AS (
-      SELECT doc_id, lang,
-             least({CHUNK_TOKENS}, len(t) - s.start) AS chunk_len,
-             md5(array_to_string(
-               t[s.start + 1 : s.start + least({CHUNK_TOKENS}, len(t) - s.start)], ' ')) AS chunk_fp
-      FROM survivors, LATERAL unnest(range(0, len(t), {CHUNK_STRIDE})) s(start)
+      {duck_chunks("survivors", "doc_id, lang")}
     ),
     embedded AS (
       SELECT lang, doc_id, chunk_len, chunk_fp,
              CAST(floor(({_NORM_SQL}) * {_R6} + 0.5) AS BIGINT) AS norm_fx,
-             ('0x' || substr(chunk_fp, 1, 8))::BIGINT AS fp_u32
+             {hashing.duck_hex_int("chunk_fp")} AS fp_u32
       FROM chunks
     )
     SELECT lang,
@@ -83,35 +78,16 @@ def rag_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup survivors → chunk → stub-embed → per-language manifest; see
     the module docstring for the composition and float rules."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens(F.col("text")))), " "))
     keep = F.min("doc_id").over(W.partitionBy("fp"))
     survivors = (
-        docs.select("doc_id", "lang", "text", fp.alias("fp"))
+        docs.select("doc_id", "lang", "text", canonical_fp().alias("fp"))
         .withColumn("keep_id", keep)
         .filter(F.col("doc_id") == F.col("keep_id"))
         .select("doc_id", "lang", F.split(F.col("text"), " ").alias("t"))
     )
-    chunk_len = F.least(F.lit(CHUNK_TOKENS), F.size("t") - F.col("start"))
-    chunks = survivors.select(
-        "doc_id",
-        "lang",
-        F.explode(F.sequence(F.lit(0), F.size("t") - 1, F.lit(CHUNK_STRIDE))).alias("start"),
-        "t",
-    ).select(
-        "doc_id",
-        "lang",
-        chunk_len.cast("bigint").alias("chunk_len"),
-        F.md5(F.array_join(F.slice(F.col("t"), F.col("start") + 1, chunk_len), " ")).alias(
-            "chunk_fp"
-        ),
-    )
+    chunks = chunk_rows(survivors, "doc_id", "lang")
     dim_u = [
-        F.conv(
-            F.substring(F.md5(F.concat(F.col("chunk_fp"), F.lit(f"|{d}"))), 1, 8), 16, 10
-        ).cast("bigint").cast("double")
-        / F.lit(4294967296.0)
-        - 0.5
-        for d in range(EMB_DIMS)
+        F.expr(hashing.spark_md5_uniform(f"concat(chunk_fp, '|{d}')")) - 0.5 for d in range(EMB_DIMS)
     ]
     norm = F.sqrt(sum(u * u for u in dim_u))
     embedded = chunks.select(
@@ -119,7 +95,7 @@ def rag_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "chunk_len",
         F.floor(norm * _R6 + 0.5).cast("bigint").alias("norm_fx"),
-        F.conv(F.substring(F.col("chunk_fp"), 1, 8), 16, 10).cast("bigint").alias("fp_u32"),
+        F.expr(hashing.spark_hex_int("chunk_fp")).alias("fp_u32"),
     )
     return (
         embedded.groupBy("lang")

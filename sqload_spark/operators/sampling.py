@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from sqload_spark.functions import hashing
 from sqload_spark.operators.dedup import _DUCK_REACH, component_labels
 from sqload_spark.registry import ORACLES, query
 from sqload_spark.sources.tables import load_table
@@ -29,18 +30,14 @@ TEST_SHARE = 0.25
 STRAT_EVEN, STRAT_ODD = 0.5, 0.1
 
 
-def _u(id_col: Column, salt: str) -> Column:
+def _u(id_sql: str, salt: str) -> Column:
     """Uniform [0,1) double from md5(salt|id) — identical in DuckDB via
-    the _u_sql fragment below."""
-    hex8 = F.substring(F.md5(F.concat(F.lit(salt + "|"), id_col.cast("string"))), 1, 8)
-    return F.conv(hex8, 16, 10).cast("bigint").cast("double") / F.lit(float(1 << 32))
+    ``_u_sql``."""
+    return F.expr(hashing.spark_md5_uniform(hashing.spark_salted(salt, id_sql)))
 
 
-def _u_sql(id_expr: str, salt: str) -> str:
-    return (
-        f"(('0x' || substr(md5('{salt}|' || CAST({id_expr} AS VARCHAR)), 1, 8))::BIGINT"
-        f" / 4294967296.0)"
-    )
+def _u_sql(id_sql: str, salt: str) -> str:
+    return hashing.duck_md5_uniform(hashing.duck_salted(salt, id_sql))
 
 
 @query(
@@ -57,7 +54,7 @@ def sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(doc_id), no shuffle (the ORDER BY is presentation-only)."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.filter(_u(F.col("doc_id"), "sample1") < SAMPLE_RATE)
+        docs.filter(_u("doc_id", "sample1") < SAMPLE_RATE)
         .select("doc_id", "source")
         .orderBy("doc_id")
     )
@@ -88,7 +85,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.when(
         F.substring(F.col("source"), 4, 10).try_cast("bigint") % 2 == 0, STRAT_EVEN
     ).otherwise(STRAT_ODD)
-    kept = F.when(_u(F.col("doc_id"), "strat1") < rate, 1).otherwise(0)
+    kept = F.when(_u("doc_id", "strat1") < rate, 1).otherwise(0)
     return (
         docs.groupBy("source")
         .agg(F.count("*").alias("n_total"), F.sum(kept).cast("bigint").alias("n_sampled"))
@@ -139,7 +136,7 @@ def mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("keep_rate"),
         )
     )
-    kept = F.when(_u(F.col("doc_id"), "mix1") < F.col("keep_rate"), 1).otherwise(0)
+    kept = F.when(_u("doc_id", "mix1") < F.col("keep_rate"), 1).otherwise(0)
     return (
         docs.join(F.broadcast(rates), "lang")
         .groupBy("lang")
@@ -155,17 +152,39 @@ CHUNK_TOKENS = 128
 CHUNK_STRIDE = 64
 
 
+def chunk_rows(toks: DataFrame, *cols: str) -> DataFrame:
+    """(*cols, chunk_idx, chunk_len, chunk_fp): the CHUNK_TOKENS-token
+    windows at stride CHUNK_STRIDE over ``toks``' token array ``t``, one
+    row per window; chunk_fp is the md5 of the window's text."""
+    chunk_len = F.least(F.lit(CHUNK_TOKENS), F.size("t") - F.col("start"))
+    return toks.select(
+        *cols,
+        "t",
+        F.explode(F.sequence(F.lit(0), F.size("t") - 1, F.lit(CHUNK_STRIDE))).alias("start"),
+    ).select(
+        *cols,
+        (F.col("start") / CHUNK_STRIDE).cast("bigint").alias("chunk_idx"),
+        chunk_len.cast("bigint").alias("chunk_len"),
+        F.md5(F.array_join(F.slice(F.col("t"), F.col("start") + 1, chunk_len), " ")).alias("chunk_fp"),
+    )
+
+
+def duck_chunks(rel: str, cols: str) -> str:
+    """DuckDB text of ``chunk_rows`` over the relation ``rel``."""
+    return f"""SELECT {cols},
+           CAST(s.start / {CHUNK_STRIDE} AS BIGINT) AS chunk_idx,
+           least({CHUNK_TOKENS}, len(t) - s.start) AS chunk_len,
+           md5(array_to_string(t[s.start + 1 : s.start + least({CHUNK_TOKENS}, len(t) - s.start)], ' ')) AS chunk_fp
+    FROM {rel}, LATERAL unnest(range(0, len(t), {CHUNK_STRIDE})) s(start)"""
+
+
 @query(
     "q_chunk_documents",
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM documents
     )
-    SELECT doc_id,
-           CAST(s.start / {CHUNK_STRIDE} AS BIGINT) AS chunk_idx,
-           least({CHUNK_TOKENS}, len(t) - s.start) AS chunk_len,
-           md5(array_to_string(t[s.start + 1 : s.start + least({CHUNK_TOKENS}, len(t) - s.start)], ' ')) AS chunk_fp
-    FROM toks, LATERAL unnest(range(0, len(t), {CHUNK_STRIDE})) s(start)
+    {duck_chunks("toks", "doc_id")}
     ORDER BY doc_id, chunk_idx
     """,
 )
@@ -176,21 +195,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     text so the oracle hash-checks actual content, not just shapes."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
-    chunk_len = F.least(F.lit(CHUNK_TOKENS), F.size("t") - F.col("start"))
-    return (
-        toks.select(
-            "doc_id",
-            "t",
-            F.explode(F.sequence(F.lit(0), F.size("t") - 1, F.lit(CHUNK_STRIDE))).alias("start"),
-        )
-        .select(
-            "doc_id",
-            (F.col("start") / CHUNK_STRIDE).cast("bigint").alias("chunk_idx"),
-            chunk_len.cast("bigint").alias("chunk_len"),
-            F.md5(F.array_join(F.slice(F.col("t"), F.col("start") + 1, chunk_len), " ")).alias("chunk_fp"),
-        )
-        .orderBy("doc_id", "chunk_idx")
-    )
+    return chunk_rows(toks, "doc_id").orderBy("doc_id", "chunk_idx")
 
 
 @query(
@@ -224,7 +229,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return clustered.select(
         "doc_id",
         "cluster_id",
-        F.when(_u(F.col("cluster_id"), "split1") < TEST_SHARE, "test")
+        F.when(_u("cluster_id", "split1") < TEST_SHARE, "test")
         .otherwise("train")
         .alias("split"),
     ).orderBy("doc_id")
@@ -325,7 +330,7 @@ def training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_tokens").between(MIX_MIN_TOKENS, MIX_MAX_TOKENS))
         .join(comps, "doc_id", "left")
         .filter(F.coalesce(F.col("keep_doc_id"), F.col("doc_id")) == F.col("doc_id"))
-        .filter(_u(F.col("doc_id"), "mixfinal") < MIX_SAMPLE_RATE)
+        .filter(_u("doc_id", "mixfinal") < MIX_SAMPLE_RATE)
     )
     return (
         mix.groupBy("source")
@@ -496,7 +501,7 @@ def output_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("n_tokens").between(MIX_MIN_TOKENS, MIX_MAX_TOKENS))
         .join(comps, "doc_id", "left")
         .filter(F.coalesce(F.col("keep_doc_id"), F.col("doc_id")) == F.col("doc_id"))
-        .filter(_u(F.col("doc_id"), "mixfinal") < MIX_SAMPLE_RATE)
+        .filter(_u("doc_id", "mixfinal") < MIX_SAMPLE_RATE)
     )
     line = F.concat_ws(
         ":", F.col("doc_id").cast("string"), F.col("source"), F.col("n_tokens").cast("string")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from sqload_spark.functions import hashing
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
 from sqload_spark.registry import query
 from sqload_spark.sources.tables import load_table
@@ -125,10 +126,7 @@ def training_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 N_SHARDS = 8
 
-_SHARD_SQL = (
-    "(('0x' || substr(md5('shard|' || CAST(l_orderkey AS VARCHAR)), 1, 8))::BIGINT"
-    f" % {N_SHARDS})"
-)
+_SHARD_SQL = hashing.duck_md5_bucket(hashing.duck_salted("shard", "l_orderkey"), N_SHARDS)
 
 
 @query(
@@ -158,14 +156,7 @@ def partial_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards fold into a running total without rescanning history;
     n_shards per group proves every shard contributed."""
     li = load_table(spark, sf_dir, "lineitem")
-    shard = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("shard|"), F.col("l_orderkey").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(N_SHARDS),
-    )
+    shard = F.expr(hashing.spark_md5_bucket(hashing.spark_salted("shard", "l_orderkey"), N_SHARDS))
     partials = (
         li.withColumn("shard", shard)
         .groupBy("shard", "l_returnflag")

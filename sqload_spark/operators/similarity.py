@@ -24,6 +24,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from sqload_spark.functions.hashing import duck_md5_uniform, py_md5_uniform, py_salted
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
 # Every pair path here dots ARRAY columns with the fold form; the measured
 # form-choice note is on vectors.dot_fold_sql.
@@ -788,8 +789,8 @@ _CE_ORACLE = f"""
     scored AS (
       SELECT q_id, n_id,
              floor(({CE_BLEND} * rel + {1.0 - CE_BLEND} *
-                    ((('0x' || substr(md5('ce|' || CAST(q_id AS VARCHAR) || '|' || CAST(n_id AS VARCHAR)), 1, 8))::BIGINT
-                      / 4294967296.0) - 0.5)) * 1000000.0 + 0.5) / 1000000.0 AS ce_score
+                    ({duck_md5_uniform("'ce|' || CAST(q_id AS VARCHAR) || '|' || CAST(n_id AS VARCHAR)")}
+                     - 0.5)) * 1000000.0 + 0.5) / 1000000.0 AS ce_score
       FROM cand
     )
     SELECT q_id, n_id, ce_score, rnk FROM (
@@ -805,8 +806,6 @@ _CE_ORACLE = f"""
 def crossencoder_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-encoder re-rank of bi-encoder candidates — stub model, real
     Arrow pair-batching plumbing; see the block comment."""
-    import hashlib
-
     import pandas as pd
 
     cand = _candidates(spark, sf_dir, CE_CANDIDATES)
@@ -817,13 +816,7 @@ def crossencoder_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             logits = [
-                (
-                    int(
-                        hashlib.md5(f"ce|{q}|{n}".encode()).hexdigest()[:8], 16
-                    )
-                    / 4294967296.0
-                )
-                - 0.5
+                py_md5_uniform(py_salted("ce", f"{q}|{n}")) - 0.5
                 for q, n in zip(pdf["q_id"], pdf["n_id"])
             ]
             score = CE_BLEND * pdf["rel"].to_numpy() + (1.0 - CE_BLEND) * np.asarray(logits)

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from sqload_spark.functions.hashing import duck_md5_int, spark_md5_int
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
 from sqload_spark.functions.text_funcs import LANG_MARKERS, STOPWORDS, tokens
 from sqload_spark.registry import query
@@ -230,12 +231,12 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_rolling_fingerprint",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM documents
     ), spans AS (
       SELECT doc_id,
-             [('0x' || substr(md5(concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3])), 1, 12))::BIGINT
+             [{duck_md5_int("concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3])", 12)}
               for i in range(1, greatest(len(t) - 3, 1) + 1)] AS hs
       FROM toks
     ), fps AS (
@@ -524,8 +525,7 @@ _PII_ORACLE = rf"""
     SELECT source, count(*) AS n_docs,
            CAST(sum(len(regexp_extract_all(text2, '{PII_RE}'))) AS BIGINT)
              AS n_redactions,
-           CAST(sum(('0x' || substr(md5(
-                 regexp_replace(text2, '{PII_RE}', '<EMAIL>', 'g')), 1, 8))::BIGINT)
+           CAST(sum({duck_md5_int(f"regexp_replace(text2, '{PII_RE}', '<EMAIL>', 'g')")})
              AS BIGINT) AS scrub_checksum
     FROM planted GROUP BY source ORDER BY source
 """
@@ -550,13 +550,11 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("@mail.example now"),
         ),
     ).otherwise(F.col("text"))
-    scrubbed = F.regexp_replace(planted, PII_RE, "<EMAIL>")
-    checksum = F.conv(F.substring(F.md5(scrubbed), 1, 8), 16, 10).cast("bigint")
     per_doc = docs.select(
         "source",
         F.size(F.regexp_extract_all(planted, F.lit(PII_RE), 0)).alias("n_hits"),
-        checksum.alias("ck"),
-    )
+        F.regexp_replace(planted, PII_RE, "<EMAIL>").alias("scrubbed"),
+    ).select("source", "n_hits", F.expr(spark_md5_int("scrubbed")).alias("ck"))
     return (
         per_doc.groupBy("source")
         .agg(

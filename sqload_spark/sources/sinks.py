@@ -22,9 +22,9 @@ equivalents:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 #: Directory-name sentinels for string partition keys. Hive-style layout
 #: collapses both NULL and '' into __HIVE_DEFAULT_PARTITION__, silently
@@ -33,6 +33,11 @@ from pyspark.sql.types import StringType
 #: trip lossless. A pruning filter on value F maps to escape(F).
 PARTITION_NULL_SENTINEL = "__null__"
 PARTITION_EMPTY_SENTINEL = "__empty__"
+
+
+def partition_twin(col: str) -> str:
+    """Directory column name of a string partition key's escaped twin."""
+    return f"__part_{col}"
 
 
 def partition_escape(col: str | Column) -> Column:
@@ -125,7 +130,7 @@ def write_partitioned_parquet(
     part_dirs: list[str] = []
     for c in partition_by or []:
         if isinstance(out.schema[c].dataType, StringType):
-            twin = f"__part_{c}"
+            twin = partition_twin(c)
             out = out.withColumn(twin, partition_escape(c))
             part_dirs.append(twin)
         else:
@@ -134,6 +139,22 @@ def write_partitioned_parquet(
     if part_dirs:
         writer = writer.partitionBy(*part_dirs)
     writer.parquet(path)
+
+
+def read_back_parquet(
+    spark: SparkSession, path: str, schema: StructType, partition_by: list[str] | None = None
+) -> DataFrame:
+    """Read the parquet that ``write_partitioned_parquet`` (or a plain
+    parquet write) made at ``path`` from a frame of ``schema``, with the
+    schema the writer held: the data columns, then the partition directory
+    columns, as inference would order them, but with no inference job."""
+    dirs = [
+        StructField(partition_twin(c), StringType()) if isinstance(schema[c].dataType, StringType)
+        else schema[c]
+        for c in partition_by or []
+    ]
+    data = [f for f in schema.fields if f not in dirs]
+    return spark.read.schema(StructType(data + dirs)).parquet(path)
 
 
 def write_jdbc(

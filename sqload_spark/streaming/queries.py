@@ -16,6 +16,7 @@ from functools import partial
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sqload_spark.functions import hashing
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
 from sqload_spark.operators.timeseries import FIVE_MIN_US, SESSION_GAP_US, TEN_MIN_US
 from sqload_spark.registry import query
@@ -30,16 +31,14 @@ from sqload_spark.session import scratch_dir
 
 
 def _md5_bucket(salt: str, n: int) -> Column:
-    """``event_id``'s deterministic hash bucket in [0, n): the first 32
-    bits of md5('{salt}|' || event_id), mod n — the Spark side of
-    ``_md5_bucket_sql``."""
-    salted = F.concat(F.lit(f"{salt}|"), F.col("event_id").cast("string"))
-    return F.pmod(F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("bigint"), F.lit(n))
+    """``event_id``'s deterministic hash bucket in [0, n) (the salted
+    ``functions.hashing`` bucket) — the Spark side of ``_md5_bucket_sql``."""
+    return F.expr(hashing.spark_md5_bucket(hashing.spark_salted(salt, "event_id"), n))
 
 
 def _md5_bucket_sql(salt: str, n: int) -> str:
     """DuckDB text of ``_md5_bucket`` (for the oracles)."""
-    return f"(('0x' || substr(md5('{salt}|' || CAST(event_id AS VARCHAR)), 1, 8))::BIGINT % {n})"
+    return hashing.duck_md5_bucket(hashing.duck_salted(salt, "event_id"), n)
 
 
 def _replay_buckets(ev: DataFrame, prefix: str, fn) -> None:

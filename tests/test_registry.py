@@ -6,6 +6,8 @@ actions (test_build_jobs_bounded)."""
 
 from __future__ import annotations
 
+import pytest
+
 from sqload_spark import registry
 from tests.conftest import SF_DIR
 
@@ -47,8 +49,8 @@ _BUILD_JOBS = {
     "pipe_training_mix": (14, _CC),
     "q_split_leakage_safe": (14, _CC),
     "dedup_pairs_materialized": (
-        16,
-        "pairs_materialized's parquet write (4) + the artifact's schema read (1) + "
+        15,
+        "pairs_materialized's parquet write (4) + "
         "edge count of the read-back pairs + CC convergence counts (11)",
     ),
     # corpus counts that pick the plan
@@ -57,12 +59,13 @@ _BUILD_JOBS = {
     "sim_topk_blas": (1, "topk_blas' query-set collect"),
     "etl_jdbc_bulk_load": (4, "the Derby JDBC write + the partition bounds' min/max, literals (4)"),
     # write-then-read-back ETL and source round trips: the artifact is written
-    # during build; a parquet read-back infers the written artifact's schema
-    "etl_dynamic_partition_overwrite": (3, "two partitioned parquet writes (2) + read-back schema (1)"),
-    "etl_file_sizing": (2, "the sorted parquet write (1) + read-back schema (1)"),
-    "etl_partition_pruning": (2, "the partitioned parquet write (1) + read-back schema (1)"),
-    "etl_partitioned_bulk_load": (4, "range-partition sampling and write (3) + read-back schema (1)"),
-    "etl_zorder_cluster": (4, "range-partition sampling and write (3) + read-back schema (1)"),
+    # during build; the parquet read-backs take the writer's schema
+    # (sinks.read_back_parquet), so they infer nothing
+    "etl_dynamic_partition_overwrite": (2, "two partitioned parquet writes (2)"),
+    "etl_file_sizing": (1, "the sorted parquet write (1)"),
+    "etl_partition_pruning": (1, "the partitioned parquet write (1)"),
+    "etl_partitioned_bulk_load": (3, "range-partition sampling and write (3)"),
+    "etl_zorder_cluster": (3, "range-partition sampling and write (3)"),
     "q_join_bucketed_colocated": (2, "the two bucketed saveAsTable writes"),
     "src_schema_evolution": (3, "two parquet writes (2) + the merged-schema read (1)"),
     "src_csv_corrupt_tolerant": (1, "the text write"),
@@ -99,3 +102,18 @@ def test_build_jobs_bounded(spark):
         if n_jobs > bound:
             over[name] = (n_jobs, bound)
     assert not over, f"build-time jobs over their bound (jobs, bound): {over}"
+
+
+@pytest.mark.parametrize("prior", [None, "STATIC"])
+def test_dynamic_overwrite_restores_overwrite_mode(spark, prior):
+    """etl_dynamic_partition_overwrite pins dynamic partition overwrite only
+    for its restating write: afterwards the conf is back at its prior
+    value, or unset again."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    if prior is not None:
+        spark.conf.set(key, prior)
+    try:
+        registry.QUERIES["etl_dynamic_partition_overwrite"](spark, SF_DIR)
+        assert spark.conf.get(key, None) == prior
+    finally:
+        spark.conf.unset(key)
