@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from sqload_spark.functions.hashing import duck_md5_int, spark_md5_int
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
-from sqload_spark.functions.text_funcs import hamming64, shingle_hashes, shingles, tokens
+from sqload_spark.functions.text_funcs import duck_ngrams, hamming64, shingle_hashes, shingles, tokens
 from sqload_spark.registry import query
 from sqload_spark.session import persist_bounded
 from sqload_spark.sources.tables import load_table, load_vectors
@@ -41,11 +41,9 @@ COSINE_DUP_THRESHOLD = 0.35
 # ---------------------------------------------------------------------------
 
 # Each document's distinct 3-gram shingles, as strings.
-_DUCK_SH = """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+_DUCK_SH = f"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
     sh AS (
-      SELECT doc_id,
-             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2]
-                                   for i in range(1, len(t) - 1)])) AS sh
+      SELECT doc_id, unnest(list_distinct({duck_ngrams("t", 3)})) AS sh
       FROM toks
     )"""
 _DUCK_CNT = "cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)"

@@ -238,9 +238,8 @@ def partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "etl_upsert_latest",
-    oracle="""
+# Shared with stream_upsert_compaction, whose delta fold must equal it.
+UPSERT_LATEST_ORACLE = """
     SELECT user_id, event_type AS last_type, last_us, n_versions FROM (
       SELECT user_id, event_type, epoch_us(ts) AS last_us,
              count(*) OVER (PARTITION BY user_id) AS n_versions,
@@ -250,8 +249,10 @@ def partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events)
     WHERE rn = 1
     ORDER BY user_id
-    """,
-)
+    """
+
+
+@query("etl_upsert_latest", oracle=UPSERT_LATEST_ORACLE)
 def upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC/upsert compaction — the MERGE half of every bulk-load pipeline:
     collapse an append-only change stream to the LATEST row per key

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from sqload_spark.functions import hashing
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
+from sqload_spark.functions.text_funcs import tokens
 from sqload_spark.operators.dedup import DUCK_CANONICAL_FP, canonical_fp
 from sqload_spark.operators.sampling import chunk_rows, duck_chunks
 from sqload_spark.registry import query
@@ -83,7 +84,7 @@ def rag_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "lang", "text", canonical_fp().alias("fp"))
         .withColumn("keep_id", keep)
         .filter(F.col("doc_id") == F.col("keep_id"))
-        .select("doc_id", "lang", F.split(F.col("text"), " ").alias("t"))
+        .select("doc_id", "lang", tokens(F.col("text")).alias("t"))
     )
     chunks = chunk_rows(survivors, "doc_id", "lang")
     dim_u = [

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sqload_spark.functions import hashing
+from sqload_spark.functions.text_funcs import tokens
 from sqload_spark.operators.dedup import _DUCK_REACH, component_labels
 from sqload_spark.registry import ORACLES, query
 from sqload_spark.sources.tables import load_table
@@ -194,7 +195,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows out ≈ tokens/stride, no Python. chunk_fp is the md5 of the chunk
     text so the oracle hash-checks actual content, not just shapes."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("t"))
+    toks = docs.select("doc_id", tokens(F.col("text")).alias("t"))
     return chunk_rows(toks, "doc_id").orderBy("doc_id", "chunk_idx")
 
 
@@ -273,7 +274,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = docs.select(
         "doc_id",
         "source",
-        F.size(F.split("text", " ")).alias("n"),
+        F.size(tokens(F.col("text"))).alias("n"),
     ).withColumn("cum", F.sum("n").over(w))
     return (
         pos.select(
@@ -289,6 +290,21 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MIX_MIN_TOKENS, MIX_MAX_TOKENS = 20, 60
 MIX_SAMPLE_RATE = 0.5
+
+
+def _mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The curation pipeline's surviving documents (doc_id, source,
+    n_tokens, ...): the length gate, the near-dup survivors (each
+    component's minimum doc_id) and the deterministic hash sample — the
+    `mix` CTE that both pipeline oracles share."""
+    docs = load_table(spark, sf_dir, "documents")
+    return (
+        docs.select("doc_id", "source", F.size(tokens(F.col("text"))).alias("n_tokens"))
+        .filter(F.col("n_tokens").between(MIX_MIN_TOKENS, MIX_MAX_TOKENS))
+        .join(component_labels(docs), "doc_id", "left")
+        .filter(F.coalesce(F.col("keep_doc_id"), F.col("doc_id")) == F.col("doc_id"))
+        .filter(_u("doc_id", "mixfinal") < MIX_SAMPLE_RATE)
+    )
 
 
 @query(
@@ -322,18 +338,9 @@ def training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is map-side or LSH-bounded; the oracle replays the identical
     pipeline in SQL (recursive CTE for the cluster step), so the entire
     composition is hash-checked end-to-end."""
-    docs = load_table(spark, sf_dir, "documents")
-    comps = component_labels(docs)
-    n_tokens = F.size(F.split("text", " "))
-    mix = (
-        docs.select("doc_id", "source", n_tokens.alias("n_tokens"))
-        .filter(F.col("n_tokens").between(MIX_MIN_TOKENS, MIX_MAX_TOKENS))
-        .join(comps, "doc_id", "left")
-        .filter(F.coalesce(F.col("keep_doc_id"), F.col("doc_id")) == F.col("doc_id"))
-        .filter(_u("doc_id", "mixfinal") < MIX_SAMPLE_RATE)
-    )
     return (
-        mix.groupBy("source")
+        _mix(spark, sf_dir)
+        .groupBy("source")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tokens").cast("bigint").alias("total_tokens"))
         .orderBy("source")
     )
@@ -493,16 +500,7 @@ def output_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove bit-level reproducibility in O(1) comparison. The global
     string_agg runs on the FINAL manifest (hundreds of rows here, always
     report-scale), not the corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    comps = component_labels(docs)
-    n_tokens = F.size(F.split("text", " "))
-    mix = (
-        docs.select("doc_id", "source", n_tokens.alias("n_tokens"))
-        .filter(F.col("n_tokens").between(MIX_MIN_TOKENS, MIX_MAX_TOKENS))
-        .join(comps, "doc_id", "left")
-        .filter(F.coalesce(F.col("keep_doc_id"), F.col("doc_id")) == F.col("doc_id"))
-        .filter(_u("doc_id", "mixfinal") < MIX_SAMPLE_RATE)
-    )
+    mix = _mix(spark, sf_dir)
     line = F.concat_ws(
         ":", F.col("doc_id").cast("string"), F.col("source"), F.col("n_tokens").cast("string")
     )
@@ -563,7 +561,7 @@ def length_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-grouped batch assignment with per-batch padding-waste
     accounting — see block comment."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.col("text"), " "))
+    n_tokens = F.size(tokens(F.col("text")))
     dl = docs.select("doc_id", n_tokens.alias("n_tokens"))
     bucket = (F.col("n_tokens") / LEN_BAND_TOKENS).cast("long")
     order_key = F.md5(F.concat(F.lit("batch|"), F.col("doc_id").cast("string")))

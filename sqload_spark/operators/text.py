@@ -14,7 +14,20 @@ from pyspark.sql import functions as F
 
 from sqload_spark.functions.hashing import duck_md5_int, spark_md5_int
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
-from sqload_spark.functions.text_funcs import LANG_MARKERS, STOPWORDS, tokens
+from sqload_spark.functions.text_funcs import (
+    LANG_MARKERS,
+    STOPWORDS,
+    duck_max_frequency,
+    duck_ngrams,
+    duck_token_features,
+    duck_word_windows,
+    max_frequency_sql,
+    ngrams_sql,
+    rolling_fingerprints,
+    token_features_sql,
+    tokens,
+    word_windows_sql,
+)
 from sqload_spark.registry import query
 from sqload_spark.sources.tables import load_table
 
@@ -150,11 +163,9 @@ def langid_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUALITY_ORACLE = f"""
     WITH feats AS (
       SELECT doc_id,
-             len(string_split(text, ' ')) AS n_tokens,
-             len(list_distinct(string_split(text, ' '))) AS n_distinct,
+             {duck_token_features("string_split(text, ' ')")},
              len(list_filter(string_split(text, ' '),
-                 t -> t IN ({", ".join("'" + w + "'" for w in STOPWORDS)}))) AS n_stop,
-             list_sum(list_transform(string_split(text, ' '), t -> len(t))) AS tok_chars
+                 t -> t IN ({", ".join("'" + w + "'" for w in STOPWORDS)}))) AS n_stop
       FROM documents
     )
     SELECT doc_id, n_tokens,
@@ -179,10 +190,8 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would re-split the text four times per row)
     feats = docs.select("doc_id", tokens(F.col("text")).alias("t")).select(
         "doc_id",
-        F.size("t").cast("bigint").alias("n_tokens"),
-        F.size(F.array_distinct("t")).cast("bigint").alias("n_distinct"),
+        *map(F.expr, token_features_sql("t")),
         F.size(F.filter(F.col("t"), lambda t: t.isin(*STOPWORDS))).cast("bigint").alias("n_stop"),
-        F.aggregate(F.col("t"), F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)).alias("tok_chars"),
     )
     ttr = F.col("n_distinct").cast("double") / F.col("n_tokens")
     stop_ratio = F.col("n_stop").cast("double") / F.col("n_tokens")
@@ -236,8 +245,9 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, string_split(text, ' ') AS t FROM documents
     ), spans AS (
       SELECT doc_id,
-             [{duck_md5_int("concat_ws(' ', t[i], t[i+1], t[i+2], t[i+3])", 12)}
-              for i in range(1, greatest(len(t) - 3, 1) + 1)] AS hs
+             [{duck_md5_int("sp", 12)}
+              for sp in (CASE WHEN len(t) >= 4 THEN {duck_ngrams("t", 4)}
+                         ELSE [coalesce(array_to_string(t, ' '), '')] END)] AS hs
       FROM toks
     ), fps AS (
       SELECT doc_id, unnest(list_sort(list_distinct(hs))[1:8]) AS fp FROM spans
@@ -259,12 +269,8 @@ def rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     output per doc → bounded shuffle at scale). The oracle repeats the
     identical construction in SQL (DuckDB list comprehension), so the whole
     pipeline is hash-checked, not rows-only."""
-    from sqload_spark.functions.text_funcs import rolling_fingerprints
-
     docs = load_table(spark, sf_dir, "documents")
-    fps = docs.select(
-        "doc_id", F.explode(rolling_fingerprints(tokens(F.col("text")))).alias("fp")
-    )
+    fps = docs.select("doc_id", F.explode(rolling_fingerprints("text")).alias("fp"))
     return (
         fps.groupBy("fp")
         .agg(
@@ -328,7 +334,7 @@ def bpe_regex_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays JVM-side; one aggregate shuffle on source."""
     docs = load_table(spark, sf_dir, "documents")
     n_bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_RE), 0))
-    n_ws = F.size(F.split(F.col("text"), " "))
+    n_ws = F.size(tokens(F.col("text")))
     per = docs.select("source", n_bpe.alias("n_bpe"), n_ws.alias("n_ws"))
     return (
         per.groupBy("source")
@@ -358,8 +364,7 @@ _CONTAM_ORACLE = f"""
       FROM toks WHERE doc_id % {CONTAM_BENCH_MOD} = 0 AND len(t) >= {CONTAM_NGRAM}
     ),
     grams AS (
-      SELECT doc_id, unnest([array_to_string(t[i:i+{CONTAM_NGRAM - 1}], ' ')
-                             for i in range(1, len(t) - {CONTAM_NGRAM - 2})]) AS g
+      SELECT doc_id, unnest({duck_ngrams("t", CONTAM_NGRAM)}) AS g
       FROM toks WHERE len(t) >= {CONTAM_NGRAM}
     ),
     hits AS (SELECT DISTINCT doc_id FROM grams WHERE g IN (SELECT g FROM bench))
@@ -376,13 +381,9 @@ _CONTAM_ORACLE = f"""
 def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-contamination scan: flag every training doc sharing any
     token 5-gram with the eval set. Corpus 5-grams are generated map-side
-    (sequence+transform, no UDF), matched against the broadcast benchmark
+    (the word-window kernel, no UDF), matched against the broadcast benchmark
     with a semi-join, and only the (small) hit set of doc_ids shuffles;
-    the per-source report is one narrow aggregate.
-
-    The token array is materialized as a column BEFORE the gram lambda:
-    referencing the split() expression inside the lambda body makes Catalyst
-    re-evaluate the split once per index (measured 12 s → ~1 s at sf0.1)."""
+    the per-source report is one narrow aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     t = tokens(F.col("text"))
     long_docs = docs.select("doc_id", t.alias("t")).filter(F.size("t") >= CONTAM_NGRAM)
@@ -391,12 +392,8 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.array_join(F.slice(F.col("t"), 1, CONTAM_NGRAM), " ").alias("g"))
         .distinct()
     )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("t") - (CONTAM_NGRAM - 1)),
-        lambda i: F.array_join(F.slice(F.col("t"), i, CONTAM_NGRAM), " "),
-    )
     hits = (
-        long_docs.select("doc_id", F.explode(grams).alias("g"))
+        long_docs.select("doc_id", F.explode(F.expr(ngrams_sql("t", CONTAM_NGRAM))).alias("g"))
         .join(F.broadcast(bench), "g", "leftsemi")
         .select("doc_id")
         .distinct()
@@ -424,15 +421,12 @@ REP_TOP_BIGRAM_FRAC = 0.08
 
 _REP_ORACLE = f"""
     WITH toks AS (SELECT doc_id, source, string_split(text, ' ') AS t FROM documents),
-    feats0 AS (SELECT doc_id, source, t,
-               [t[i] || ' ' || t[i+1] for i in range(1, len(t))] AS bg
+    feats0 AS (SELECT doc_id, source, t, {duck_ngrams("t", 2)} AS bg
                FROM toks WHERE len(t) >= 2),
     feats AS (
       SELECT doc_id, source,
              1.0 - len(list_distinct(t))::DOUBLE / len(t) AS dup_frac,
-             list_max(list_transform(list_distinct(bg),
-                      g -> len(list_filter(bg, x -> x = g))))::DOUBLE / len(bg)
-               AS top_bigram_frac
+             {duck_max_frequency("bg")}::DOUBLE / len(bg) AS top_bigram_frac
       FROM feats0)
     SELECT source, count(*) AS n_docs,
            CAST(sum(CASE WHEN dup_frac > {REP_DUP_FRAC}
@@ -451,39 +445,15 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold. Both features are pure array expressions evaluated per doc
     map-side (no explode, no per-doc shuffle); the only shuffle in the
     whole plan is the final per-source aggregate, so the filter costs one
-    corpus scan at any scale.
-
-    The top-bigram count is a run-length scan over the SORTED bigram array
-    (one aggregate() pass, O(n log n) per doc) — the first version counted
-    each distinct bigram with a nested transform+filter, O(distinct × n)
-    interpreted lambda evaluations per doc, which measured 11 s at sf0.1
-    vs 1.4 s for this formulation. Same value, same oracle."""
+    corpus scan at any scale. The top-bigram count is the max-frequency
+    fold (text_funcs.max_frequency_sql)."""
     docs = load_table(spark, sf_dir, "documents")
     t = tokens(F.col("text"))
     # select-then-filter: filtering on the raw tokens() subtree and THEN
     # aliasing it would split each text twice per row
     base = docs.select("doc_id", "source", t.alias("t")).filter(F.size("t") >= 2)
-    bg = F.transform(
-        F.sequence(F.lit(1), F.size("t") - 1),
-        lambda i: F.concat(
-            F.element_at(F.col("t"), i), F.lit(" "), F.element_at(F.col("t"), i + 1)
-        ),
-    )
-    run = F.aggregate(
-        F.array_sort(F.col("bg")),
-        F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-        ),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc.best, F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1))
-            ).alias("best"),
-        ),
-        lambda acc: acc.best,
-    )
-    feats = base.withColumn("bg", bg).select(
+    run = F.expr(max_frequency_sql("bg"))
+    feats = base.withColumn("bg", F.expr(ngrams_sql("t", 2))).select(
         "source",
         (F.lit(1.0) - F.size(F.array_distinct("t")).cast("double") / F.size("t")).alias(
             "dup_frac"
@@ -578,11 +548,8 @@ GOPHER_MAX_TOP_SHARE = 0.20
 _GOPHER_ORACLE = f"""
     WITH feats AS (
       SELECT doc_id, source,
-             len(string_split(text, ' ')) AS n_tokens,
-             len(list_distinct(string_split(text, ' '))) AS n_distinct,
-             list_sum(list_transform(string_split(text, ' '), t -> len(t))) AS tok_chars,
-             list_max(list_transform(list_distinct(string_split(text, ' ')),
-                 t -> len(list_filter(string_split(text, ' '), x -> x = t)))) AS top_tok
+             {duck_token_features("string_split(text, ' ')")},
+             {duck_max_frequency("string_split(text, ' ')")} AS top_tok
       FROM documents
     ), flagged AS (
       SELECT doc_id, source,
@@ -617,34 +584,13 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     census aggregate shuffles. The standard first gate of a web-scale
     curation pipeline."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    # Per-doc max token frequency: run-length scan over the SORTED token
-    # array (the text_repetition_filter fold — one aggregate() pass,
-    # O(n log n) per doc). The transform+filter alternative is
-    # O(distinct × n) AND re-inlines the split subtree per distinct token
-    # inside the interpreted lambda (the round-7 shingles() lesson): fine
-    # on this corpus's short docs, a multi-second stall on any long
-    # high-diversity document. NULL text keeps the old NULL top_tok
-    # (aggregate over a NULL array is NULL, as array_max(NULL) was).
-    top_tok = F.aggregate(
-        F.array_sort(F.col("t")),
-        F.struct(F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")),
-        lambda acc, x: F.struct(
-            x.alias("prev"),
-            F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc.best, F.when(x == acc.prev, acc.run + 1).otherwise(F.lit(1))
-            ).alias("best"),
-        ),
-        lambda acc: acc.best,
-    )
-    feats = docs.select("doc_id", "source", toks.alias("t")).select(
+    # The dominance rule is the max-frequency fold (NULL text keeps a NULL
+    # top_tok, as the oracle's list_max over NULL does).
+    feats = docs.select("doc_id", "source", tokens(F.col("text")).alias("t")).select(
         "doc_id",
         "source",
-        F.size("t").cast("bigint").alias("n_tokens"),
-        F.size(F.array_distinct("t")).cast("bigint").alias("n_distinct"),
-        F.aggregate(F.col("t"), F.lit(0).cast("long"), lambda a, t: a + F.length(t)).alias("tok_chars"),
-        top_tok.cast("bigint").alias("top_tok"),
+        *map(F.expr, token_features_sql("t")),
+        F.expr(f"CAST({max_frequency_sql('t')} AS BIGINT) AS top_tok"),
     )
     f_len = F.when(
         (F.col("n_tokens") < GOPHER_MIN_TOKENS) | (F.col("n_tokens") > GOPHER_MAX_TOKENS), 1
@@ -945,8 +891,8 @@ _BIGRAM_ORACLE = """
     WITH toks AS (
       SELECT doc_id, string_split(text, ' ') AS t FROM documents
     ), big_all AS (
-      SELECT doc_id, t[i] AS w1, t[i + 1] AS w2
-      FROM (SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks)
+      SELECT doc_id, w[1] AS w1, w[2] AS w2
+      FROM (SELECT doc_id, unnest({windows}) AS w FROM toks)
     ), train_uni AS (
       SELECT w, count(*) AS c FROM (
         SELECT unnest(t) AS w FROM toks WHERE doc_id % 2 = 0) GROUP BY w
@@ -973,30 +919,22 @@ _BIGRAM_ORACLE = """
     SELECT doc_id, count(*) AS n_bigrams,
            {score} AS avg_nll
     FROM scored GROUP BY doc_id ORDER BY doc_id
-""".format(alpha=BIGRAM_ALPHA, score=sql_round_half_up("sum(-ln(p)) / count(*)", 4))
+""".format(
+    windows=duck_word_windows("t", 2),
+    alpha=BIGRAM_ALPHA,
+    score=sql_round_half_up("sum(-ln(p)) / count(*)", 4),
+)
 
 
 @query("text_bigram_logprob", oracle=_BIGRAM_ORACLE)
 def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out bigram LM scoring with stupid backoff — see block comment."""
     docs = load_table(spark, sf_dir, "documents")
-    t = tokens(F.col("text"))
-    # The lambda reads the MATERIALIZED "t" column, never the raw tokens()
-    # subtree: element_at(<subtree>, i) re-splits the text per bigram inside
-    # the interpreted lambda — O(tokens²) per doc (the round-7 shingles()
-    # lesson; one 12K-token hazard doc costs seconds by itself).
-    bigram_structs = F.transform(
-        F.sequence(F.lit(1), F.size("t") - 1),
-        lambda i: F.struct(
-            F.element_at(F.col("t"), i).alias("w1"),
-            F.element_at(F.col("t"), i + 1).alias("w2"),
-        ),
-    )
     big_all = (
-        docs.select("doc_id", t.alias("t"))
+        docs.select("doc_id", tokens(F.col("text")).alias("t"))
         .filter(F.size("t") >= 2)
-        .select("doc_id", F.explode(bigram_structs).alias("bg"))
-        .select("doc_id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+        .select("doc_id", F.explode(F.expr(word_windows_sql("t", 2))).alias("bg"))
+        .select("doc_id", F.col("bg.`0`").alias("w1"), F.col("bg.`1`").alias("w2"))
     )
     train_docs = docs.filter(F.col("doc_id") % 2 == 0)
     train_uni = (

@@ -40,9 +40,8 @@ def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events").withColumn("ts_us", _ts_us())
 
 
-@query(
-    "ts_tumbling_window",
-    oracle=f"""
+# Shared with stream_tumbling_counts, whose stream runs to the same result.
+TUMBLING_ORACLE = f"""
     SELECT (epoch_us(ts) // {TEN_MIN_US}) * 600 AS ws_sec,
            event_type,
            count(*) AS n_events,
@@ -50,8 +49,10 @@ def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     ORDER BY ws_sec, event_type
-    """,
-)
+    """
+
+
+@query("ts_tumbling_window", oracle=TUMBLING_ORACLE)
 def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute tumbling windows per event type (integer bucket math;
     ws_sec = window start in epoch seconds)."""
@@ -64,9 +65,8 @@ def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ts_sliding_window",
-    oracle=f"""
+# Shared with stream_sliding_counts.
+SLIDING_ORACLE = f"""
     WITH assigned AS (
       SELECT (epoch_us(ts) // {FIVE_MIN_US}) * 300 AS ws_sec, value FROM events
       UNION ALL
@@ -77,8 +77,10 @@ def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM assigned
     GROUP BY ws_sec
     ORDER BY ws_sec
-    """,
-)
+    """
+
+
+@query("ts_sliding_window", oracle=SLIDING_ORACLE)
 def sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute windows sliding every 5 minutes: each event lands in two
     windows (its 5-min bucket and the one 5 min earlier) — the explicit

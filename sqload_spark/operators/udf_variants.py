@@ -23,40 +23,52 @@ from sqload_spark.registry import query
 from sqload_spark.sources.tables import load_table
 
 
-@F.pandas_udf(
-    T.StructType(
-        [
-            T.StructField("n_tokens", T.LongType()),
-            T.StructField("type_token_ratio", T.DoubleType()),
-            T.StructField("stopword_ratio", T.DoubleType()),
-            T.StructField("avg_token_len", T.DoubleType()),
-            T.StructField("quality", T.DoubleType()),
-        ]
-    )
+# The quality feature row: one field per QUALITY_ORACLE output column.
+_QUALITY_TYPE = T.StructType(
+    [T.StructField("n_tokens", T.LongType())]
+    + [
+        T.StructField(c, T.DoubleType())
+        for c in ("type_token_ratio", "stopword_ratio", "avg_token_len", "quality")
+    ]
 )
-def _quality_features(text: pd.Series) -> pd.DataFrame:
-    """Vectorized quality features (one Arrow batch per call)."""
+
+
+def _quality_row():
+    """The quality feature row of one text, as a closure over the stopword
+    set: a closure is pickled by value and names no package global, so the
+    Python workers that run it import nothing from ``sqload_spark``."""
     import math
 
     stop = set(STOPWORDS)
-    rows = []
-    for t in text:
+
+    def r4(x: float) -> float:
+        return math.floor(x * 10000.0 + 0.5) / 10000.0
+
+    def row(t: str | None) -> tuple:
         if t is None:
             # NULL text: the expression twin and the SQL oracle both
             # null-propagate (string_split(NULL) → NULL features), so the
             # Python path must emit the same all-NULL row, not crash the
             # stage (tools/adversarial_run.py).
-            rows.append((None, None, None, None, None))
-            continue
+            return (None, None, None, None, None)
         toks = t.split(" ")
         n = len(toks)
         ttr = len(set(toks)) / n
         stop_ratio = sum(1 for w in toks if w in stop) / n
         avg_len = sum(len(w) for w in toks) / n
         quality = 0.4 * ttr + 0.3 * (1 - stop_ratio) + 0.3 * min(n / 50.0, 1.0)
-        r4 = lambda x: math.floor(x * 10000.0 + 0.5) / 10000.0
-        rows.append((n, r4(ttr), r4(stop_ratio), r4(avg_len), r4(quality)))
-    return pd.DataFrame(rows, columns=["n_tokens", "type_token_ratio", "stopword_ratio", "avg_token_len", "quality"])
+        return (n, r4(ttr), r4(stop_ratio), r4(avg_len), r4(quality))
+
+    return row
+
+
+_QUALITY_ROW = _quality_row()
+
+
+@F.pandas_udf(_QUALITY_TYPE)
+def _quality_features(text: pd.Series) -> pd.DataFrame:
+    """Vectorized quality features (one Arrow batch per call)."""
+    return pd.DataFrame([_QUALITY_ROW(t) for t in text], columns=_QUALITY_TYPE.names)
 
 
 @query("text_quality_pandas_udf", oracle=QUALITY_ORACLE)
@@ -68,10 +80,7 @@ def quality_pandas_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sampling job runs the whole child plan, so every row would go through
     # Python twice (python.rows 2,000 for 1,000 documents, traced).
     docs = load_table(spark, sf_dir, "documents").orderBy("doc_id")
-    return (
-        docs.select("doc_id", _quality_features(F.col("text")).alias("f"))
-        .select("doc_id", "f.n_tokens", "f.type_token_ratio", "f.stopword_ratio", "f.avg_token_len", "f.quality")
-    )
+    return docs.select("doc_id", _quality_features(F.col("text")).alias("f")).select("doc_id", "f.*")
 
 
 def _top_terms_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -116,34 +125,7 @@ def quality_arrow_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven interchangeable. Scalar UDFs remain the slowest tier (one
     Python call per row vs per batch) — registered to complete the
     taxonomy, not as a hot path."""
-    import math
-
-    stop = set(STOPWORDS)
-
-    @F.udf(
-        returnType=T.StructType(
-            [
-                T.StructField("n_tokens", T.LongType()),
-                T.StructField("type_token_ratio", T.DoubleType()),
-                T.StructField("stopword_ratio", T.DoubleType()),
-                T.StructField("avg_token_len", T.DoubleType()),
-                T.StructField("quality", T.DoubleType()),
-            ]
-        ),
-        useArrow=True,
-    )
-    def features(t: str):
-        if t is None:
-            # same NULL row the expression twin / oracle produce
-            return (None, None, None, None, None)
-        toks = t.split(" ")
-        n = len(toks)
-        ttr = len(set(toks)) / n
-        stop_ratio = sum(1 for w in toks if w in stop) / n
-        avg_len = sum(len(w) for w in toks) / n
-        quality = 0.4 * ttr + 0.3 * (1 - stop_ratio) + 0.3 * min(n / 50.0, 1.0)
-        r4 = lambda x: math.floor(x * 10000.0 + 0.5) / 10000.0
-        return (n, r4(ttr), r4(stop_ratio), r4(avg_len), r4(quality))
+    features = F.udf(_QUALITY_ROW, returnType=_QUALITY_TYPE, useArrow=True)
 
     # sorted before the UDF, as in quality_pandas_udf: one Python call per row
     docs = load_table(spark, sf_dir, "documents").orderBy("doc_id")

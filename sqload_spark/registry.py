@@ -60,17 +60,15 @@ _loaded = False
 # ROUND-13+ RECIPE (the standing rule every round):
 #   1. any name the newest CORRECTNESS_rNN unexpectedly missed or errored;
 #   2. every name whose implementation changed since its last external
-#      check (now: every name on the one md5 kernel (functions/hashing.py),
-#      the one Count-Min body, rag's shared chunker and exact-dedup key,
-#      or an ETL read-back with the writer's schema; then every stream
-#      through the one runner, whose checkpoint manager is pinned per run
-#      (windows.local_checkpoint_scope); then the batch queries that read
-#      events, whose ts layout now comes from the parquet footer
-#      (tables.stored_ts_type), up to the 50th slot — the other events
-#      readers (the rest of ts_*, the register_views SQL queries), the
-#      perfbench `queries` names, the embedding queries on the shared
-#      cosine steps and the dedup_* near-dup queries on SQL-text shingles
-#      wait for the next window);
+#      check (now: every text query on the one word-window kernel, token
+#      features and max-frequency fold (functions/text_funcs.py), every
+#      oracle on the kernel's DuckDB shingles, the one curation mix body
+#      and the tokens() callers, and the three streams that share their
+#      batch twin's oracle constant, with those twins; then the md5-kernel
+#      and read-back names of the previous window up to the 50th slot —
+#      etl_zorder_cluster, the other runner streams and the events
+#      readers whose ts layout comes from the parquet footer
+#      (tables.stored_ts_type) wait for the next window);
 #   3. fill to 50 with the stalest hash-green names per
 #      tools/coverage_report.py --list — the listing is authoritative,
 #      recompute it, don't trust this comment.
@@ -83,30 +81,33 @@ _loaded = False
 # judge-sample protocol) for standing evidence.
 
 _PRIORITY = [
-    # -- the one md5 kernel, Count-Min body, chunker and dedup key -----------
+    # -- the text family on the one word-window kernel, token features and
+    #    max-frequency fold (functions/text_funcs.py) ------------------------
+    "text_rolling_fingerprint", "text_contamination_ngram",
+    "text_repetition_filter", "text_gopher_quality", "text_quality_score",
+    "text_bigram_logprob", "text_quality_pandas_udf", "text_quality_arrow_udf",
+    "text_bpe_regex_tokens",
+    # -- oracles on the kernel's DuckDB shingles (dedup._DUCK_SH) ------------
+    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_minhash_checked",
+    "dedup_minhash_eval", "dedup_simhash_checked", "dedup_prefix_filter",
+    "dedup_edit_distance", "dedup_cross_source_matrix",
+    "dedup_incremental_shard", "dedup_keep_list", "dedup_keep_list_weighted",
+    "dedup_cluster_sizes", "dedup_pairs_materialized",
+    # -- the one curation mix body, shingle-chain oracles, tokens() callers --
+    "pipe_training_mix", "pipe_output_manifest", "q_split_leakage_safe",
+    "q_chunk_documents", "pipe_rag_corpus", "q_pack_sequences",
+    "q_length_bucketed_batches",
+    # -- streams sharing their batch twin's oracle constant, and the twins ---
+    "stream_tumbling_counts", "stream_sliding_counts",
+    "stream_upsert_compaction", "ts_tumbling_window", "ts_sliding_window",
+    "etl_upsert_latest",
+    # -- carried from the previous window: the md5 kernel and read-backs -----
     "q_sample_hash", "q_sample_stratified", "q_mix_rebalance",
-    "q_split_leakage_safe", "pipe_training_mix", "pipe_output_manifest",
-    "q_chunk_documents", "pipe_rag_corpus", "q_partial_agg_merge",
-    "sketch_count_min", "sketch_hll_merge", "sketch_cms_checked",
-    "text_pii_scrub", "text_rolling_fingerprint", "mm_frame_sample",
-    "sim_crossencoder_rerank", "dedup_exact_groups", "dedup_simhash_checked",
-    "dedup_minhash_checked", "dedup_minhash_eval",
-    # -- ETL read-backs with the writer's schema ------------------------------
-    "dedup_pairs_materialized", "etl_partitioned_bulk_load",
-    "etl_partition_pruning", "etl_file_sizing", "etl_dynamic_partition_overwrite",
-    "etl_zorder_cluster",
-    # -- streams: the md5 stream buckets, then the rest of the one runner -----
-    "stream_microbatch_progress", "stream_upsert_compaction",
-    "stream_late_data_policy", "stream_tumbling_counts", "stream_session_window",
-    "stream_dedup_events", "stream_sliding_counts", "stream_drift_scores",
-    "stream_stateful_profile", "stream_static_enrich",
-    "stream_stream_interval_join", "stream_stream_left_outer",
-    # -- events consumers: ts layout from the footer (tables.stored_ts_type) --
-    "etl_scd2_history", "etl_upsert_latest",
-    "src_csv_corrupt_tolerant", "src_text_logparse", "q_from_json_map",
-    "q_json_extract", "q_mode_per_group", "qds_hour_bands",
-    "ts_anomaly_days", "ts_asof_join", "ts_asof_nearest_tolerance",
-    "ts_daily_rate",
+    "q_partial_agg_merge", "sketch_count_min", "sketch_hll_merge",
+    "sketch_cms_checked", "text_pii_scrub", "mm_frame_sample",
+    "sim_crossencoder_rerank", "dedup_exact_groups",
+    "etl_partitioned_bulk_load", "etl_partition_pruning", "etl_file_sizing",
+    "etl_dynamic_partition_overwrite",
 ]
 
 

@@ -18,7 +18,13 @@ from pyspark.sql import functions as F
 
 from sqload_spark.functions import hashing
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
-from sqload_spark.operators.timeseries import FIVE_MIN_US, SESSION_GAP_US, TEN_MIN_US
+from sqload_spark.operators.etl import UPSERT_LATEST_ORACLE
+from sqload_spark.operators.timeseries import (
+    SESSION_GAP_US,
+    SLIDING_ORACLE,
+    TEN_MIN_US,
+    TUMBLING_ORACLE,
+)
 from sqload_spark.registry import query
 from sqload_spark.streaming.windows import (
     events_source_bytes,
@@ -56,18 +62,7 @@ def _replay_buckets(ev: DataFrame, prefix: str, fn) -> None:
     run_available_now(ev.sparkSession, stream.parquet(in_dir).writeStream.foreachBatch(fn))
 
 
-@query(
-    "stream_tumbling_counts",
-    oracle=f"""
-    SELECT (epoch_us(ts) // {TEN_MIN_US}) * 600 AS ws_sec,
-           event_type,
-           count(*) AS n_events,
-           {sql_round_half_up("sum(value)", 2)} AS sum_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY ws_sec, event_type
-    """,
-)
+@query("stream_tumbling_counts", oracle=TUMBLING_ORACLE)
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream → watermark → 10-min tumbling window per event type →
     memory sink, run to completion. Identical result contract to the batch
@@ -227,21 +222,7 @@ def stream_microbatch_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_sliding_counts",
-    oracle=f"""
-    WITH assigned AS (
-      SELECT (epoch_us(ts) // {FIVE_MIN_US}) * 300 AS ws_sec, value FROM events
-      UNION ALL
-      SELECT (epoch_us(ts) // {FIVE_MIN_US}) * 300 - 300 AS ws_sec, value FROM events
-    )
-    SELECT ws_sec, count(*) AS n_events,
-           {sql_round_half_up("sum(value)", 2)} AS sum_value
-    FROM assigned
-    GROUP BY ws_sec
-    ORDER BY ws_sec
-    """,
-)
+@query("stream_sliding_counts", oracle=SLIDING_ORACLE)
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream → 10-minute windows sliding every 5 — each event lands in
     two overlapping windows, the streaming state Spark sizes as
@@ -293,20 +274,7 @@ def fold_upsert_deltas(spark: SparkSession, delta_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_upsert_compaction",
-    oracle="""
-    SELECT user_id, event_type AS last_type, last_us, n_versions FROM (
-      SELECT user_id, event_type, epoch_us(ts) AS last_us,
-             count(*) OVER (PARTITION BY user_id) AS n_versions,
-             row_number() OVER (
-               PARTITION BY user_id
-               ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-      FROM events)
-    WHERE rn = 1
-    ORDER BY user_id
-    """,
-)
+@query("stream_upsert_compaction", oracle=UPSERT_LATEST_ORACLE)
 def stream_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC upsert: the change log arrives in micro-batches
     (maxFilesPerTrigger=1 over md5-bucket files) and foreachBatch reduces

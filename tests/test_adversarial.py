@@ -54,7 +54,7 @@ def test_rolling_fingerprints_short_doc_fallback(spark):
     out = {
         r.doc_id: r.fp
         for r in df.select(
-            "doc_id", rolling_fingerprints(tokens(F.col("text"))).alias("fp")
+            "doc_id", rolling_fingerprints("text").alias("fp")
         ).collect()
     }
     assert len(out[1]) == 1  # one partial-span hash, no crash
@@ -346,10 +346,11 @@ def test_frame_sampler_null_and_empty_payload():
 def test_sql_text_builders_are_the_column_forms(spark):
     """The SQL-text builders compute what their former Column-API forms
     did: valid_embedding and to_double_array are the same relation (equal
-    optimized plans up to expression ids), and shingles / shingle_hashes
-    give the same rows over the sf0.01 documents plus the short, empty and
-    NULL hazard docs (their arrays_zip fields are named "0".."n-1" rather
-    than "t0".."tn-1", so only rows are compared)."""
+    optimized plans up to expression ids), and shingles / shingle_hashes /
+    rolling_fingerprints give the same rows over the sf0.01 documents plus
+    the short, empty and NULL hazard docs (their arrays_zip fields are
+    named "0".."n-1" rather than "t0".."tn-1", so only rows are compared)."""
+    from sqload_spark.functions.hashing import spark_md5_int_column
     from sqload_spark.functions.text_funcs import shingle_hashes
     from sqload_spark.functions.vectors import EMB_DIM, EMB_MAX_ABS, dot, to_double_array
     from sqload_spark.sources.tables import load_table
@@ -363,6 +364,15 @@ def test_sql_text_builders_are_the_column_forms(spark):
         return F.when(F.size(toks) >= n, F.array_distinct(grams)).otherwise(
             F.array().cast("array<string>")
         )
+
+    def column_fingerprints(toks, window=4):
+        base = F.coalesce(toks, F.array().cast("array<string>"))
+        m = F.greatest(F.size(base) - F.lit(window - 1), F.lit(1))
+        zipped = F.arrays_zip(*[F.slice(base, k + 1, m).alias(f"t{k}") for k in range(window)])
+        spans = F.transform(zipped, lambda s: F.concat_ws(" ", *[s[f"t{k}"] for k in range(window)]))
+        spans = F.when(F.size(base) == 0, F.array(F.lit(""))).otherwise(spans)
+        hashes = F.transform(spans, lambda sp: spark_md5_int_column(sp, 12))
+        return F.slice(F.array_sort(F.array_distinct(hashes)), 1, 8)
 
     def column_doubles(v):
         return F.transform(v, lambda x: x.cast("double"))
@@ -390,6 +400,7 @@ def test_sql_text_builders_are_the_column_forms(spark):
     pairs = [
         (shingles("text", 3), col),
         (shingle_hashes("text", 3), F.transform(col, lambda s: F.xxhash64(s))),
+        (rolling_fingerprints("text"), column_fingerprints(tokens(F.col("text")))),
     ]
     for text, column in pairs:
         assert row_digest(docs.select("doc_id", text.alias("sh"))) == row_digest(

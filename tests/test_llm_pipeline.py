@@ -626,3 +626,25 @@ def test_md5_minhash_sql_is_the_column_relation(spark):
     text = spark.sql(_md5_minhash_sql("{rows}"), rows=rows)
     plan = lambda df: df._jdf.queryExecution().optimizedPlan()  # noqa: E731
     assert plan(text).sameResult(plan(columns))
+
+
+@pytest.mark.parametrize(
+    "name,digest",
+    [
+        ("text_rolling_fingerprint", (219, -81316113602433959949)),
+        ("text_contamination_ngram", (20, -51556346309740586612)),
+        ("text_repetition_filter", (20, -6806739204524041246)),
+        ("text_gopher_quality", (20, -25100262782001382418)),
+        ("text_quality_score", (500, 46268904330515039897)),
+        ("text_bigram_logprob", (250, 91713522598921342478)),
+    ],
+)
+def test_text_kernel_rows_pinned(spark, name, digest):
+    """The text queries whose Spark body and DuckDB oracle both compose
+    the word-window kernel, the token features or the max-frequency fold
+    (functions/text_funcs.py): the oracle check cannot see a change made
+    to both sides at once, so their rows are pinned (row_digest at
+    sf0.01)."""
+    from tests.conftest import row_digest
+
+    assert row_digest(registry.QUERIES[name](spark, SF_DIR)) == digest
