@@ -78,7 +78,7 @@ def multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension, bucket, aggregate). At scale this materializes the rollup
     hierarchy in a single shuffle instead of three scans; finer levels can
     also be re-aggregated into coarser ones without touching raw data."""
-    ev = load_table(spark, sf_dir, "events").withColumn("ts_us", F.expr("ts_ns div 1000"))
+    ev = load_table(spark, sf_dir, "events")
     res = spark.createDataFrame([("1m", 60), ("10m", 600), ("1h", 3600)], "resolution string, bucket_s long")
     return (
         ev.crossJoin(F.broadcast(res))

@@ -260,9 +260,7 @@ def upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a per-partition window — no global sort. At scale this is the
     nightly compaction that turns a log of updates into a snapshot
     table; n_versions is the per-key log depth the compaction removed."""
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "ts_us", F.expr("ts_ns div 1000")
-    )
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy(F.col("ts_us").desc(), F.col("event_id").desc())
     return (
         ev.withColumn("n_versions", F.count("*").over(W.partitionBy("user_id")))
@@ -352,8 +350,7 @@ def zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     hr = F.expr(f"ts_us div {_HOUR_US}")
     clustered = (
-        ev.withColumn("ts_us", F.expr("ts_ns div 1000"))
-        .withColumn("hr", hr)
+        ev.withColumn("hr", hr)
         .withColumn(
             "zval",
             _zvalue(
@@ -643,7 +640,7 @@ def constraint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # detector (lag), the run numbering (running count of changes) and the
 # run collapse (groupBy user_id, run) all share the same partitioning, so
 # Catalyst plans a single Exchange followed by sorts. Order within a user
-# is made total with (ts_ns, event_id) so duplicate timestamps cannot
+# is made total with (ts_us, event_id) so duplicate timestamps cannot
 # flip runs between engines.
 
 
@@ -685,7 +682,7 @@ def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
-        F.expr("ts_ns div 1000").alias("t_us"),
+        F.col("ts_us").alias("t_us"),
         "event_id",
     )
     w = W.partitionBy("user_id").orderBy("t_us", "event_id")
@@ -726,7 +723,7 @@ def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # step: schema-on-read, one narrow map per line, no shuffle until the
 # aggregation.
 
-_LOG_RE = r"^\[([0-9]+)\] user=([0-9]+) type=([a-z]+) value=([^ ]+) id=([0-9]+)$"
+_LOG_RE = r"^\[(-?[0-9]+)\] user=([0-9]+) type=([a-z]+) value=([^ ]+) id=([0-9]+)$"
 
 
 @query(
@@ -755,7 +752,7 @@ def text_logparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ANSI only BECAUSE the rlike gate guarantees numeric groups."""
     ev = load_table(spark, sf_dir, "events")
     line = F.concat(
-        F.lit("["), F.col("ts_ns").cast("string"), F.lit("] user="),
+        F.lit("["), F.col("ts_us").cast("string"), F.lit("] user="),
         F.col("user_id").cast("string"), F.lit(" type="), F.col("event_type"),
         F.lit(" value="), F.col("value").cast("string"), F.lit(" id="),
         F.col("event_id").cast("string"),

@@ -1,12 +1,13 @@
 """Time-series operators over the `events` stream table: tumbling/sliding
 windows, sessionization, as-of join, per-entity first/last, moving frames.
 
-Precision note (see sources/tables.py): events.ts is nanosecond-precision
-in parquet. Spark's TimestampType is microseconds — and DuckDB likewise
-truncates TIMESTAMP(NANOS) to its native microsecond TIMESTAMP on read —
-so the exact cross-engine currency is int64 EPOCH MICROSECONDS:
-Spark computes ``ts_ns div 1000`` (integer division on the raw long; double
-math would lose precision at 1e18) and oracles use ``epoch_us(ts)``.
+Precision note (see sources/tables.py): events.ts is stored either as
+nanoseconds or as microseconds in parquet. Spark's TimestampType is
+microseconds — and DuckDB likewise truncates TIMESTAMP(NANOS) to its native
+microsecond TIMESTAMP on read — so the exact cross-engine currency is int64
+EPOCH MICROSECONDS: Spark reads the loader's ``ts_us`` (integer math on the
+stored long; double math would lose precision at 1e18) and oracles use
+``epoch_us(ts)``.
 All bucket/gap/order arithmetic is integer µs on both sides → bit-identical.
 
 Scale notes: window aggregations shuffle on (bucket, key) — bounded
@@ -17,7 +18,7 @@ by AQE. No driver-side collection anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from sqload_spark.functions.rounding import round_half_up, sql_round_half_up
@@ -29,15 +30,6 @@ TEN_MIN_US = 600 * US_PER_SEC
 FIVE_MIN_US = 300 * US_PER_SEC
 DAY_US = 86_400 * US_PER_SEC
 SESSION_GAP_US = 12 * 3600 * US_PER_SEC  # 12 h — matches the per-user event density
-
-
-def _ts_us() -> Column:
-    """Exact epoch-microseconds from the raw nanosecond long."""
-    return F.expr("ts_ns div 1000")
-
-
-def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events").withColumn("ts_us", _ts_us())
 
 
 # Shared with stream_tumbling_counts, whose stream runs to the same result.
@@ -56,7 +48,7 @@ TUMBLING_ORACLE = f"""
 def tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute tumbling windows per event type (integer bucket math;
     ws_sec = window start in epoch seconds)."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     ws = F.expr(f"(ts_us div {TEN_MIN_US}) * 600")
     return (
         ev.groupBy(ws.alias("ws_sec"), "event_type")
@@ -85,7 +77,7 @@ def sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute windows sliding every 5 minutes: each event lands in two
     windows (its 5-min bucket and the one 5 min earlier) — the explicit
     window-assignment expansion Spark's window() does internally."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     bucket = F.expr(f"(ts_us div {FIVE_MIN_US}) * 300")
     assigned = ev.select(
         F.explode(F.array(bucket, bucket - F.lit(300))).alias("ws_sec"), "value"
@@ -124,7 +116,7 @@ def sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (12 h), the classic lag + cumulative-sum
     formulation — batch twin of streaming session_window."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w_order = W.partitionBy("user_id").orderBy("ts_us", "event_id")
     w_run = W.partitionBy("user_id").orderBy("t").rowsBetween(W.unboundedPreceding, W.currentRow)
     flagged = ev.select(
@@ -170,7 +162,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation is a tagged union + last(ignorenulls) window — one shuffle
     on user_id, no range-join explosion. (DuckDB's native ASOF JOIN is the
     oracle.)"""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     tagged = ev.filter(F.col("event_type").isin("purchase", "view")).select(
         "event_id", "user_id", "ts_us", "event_type"
     )
@@ -205,7 +197,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def daily_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.expr(f"ts_us div {DAY_US}").alias("epoch_day"), "event_type")
         .agg(F.count("*").alias("n_events"), F.countDistinct("user_id").alias("n_users"))
@@ -227,7 +219,7 @@ def daily_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-row moving average per user (frame-based window)."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts_us", "event_id").rowsBetween(-4, 0)
     return (
         ev.filter(F.col("user_id") < 20)
@@ -251,7 +243,7 @@ def moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def first_last_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
         .agg(
@@ -292,7 +284,7 @@ def gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself and parallelizes by entity at any scale. (A calendar dimension
     join — the other classic shape — costs a broadcast instead; sequence
     wins when spans differ wildly per entity.)"""
-    ev = _events_us(spark, sf_dir).filter(F.col("user_id") <= 20)
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 20)
     b = ev.groupBy(
         "user_id", F.expr(f"ts_us div {DAY_US}").alias("bucket")
     ).agg(F.count("*").alias("n"))
@@ -352,7 +344,7 @@ def funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous stage's (user, ts) frontier — k shuffles on user_id total,
     never a per-user sort or event collection, so the funnel holds at
     billions of events. Integer-µs comparisons end to end."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     s = (
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
@@ -407,7 +399,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct users per (cohort, offset)) + one shuffle-join on user_id —
     the cohort table a growth dashboard recomputes daily over the full
     event history, so the bounded-shuffle shape is the point at scale."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(
         F.expr(f"min(ts_us) div {WEEK_US}").alias("cohort_wk")
     )
@@ -454,7 +446,7 @@ def ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-safe. Shape: one shuffle on user_id, then a bounded window frame
     (collect of ≤{EWMA_WINDOW} doubles per row) — no per-user sort beyond
     the window, state bounded by the frame length at any scale."""
-    ev = _events_us(spark, sf_dir).filter(F.col("user_id") <= 20)
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 20)
     w = (
         W.partitionBy("user_id")
         .orderBy("ts_us", "event_id")
@@ -515,7 +507,7 @@ def transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full history — one shuffle on user_id for the lag, one bounded
     (|types|²) aggregation; the normalizing window runs on the tiny
     transition table, never the events."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts_us", "event_id")
     trans = (
         ev.select("user_id", "event_type", F.lag("event_type").over(w).alias("prev_type"))
@@ -552,7 +544,7 @@ def window_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     check it); at 100 TB the distinct forces a (window, user) pre-shuffle,
     so production dashboards swap in approx_count_distinct / HLL-merge
     (sketch_hll_merge shows the mergeable form) — same plan shape."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     ws = F.expr(f"(ts_us div {TEN_MIN_US}) * 600")
     return (
         ev.groupBy(ws.alias("ws_sec"))
@@ -601,7 +593,7 @@ def anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     is deterministic — no Welford-order ambiguity. Two bounded
     aggregations; the daily table, not the events, crosses the second
     shuffle."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "user_id", F.expr(f"ts_us div {DAY_US}").alias("day")
     ).agg(F.count("*").alias("n"))
@@ -661,7 +653,7 @@ def ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort materialization, and the formulation is engine-identical, so the
     bars hash-check. The canonical example of order-sensitive aggregation
     done with order-free shuffles."""
-    ev = _events_us(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     day = F.expr(f"ts_us div {DAY_US}")
     wa = W.partitionBy("user_id", "day").orderBy("ts_us", "event_id")
     wd = W.partitionBy("user_id", "day").orderBy(F.col("ts_us").desc(), F.col("event_id").desc())
@@ -731,7 +723,7 @@ def resample_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on user_id. The weights are exact integer day ratios, so the
     interpolated values hash-check. Dashboards and feature pipelines use
     exactly this before feeding models that can't see gaps."""
-    ev = _events_us(spark, sf_dir).filter(F.col("user_id") <= 20)
+    ev = load_table(spark, sf_dir, "events").filter(F.col("user_id") <= 20)
     daily = ev.groupBy(
         "user_id", F.expr(f"ts_us div {DAY_US}").alias("day")
     ).agg(F.max("value").alias("v"))
@@ -804,12 +796,12 @@ def asof_nearest_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     errors = ev.filter(F.col("event_type") == "error").select(
         F.col("event_id").alias("err_id"),
         F.col("user_id").alias("e_user"),
-        F.expr("ts_ns div 1000").alias("e_us"),
+        F.col("ts_us").alias("e_us"),
     )
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
         F.col("user_id").alias("c_user"),
-        F.expr("ts_ns div 1000").alias("c_us"),
+        F.col("ts_us").alias("c_us"),
     )
     # banded candidates: equi-join on (user, bucket) with the error probing
     # its bucket and both neighbors — bounds candidates without a range join

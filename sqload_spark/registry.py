@@ -60,15 +60,13 @@ _loaded = False
 # ROUND-13+ RECIPE (the standing rule every round):
 #   1. any name the newest CORRECTNESS_rNN unexpectedly missed or errored;
 #   2. every name whose implementation changed since its last external
-#      check (now: every text query on the one word-window kernel, token
-#      features and max-frequency fold (functions/text_funcs.py), every
-#      oracle on the kernel's DuckDB shingles, the one curation mix body
-#      and the tokens() callers, and the three streams that share their
-#      batch twin's oracle constant, with those twins; then the md5-kernel
-#      and read-back names of the previous window up to the 50th slot —
-#      etl_zorder_cluster, the other runner streams and the events
-#      readers whose ts layout comes from the parquet footer
-#      (tables.stored_ts_type) wait for the next window);
+#      check (now: the 39 events readers, whose ts/ts_us come from the one
+#      events time base (tables.read_events), with the three file-replay
+#      streams on the one replay writer (windows.replay_files); then the
+#      two text oracles on the list_histogram max-frequency; then the
+#      text-kernel names of the previous window up to the 50th slot — the
+#      rest of that window (the DuckDB-shingle oracles, the curation mix,
+#      the md5-kernel and read-back names) waits for the next window);
 #   3. fill to 50 with the stalest hash-green names per
 #      tools/coverage_report.py --list — the listing is authoritative,
 #      recompute it, don't trust this comment.
@@ -81,33 +79,29 @@ _loaded = False
 # judge-sample protocol) for standing evidence.
 
 _PRIORITY = [
-    # -- the text family on the one word-window kernel, token features and
-    #    max-frequency fold (functions/text_funcs.py) ------------------------
+    # -- the events readers on the one events time base (tables.read_events)
+    "q_json_extract", "qds_hour_bands", "q_mode_per_group",
+    "ts_tumbling_window", "ts_sliding_window", "ts_sessionize", "ts_asof_join",
+    "ts_daily_rate", "ts_moving_avg", "ts_first_last_per_user", "ts_gap_fill",
+    "ts_funnel_stages", "ts_retention_cohorts", "ts_ewma",
+    "ts_transition_matrix", "ts_window_unique_users", "ts_anomaly_days",
+    "ts_ohlc_bars", "ts_resample_interp", "ts_asof_nearest_tolerance",
+    "ts_multires_rollup", "etl_upsert_latest", "etl_zorder_cluster",
+    "etl_scd2_history", "src_text_logparse", "src_csv_corrupt_tolerant",
+    "q_from_json_map",
+    "stream_tumbling_counts", "stream_session_window", "stream_dedup_events",
+    "stream_sliding_counts", "stream_drift_scores", "stream_stateful_profile",
+    "stream_static_enrich", "stream_stream_interval_join",
+    # -- ... and the three file-replay streams (windows.replay_files) --------
+    "stream_microbatch_progress", "stream_upsert_compaction",
+    "stream_late_data_policy", "stream_stream_left_outer",
+    # -- the max-frequency oracles (text_funcs.duck_max_frequency) -----------
+    "text_repetition_filter", "text_gopher_quality",
+    # -- carried from the previous window: the text word-window kernel -------
     "text_rolling_fingerprint", "text_contamination_ngram",
-    "text_repetition_filter", "text_gopher_quality", "text_quality_score",
-    "text_bigram_logprob", "text_quality_pandas_udf", "text_quality_arrow_udf",
-    "text_bpe_regex_tokens",
-    # -- oracles on the kernel's DuckDB shingles (dedup._DUCK_SH) ------------
-    "dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_minhash_checked",
-    "dedup_minhash_eval", "dedup_simhash_checked", "dedup_prefix_filter",
-    "dedup_edit_distance", "dedup_cross_source_matrix",
-    "dedup_incremental_shard", "dedup_keep_list", "dedup_keep_list_weighted",
-    "dedup_cluster_sizes", "dedup_pairs_materialized",
-    # -- the one curation mix body, shingle-chain oracles, tokens() callers --
-    "pipe_training_mix", "pipe_output_manifest", "q_split_leakage_safe",
-    "q_chunk_documents", "pipe_rag_corpus", "q_pack_sequences",
-    "q_length_bucketed_batches",
-    # -- streams sharing their batch twin's oracle constant, and the twins ---
-    "stream_tumbling_counts", "stream_sliding_counts",
-    "stream_upsert_compaction", "ts_tumbling_window", "ts_sliding_window",
-    "etl_upsert_latest",
-    # -- carried from the previous window: the md5 kernel and read-backs -----
-    "q_sample_hash", "q_sample_stratified", "q_mix_rebalance",
-    "q_partial_agg_merge", "sketch_count_min", "sketch_hll_merge",
-    "sketch_cms_checked", "text_pii_scrub", "mm_frame_sample",
-    "sim_crossencoder_rerank", "dedup_exact_groups",
-    "etl_partitioned_bulk_load", "etl_partition_pruning", "etl_file_sizing",
-    "etl_dynamic_partition_overwrite",
+    "text_quality_score", "text_bigram_logprob", "text_quality_pandas_udf",
+    "text_quality_arrow_udf", "text_bpe_regex_tokens", "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
 ]
 
 

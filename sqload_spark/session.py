@@ -65,6 +65,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else half the host's physical memory
+    capped at 48g: a fixed 48g heap let the driver JVM outgrow a 15 GB host
+    until the kernel's OOM killer ended it."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 * 1024 * 1024)
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{min(half_mb, 48 * 1024)}m")
+
+
 def get_spark(app_name: str = "sqload_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = default_parallelism()
     if shuffle_partitions is None:
@@ -78,7 +86,7 @@ def get_spark(app_name: str = "sqload_spark", shuffle_partitions: int | None = N
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # events.parquet stores INT64 TIMESTAMP(NANOS); Spark has no nanosecond
         # timestamp, so read it as a raw long and convert in the catalog
@@ -90,7 +98,7 @@ def get_spark(app_name: str = "sqload_spark", shuffle_partitions: int | None = N
         # dedup_embedding_cosine_banded at 5.8-6.7 s alone vs 10.1 s
         # in-suite, all of it codegen-cache thrash. Cache entries are
         # weak-referenced compiled classes (a few KB each), so 2048 is
-        # noise against the 48g heap; semantics-free (it is a
+        # noise against the driver heap; semantics-free (it is a
         # compilation CACHE SIZE), so only bench wall can move.
         .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         # Static conf, default true: PySpark then wraps every DataFrame and

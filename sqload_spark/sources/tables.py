@@ -21,14 +21,15 @@ The one irregular table is ``events``. Depending on the test-data
 generation, its ``ts`` column is either parquet INT64 TIMESTAMP(NANOS,
 false) — which Spark cannot represent natively (TimestampType is
 microseconds), so we read it as a raw long via ``spark.sql.legacy.parquet
-.nanosAsLong`` — or a plain TIMESTAMP(MICROS, false). The loader reads the
-stored ``ts`` layout from the parquet footer on the driver
+.nanosAsLong`` — or a plain TIMESTAMP(MICROS, false). ``read_events`` reads
+the stored ``ts`` layout from the parquet footer on the driver
 (``stored_ts_type``: pyarrow, no Spark job) and normalizes BOTH layouts to
-the same two columns:
+the same two columns, for the batch reader (``load_table``) and the file
+stream reader (``streaming.windows.stream_events``) alike:
 
-* ``ts_ns``  — int64 epoch-nanoseconds (exact; every oracle-checked query
-  derives its microsecond arithmetic as ``ts_ns div 1000`` so ordering /
-  gap math matches DuckDB's ``epoch_us(ts)`` bit for bit), and
+* ``ts_us``  — int64 epoch-microseconds (exact: every oracle-checked query
+  does its ordering / bucket / gap math on it, so it matches DuckDB's
+  ``epoch_us(ts)`` bit for bit, over the whole TIMESTAMP range), and
 * ``ts``     — a ``TimestampType`` (microsecond) column for the
   time-window / Structured Streaming APIs that need a real timestamp.
 
@@ -41,9 +42,10 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 TABLE_NAMES = (
     "region",
@@ -67,7 +69,7 @@ _INT, _LONG, _DOUBLE, _STR = T.IntegerType(), T.LongType(), T.DoubleType(), T.St
 _TS_NTZ = T.TimestampNTZType()
 
 # Each table's schema as Spark reads its parquet file (FIXTURES.md).
-# events' ``ts`` is the TIMESTAMP(MICROS) layout; load_table swaps in the
+# events' ``ts`` is the TIMESTAMP(MICROS) layout; read_events swaps in the
 # stored layout read from the footer (stored_ts_type).
 SCHEMAS: dict[str, T.StructType] = {
     "region": _schema(("r_regionkey", _INT), ("r_name", _STR)),
@@ -124,27 +126,36 @@ def events_schema(sf_dir: str) -> T.StructType:
     return _schema(*((f.name, ts_type if f.name == "ts" else f.dataType) for f in SCHEMAS["events"]))
 
 
+def read_events(reader: DataFrameReader | DataStreamReader, sf_dir: str) -> DataFrame:
+    """events from ``spark.read`` or ``spark.readStream`` (the session has
+    ``nanosAsLong`` set), in the stored ``ts`` layout (``events_schema``),
+    with ``ts`` normalized to TimestampType and the exact ``ts_us``."""
+    schema = events_schema(sf_dir)
+    # A file stream needs a directory basePath: glob to the one table file.
+    glob = "*" if isinstance(reader, DataStreamReader) else ""
+    df = reader.schema(schema).parquet(f"{sf_dir}/events.parquet{glob}")
+    if isinstance(schema["ts"].dataType, T.LongType):
+        # INT64 TIMESTAMP(NANOS) data read as raw nanos-as-long.
+        df = df.withColumnRenamed("ts", "ts_ns")
+        ts_us = F.expr("ts_ns div 1000")
+        ts = F.timestamp_micros(ts_us)
+    else:
+        # TIMESTAMP(MICROS) data (read as TIMESTAMP_NTZ or TIMESTAMP): UTC
+        # session tz → the cast is the identity on the stored micros.
+        ts = F.col("ts").cast("timestamp")
+        ts_us = F.unix_micros(ts)
+    return df.select(
+        *(ts.alias("ts") if f.name == "ts" else f.name for f in schema), ts_us.alias("ts_us")
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table; ``events`` gets the nanosecond-timestamp shim."""
+    """Load one test table; ``events`` through ``read_events``."""
     if name != "events":
         return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
     # Runtime-settable (the correctness driver owns the SparkSession).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = events_schema(sf_dir)
-    df = spark.read.schema(schema).parquet(f"{sf_dir}/events.parquet")
-    if isinstance(schema["ts"].dataType, T.LongType):
-        # INT64 TIMESTAMP(NANOS) data read as raw nanos-as-long.
-        return (
-            df.withColumnRenamed("ts", "ts_ns")
-            .withColumn("ts", F.timestamp_micros(F.expr("ts_ns div 1000")))
-        )
-    # TIMESTAMP(MICROS) data (read as TIMESTAMP_NTZ or TIMESTAMP):
-    # normalize to TimestampType (UTC session tz → identity on stored
-    # micros) and synthesize the exact nanosecond long the operators use.
-    return (
-        df.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withColumn("ts_ns", F.unix_micros(F.col("ts")) * F.lit(1000))
-    )
+    return read_events(spark.read, sf_dir)
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,11 +29,10 @@ from sqload_spark.registry import query
 from sqload_spark.sources.tables import load_table
 from sqload_spark.streaming.windows import (
     events_source_bytes,
+    replay_files,
     run_to_memory,
-    source_bytes,
     stream_events,
 )
-from sqload_spark.session import scratch_dir
 
 # Split users into activity segments on total batch event count. The
 # threshold sits near the per-user mean so both segments are populated at
@@ -214,32 +213,22 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is watermark-timing-independent because eviction is monotone
     in the watermark.
     """
-
-    from sqload_spark.sources.tables import load_table
-
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
-    ).select(
-        "user_id", "event_id", "event_type", "ts",
-        F.expr("ts_ns div 1000").alias("ts_us"),
-    )
+    ).select("user_id", "event_id", "event_type", "ts", "ts_us")
     split = ev.agg(
         F.expr("percentile_approx(ts_us, 0.5, 10000)").alias("m")
     ).first()[0]
-    in_dir = scratch_dir(prefix="sqload_lo_in_")
-    ev.filter(F.col("ts_us") <= split).coalesce(1).write.mode("append").parquet(in_dir)
-    ev.filter(F.col("ts_us") > split).coalesce(1).write.mode("append").parquet(in_dir)
+    # half 0 up to the median, then half 1; a NULL ts is in neither
+    halves = ev.filter(F.col("ts_us").isNotNull()).withColumn(
+        "half", (F.col("ts_us") > split).cast("int")
+    )
+    stream, src_bytes = replay_files(halves, "half", "sqload_lo_in_")
 
     def side(event_type: str, prefix: str) -> DataFrame:
-        raw = (
-            spark.readStream.schema(
-                "user_id long, event_id long, event_type string, ts timestamp, ts_us long"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
         return (
-            raw.filter(F.col("event_type") == event_type)
+            stream.load()
+            .filter(F.col("event_type") == event_type)
             .select(
                 F.col("user_id").alias(f"{prefix}_user_id"),
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -263,5 +252,5 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_id").alias("purchase_id"),
         (F.col("p_ts_us") - F.col("c_ts_us")).alias("gap_us"),
     )
-    out = run_to_memory(joined, output_mode="append", src_bytes=source_bytes(in_dir))
+    out = run_to_memory(joined, output_mode="append", src_bytes=src_bytes)
     return out.orderBy("click_id", "purchase_id")

@@ -28,9 +28,9 @@ from sqload_spark.operators.timeseries import (
 from sqload_spark.registry import query
 from sqload_spark.streaming.windows import (
     events_source_bytes,
+    replay_files,
     run_available_now,
     run_to_memory,
-    source_bytes,
     stream_events,
 )
 from sqload_spark.session import scratch_dir
@@ -48,18 +48,15 @@ def _md5_bucket_sql(salt: str, n: int) -> str:
 
 
 def _replay_buckets(ev: DataFrame, prefix: str, fn) -> None:
-    """Replay ``ev`` as one micro-batch per ``bucket`` value: ONE
-    partitionBy(bucket) write gives one file per bucket, streamed back with
-    maxFilesPerTrigger=1 into ``foreachBatch(fn)`` and run to completion.
+    """Replay ``ev`` as one micro-batch per ``bucket`` value
+    (``replay_files``) into ``foreachBatch(fn)`` and run to completion.
 
     NOT stream_state_scope'd (r11 A/B): these streams are STATELESS — no
     state stores — and their cost is the inner foreachBatch batch jobs,
     which want the session's full parallelism, not the state-sized value
     (scoping the upsert stream measured 6.3 s → 14.1 s WORSE)."""
-    in_dir = scratch_dir(prefix=prefix)
-    ev.coalesce(1).write.partitionBy("bucket").mode("append").parquet(in_dir)
-    stream = ev.sparkSession.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1)
-    run_available_now(ev.sparkSession, stream.parquet(in_dir).writeStream.foreachBatch(fn))
+    stream, _ = replay_files(ev, "bucket", prefix)
+    run_available_now(ev.sparkSession, stream.load().writeStream.foreachBatch(fn))
 
 
 @query("stream_tumbling_counts", oracle=TUMBLING_ORACLE)
@@ -297,10 +294,9 @@ def stream_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once; the same monoid guarantees the identical final snapshot
     (verified row-identical, both orders, at sf0.1). Batch prep is ONE
     partitionBy(bucket) write instead of four filtered scans of events
-    (bucket order is irrelevant to a commutative merge, so no mtime
-    stamping is needed). Measured (alternating 3-pass A/B at sf0.1, both
-    orders): 3.54 → 3.06 s (delta fold), then 2.86 → 2.00 s min adding
-    the one-pass prep."""
+    (bucket order is irrelevant to a commutative merge). Measured
+    (alternating 3-pass A/B at sf0.1, both orders): 3.54 → 3.06 s (delta
+    fold), then 2.86 → 2.00 s min adding the one-pass prep."""
 
     from sqload_spark.sources.tables import load_table
 
@@ -308,7 +304,7 @@ def stream_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "event_type",
-        F.expr("ts_ns div 1000").alias("ts_us"),
+        "ts_us",
         _md5_bucket("up", 4).alias("bucket"),
     )
     delta_dir = scratch_dir(prefix="sqload_up_delta_")
@@ -366,48 +362,25 @@ def stream_late_data_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     flushes the final closed windows. Three files + maxFilesPerTrigger=1
     force the batch sequence (availableNow honors the read limit: one file
     per batch, then the trailing no-data batch); file order is fixed by
-    modification time."""
-    import os as _os
-    import time as _time
-
+    modification time (``replay_files``)."""
     from sqload_spark.sources.tables import load_table
 
+    bk = _md5_bucket("late", LATE_MOD)
+    # batch 0: the on-time bulk (bk >= 2), 1: the on-time filler, 2: the
+    # late re-delivery; a NULL bucket is in no batch
     ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        F.timestamp_micros(F.expr("ts_ns div 1000")).alias("ts"),
-        _md5_bucket("late", LATE_MOD).alias("bk"),
+        "event_id", "ts", F.when(bk >= 2, 0).when(bk == 1, 1).when(bk == 0, 2).alias("batch")
     )
-
-    in_dir = scratch_dir(prefix="sqload_late_in_")
-    # Deterministic file-source order WITHOUT wall-clock sleeps (r11: the
-    # former sleep(1.1) per batch was 3.3 s of pure bench wall): the source
-    # orders files by modification time, so write all three batches back to
-    # back, then stamp each write's files with explicit mtimes 10 s apart
-    # via os.utime — same ordering guarantee, zero waiting.
-    groups: list[list[str]] = []
-    seen_files: set[str] = set()
-    for cond in (F.col("bk") >= 2, F.col("bk") == 1, F.col("bk") == 0):
-        ev.filter(cond).coalesce(1).write.mode("append").parquet(in_dir)
-        files = {f for f in _os.listdir(in_dir) if not f.startswith(("_", "."))}
-        groups.append(sorted(files - seen_files))
-        seen_files = files
-    now = _time.time()
-    for k, group in enumerate(groups):
-        t = now - (len(groups) - 1 - k) * 10
-        for f in group:
-            _os.utime(_os.path.join(in_dir, f), (t, t))
-
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, bk long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
+    stream, src_bytes = replay_files(
+        ev.filter(F.col("batch").isNotNull()), "batch", "sqload_late_in_"
     )
     agg = (
-        stream.withWatermark("ts", f"{LATE_WM_US // 1_000_000} seconds")
+        stream.load()
+        .withWatermark("ts", f"{LATE_WM_US // 1_000_000} seconds")
         .groupBy(F.window("ts", "10 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"))
     )
-    out = run_to_memory(agg, output_mode="append", src_bytes=source_bytes(in_dir))
+    out = run_to_memory(agg, output_mode="append", src_bytes=src_bytes)
     return (
         out.select(F.unix_timestamp(F.col("w.start")).alias("ws_sec"), "n_events")
         .orderBy("ws_sec")

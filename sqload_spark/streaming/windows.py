@@ -1,12 +1,12 @@
 """Structured Streaming building blocks over the events table.
 
 The events parquet doubles as a replayable stream: ``readStream`` with an
-explicit schema (streaming sources never infer), nanosecond longs converted
-to microsecond timestamps, and one-shot execution via
-``trigger(availableNow=True)`` into a memory sink — which is exactly how a
-batch-equivalence check of a streaming pipeline is done. On a real cluster
-the same code points at a growing directory / Kafka source and runs
-continuously; nothing in the transformations changes.
+explicit schema (streaming sources never infer), the same ``ts``/``ts_us``
+normalization as the batch loader (``tables.read_events``), and one-shot
+execution via ``trigger(availableNow=True)`` into a memory sink — which is
+exactly how a batch-equivalence check of a streaming pipeline is done. On
+a real cluster the same code points at a growing directory / Kafka source
+and runs continuously; nothing in the transformations changes.
 """
 
 from __future__ import annotations
@@ -15,16 +15,15 @@ import glob as _glob
 import math
 import os
 import threading
+import time
 import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.streaming import DataStreamWriter, StreamingQueryListener
+from pyspark.sql.streaming import DataStreamReader, DataStreamWriter, StreamingQueryListener
 
 from sqload_spark.session import conf_scope, configure, scratch_dir, shuffle_scope
-from sqload_spark.sources.tables import events_schema
+from sqload_spark.sources.tables import read_events
 
 # --- scale-adaptive streaming state partitioning (round 11, guide §2) -------
 # Every stateful streaming operator (windowed agg, dedup-within-watermark,
@@ -79,28 +78,47 @@ def events_source_bytes(sf_dir: str) -> int:
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as a file-source stream with exact ts_us + a real timestamp.
-
-    Streaming sources never infer schemas; the stored ts layout (nanos-as-
-    long in older generated data, TIMESTAMP(MICROS) in newer) comes from
-    the parquet footer, as in load_table (see sources/tables.py for the
-    normalization contract).
-    """
+    """events as a file-source stream with exact ts_us + a real timestamp
+    (``tables.read_events`` over ``spark.readStream``)."""
     configure(spark)
-    schema = events_schema(sf_dir)
-    # file streams need a directory basePath; glob to the single table file
-    raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.parquet*")
-    if isinstance(schema["ts"].dataType, T.LongType):
-        return (
-            raw.withColumnRenamed("ts", "ts_ns")
-            .withColumn("ts_us", F.expr("ts_ns div 1000"))
-            .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-        )
-    return (
-        raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withColumn("ts_us", F.unix_micros(F.col("ts")))
-        .withColumn("ts_ns", F.col("ts_us") * F.lit(1000))
+    return read_events(spark.readStream, sf_dir)
+
+
+def _batch_value(part_dir: str) -> float:
+    """The integer batch value of a ``col=value`` partition directory;
+    the NULL (Hive default) partition sorts last."""
+    value = part_dir.split("=", 1)[1]
+    return math.inf if value == "__HIVE_DEFAULT_PARTITION__" else int(value)
+
+
+def replay_files(df: DataFrame, batch_col: str, prefix: str) -> tuple[DataStreamReader, int]:
+    """Replay ``df`` as a file stream of one micro-batch per value of the
+    integer column ``batch_col``, in ascending value order.
+
+    ONE ``coalesce(1)`` partitionBy write gives one file per value. The
+    file source orders files by modification time, so each value's file is
+    stamped with an explicit mtime 10 s after the previous value's
+    (``os.utime``): a fixed order with no wall-clock sleep between writes.
+    Returns the stream reader (``df``'s schema, ``maxFilesPerTrigger=1``,
+    the path preset: each ``load()`` is a new source) and the source
+    bytes (for ``stream_state_scope``)."""
+    in_dir = scratch_dir(prefix=prefix)
+    df.coalesce(1).write.partitionBy(batch_col).mode("append").parquet(in_dir)
+    parts = sorted((p for p in os.listdir(in_dir) if "=" in p), key=_batch_value)
+    now = time.time()
+    for k, part in enumerate(parts):
+        t = now - (len(parts) - 1 - k) * 10
+        part_dir = os.path.join(in_dir, part)
+        for f in os.listdir(part_dir):
+            if not f.startswith(("_", ".")):
+                os.utime(os.path.join(part_dir, f), (t, t))
+    reader = (
+        df.sparkSession.readStream.format("parquet")
+        .schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("path", in_dir)
     )
+    return reader, source_bytes(in_dir)
 
 
 CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"

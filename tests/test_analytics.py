@@ -28,9 +28,10 @@ def test_transition_matrix_rows_normalize(spark):
 
 
 def test_retention_cohort_week0_equals_cohort_size(spark):
-    from sqload_spark.operators.timeseries import WEEK_US, _events_us
+    from sqload_spark.operators.timeseries import WEEK_US
+    from sqload_spark.sources.tables import load_table
 
-    ev = _events_us(spark, SF_DIR)
+    ev = load_table(spark, SF_DIR, "events")
     firsts = ev.groupBy("user_id").agg(
         F.expr(f"min(ts_us) div {WEEK_US}").alias("cohort_wk")
     )

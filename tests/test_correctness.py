@@ -43,14 +43,32 @@ def test_entry_smoke(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
+def _events_batch_and_stream(spark, sf_dir: str, *cols: str) -> dict[str, list]:
+    """Sorted ``cols`` rows of events from the batch loader and from the
+    file-stream loader (run to completion)."""
+    from sqload_spark.sources.tables import load_table
+    from sqload_spark.streaming.windows import events_source_bytes, run_to_memory, stream_events
+
+    batch = load_table(spark, sf_dir, "events")
+    stream = run_to_memory(
+        stream_events(spark, sf_dir).select(*cols),
+        output_mode="append",
+        src_bytes=events_source_bytes(sf_dir),
+    )
+    return {
+        kind: sorted(tuple(r) for r in df.select(*cols).collect())
+        for kind, df in (("batch", batch), ("stream", stream))
+    }
+
+
 def test_events_loader_normalizes_both_ts_layouts(spark, tmp_path):
     """The driver has shipped events.ts as INT64 TIMESTAMP(NANOS) and as
     TIMESTAMP(MICROS) in different rounds. Re-encode the current table in
-    BOTH layouts and assert load_table normalizes them to identical
-    (ts_ns, ts) values — the regression that silently broke every
-    timeseries query when the layout flipped. Each layout's schema, read
-    from the footer (events_schema), is the one Spark infers: the raw long
-    for nanos, timestamp_ntz for micros."""
+    BOTH layouts and assert the batch and the stream loader normalize them
+    to identical (ts_us, ts) values — the regression that silently broke
+    every timeseries query when the layout flipped. Each layout's schema,
+    read from the footer (events_schema), is the one Spark infers: the raw
+    long for nanos, timestamp_ntz for micros."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -72,13 +90,59 @@ def test_events_loader_normalizes_both_ts_layouts(spark, tmp_path):
         path = str(tmp_path / name / "events.parquet")
         assert spark.read.schema(schema).parquet(path).schema == spark.read.parquet(path).schema
         df = load_table(spark, str(tmp_path / name), "events")
-        assert {"ts_ns", "ts"} <= set(df.columns)
+        assert {"ts_us", "ts"} <= set(df.columns)
         assert df.schema["ts"].dataType.typeName() == "timestamp"
-        assert df.schema["ts_ns"].dataType.typeName() == "long"
-        rows[name] = sorted(
-            (r.event_id, r.ts_ns, r.ts) for r in df.select("event_id", "ts_ns", "ts").collect()
-        )
-    assert rows["micros"] == rows["nanos"]
+        assert df.schema["ts_us"].dataType.typeName() == "long"
+        for kind, got in _events_batch_and_stream(
+            spark, str(tmp_path / name), "event_id", "ts_us", "ts"
+        ).items():
+            rows[name, kind] = got
+    assert rows["micros", "batch"] == rows["nanos", "batch"]
+    assert rows["micros", "stream"] == rows["nanos", "stream"] == rows["micros", "batch"]
+
+
+def test_events_ts_us_exact_at_far_dates(spark, tmp_path):
+    """ts_us is exact over DuckDB's whole TIMESTAMP range, not just the
+    nanosecond range (1677-2262): the sf0.001 events in the micros layout
+    plus rows at 9999-12-31 23:59:59, at 1600-01-01 and with a NULL ts.
+    etl_upsert_latest (which orders by ts_us) matches its oracle, and both
+    loaders' ts_us equal DuckDB's epoch_us(ts) row by row."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = pq.read_table(f"{SF_SMOKE_DIR}/events.parquet")
+    src = src.set_column(
+        src.schema.get_field_index("ts"), "ts", src.column("ts").cast(pa.timestamp("us"))
+    )
+    far = pa.Table.from_pylist(
+        [
+            {"event_id": 900001, "ts": dt.datetime(9999, 12, 31, 23, 59, 59), "user_id": 1,
+             "event_type": "click", "value": 1.0, "props": None},
+            {"event_id": 900002, "ts": dt.datetime(1600, 1, 1), "user_id": 2,
+             "event_type": "view", "value": 2.0, "props": None},
+            {"event_id": 900003, "ts": None, "user_id": 3,
+             "event_type": "view", "value": 3.0, "props": None},
+        ],
+        schema=src.schema,
+    )
+    pq.write_table(pa.concat_tables([src, far]), tmp_path / "events.parquet")
+    sf_dir = str(tmp_path)
+
+    duck = duckdb.connect()
+    duck.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')")
+    assert_matches_oracle(
+        registry.QUERIES["etl_upsert_latest"](spark, sf_dir),
+        duck,
+        registry.ORACLES["etl_upsert_latest"],
+        "etl_upsert_latest",
+    )
+    want = sorted(duck.execute("SELECT event_id, epoch_us(ts) FROM events").fetchall())
+    assert (900001, 253402300799000000) in want
+    for kind, got in _events_batch_and_stream(spark, sf_dir, "event_id", "ts_us").items():
+        assert got == want, kind
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])

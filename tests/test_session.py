@@ -131,3 +131,21 @@ def test_call_site_capture_off(spark, monkeypatch):
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     monkeypatch.setattr(err_utils, "_enable_debugging_cache", None)
     assert err_utils.is_debugging_enabled() is False
+
+
+def test_driver_memory_sized_to_the_host(monkeypatch):
+    """The driver heap defaults to half of physical memory, capped at 48g,
+    and ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    from sqload_spark import session
+
+    def host(gib: int):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    host(15)
+    assert session.driver_memory() == "7680m"
+    host(512)
+    assert session.driver_memory() == "49152m"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    assert session.driver_memory() == "2g"

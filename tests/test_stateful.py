@@ -16,7 +16,6 @@ def test_stateful_profile_equals_batch(spark):
     stream = registry.QUERIES["stream_stateful_profile"](spark, SF_DIR).toPandas()
     batch = (
         load_table(spark, SF_DIR, "events")
-        .withColumn("ts_us", F.expr("ts_ns div 1000"))
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_events"),

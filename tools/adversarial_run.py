@@ -243,56 +243,31 @@ def _adversarial_embeddings():
 
 
 _TPCH_ADV = {
-    # table -> (DDL column list for the staging table, hazard rows)
-    "customer": (
-        "c_custkey BIGINT, c_name VARCHAR, c_nationkey INTEGER,"
-        " c_acctbal DOUBLE, c_mktsegment VARCHAR",
-        ADVERSARIAL_CUSTOMERS,
-    ),
-    "orders": (
-        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus VARCHAR,"
-        " o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority VARCHAR",
-        ADVERSARIAL_ORDERS,
-    ),
-    "lineitem": (
-        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT,"
-        " l_linenumber INTEGER, l_quantity DOUBLE, l_extendedprice DOUBLE,"
-        " l_discount DOUBLE, l_tax DOUBLE, l_returnflag VARCHAR,"
-        " l_linestatus VARCHAR, l_shipdate TIMESTAMP",
-        ADVERSARIAL_LINEITEMS,
-    ),
-    "part": (
-        "p_partkey BIGINT, p_name VARCHAR, p_brand VARCHAR, p_type VARCHAR,"
-        " p_size INTEGER, p_retailprice DOUBLE",
-        ADVERSARIAL_PARTS,
-    ),
-    "supplier": (
-        "s_suppkey BIGINT, s_name VARCHAR, s_nationkey INTEGER,"
-        " s_acctbal DOUBLE",
-        ADVERSARIAL_SUPPLIERS,
-    ),
+    "customer": ADVERSARIAL_CUSTOMERS,
+    "orders": ADVERSARIAL_ORDERS,
+    "lineitem": ADVERSARIAL_LINEITEMS,
+    "part": ADVERSARIAL_PARTS,
+    "supplier": ADVERSARIAL_SUPPLIERS,
 }
 
 
 # Every table with hazard rows: the clean TPC-H feeds plus the corpus
 # tables. `documents` derives its n_chars column from text on the way in.
 _ADV_TABLES = {
-    "documents": ("doc_id BIGINT, text VARCHAR, lang VARCHAR, source VARCHAR", ADVERSARIAL_DOCS),
-    "events": (
-        "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type VARCHAR,"
-        " value DOUBLE, props VARCHAR",
-        ADVERSARIAL_EVENTS,
-    ),
-    "embeddings": ("vec_id BIGINT, embedding FLOAT[], label INTEGER", _adversarial_embeddings()),
+    "documents": ADVERSARIAL_DOCS,
+    "events": ADVERSARIAL_EVENTS,
+    "embeddings": _adversarial_embeddings(),
     **_TPCH_ADV,
 }
+_STAGED = {"documents": "doc_id, text, lang, source"}
 _DERIVED = {"documents": "doc_id, text, lang, source, length(text) AS n_chars"}
 
 
-def _append_rows(src: str, dst: str, ddl: str, rows: list, select: str = "*") -> None:
-    """Write src ∪ hazard-rows to dst, preserving the parquet schema."""
+def _append_rows(src: str, dst: str, rows: list, cols: str = "*", select: str = "*") -> None:
+    """Write src ∪ hazard-rows to dst, preserving the parquet schema: the
+    rows are staged in a table typed by src's own ``cols``."""
     con = duckdb.connect()
-    con.execute(f"CREATE TABLE adv ({ddl})")
+    con.execute(f"CREATE TABLE adv AS SELECT {cols} FROM read_parquet('{src}') LIMIT 0")
     ph = ", ".join("?" for _ in rows[0])
     con.executemany(f"INSERT INTO adv VALUES ({ph})", rows)
     con.execute(
@@ -316,8 +291,7 @@ def build_corpus(docs_only: bool, keep: bool = False) -> str:
     for t in TABLE_NAMES:
         src, dst = f"{BASE}/{t}.parquet", f"{out}/{t}.parquet"
         if t in _ADV_TABLES and (t == "documents" or not docs_only):
-            ddl, rows = _ADV_TABLES[t]
-            _append_rows(src, dst, ddl, rows, _DERIVED.get(t, "*"))
+            _append_rows(src, dst, _ADV_TABLES[t], _STAGED.get(t, "*"), _DERIVED.get(t, "*"))
         else:
             shutil.copyfile(src, dst)
     return out
@@ -329,7 +303,7 @@ def main() -> int:
     if "--only" in sys.argv:
         only = [a for a in sys.argv[sys.argv.index("--only") + 1 :] if not a.startswith("--")]
     corpus = build_corpus(docs_only, keep="--keep" in sys.argv)
-    tpch_n = sum(len(rows) for _, rows in _TPCH_ADV.values())
+    tpch_n = sum(len(rows) for rows in _TPCH_ADV.values())
     print(f"adversarial corpus: {corpus}  (docs +{len(ADVERSARIAL_DOCS)}"
           + ("" if docs_only else
              f", embeddings +{len(_adversarial_embeddings())}, events +{len(ADVERSARIAL_EVENTS)}"
